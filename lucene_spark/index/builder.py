@@ -6,7 +6,7 @@ Maps Lucene's write path (SURVEY.md §3.2) onto Spark:
   ------                                    ----
   DocumentsWriterPerThread (DWPT)           one docid-range partition
     [index/DocumentsWriterPerThread.java:245]
-  in-memory invert (TermsHashPerField)      pandas groupby inside applyInPandas
+  in-memory invert (TermsHashPerField)      pandas groupby inside a segment task
     [index/TermsHashPerField.java:134]
   flush -> segment files                    worker writes postings/norms/docs
     [index/FreqProxTermsWriter.java:83-111]   parquet shards via pyarrow
@@ -19,9 +19,9 @@ Scale design (10^12 files):
   - docid assignment: range-partition once on (repo,path,commit), write the
     staged table (freezes partition boundaries deterministically), then
     per-partition offsets (column-pruned count scan) + in-group enumeration.
-  - segment build is shuffle-free per group; every heavy transform is
-    pandas/numpy inside applyInPandas (Arrow batches, no per-row Python at
-    the Spark boundary).
+  - segment build is shuffle-free, one file-granular task per segment
+    (session.slice_tasks); every heavy transform is pandas/numpy inside
+    the task (Arrow tables, no per-row Python at the Spark boundary).
   - merge shuffles only term-level rows (term, segment, encoded blocks) --
     tiny compared to raw postings; hot terms (df >= hot_df_threshold) are
     salted into (term, segment-range-bucket) sub-keys so no reducer sees an
@@ -49,9 +49,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..analysis import ENGLISH_STOP_WORDS, analyze_batch
 from ..functions.codec import encode_postings
 from ..functions.smallfloat import int_to_byte4
+from ..session import slice_tasks
 from . import fsio
-
-from contextlib import contextmanager
 
 # On-disk index format version, stamped into field_stats.json at commit and
 # validated at Index.open (SegmentInfos version-check analog,
@@ -62,27 +61,6 @@ from contextlib import contextmanager
 # tombstones; v4 and earlier used numbered tombstones/delete-*.json files,
 # migrated at open.
 INDEX_FORMAT_VERSION = 6
-
-
-@contextmanager
-def _no_coalesce(spark: SparkSession):
-    """Disable AQE partition coalescing for compute-bound pandas stages.
-
-    AQE coalesces shuffle partitions by BYTE size (64 MB advisory), but the
-    segment invert is CPU-bound at ~5 MB/core-s — byte-based coalescing
-    collapses a 32-way invert into ~3 fat tasks (measured 3x slowdown on
-    local[32]). Parallelism, not partition size, is the right target here.
-    """
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = "true"
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 MANIFEST_SCHEMA = (
@@ -859,24 +837,23 @@ def build_segments(
     # filename order); older staged dirs resume through the worker-side sort
     presorted = fsio.exists(paths.fs, paths.fs_path(os.path.join(staged_dir, "_SORTED")))
 
-    def seg_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
+    def seg_fn(parts):
         wfs = paths_bc.fs
-        tables = [
-            pq.read_table(p, use_threads=False, filesystem=wfs)
-            for p in sorted(pdf["path"])
-        ]
-        data = pa.concat_tables(tables) if len(tables) > 1 else tables[0]
-        return _invert_group(
-            data, pid + sid_base, offsets_bc.get(pid, 0), paths_bc, cfg_bc,
-            presorted=presorted,
-        )
+        for pid, pfiles in parts:
+            tables = [
+                pq.read_table(p, use_threads=False, filesystem=wfs)
+                for p in sorted(pfiles)
+            ]
+            data = pa.concat_tables(tables) if len(tables) > 1 else tables[0]
+            yield _invert_group(
+                data, pid + sid_base, offsets_bc.get(pid, 0), paths_bc, cfg_bc,
+                presorted=presorted,
+            )
 
-    meta = spark.createDataFrame(
-        [(_pid_of(f), f) for f in files], "pid int, path string"
-    )
-    with _no_coalesce(spark):
-        meta.groupBy("pid").applyInPandas(seg_fn, MANIFEST_SCHEMA).collect()
+    # one task per segment: an invert task takes seconds, so a task's
+    # fixed cost is noise and slicing would only serialize segments
+    parts = sorted(by_pid.items())
+    slice_tasks(spark, parts, seg_fn, MANIFEST_SCHEMA, n_tasks=len(parts)).collect()
     _mark("invert", _t)
 
 
@@ -1100,6 +1077,18 @@ def build_index(
     return paths
 
 
+def segment_tombstones(fs, files: Sequence[str], segment_id: int) -> np.ndarray:
+    """Sorted docids one segment's tombstones delete — its OWN liveDocs
+    (PendingDeletes.java:31), read with parquet predicate pushdown on
+    segment_id from the tombstone files."""
+    import pyarrow.dataset as ds
+
+    tomb = ds.dataset(list(files), filesystem=fs, format="parquet").to_table(
+        columns=["docid"], filter=ds.field("segment_id") == segment_id
+    )
+    return np.unique(tomb["docid"].to_numpy(zero_copy_only=False))
+
+
 def purge_deletes(
     spark: SparkSession, index_dir: str, cfg: IndexConfig | None = None
 ) -> int:
@@ -1128,21 +1117,13 @@ def purge_deletes(
     old_gen = live_generation(paths) or 0
     paths_bc, tfiles_bc = paths, list(tfiles)
 
-    def purge_seg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
+    def purge_seg(sid: int) -> pd.DataFrame:
         fs = paths_bc.fs
 
         def shard(d):
             return paths_bc.fs_path(os.path.join(d, f"segment-{sid:05d}.parquet"))
 
-        # this segment's OWN tombstones (per-segment liveDocs shape,
-        # PendingDeletes.java:31) — parquet predicate pushdown on segment_id
-        import pyarrow.dataset as _ds
-
-        tomb = _ds.dataset(tfiles_bc, filesystem=fs, format="parquet").to_table(
-            columns=["docid"], filter=_ds.field("segment_id") == sid
-        )
-        deleted_bc = np.unique(tomb["docid"].to_numpy(zero_copy_only=False))
+        deleted_bc = segment_tombstones(fs, tfiles_bc, sid)
 
         def is_deleted(ids: np.ndarray) -> np.ndarray:
             if len(deleted_bc) == 0:
@@ -1218,9 +1199,11 @@ def purge_deletes(
         fsio.write_json_atomic(fs, paths_bc.fs_path(paths_bc.manifest_file(sid)), row)
         return pd.DataFrame([row])
 
-    meta = spark.createDataFrame([(int(m["segment_id"]),) for m in manifests], "sid int")
-    with _no_coalesce(spark):
-        meta.groupBy("sid").applyInPandas(purge_seg, MANIFEST_SCHEMA).collect()
+    sids = [int(m["segment_id"]) for m in manifests]
+    slice_tasks(
+        spark, sids, lambda part: map(purge_seg, part), MANIFEST_SCHEMA,
+        n_tasks=len(sids),
+    ).collect()
 
     finalize_index(spark, paths, cfg, generation=old_gen + 1)
     for p in (paths.term_stats_g(old_gen), paths.merged_g(old_gen)):

@@ -7,7 +7,8 @@ Physical strategy mirrors Lucene's BooleanScorerSupplier choices
                       (windowed BooleanScorer analog; always correct; used as
                       the oracle and for non-top-k consumers: counts, facets)
   top-k path       -> per-segment vectorized block-max MAXSCORE/WAND inside
-                      applyInPandas (WANDScorer.java:55, MaxScoreBulkScorer.java:26,
+                      slice-local tasks (apply_per_segment; WANDScorer.java:55,
+                      MaxScoreBulkScorer.java:26,
                       BlockMaxConjunctionBulkScorer.java:36), then a global
                       merge: orderBy(score desc, docid asc).limit(k)
                       == per-leaf collectors + TopDocs.merge
@@ -32,7 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.codec import decode_block
-from ..index.builder import IndexPaths
+from ..index.builder import IndexPaths, segment_tombstones
+from ..session import slice_tasks
 from .plan import (
     MUST,
     MUST_NOT,
@@ -142,7 +144,7 @@ class Index:
         )
         self._stats_cache: Dict[str, Optional[Tuple[int, int]]] = {}
         self._deleted: Optional[np.ndarray] = None
-        self._has_deletes: Optional[bool] = None
+        self._tomb_files: Optional[List[str]] = None
         self._qcache = None
 
     # --- query cache (LRUQueryCache analog; off by default) ---------------
@@ -164,9 +166,10 @@ class Index:
     # like Lucene, deleted docs stop MATCHING immediately but collection
     # statistics keep counting them until segments are purged/merged).
     # Tombstones are PARQUET rows (docid, segment_id) written by Spark jobs
-    # and consumed either cogrouped per segment (pruned top-k paths) or via
-    # a distributed anti-join (exhaustive path) — no query path materializes
-    # the delete set on the driver or ships it inside task closures.
+    # and consumed either per segment inside the slice tasks (pruned top-k
+    # paths) or via a distributed anti-join (exhaustive path) — no query
+    # path materializes the delete set on the driver or ships it inside
+    # task closures.
 
     def _migrate_legacy_tombstones(self) -> None:
         """v4 -> v5 tombstone migration: pre-v5 indexes stored deletes as
@@ -192,21 +195,24 @@ class Index:
             )
         for f in legacy:
             self.paths.fs.delete_file(f)
-        self._has_deletes = None
+        self._tomb_files = None
+
+    @property
+    def tombstone_files(self) -> List[str]:
+        """fs-native paths of the tombstone parquet files (listed once per
+        delete generation of this searcher)."""
+        if self._tomb_files is None:
+            from ..index import fsio
+
+            self._tomb_files = fsio.list_files(
+                self.paths.fs, self.paths.fs_path(self.paths.tombstones),
+                suffix=".parquet",
+            )
+        return self._tomb_files
 
     @property
     def has_deletes(self) -> bool:
-        if self._has_deletes is None:
-            from ..index import fsio
-
-            self._has_deletes = bool(
-                fsio.list_files(
-                    self.paths.fs,
-                    self.paths.fs_path(self.paths.tombstones),
-                    suffix=".parquet",
-                )
-            )
-        return self._has_deletes
+        return bool(self.tombstone_files)
 
     @property
     def tombstones(self) -> DataFrame:
@@ -219,7 +225,7 @@ class Index:
     def deleted(self) -> np.ndarray:
         """Sorted docids of all tombstoned docs — DIAGNOSTIC / small-index
         accessor (tests, purge sanity checks). Query paths never call this;
-        they cogroup or anti-join the tombstone parquet instead."""
+        they read or anti-join the tombstone parquet instead."""
         if self._deleted is None:
             if not self.has_deletes:
                 self._deleted = np.empty(0, dtype=np.int64)
@@ -267,7 +273,7 @@ class Index:
         finally:
             out.unpersist()
         self._deleted = None
-        self._has_deletes = None
+        self._tomb_files = None
         return n
 
     def delete_docs(self, docids: Sequence[int]) -> None:
@@ -309,26 +315,19 @@ class Index:
     def seg_postings(self) -> DataFrame:
         return self._snap_seg(self.spark.read.parquet(self.paths.postings))
 
-    # skip/impact metadata every per-segment scorer needs; block streams
-    # are requested explicitly so the positions/offsets payloads never
-    # ship through the segment shuffle unless the operator decodes them
-    # (project before the exchange — on a positions+offsets index the
-    # unused streams are most of the row's bytes)
-    _SCORE_COLS = (
-        "term", "segment_id", "df", "first_docid", "last_docid",
-        "max_tf", "min_doclen", "block_first", "block_last",
-        "block_maxtf", "block_mindl", "block_imp",
-    )
+    def segment_files(self) -> List[Tuple[int, str]]:
+        """(segment_id, fs-native path) of this snapshot's per-segment
+        postings files, from a directory listing (no Spark job); a
+        ``generation=`` open drops segments appended after its commit."""
+        from ..index import fsio
 
-    def postings_for(self, terms=None, streams=("block_data",)) -> DataFrame:
-        """Scoring-projected postings rows: skip/impact metadata plus only
-        the requested block streams, filtered to ``terms`` when given."""
-        ps = self.seg_postings
-        cols = [c for c in self._SCORE_COLS if c in ps.columns]
-        cols += [s for s in streams if s in ps.columns and s not in cols]
-        if terms is not None:
-            ps = ps.filter(F.col("term").isin(list(terms)))
-        return ps.select(*cols)
+        out = []
+        for f in fsio.list_files(self.paths.fs, self.paths.fs_path(self.paths.postings),
+                                 prefix="segment-", suffix=".parquet"):
+            sid = int(os.path.basename(f)[len("segment-"):-len(".parquet")])
+            if self._snap_max_sid is None or sid <= self._snap_max_sid:
+                out.append((sid, f))
+        return out
 
     @property
     def term_stats(self) -> DataFrame:
@@ -512,28 +511,46 @@ def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
     return sel_ids[ordr], sel_sc[ordr]
 
 
-def _tomb_arr(pdf: Optional[pd.DataFrame]) -> Optional[np.ndarray]:
-    """Cogrouped tombstone rows -> sorted per-segment delete array."""
-    if pdf is None or len(pdf) == 0:
-        return None
-    return np.unique(pdf["docid"].to_numpy(dtype=np.int64))
+# skip/impact metadata every per-segment scorer needs; block streams are
+# requested explicitly so the positions/offsets payloads are never read
+# unless the operator decodes them (on a positions+offsets index the unused
+# streams are most of the row's bytes)
+_SCORE_COLS = (
+    "term", "segment_id", "df", "first_docid", "last_docid",
+    "max_tf", "min_doclen", "block_first", "block_last",
+    "block_maxtf", "block_mindl", "block_imp",
+)
 
 
-def apply_per_segment(index: Index, rows: DataFrame, fn, schema: str) -> DataFrame:
-    """groupBy(segment_id).applyInPandas with the segment's OWN tombstones
-    cogrouped in when deletes exist — the per-segment liveDocs shape
-    (PendingDeletes.java:31): every task sees only its segment's delete set,
-    nothing is materialized on the driver or captured in closures.
-    ``fn(key, postings_pdf, deleted_or_None) -> pdf``."""
-    if index.has_deletes:
-        return (
-            rows.groupBy("segment_id")
-            .cogroup(index.tombstones.groupBy("segment_id"))
-            .applyInPandas(lambda key, pdf, tomb: fn(key, pdf, _tomb_arr(tomb)), schema)
-        )
-    return rows.groupBy("segment_id").applyInPandas(
-        lambda key, pdf: fn(key, pdf, None), schema
-    )
+def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
+                      streams: Sequence[str] = ("block_data",)) -> DataFrame:
+    """Slice-local per-segment execution (IndexSearcher slices + searchLeaf,
+    IndexSearcher.java:323-341,760): the snapshot's segment files are dealt
+    into slices (session.slice_tasks), and each task reads its own
+    segments with pyarrow — the ``terms`` filter prunes row groups, and
+    only the skip metadata plus ``streams`` are read — along with each
+    segment's OWN tombstones (per-segment liveDocs, PendingDeletes.java:31;
+    nothing is materialized on the driver or captured in closures).
+    ``fn((segment_id,), postings_pdf, deleted_or_None) -> pdf`` runs only
+    for segments holding rows."""
+    paths, tombs, terms = index.paths, index.tombstone_files, list(terms)
+    cols = list(_SCORE_COLS) + [s for s in streams if s not in _SCORE_COLS]
+
+    def run_slice(segs):
+        import pyarrow.dataset as ds
+
+        for sid, path in segs:
+            seg = ds.dataset(path, filesystem=paths.fs, format="parquet")
+            tbl = seg.to_table(
+                columns=[c for c in cols if c in seg.schema.names],
+                filter=ds.field("term").isin(terms),
+            )
+            if tbl.num_rows == 0:
+                continue
+            deleted = segment_tombstones(paths.fs, tombs, sid) if tombs else None
+            yield fn((sid,), tbl.to_pandas(), deleted)
+
+    return slice_tasks(index.spark, index.segment_files(), run_slice, schema)
 
 
 def decoded_postings(
@@ -716,7 +733,7 @@ def make_topk_fn(
     theta_seed: float = 0.0,
     sim=None,
 ):
-    """Build the per-segment applyInPandas function.
+    """Build the per-segment scorer ``fn(key, pdf, deleted)`` for apply_per_segment.
 
     Pure OR      -> MAXSCORE phases: process terms by descending max-score;
                     once the remaining terms' summed max-scores fall below
@@ -764,7 +781,7 @@ def make_topk_fn(
 
     def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
         """Core per-segment scorer -> (docids, scores, counters);
-        ``deleted`` is this segment's cogrouped tombstone array."""
+        ``deleted`` is this segment's sorted tombstone array."""
         counters = [0, 0]  # blocks_total, blocks_decoded
         rows = {}
         for r in pdf.to_dict("records"):  # dicts, not iterrows Series
@@ -1152,14 +1169,12 @@ def search_topk(
         quantize = not getattr(q, "tree_origin", False)
     if dtype is None:
         dtype = np.float64 if getattr(q, "tree_origin", False) else np.float32
-    spark = index.spark
-    empty = spark.createDataFrame([], TOPK_SCHEMA if with_metrics else "docid long, score double")
-    if q.is_match_none:
-        return empty
-    plan = _topk_plan(index, q, boost, dtype, similarity, quantize)
+    plan = None if q.is_match_none else _topk_plan(index, q, boost, dtype, similarity, quantize)
     if plan is None:
-        return empty
-    weights, req, rows, sim = plan
+        return index.spark.createDataFrame(
+            [], TOPK_SCHEMA if with_metrics else "docid long, score double"
+        )
+    weights, req, terms, sim = plan
     if theta_seed == 0.0:
         theta_seed = auto_seed_theta(index, q, weights, sim, k, quantize, dtype)
     fn = make_topk_fn(
@@ -1167,7 +1182,7 @@ def search_topk(
         quantize, dtype, opt_counts=dict(q.optional), msm=q.min_should_match,
         theta_seed=theta_seed, sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     return out if with_metrics else out.select("docid", "score")
 
@@ -1176,8 +1191,8 @@ def _topk_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
                similarity: Optional[str] = None, quantize: bool = True):
     """Shared setup for the per-segment top-k paths: resolve term weights
     (through the pluggable similarity when one is named — Similarity seam,
-    SURVEY.md §2.4) and the filtered postings rows; None when the query
-    cannot match."""
+    SURVEY.md §2.4) and the terms whose postings the segments read; None
+    when the query cannot match."""
     from .similarities import bind_similarity
 
     sim = bind_similarity(
@@ -1190,9 +1205,7 @@ def _topk_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
         return None
     if q.min_should_match > sum(c for t, c in q.optional if t in weights):
         return None  # terms absent from the index can never credit msm
-    all_terms = sorted(set(weights) | set(q.excluded))
-    rows = index.postings_for(all_terms)
-    return weights, req, rows, sim
+    return weights, req, sorted(set(weights) | set(q.excluded)), sim
 
 
 # largest posting list the auto seed will decode on the driver: bounded
@@ -1381,7 +1394,7 @@ def block_skip_metrics(
     plan = _topk_plan(index, q, boost, dtype, similarity, quantize)
     if plan is None:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    weights, req, rows, sim = plan
+    weights, req, terms, sim = plan
     if theta_seed == 0.0:
         # mirror search_topk's default plan so the reported ratio is what
         # a default call actually decodes
@@ -1391,11 +1404,15 @@ def block_skip_metrics(
         quantize, dtype, opt_counts=dict(q.optional), msm=q.min_should_match,
         theta_seed=theta_seed, sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn.metrics_fn, METRICS_SCHEMA)
-    row = per_seg.agg(
-        F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
-    ).collect()[0]
-    tot, dec = int(row["t"] or 0), int(row["d"] or 0)
+    return _sum_metrics(apply_per_segment(index, terms, fn.metrics_fn, METRICS_SCHEMA))
+
+
+def _sum_metrics(per_seg: DataFrame) -> dict:
+    """Driver-side sum of the per-segment metrics rows (one row per
+    segment, so bounded by the segment count)."""
+    rows = per_seg.collect()
+    tot = sum(int(r["blocks_total"]) for r in rows)
+    dec = sum(int(r["blocks_decoded"]) for r in rows)
     return {
         "blocks_total": tot,
         "blocks_decoded": dec,
@@ -1526,9 +1543,9 @@ def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
             }
         )
 
-    rows = index.postings_for(terms, streams=("block_data", "block_off"))
     return apply_per_segment(
-        index, rows, fn, "docid long, term string, start int, end int"
+        index, terms, fn, "docid long, term string, start int, end int",
+        streams=("block_data", "block_off"),
     )
 
 
@@ -1844,12 +1861,12 @@ def _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype, stop_words,
         similarity, dict(Counter(t for t, _ in terms_off)), stats,
         index.field_stats, boost, quantize, dtype,
     )
-    rows = index.postings_for(distinct, streams=("block_data", "block_pos"))
     fn = make_phrase_topk_fn(
         terms_off, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    return apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    return apply_per_segment(index, distinct, fn, TOPK_SCHEMA,
+                             streams=("block_data", "block_pos"))
 
 
 def make_multiphrase_fn(
@@ -2160,10 +2177,8 @@ def search_multi_phrase(
     from .similarities import bind_similarity
 
     require_positions(index, "MultiPhraseQuery")
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     if not slots:
-        return empty
+        return index.spark.createDataFrame([], "docid long, score double")
     base_off = int(slots[0][0])
     # terms repeating across slots are handled by the rptGroups machinery
     # inside the matcher (union-find groups + multi-term init/advance,
@@ -2174,8 +2189,8 @@ def search_multi_phrase(
     live_slots = []
     for off, alts in norm_slots:
         live = tuple(t for t in alts if t in stats)
-        if not live:
-            return empty  # a slot with no existing alternative can't match
+        if not live:  # a slot with no existing alternative can't match
+            return index.spark.createDataFrame([], "docid long, score double")
         live_slots.append((off, live))
     n = index.field_stats.doc_count
     w = float(
@@ -2187,12 +2202,12 @@ def search_multi_phrase(
         index.field_stats, boost, quantize, dtype,
     )
     distinct = sorted({t for _, a in live_slots for t in a})
-    rows = index.postings_for(distinct, streams=("block_data", "block_pos"))
     fn = make_multiphrase_fn(
         live_slots, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, distinct, fn, TOPK_SCHEMA,
+                                streams=("block_data", "block_pos"))
     return (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)
@@ -3132,9 +3147,7 @@ def _mixed_plan(index: Index, node, quantize: bool, dtype,
     live = [c for c in clauses if all(t in weights for t in c)]
     if msm > len(live):
         msm = -1  # clauses on unindexed terms can never credit msm
-    all_terms = sorted({t for c in live for t in c} | set(excl))
-    rows = index.postings_for(all_terms)
-    return live, excl, msm, weights, sim, rows
+    return live, excl, msm, weights, sim, sorted({t for c in live for t in c} | set(excl))
 
 
 def seed_theta_tree(
@@ -3155,7 +3168,7 @@ def seed_theta_tree(
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return 0.0
-    live, excl, msm, weights, sim, _rows = plan
+    live, excl, msm, weights, sim, _terms = plan
     if not live or msm != 0 or excl or index.has_deletes:
         return 0.0
     stats = index.term_stats_for(sorted({t for c in live for t in c}))
@@ -3164,13 +3177,11 @@ def seed_theta_tree(
         return min(stats.get(t, (1 << 60, 0))[0] for t in c)
 
     cheapest = min(live, key=lead_df)
-    terms = sorted(cheapest)
-    rows = index.postings_for(terms)
     fn = make_mixed_topk_fn(
         [cheapest], [], k, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim, weights=weights,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, sorted(cheapest), fn, TOPK_SCHEMA)
     out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     vals = out.select("score").collect()
     if len(vals) < k:
@@ -3199,13 +3210,11 @@ def search_tree_topk(
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return None
-    spark = index.spark
-    empty = spark.createDataFrame(
-        [], TOPK_SCHEMA if with_metrics else "docid long, score double"
-    )
-    live, excl, msm, weights, sim, rows = plan
+    live, excl, msm, weights, sim, terms = plan
     if not live or msm < 0:
-        return empty
+        return index.spark.createDataFrame(
+            [], TOPK_SCHEMA if with_metrics else "docid long, score double"
+        )
     if theta_seed == 0.0 and msm == 0:
         # msm restricts the qualifying set below any term clause's df, so
         # the stats-based seed is unsound there (same rule as the flat path)
@@ -3216,7 +3225,7 @@ def search_tree_topk(
         live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
         theta_seed=theta_seed, sim=sim, weights=weights, msm=msm,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     return out if with_metrics else out.select("docid", "score")
 
@@ -3237,18 +3246,16 @@ def search_tree_after(
     past-cursor partials stop decoding); any other tree shape falls back
     to the exhaustive evaluation filtered by the cursor."""
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     if plan is not None:
-        live, excl, msm, weights, sim, rows = plan
+        live, excl, msm, weights, sim, terms = plan
         if not live or msm < 0:
-            return empty
+            return index.spark.createDataFrame([], "docid long, score double")
         fn = make_mixed_topk_fn(
             live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
             sim=sim, weights=weights, msm=msm,
             cursor=(float(after_score), int(after_docid)),
         )
-        per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+        per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
         return (
             per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
             .limit(k).select("docid", "score")
@@ -3279,7 +3286,7 @@ def tree_skip_metrics(
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    live, excl, msm, weights, sim, rows = plan
+    live, excl, msm, weights, sim, terms = plan
     if not live or msm < 0:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
     if theta_seed == 0.0 and msm == 0:
@@ -3290,16 +3297,7 @@ def tree_skip_metrics(
         live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
         theta_seed=theta_seed, sim=sim, weights=weights, msm=msm,
     )
-    per_seg = apply_per_segment(index, rows, fn.metrics_fn, METRICS_SCHEMA)
-    row = per_seg.agg(
-        F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
-    ).collect()[0]
-    tot, dec = int(row["t"] or 0), int(row["d"] or 0)
-    return {
-        "blocks_total": tot,
-        "blocks_decoded": dec,
-        "ratio": (dec / tot) if tot else None,
-    }
+    return _sum_metrics(apply_per_segment(index, terms, fn.metrics_fn, METRICS_SCHEMA))
 
 
 def search_query(index: Index, q, k: int = 10, **kw) -> DataFrame:
@@ -3345,20 +3343,17 @@ def search_after(
     quantize = kw.pop("quantize", True)
     dtype = kw.pop("dtype", np.float32)
     boost = kw.pop("boost", 1.0)
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
-    if q.is_match_none:
-        return empty
-    plan = _topk_plan(index, q, boost, dtype, kw.pop("similarity", None), quantize)
+    similarity = kw.pop("similarity", None)
+    plan = None if q.is_match_none else _topk_plan(index, q, boost, dtype, similarity, quantize)
     if plan is None:
-        return empty
-    weights, req, rows, sim = plan
+        return index.spark.createDataFrame([], "docid long, score double")
+    weights, req, terms, sim = plan
     fn = make_topk_fn(
         weights, req, list(q.excluded), k, float(index.field_stats.avgdl()),
         quantize, dtype, cursor=(float(after_score), int(after_docid)),
         opt_counts=dict(q.optional), msm=q.min_should_match, sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     return (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)

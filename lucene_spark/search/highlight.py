@@ -149,9 +149,9 @@ def highlight_topk(
     }
     if not weights:
         return empty
-    rows = index.postings_for(sorted(weights), streams=("block_data", "block_pos"))
     fn = make_highlight_fn(weights, docids, int(width))
-    hl = apply_per_segment(index, rows, fn, HL_SCHEMA)
+    hl = apply_per_segment(index, sorted(weights), fn, HL_SCHEMA,
+                           streams=("block_data", "block_pos"))
     top_df = F.broadcast(
         spark.createDataFrame(
             [(int(r["docid"]), float(r["score"])) for r in top_rows],

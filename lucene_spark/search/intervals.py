@@ -931,8 +931,8 @@ def search_intervals(index, node) -> DataFrame:
     stats = index.term_stats_for(distinct)
     if any(t not in stats for t in required) or not any(t in stats for t in distinct):
         return index.spark.createDataFrame([], INTERVALS_SCHEMA)
-    rows = index.postings_for(distinct, streams=("block_data", "block_pos"))
-    return apply_per_segment(index, rows, make_intervals_fn(node), INTERVALS_SCHEMA)
+    return apply_per_segment(index, distinct, make_intervals_fn(node), INTERVALS_SCHEMA,
+                             streams=("block_data", "block_pos"))
 
 
 def interval_topk(
@@ -951,14 +951,12 @@ def interval_topk(
     score desc, docid asc."""
     from .scorer import idf as _idf
 
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     node = expand_interval_sources(index, node)
     distinct = sorted(set(leaf_terms(node)))
     stats = index.term_stats_for(distinct)
     live = [t for t in distinct if t in stats]
     if not live:
-        return empty
+        return index.spark.createDataFrame([], "docid long, score double")
     n = index.field_stats.doc_count
     w = float(boost) * float(
         sum(float(_idf(stats[t][0], n, np.float64)) for t in live)

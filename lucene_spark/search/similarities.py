@@ -70,7 +70,7 @@ class BoundSimilarity:
     """A similarity bound to one query: per-term weights precomputed from
     global stats; vectorized scoring + per-block upper bounds in engine
     dtype. Instances are closure-captured into the per-segment
-    applyInPandas scorer, so they hold only plain dicts/floats."""
+    scorer tasks, so they hold only plain dicts/floats."""
 
     name: str = "?"
     #: per-term W (terms with df == 0 are dropped — no postings, weight 0)

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -36,6 +36,26 @@ def spread_small(df):
     except Exception:
         pass
     return df
+
+
+def slice_tasks(spark: SparkSession, items: list, fn, schema: str,
+                n_tasks: int | None = None) -> DataFrame:
+    """File-granular tasks: deal a small driver-side list (segment files,
+    staged shards) round-robin into ``min(len(items), n_tasks or
+    defaultParallelism)`` slices and run ``fn(slice) -> iterable of pandas
+    frames`` once per slice, one task each, in a single ``mapInPandas``
+    over ``spark.range``. Tasks read their own files (IndexSearcher slices
+    + searchLeaf, IndexSearcher.java:323-341,760): no input scan, no
+    Exchange for AQE to coalesce, no JVM->Python copy of the data."""
+    n = max(1, min(len(items), n_tasks or spark.sparkContext.defaultParallelism))
+    slices = [items[i::n] for i in range(n)]
+
+    def run(batches):
+        for pdf in batches:
+            for i in pdf["id"]:
+                yield from fn(slices[int(i)])
+
+    return spark.range(0, n, 1, n).mapInPandas(run, schema)
 
 
 def get_spark(app: str = "lucene_spark", master: str | None = None,
@@ -76,6 +96,10 @@ def get_spark(app: str = "lucene_spark", master: str | None = None,
         # NVMe on a real cluster). Override with SPARK_GRAFT_LOCAL_DIR.
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-tmp"))
         .config("spark.ui.enabled", "false")
+        # workers fork from lucene_spark.daemon: the stock pyspark daemon
+        # plus a gate on CPython < 3.13's per-task zip directory re-reads
+        # (~150 ms of every Python task on a 4-core host; daemon.py)
+        .config("spark.python.daemon.module", "lucene_spark.daemon")
     )
     # s3mock:// scheme for the cluster-shaped smoke test: Spark serves the
     # scheme via a RawLocalFileSystem subclass (tiny committed jar); the

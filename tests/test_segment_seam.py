@@ -1,0 +1,224 @@
+"""Slice-local per-segment seam (executor.apply_per_segment) and the
+worker daemon (lucene_spark.daemon): plan shape, results on every index
+kind the seam lists files for, the tombstoned-segment regression, and
+daemon start-up."""
+
+import os
+import shutil
+import subprocess
+import sys
+import zipfile
+import zipimport
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from lucene_spark.index.builder import IndexConfig, append_to_index, build_index
+from lucene_spark.search.executor import (
+    Index,
+    block_skip_metrics,
+    search_exhaustive,
+    search_phrase,
+    search_topk,
+    search_tree_topk,
+)
+from lucene_spark.search.plan import SHOULD, QBool, QTerm, normalize, parse_tree
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _rows(df):
+    return [(int(r["docid"]), float(r["score"])) for r in df.collect()]
+
+
+def _agrees(idx, q, got, k):
+    """``got`` (a pruned top-k) against the exhaustive ranking: same scores
+    up to float32-vs-float64 summation, every doc above the k-th present."""
+    full = dict(_rows(search_exhaustive(idx, q, k=None, quantize=True, dtype=np.float32)))
+    assert len(got) == min(k, len(full))
+    for d, s in got:
+        assert full[d] == pytest.approx(s, rel=1e-5)
+    kth = got[-1][1] if got else 0.0
+    assert {d for d, s in full.items() if s > kth * (1 + 1e-5)} <= {d for d, _ in got}
+
+
+@pytest.fixture(scope="module")
+def three_seg(spark, tmp_path_factory):
+    """A 3-segment positions index and a tombstoned copy of it."""
+    from lucene_spark.corpus import corpus_spark_df
+
+    base = tmp_path_factory.mktemp("seam")
+    cfg = IndexConfig(num_segments=3, index_positions=True)
+    paths = build_index(spark, corpus_spark_df(spark, 300, seed=7), str(base / "live"), cfg)
+    shutil.copytree(paths.root, str(base / "tomb"))
+    tomb = Index.open(spark, str(base / "tomb"))
+    assert tomb.delete_by_term("public") > 0
+    return Index(spark, paths), tomb
+
+
+def _jobs(spark, name, call):
+    """Run ``call`` under job group ``name``; returns (result, numTasks of
+    every stage its jobs ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup(name) for s in st.getJobInfo(j).stageIds]
+    return out, [st.getStageInfo(s).numTasks for s in stages]
+
+
+@pytest.mark.parametrize("deleted", [False, True], ids=["live", "tombstoned"])
+def test_one_stage_no_exchange(spark, three_seg, deleted):
+    idx = three_seg[deleted]
+    assert idx.has_deletes == deleted
+    want_tasks = [min(3, spark.sparkContext.defaultParallelism)]
+    frames = {
+        "topk": lambda: search_topk(idx, normalize(should=["import", "def"]), k=5),
+        "tree": lambda: search_tree_topk(idx, parse_tree("(import AND def) OR return"), k=5),
+        "phrase": lambda: search_phrase(idx, ["import", "def"], k=5),
+    }
+    for name, make in frames.items():
+        df = make()
+        _, tasks = _jobs(spark, f"seam-{name}-{deleted}", df.collect)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "FlatMapCoGroupsInPandas" not in plan, plan
+        assert tasks == want_tasks, (name, tasks)
+    m, tasks = _jobs(spark, f"seam-metrics-{deleted}",
+                     lambda: block_skip_metrics(idx, normalize(should=["import", "def"]), k=5))
+    assert m["blocks_total"] > 0 and tasks == want_tasks
+
+
+def test_tombstoned_segment_without_query_term(spark, tmp_path):
+    """A segment with tombstones but no postings for the query term: the
+    old cogroup seam handed the worker an empty postings group (a worker
+    SIGSEGV in pyarrow); the slice tasks skip segments holding no rows."""
+    rows = [(i, ("rare common" if i in (1, 2) else "common filler")) for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, content string")
+    cfg = IndexConfig(docid_col="doc_id", content_col="content", num_segments=3,
+                      order_cols=("doc_id",))
+    idx = Index(spark, build_index(spark, df, str(tmp_path / "idx"), cfg))
+    idx.delete_docs([25, 28])
+    tombstoned = {int(r["segment_id"]) for r in idx.tombstones.collect()}
+    holding = {sid for sid, _ in idx.segment_files()
+               if "rare" in set(idx.seg_postings.filter(f"segment_id = {sid}")
+                                .select("term").toPandas()["term"])}
+    assert tombstoned and not tombstoned & holding
+    q = normalize(should=["rare"], pre_analyzed=True)
+    got = _rows(search_topk(idx, q, k=10))
+    assert [d for d, _ in got] == [1, 2]
+    _agrees(idx, q, got, 10)
+    tree = QBool(((SHOULD, QTerm("rare")),))
+    assert _rows(search_tree_topk(idx, tree, k=10, quantize=True, dtype=np.float32)) == got
+
+
+def test_generation_snapshot_after_append(spark, tmp_path):
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(docid_col="doc_id", content_col="content", num_segments=2,
+                      order_cols=("doc_id",))
+    rows = [(i, f"alpha beta doc{i % 3}") for i in range(20)]
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, content string"), d, cfg)
+    more = spark.createDataFrame([(i, "alpha alpha gamma") for i in range(100, 110)],
+                                 "doc_id long, content string")
+    paths = append_to_index(spark, more, d, cfg, keep_commits=True)
+    old, live = Index(spark, paths, generation=0), Index(spark, paths)
+    assert len(live.segment_files()) > len(old.segment_files())
+    q = normalize(should=["alpha", "doc1"], pre_analyzed=True)
+    for idx in (old, live):
+        _agrees(idx, q, _rows(search_topk(idx, q, k=40)), 40)
+    assert max(d for d, _ in _rows(search_topk(old, q, k=40))) < 20
+
+
+def test_multireader_and_object_store_root(spark, tmp_path):
+    from lucene_spark.corpus import make_corpus
+    from lucene_spark.search.multireader import multi_search_topk, open_shards
+
+    rows = [(i, r[4]) for i, r in enumerate(make_corpus(200, seed=5))]
+    cfg = IndexConfig(docid_col="doc_id", content_col="content", num_segments=2,
+                      order_cols=("doc_id",))
+
+    def build(root, part):
+        df = spark.createDataFrame(part, "doc_id long, content string")
+        return Index(spark, build_index(spark, df, root, cfg))
+
+    full = build(str(tmp_path / "full"), rows)
+    s3 = build("s3mock://" + str(tmp_path / "s3"), rows)
+    build(str(tmp_path / "s1"), rows[:100])
+    build(str(tmp_path / "s2"), rows[100:])
+    shards = open_shards(spark, [str(tmp_path / "s1"), str(tmp_path / "s2")])
+    q = normalize(should=["import", "return", "def"])
+    want = _rows(search_topk(full, q, k=10))
+    assert len(want) == 10
+    assert _rows(multi_search_topk(shards, q, k=10)) == want
+    assert _rows(search_topk(s3, q, k=10)) == want
+    # tombstones are read per segment through the object-store handler too
+    for idx in (full, s3):
+        idx.delete_docs([d for d, _ in want[:3]])
+    got = _rows(search_topk(s3, q, k=10))
+    assert got == _rows(search_topk(full, q, k=10))
+    assert not {d for d, _ in want[:3]} & {d for d, _ in got}
+    _agrees(s3, q, got, 10)
+
+
+def test_worker_runs_gated_invalidate_caches(spark):
+    def probe(batches):
+        from lucene_spark import daemon
+
+        for _ in batches:
+            yield pd.DataFrame({"gated": [daemon.gated()]})
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(probe, "gated boolean").collect()
+    assert rows[0]["gated"] == (sys.version_info < (3, 13))
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="CPython 3.13 invalidates zip caches lazily; no gate")
+def test_gate_rereads_only_rewritten_archives(tmp_path, monkeypatch):
+    from lucene_spark import daemon
+
+    z = str(tmp_path / "pkg.zip")
+    with zipfile.ZipFile(z, "w") as f:
+        f.writestr("mod_a.py", "X = 1\n")
+    first = zipimport.zipimporter(z)
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+
+    daemon._gated_invalidate_caches(first)
+    daemon._gated_invalidate_caches(first)
+    daemon._gated_invalidate_caches(zipimport.zipimporter(z))
+    assert len(reads) == 1  # unchanged archive: read once for all importers
+
+    with zipfile.ZipFile(z, "w") as f:
+        f.writestr("mod_b.py", "Y = 22\n")
+        f.writestr("mod_c.py", "Z = 3\n")
+    daemon._gated_invalidate_caches(first)
+    assert len(reads) == 2
+    assert first.find_spec("mod_b") is not None and first.find_spec("mod_a") is None
+
+
+def test_startup_outside_repo(tmp_path):
+    """Spark starts, and a query runs, from a cwd outside the repository
+    with the package on PYTHONPATH (the daemon imports it at start-up)."""
+    script = (
+        "from lucene_spark.session import get_spark\n"
+        "from lucene_spark.index.builder import IndexConfig, build_index\n"
+        "from lucene_spark.search.executor import Index, search_topk\n"
+        "from lucene_spark.search.plan import normalize\n"
+        "spark = get_spark('outside', master='local[1]')\n"
+        "df = spark.createDataFrame([(0, 'alpha beta'), (1, 'alpha')], 'doc_id long, content string')\n"
+        "cfg = IndexConfig(docid_col='doc_id', content_col='content', num_segments=1, order_cols=('doc_id',))\n"
+        "idx = Index(spark, build_index(spark, df, 'idx', cfg))\n"
+        "print('HITS', [r['docid'] for r in search_topk(idx, normalize(should=['beta'], pre_analyzed=True), k=5).collect()])\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "HITS [0]" in out.stdout, out.stdout
