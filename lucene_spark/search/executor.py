@@ -47,6 +47,7 @@ from .plan import (
     QRange,
     QTerm,
     QWildcard,
+    mixed_or_clauses,
 )
 from .scorer import FieldStats, score_arrays, term_weights
 
@@ -468,8 +469,7 @@ class Index:
         )
 
 
-def _weights_for(index: Index, q: NormalizedQuery, boost: float, dtype) -> Dict[str, float]:
-    qtf = q.scoring_terms
+def _weights_for(index: Index, qtf: Dict[str, int], boost: float, dtype) -> Dict[str, float]:
     stats = index.term_stats_for(list(qtf))
     return term_weights(qtf, {t: s[0] for t, s in stats.items()},
                         index.field_stats.doc_count, boost, dtype)
@@ -636,7 +636,7 @@ def search_exhaustive(
         similarity, q.scoring_terms, index.term_stats_for(list(q.scoring_terms)),
         index.field_stats, boost, quantize, dtype,
     )
-    weights = sim.weights if sim is not None else _weights_for(index, q, boost, dtype)
+    weights = sim.weights if sim is not None else _weights_for(index, q.scoring_terms, boost, dtype)
     req = [t for t, _ in q.required]
     live_terms = [t for t in q.scoring_terms if t in weights]
     if not live_terms or any(t not in weights for t in req):
@@ -695,7 +695,7 @@ def search_exhaustive(
 
 
 # ---------------------------------------------------------------------------
-# Per-segment vectorized block-max top-k (the WAND/MAXSCORE path)
+# Per-segment block-max top-k: one clause kernel for every boolean shape
 # ---------------------------------------------------------------------------
 
 def _decode_rows(row, sel: Optional[np.ndarray], counters: List[int]):
@@ -719,69 +719,144 @@ def _decode_rows(row, sel: Optional[np.ndarray], counters: List[int]):
     return tuple(np.concatenate(x) for x in zip(*parts))
 
 
-def make_topk_fn(
-    weights: Dict[str, float],
-    required: Sequence[str],
-    excluded: Sequence[str],
-    k: int,
-    avgdl: float,
-    quantize: bool,
-    dtype,
-    cursor: Optional[Tuple[float, int]] = None,
-    opt_counts: Optional[Dict[str, int]] = None,
-    msm: int = 0,
-    theta_seed: float = 0.0,
-    sim=None,
-):
-    """Build the per-segment scorer ``fn(key, pdf, deleted)`` for apply_per_segment.
+@dataclass
+class ClausePlan:
+    """A boolean query lowered for the clause kernel — the clause
+    ScorerSuppliers BooleanScorerSupplier.java:288-317 composes one
+    top-level scorer from. Each clause is ``(members, must, credit)``:
 
-    Pure OR      -> MAXSCORE phases: process terms by descending max-score;
-                    once the remaining terms' summed max-scores fall below
-                    the running k-th score, restrict decoding to blocks
-                    holding still-competitive candidates
-                    (MaxScoreBulkScorer.java:26 essential/non-essential split).
-    With MUST    -> block-max conjunction: lead with the rarest required
-                    term, leapfrog the rest at block granularity
-                    (ConjunctionDISI.java:166-206, BlockMaxConjunctionBulkScorer.java:36).
-    MUST_NOT     -> decoded-docid set subtraction (ReqExclScorer.java:26).
-    Final scores are re-summed in sorted-term order (canonical float32
-    order) for cross-path exactness; pruning uses PRUNE_SCALE slack.
+    - ``members`` maps term -> weight; the clause scores
+      Σ sim.score(t, tf, dl) · w over its members, and a doc matches it
+      only when it holds EVERY member (a term clause has one member);
+    - ``must`` marks a MUST/FILTER clause (a FILTER term has weight 0);
+    - ``credit`` is the SHOULD clause instances it counts toward ``msm``.
 
-    ``msm`` > 0 adds the minimumNumberShouldMatch constraint — the batched
-    analog of freq-counting WAND (WANDScorer.java:55 scorerMode FREQS,
-    BooleanScorerSupplier.java:297-306): per-doc matched-clause counts
-    accumulate alongside scores (``opt_counts`` maps each SHOULD term to
-    the clause instances it credits), theta only seeds from docs already
-    GUARANTEED to qualify (counts only grow, so qualification is
-    monotone), candidate retention additionally keeps any doc whose count
-    could still reach msm, and blocks are skipped for NEW docs once the
-    remaining terms' total clause credit cannot reach msm.
+    ``clauses == ()`` means the query provably matches nothing."""
 
-    ``theta_seed`` > 0 pre-loads every segment's pruning threshold with a
-    lower bound of the GLOBAL k-th score (MaxScoreAccumulator analog,
-    search/MaxScoreAccumulator.java:23 — concurrent leaf collectors share
-    the max over their local minimum competitive scores; here the driver
-    seeds it once from a cheap partial-query pass). Sound because any true
-    lower bound of the final k-th full score may prune.
-    """
+    clauses: Tuple[Tuple[Dict[str, float], bool, int], ...]
+    excluded: Tuple[str, ...]
+    msm: int
+    sim: object
+    dtype: type
+
+    @property
+    def terms(self) -> List[str]:
+        """Every term whose postings the segments read."""
+        return sorted({t for m, _, _ in self.clauses for t in m} | set(self.excluded))
+
+
+def _clause_plan(index: Index, clauses, excluded, msm: int, qtf: Dict[str, int],
+                 boost: float, quantize: bool, dtype,
+                 similarity: Optional[str]) -> ClausePlan:
+    """Resolve weights through the similarity seam (SURVEY.md §2.4) and
+    drop dead clauses: a clause on a term absent from the index can never
+    match, so a dead MUST clause, no live clause, or ``msm`` beyond the
+    live clauses' credit makes the plan empty."""
+    from .similarities import BM25Bound, bind_similarity
+
+    sim = bind_similarity(
+        similarity, qtf, index.term_stats_for(list(qtf)),
+        index.field_stats, boost, quantize, dtype,
+    )
     if sim is None:
-        from .similarities import BM25Bound
+        sim = BM25Bound(_weights_for(index, qtf, boost, dtype),
+                        float(index.field_stats.avgdl()), quantize, dtype)
+    live, dead_must = [], False
+    for c in clauses:
+        if all(t in sim.weights for t in c[0]):
+            live.append(c)
+        else:
+            dead_must |= c[1]
+    if dead_must or not live or msm < 0 or msm > sum(c[2] for c in live):
+        live = []
+    return ClausePlan(tuple(live), tuple(sorted(set(excluded))), int(msm), sim, dtype)
 
-        sim = BM25Bound(weights, avgdl, quantize, dtype)
-    req = sorted(set(required))
-    excl = sorted(set(excluded))
+
+def _flat_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
+               similarity: Optional[str] = None, quantize: bool = True) -> ClausePlan:
+    """A flat query lowers to one clause per scoring term, weight 1.0 (the
+    term weights already fold qtf and boost): MUST for required and FILTER
+    terms, credit = the term's SHOULD qtf."""
+    req, opt, qtf = dict(q.required), dict(q.optional), q.scoring_terms
+    clauses = [({t: 1.0}, t in req, opt.get(t, 0)) for t in sorted(qtf)]
+    return _clause_plan(index, clauses, q.excluded, q.min_should_match, qtf,
+                        boost, quantize, dtype, similarity)
+
+
+def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
+                        cursor: Optional[Tuple[float, int]] = None):
+    """Per-segment scorer ``run(pdf, deleted) -> (docids, scores,
+    [blocks_total, blocks_decoded])`` for a ClausePlan: the batched analog
+    of MAXSCORE/WAND over arbitrary clause scorers (WANDScorer.java:55,
+    MaxScoreBulkScorer.java:26). A clause's bound is Σ w · (member's
+    per-block impact bound) — a conjunction's getMaxScore is its members'
+    sum (BooleanScorerSupplier.java:288-317).
+
+    - MUST: every member of every MUST clause forms ONE conjunction,
+      evaluated first. It leads with its rarest member
+      (ConjunctionDISI.java:166-206); the other members decode only the
+      blocks holding lead candidates, in descending block-bound order with
+      a per-candidate potential test (BlockMaxConjunctionBulkScorer.java:36).
+      After it, SHOULD clauses admit no new docs (ReqOptSumScorer).
+    - SHOULD clauses run in ASCENDING decode-cost order: cheap clauses land
+      exact partials first, so an expensive clause evaluated last is tested
+      against real totals rather than every later clause's bound (the
+      non-essential clauses are only probed on candidates). Once the
+      remaining clauses' summed bounds fall below the running k-th score,
+      evaluation is restricted to still-competitive candidates; a term
+      clause decodes its blocks in chunks of MAXSCORE_CHUNK, best bound
+      first, refreshing theta between chunks.
+    - ``msm``: per-doc matched credit accumulates (freq-counting WAND,
+      BooleanScorerSupplier.java:297-306); theta only rises from docs
+      already GUARANTEED to qualify (credit only grows), and NEW docs stop
+      being admitted once the remaining credit cannot reach msm.
+    - MUST_NOT: an up-front ban merged into liveDocs
+      (ReqExclScorer.java:26), so an excluded doc never raises theta.
+    - ``theta_seed`` > 0 pre-loads the threshold with a lower bound of the
+      GLOBAL k-th score (MaxScoreAccumulator.java:23; see auto_seed_theta).
+    - ``cursor`` = (after_score, after_docid) pages after a previous hit
+      (IndexSearcher.searchAfter): a partial sum already past the cursor
+      can never re-enter the page (sums only grow) and stops decoding;
+      theta only rises from docs GUARANTEED on the page, at clause ends.
+
+    ``acc`` (float64) drives pruning only, with PRUNE_SCALE slack. Final
+    scores sum every (clause, member) contribution sim.score · w in the
+    engine dtype in ONE canonical order — clauses by member tuple, members
+    by term — which for a flat query is the sorted-term float32 sum of the
+    reference. ``blocks_total`` is a plan invariant (every block of every
+    viable term, once); ``blocks_decoded`` counts decode events."""
+    sim, dtype, msm = plan.sim, plan.dtype, int(plan.msm)
+    excl = list(plan.excluded)
     scale = PRUNE_SCALE[dtype]
-    oc = {t: int(c) for t, c in (opt_counts or {}).items() if c > 0}
-    msm = int(msm)
     # resolved driver-side at plan time and captured in the closure, so the
     # worker-side run() never consults module state
     chunk_blocks = int(MAXSCORE_CHUNK)
-
+    after_bound = float(cursor[0]) if cursor is not None else None
+    after_docid = int(cursor[1]) if cursor is not None else None
+    slack = 2.0 - scale  # tiny upward slack for float re-association
     _Z = np.empty(0, np.int64)
 
+    # canonical contribution slots: clauses by member tuple, members by term
+    corder = sorted(range(len(plan.clauses)), key=lambda ci: tuple(sorted(plan.clauses[ci][0])))
+    slot_of = {}
+    for ci in corder:
+        for t in sorted(plan.clauses[ci][0]):
+            slot_of[ci, t] = len(slot_of)
+    # evaluation units: (term -> [(slot, w)], credit); the MUST clauses
+    # merge into one conjunction unit at the head
+    units, has_must = [], any(must for _, must, _ in plan.clauses)
+    if has_must:
+        conj: Dict[str, list] = {}
+        for ci, (m, must, _c) in enumerate(plan.clauses):
+            if must:
+                for t, w in m.items():
+                    conj.setdefault(t, []).append((slot_of[ci, t], float(w)))
+        units.append((conj, sum(c for _, must, c in plan.clauses if must)))
+    units += [({t: [(slot_of[ci, t], float(w))] for t, w in m.items()}, c)
+              for ci, (m, must, c) in enumerate(plan.clauses) if not must]
+
     def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
-        """Core per-segment scorer -> (docids, scores, counters);
-        ``deleted`` is this segment's sorted tombstone array."""
+        """``deleted`` is this segment's sorted tombstone array."""
         counters = [0, 0]  # blocks_total, blocks_decoded
         rows = {}
         for r in pdf.to_dict("records"):  # dicts, not iterrows Series
@@ -790,29 +865,29 @@ def make_topk_fn(
         for t in rows:
             rows[t].sort(key=lambda r: r["first_docid"])
 
-        scoring = [t for t in sorted(weights) if t in rows]
-        if not scoring or any(t not in rows for t in req):
+        # a clause is viable here iff EVERY member has postings in this
+        # segment; the segment matches nothing without the MUST unit or
+        # when the viable clauses cannot credit msm
+        viable = [u for u in units if all(t in rows for t in u[0])]
+        if (not viable or (has_must and viable[0] is not units[0])
+                or msm > sum(c for _, c in viable)):
             return _Z, _Z.astype(np.float64), counters
 
-        if excl:
-            # MUST_NOT as an up-front ban mask merged into liveDocs
-            # (ReqExclScorer.java:26): excluded docs must never score, enter
-            # `seen`, or RAISE THETA — a doc destined for exclusion holding
-            # a top-k slot would inflate the pruning threshold above the
-            # true k-th score and silently drop real hits (an end-of-run
-            # subtraction is too late for the threshold)
-            ex_parts = [
-                _decode_rows(r, None, counters)[0]
-                for t in excl if t in rows for r in rows[t]
-            ]
-            if ex_parts:
-                banned = np.unique(np.concatenate(ex_parts))
-                deleted = (
-                    banned if deleted is None else np.union1d(deleted, banned)
-                )
+        terms_here = sorted({t for u in viable for t in u[0]})
+        counters[0] += sum(
+            len(r["block_first"])
+            for t in terms_here + [t for t in excl if t in rows]
+            for r in rows[t]
+        )
 
-        base = min(int(r["first_docid"]) for t in scoring for r in rows[t])
-        hi = max(int(r["last_docid"]) for t in scoring for r in rows[t])
+        def _dec(r, sel):
+            visit = [0, 0]  # blocks_total is counted once, above
+            out = _decode_rows(r, sel, visit)
+            counters[1] += visit[1]
+            return out
+
+        base = min(int(r["first_docid"]) for t in terms_here for r in rows[t])
+        hi = max(int(r["last_docid"]) for t in terms_here for r in rows[t])
         n = hi - base + 1
         if n > 500_000_000:
             # dense accumulator assumes segment-local docid ranges (the
@@ -822,11 +897,16 @@ def make_topk_fn(
                 "use the engine's docid assignment or densify docid_col"
             )
 
+        if excl:
+            ex_parts = [_dec(r, None)[0] for t in excl if t in rows for r in rows[t]]
+            if ex_parts:
+                banned = np.unique(np.concatenate(ex_parts))
+                deleted = banned if deleted is None else np.union1d(deleted, banned)
+
         def decode_term(t, sel=None):
             if sel is not None and len(sel) == 0:
-                z = np.empty(0, np.int64)
-                return z, z, z
-            parts = [_decode_rows(r, sel, counters) for r in rows[t]]
+                return _Z, _Z, _Z
+            parts = [_dec(r, sel) for r in rows[t]]
             ids = np.concatenate([p[0] for p in parts])
             tfs = np.concatenate([p[1] for p in parts])
             dls = np.concatenate([p[2] for p in parts])
@@ -837,8 +917,6 @@ def make_topk_fn(
             if live is not None:
                 ids, tfs, dls = ids[live], tfs[live], dls[live]
             return ids, tfs, dls
-
-        contrib = {t: np.zeros(n, dtype=dtype) for t in scoring}
 
         def block_ubs(t, r):
             """Per-block score upper bounds for one (term, salt) row: max
@@ -881,165 +959,146 @@ def make_topk_fn(
                 ),
             )
 
-        if req:
-            # --- conjunction: lead with rarest required term
-            req_order = sorted(req, key=lambda t: sum(int(r["df"]) for r in rows[t]))
-            lead = req_order[0]
-            ids, tfs, dls = decode_term(lead)
-            cand = ids
-            contrib[lead][ids - base] = sim.score(lead, tfs, dls)
-            for t in req_order[1:]:
-                ids, tfs, dls = decode_term(t, sel=cand)
-                contrib[t][ids - base] = sim.score(t, tfs, dls)
-                cand = np.intersect1d(cand, ids, assume_unique=True)
-                if len(cand) == 0:
-                    return _Z, _Z.astype(np.float64), counters
-            opt = [t for t in scoring if t not in req]
-            nm = np.zeros(len(cand), np.int64) if msm > 0 else None
-            for t in opt:
-                ids, tfs, dls = decode_term(t, sel=cand)  # ReqOptSumScorer probe
-                contrib[t][ids - base] = sim.score(t, tfs, dls)
-                if nm is not None and len(ids):
-                    nm[np.searchsorted(cand, ids)] += oc.get(t, 0)
-            # minShouldMatch on top of the conjunction: keep candidates
-            # with >= msm matched SHOULD clause instances
-            # (BooleanScorerSupplier.java:297-306 req+minShouldMatch path)
-            matched = cand if nm is None else cand[nm >= msm]
-        else:
-            # --- pure disjunction: block-max MAXSCORE over descending
-            # max-score terms, with PER-BLOCK upper bounds and progressive
-            # theta refresh (MaxScoreBulkScorer.java:26 scores windows and
-            # re-partitions essential terms as the threshold grows; here the
-            # window is a CHUNK of blocks and the per-block bound comes from
-            # the skip data's block_maxtf/block_mindl impacts,
-            # MaxScoreCache.java:74-130). Within a term, chunks are decoded
-            # in DESCENDING upper-bound order: the first chunk seeds theta
-            # near its final value, so low-bound blocks skip even when the
-            # term itself is "essential" (batch evaluation has no docid-order
-            # constraint — the dense accumulator is order-free).
-            order = sorted(scoring, key=lambda t: -umax(t))
-            umaxes = np.array([umax(t) for t in order], dtype=np.float64)
-            suffix = np.concatenate((np.cumsum(umaxes[::-1])[::-1], [0.0]))
-            # remaining SHOULD-clause credit from term i onward (freq-counting
-            # WAND upper bound, WANDScorer.java:55): cnt_suffix[i] bounds how
-            # much a doc's matched-clause count can still grow
-            counts = np.array([oc.get(t, 0) for t in order], dtype=np.int64)
-            cnt_suffix = np.concatenate((np.cumsum(counts[::-1])[::-1], [0]))
-            nmatch = np.zeros(n, dtype=np.int64) if msm > 0 else None
-            acc = np.zeros(n, dtype=np.float64)
-            seen = np.zeros(n, dtype=bool)
-            theta = float(theta_seed) if theta_seed > 0 else -np.inf
-            # cursor mode (pruned searchAfter): scores only grow as terms
-            # accumulate, so a candidate whose partial sum already exceeds
-            # the cursor score can never re-enter the page and is dropped
-            # from decoding; theta may only be raised from candidates
-            # GUARANTEED to stay at/below the cursor (acc + max-remaining
-            # <= after_score), keeping block skipping sound. Mid-term theta
-            # refresh is disabled in cursor mode: the "guaranteed" bound
-            # needs the full remaining potential, unknown mid-list.
-            after_bound = float(cursor[0]) if cursor is not None else None
-            slack = 2.0 - scale  # tiny upward slack for float re-association
-            CHUNK = chunk_blocks  # blocks per theta-refresh window
+        def wsum(slots):
+            return sum(w for _, w in slots)
 
-            def kth(vals: np.ndarray) -> float:
-                return float(np.partition(vals, len(vals) - k)[len(vals) - k])
+        def nblocks(t):
+            return sum(len(r["block_first"]) for r in rows[t])
 
-            def ids_seen() -> np.ndarray:
-                # candidate fallback before theta is live: every seen doc
-                return np.flatnonzero(seen) + base
+        def dfsum(t):
+            return sum(int(r["df"]) for r in rows[t])
 
-            for i, t in enumerate(order):
-                rest = float(suffix[i + 1])
-                # competitive partial-sum candidates: a doc outside this set
-                # was proven unable to reach theta even with every remaining
-                # term at max score — permanently non-competitive (theta only
-                # grows). Recomputed LAZILY whenever theta has grown since the
-                # set was built (a set built at a smaller theta is a sound
-                # superset, so reuse between refreshes is safe). The lazy
-                # refresh is what keeps mid-term theta transitions sound: if
-                # theta first turns positive inside this term's chunk loop,
-                # docs seen by EARLIER terms that sit in this term's low-bound
-                # blocks must still be protected by the candidate test — an
-                # ub-only skip would silently drop their contribution from
-                # this term and corrupt their final score.
-                sel: Optional[np.ndarray] = None
-                sel_theta = -np.inf  # theta at which `sel` was computed
+        def cost(u):
+            # estimated blocks decoded: a term clause scans its own list; a
+            # conjunction decodes its rarest member plus, for every other
+            # member, at most one block per lead posting (leapfrog)
+            ms = sorted(u[0], key=dfsum)
+            return nblocks(ms[0]) + sum(min(nblocks(t), dfsum(ms[0])) for t in ms[1:])
 
-                def refresh_sel():
-                    # None -> compute as soon as theta is live (soundness);
-                    # afterwards re-tighten only on meaningful theta growth
-                    # (the O(n) scan amortizes across chunks; stale = sound).
-                    nonlocal sel, sel_theta
-                    if theta <= 0 or (sel is not None and theta <= sel_theta * 1.05):
-                        return
-                    mask = seen & (acc + suffix[i] >= theta * scale)
-                    if nmatch is not None:
-                        # count-hopeless docs can be dropped outright: the
-                        # remaining clause credit cannot lift them to msm
-                        mask &= nmatch + cnt_suffix[i] >= msm
-                    if after_bound is not None:
-                        mask &= acc <= after_bound * slack
-                    sel = np.flatnonzero(mask) + base
-                    sel_theta = theta
+        # evaluation order: the MUST unit, then ascending decode cost. Any
+        # fixed order is SOUND (the suffix bounds below are computed over
+        # it); the order only changes how fast theta sharpens
+        head = viable[:1] if has_must else []
+        viable = head + sorted(viable[len(head):], key=cost)
+        cubs = np.array(
+            [sum(wsum(sl) * umax(t) for t, sl in u[0].items()) for u in viable],
+            dtype=np.float64,
+        )
+        suffix = np.concatenate((np.cumsum(cubs[::-1])[::-1], [0.0]))
+        # remaining clause credit from unit i onward: bounds how much a
+        # doc's matched credit can still grow
+        creds = np.array([c for _, c in viable], dtype=np.int64)
+        cred_suffix = np.concatenate((np.cumsum(creds[::-1])[::-1], [0]))
 
-                refresh_sel()
+        acc = np.zeros(n, dtype=np.float64)
+        seen = np.zeros(n, dtype=bool)
+        nmatch = np.zeros(n, dtype=np.int64) if msm > 0 else None
+        contrib: Dict[int, np.ndarray] = {}  # slot -> dense engine-dtype scores
+        theta = float(theta_seed) if theta_seed > 0 else -np.inf
+        CHUNK = chunk_blocks
+
+        def put(slots, ids, s):
+            for si, w in slots:
+                if si not in contrib:
+                    contrib[si] = np.zeros(n, dtype=dtype)
+                contrib[si][ids - base] = s * w
+
+        def kth(vals: np.ndarray) -> float:
+            return float(np.partition(vals, len(vals) - k)[len(vals) - k])
+
+        def bump_theta(rest=0.0):
+            # theta rises only from docs GUARANTEED to qualify; in cursor
+            # mode additionally GUARANTEED on the page — bound strictly
+            # below the cursor score, or tying it with a docid past the
+            # cursor (a plain <= would count the previous page's boundary
+            # tie group and could prune genuine later-page hits)
+            nonlocal theta
+            qual = seen if nmatch is None else seen & (nmatch >= msm)
+            if after_bound is not None:
+                tot = acc + rest
+                qual = qual & (
+                    (tot < after_bound)
+                    | ((tot == after_bound)
+                       & (np.arange(n, dtype=np.int64) + base > after_docid))
+                )
+            if int(qual.sum()) >= k:
+                theta = max(theta, kth(acc[qual]))
+
+        for i, (members, credit) in enumerate(viable):
+            rest = float(suffix[i + 1])
+            # after the MUST unit no clause admits new docs; otherwise new
+            # docs stop once the remaining credit (this clause included)
+            # cannot reach msm — blocks then matter only for candidates
+            new_docs_ok = (i == 0 or not has_must) and (
+                nmatch is None or cred_suffix[i] >= msm)
+            sel: Optional[np.ndarray] = None
+            sel_theta = -np.inf
+
+            def refresh_sel():
+                # competitive partial-sum candidates: a doc outside was
+                # proven unable to reach theta even with every remaining
+                # clause at its full bound — permanently non-competitive
+                # (theta only grows). Recomputed LAZILY on meaningful theta
+                # growth (a set built at a smaller theta is a sound
+                # superset); computing it as soon as theta is live keeps
+                # mid-clause theta transitions sound: docs seen by EARLIER
+                # clauses in this clause's low-bound blocks stay protected
+                nonlocal sel, sel_theta
+                if theta <= 0 or (sel is not None and theta <= sel_theta * 1.05):
+                    return
+                mask = seen & (acc + suffix[i] >= theta * scale)
+                if nmatch is not None:
+                    # count-hopeless docs can drop outright
+                    mask &= nmatch + cred_suffix[i] >= msm
+                if after_bound is not None:
+                    mask &= acc <= after_bound * slack
+                sel = np.flatnonzero(mask) + base
+                sel_theta = theta
+
+            if len(members) == 1:
+                ((t, slots),) = members.items()
+                fw = wsum(slots)
                 for r, ub in zip(rows[t], term_ubs(t)):
                     bf = np.asarray(r["block_first"], dtype=np.int64)
                     bl = np.asarray(r["block_last"], dtype=np.int64)
                     data = r["block_data"]
-                    nb = len(bf)
-                    counters[0] += nb
-                    # per-block upper bounds from the competitive impact
-                    # pairs (block_ubs) — sound for every registered
-                    # similarity (monotone)
-                    border = np.argsort(-ub, kind="stable")
-                    # once the remaining clause credit (this term included)
-                    # cannot reach msm, blocks only matter for docs already
-                    # in the candidate set — NEW docs cannot qualify
-                    new_docs_ok = nmatch is None or cnt_suffix[i] >= msm
-                    for j in range(0, nb, CHUNK):
+                    ubw = ub * fw
+                    # descending block bound: the first chunk seeds theta
+                    # near its final value (batch evaluation has no
+                    # docid-order constraint — the accumulator is dense)
+                    border = np.argsort(-ubw, kind="stable")
+                    for j in range(0, len(bf), CHUNK):
                         cidx = border[j : j + CHUNK]
                         if theta > 0 or not new_docs_ok:
                             refresh_sel()
                             if new_docs_ok and theta > 0:
-                                keep = ub[cidx] + rest >= theta * scale
+                                keep = ubw[cidx] + rest >= theta * scale
                             elif new_docs_ok:
                                 keep = np.ones(len(cidx), dtype=bool)
                             else:
                                 keep = np.zeros(len(cidx), dtype=bool)
-                            if sel is not None and len(sel):
-                                lo = np.searchsorted(sel, bf[cidx], "left")
-                                hi = np.searchsorted(sel, bl[cidx], "right")
-                                has = hi > lo
-                                if (
-                                    theta > 0 and nmatch is None
-                                    and after_bound is None
-                                ):
-                                    # per-block candidate potential
-                                    # (BlockMaxMaxscore refinement,
-                                    # MaxScoreBulkScorer.java:26): replace
-                                    # the term's GLOBAL max with this
-                                    # block's own ub — a candidate inside
-                                    # whose acc + block ub + remaining max
-                                    # still misses theta proves its final
-                                    # total < theta, so the block can skip
-                                    # even though it holds candidates.
-                                    # (msm/cursor modes keep the coarse
-                                    # test: counts/guarantees need the
-                                    # candidate decode to stay complete.)
+                            cand_set = sel if sel is not None else (
+                                (np.flatnonzero(seen) + base)
+                                if not new_docs_ok else None
+                            )
+                            if cand_set is not None and len(cand_set):
+                                lo = np.searchsorted(cand_set, bf[cidx], "left")
+                                hi2 = np.searchsorted(cand_set, bl[cidx], "right")
+                                has = hi2 > lo
+                                if theta > 0 and nmatch is None:
+                                    # per-block candidate potential: a
+                                    # candidate whose acc + this block's
+                                    # bound + remaining bounds misses theta
+                                    # cannot finish above it (msm keeps the
+                                    # coarse test: its candidates are kept
+                                    # for COUNT too)
                                     for z in np.flatnonzero(has):
                                         cmax = float(
-                                            acc[sel[lo[z]:hi[z]] - base].max()
+                                            acc[cand_set[lo[z]:hi2[z]] - base].max()
                                         )
-                                        if cmax + ub[cidx[z]] + rest < theta * scale:
+                                        if cmax + ubw[cidx[z]] + rest < theta * scale:
                                             has[z] = False
                                 keep |= has
-                            elif sel is None and not new_docs_ok:
-                                # theta not live yet: every seen doc is
-                                # still a candidate
-                                lo = np.searchsorted(ids_seen(), bf[cidx], "left")
-                                hi = np.searchsorted(ids_seen(), bl[cidx], "right")
-                                keep |= hi > lo
                             cidx = cidx[keep]
                         counters[1] += len(cidx)
                         if len(cidx) == 0:
@@ -1049,89 +1108,303 @@ def make_topk_fn(
                         tfs = np.concatenate([p[1] for p in parts])
                         dls = np.concatenate([p[2] for p in parts])
                         live = _live_mask(ids, deleted)
+                        if not new_docs_ok:  # only docs already seen
+                            live = seen[ids - base] if live is None else live & seen[ids - base]
                         if live is not None:
                             ids, tfs, dls = ids[live], tfs[live], dls[live]
                         if len(ids) == 0:
                             continue
                         s = sim.score(t, tfs, dls)
-                        contrib[t][ids - base] = s
-                        acc[ids - base] += s.astype(np.float64)
+                        put(slots, ids, s)
+                        acc[ids - base] += np.asarray(s, np.float64) * fw
                         seen[ids - base] = True
                         if nmatch is not None:
-                            nmatch[ids - base] += counts[i]
+                            nmatch[ids - base] += credit
                         if after_bound is None:
-                            # theta may only rise from docs GUARANTEED to
-                            # satisfy msm (counts are monotone, so already-
-                            # qualified docs stay qualified)
-                            qual = seen if nmatch is None else seen & (nmatch >= msm)
-                            if int(qual.sum()) >= k:
-                                theta = max(theta, kth(acc[qual]))
-                if after_bound is not None:
-                    # only docs GUARANTEED on the page may raise theta: a
-                    # doc whose bound TIES the cursor score lands on the
-                    # page only when its docid breaks the tie (ADVICE r6:
-                    # plain <= counted the page-1 boundary tie group and
-                    # could prune genuine later-page hits)
-                    tot = acc + rest
-                    guaranteed = seen & (
-                        (tot < after_bound)
-                        | ((tot == after_bound)
-                           & (np.arange(n, dtype=np.int64) + base > int(cursor[1])))
-                    )
-                    if nmatch is not None:
-                        guaranteed &= nmatch >= msm
-                    vals = acc[guaranteed]
-                    if len(vals) >= k:
-                        theta = max(theta, kth(vals))
-            if nmatch is None:
-                matched = np.flatnonzero(seen) + base
+                            bump_theta()
             else:
-                matched = np.flatnonzero(seen & (nmatch >= msm)) + base
+                order = sorted(members, key=dfsum)
+                refresh_sel()
+                essential = theta <= 0 or cubs[i] + rest >= theta * scale
+                # non-essential conjunction (or no room for new docs):
+                # only still-competitive docs can be affected, so even the
+                # LEAD decode is restricted
+                if essential and new_docs_ok:
+                    lead_sel = None
+                elif sel is not None:
+                    lead_sel = sel
+                else:
+                    lead_sel = np.flatnonzero(seen) + base
+                ids, tfs, dls = decode_term(order[0], sel=lead_sel)
+                if len(ids) == 0:
+                    continue
+                cm = np.zeros(n, dtype=bool)
+                cm[ids - base] = True
+                s = sim.score(order[0], tfs, dls)
+                pend = [(members[order[0]], ids, s)]
+                csd = np.zeros(n, dtype=np.float64)
+                csd[ids - base] = np.asarray(s, np.float64) * wsum(members[order[0]])
+                cand = ids
+                for mi in range(1, len(order)):
+                    m = order[mi]
+                    fw = wsum(members[m])
+                    rest_m = float(sum(umax(t) * wsum(members[t]) for t in order[mi + 1:]))
+                    last = mi == len(order) - 1
+                    # block-max leapfrog over the member's postings: blocks
+                    # of ALL (term,salt) rows are chunked TOGETHER in
+                    # descending bound order; a block decodes only if it
+                    # holds a candidate whose completed-so-far total plus
+                    # this block's bound plus every remaining bound could
+                    # still reach theta. On the LAST member, docs finish
+                    # their clause score as chunks complete, so theta
+                    # refreshes INSIDE the walk and later chunks skip
+                    rws = rows[m]
+                    bfs = [np.asarray(r["block_first"], np.int64) for r in rws]
+                    bls = [np.asarray(r["block_last"], np.int64) for r in rws]
+                    flat_ub = np.concatenate(term_ubs(m)) * fw
+                    flat_bf = np.concatenate(bfs)
+                    flat_bl = np.concatenate(bls)
+                    row_of = np.concatenate(
+                        [np.full(len(b), ri, np.int64) for ri, b in enumerate(bfs)])
+                    blk_of = np.concatenate([np.arange(len(b), dtype=np.int64) for b in bfs])
+                    border = np.argsort(-flat_ub, kind="stable")
+                    nm = np.zeros(n, dtype=bool)
+                    done = np.zeros(n, dtype=bool) if last else None
+                    for j in range(0, len(flat_bf), CHUNK):
+                        cidx = border[j : j + CHUNK]
+                        lo = np.searchsorted(cand, flat_bf[cidx], "left")
+                        hi2 = np.searchsorted(cand, flat_bl[cidx], "right")
+                        has = hi2 > lo
+                        if theta > 0:
+                            for z in np.flatnonzero(has):
+                                within = cand[lo[z]:hi2[z]] - base
+                                pmax = float((acc[within] + csd[within]).max())
+                                if (pmax + flat_ub[cidx[z]] + rest_m + rest
+                                        < theta * scale):
+                                    has[z] = False
+                        cidx = cidx[has]
+                        counters[1] += len(cidx)
+                        if len(cidx) == 0:
+                            continue
+                        parts = [
+                            decode_block(bytes(rws[row_of[x]]["block_data"][blk_of[x]]))
+                            for x in cidx
+                        ]
+                        ids2 = np.concatenate([p[0] for p in parts])
+                        tf2 = np.concatenate([p[1] for p in parts])
+                        dl2 = np.concatenate([p[2] for p in parts])
+                        inc = cand[np.searchsorted(cand, ids2).clip(max=len(cand) - 1)] == ids2
+                        ids2, tf2, dl2 = ids2[inc], tf2[inc], dl2[inc]
+                        live = _live_mask(ids2, deleted)
+                        if live is not None:
+                            ids2, tf2, dl2 = ids2[live], tf2[live], dl2[live]
+                        if len(ids2) == 0:
+                            continue
+                        nm[ids2 - base] = True
+                        s2 = sim.score(m, tf2, dl2)
+                        pend.append((members[m], ids2, s2))
+                        csd[ids2 - base] += np.asarray(s2, np.float64) * fw
+                        if last and after_bound is None:
+                            done[ids2 - base] = True
+                            # full-clause matches: acc + csd are exact
+                            # partial totals — but only docs GUARANTEED to
+                            # qualify after this clause may raise theta
+                            dq = done if nmatch is None else done & (nmatch + credit >= msm)
+                            if int(dq.sum()) >= k:
+                                theta = max(theta, kth((acc + csd)[dq]))
+                    cm &= nm
+                    if not cm.any():
+                        break
+                    cand = np.flatnonzero(cm) + base
+                idx = np.flatnonzero(cm)
+                if len(idx):
+                    acc[idx] += csd[idx]
+                    seen[idx] = True
+                    if nmatch is not None:
+                        nmatch[idx] += credit
+                    for slots, pids, ps in pend:
+                        ok = cm[pids - base]
+                        put(slots, pids[ok], ps[ok])
+                    if after_bound is None:
+                        bump_theta()
+            if has_must and i == 0 and not seen.any():
+                return _Z, _Z.astype(np.float64), counters
+            if after_bound is not None:
+                # cursor mode: theta only from docs GUARANTEED at/below the
+                # cursor — sound with the clause's FULL remaining bound,
+                # known only at clause end
+                bump_theta(rest=rest)
 
+        if nmatch is None:
+            matched = np.flatnonzero(seen) + base
+        else:
+            matched = np.flatnonzero(seen & (nmatch >= msm)) + base
         if len(matched) == 0:
             return _Z, _Z.astype(np.float64), counters
-
-        # canonical final sum: sorted-term order, engine dtype
+        # canonical final sum in the engine dtype (cross-path exactness)
         final = np.zeros(len(matched), dtype=dtype)
-        idx = matched - base
-        for t in sorted(scoring):
-            final = final + contrib[t][idx]
-        if cursor is not None:
+        for si in range(len(slot_of)):
+            if si in contrib:
+                final = final + contrib[si][matched - base]
+        if after_bound is not None:
             # keep hits strictly after the (score desc, docid asc) cursor
             fin64 = final.astype(np.float64)
-            a_s, a_d = float(cursor[0]), int(cursor[1])
-            ok = (fin64 < a_s) | ((fin64 == a_s) & (matched > a_d))
+            ok = (fin64 < after_bound) | ((fin64 == after_bound) & (matched > after_docid))
             matched, final = matched[ok], final[ok]
             if len(matched) == 0:
                 return _Z, _Z.astype(np.float64), counters
         out_ids, out_sc = _select_topk(matched, final, k)
         return out_ids, out_sc, counters
 
-    def topk_fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        ids, scores, counters = run(pdf, deleted)
-        return pd.DataFrame(
-            {
-                "docid": ids,
-                "score": scores,
-                "blocks_total": np.full(len(ids), counters[0], dtype=np.int64),
-                "blocks_decoded": np.full(len(ids), counters[1], dtype=np.int64),
-            }
-        )
+    return run
 
-    def metrics_fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        # exact per-segment counters, emitted even when the segment
-        # contributes no hits (fixes the sum({set}) collapse, ADVICE r1)
-        _, _, counters = run(pdf, deleted)
-        return pd.DataFrame(
-            {
-                "segment_id": np.array([int(key[0])], dtype=np.int64),
-                "blocks_total": np.array([counters[0]], dtype=np.int64),
-                "blocks_decoded": np.array([counters[1]], dtype=np.int64),
-            }
-        )
 
-    topk_fn.metrics_fn = metrics_fn
-    return topk_fn
+def _clause_frame(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
+                  cursor: Optional[Tuple[float, int]] = None,
+                  metrics: bool = False) -> DataFrame:
+    """Run the clause kernel on every segment: the merged top-k
+    (TOPK_SCHEMA; per-leaf collectors + TopDocs.merge) or, with
+    ``metrics``, one decode-counter row per segment (METRICS_SCHEMA —
+    emitted even when the segment contributes no hits). ``theta_seed``
+    0.0 derives the auto seed (never in cursor mode: a first-page bound
+    is no bound for a later page); a negative value disables seeding."""
+    if theta_seed == 0.0 and cursor is None:
+        theta_seed = auto_seed_theta(index, plan, k)
+    run = make_clause_topk_fn(plan, k, theta_seed, cursor)
+
+    def fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
+        ids, scores, (total, decoded) = run(pdf, deleted)
+        if metrics:
+            ids, scores = np.array([int(key[0])], np.int64), None
+        cols = {"segment_id": ids} if metrics else {"docid": ids, "score": scores}
+        cols["blocks_total"] = np.full(len(ids), total, dtype=np.int64)
+        cols["blocks_decoded"] = np.full(len(ids), decoded, dtype=np.int64)
+        return pd.DataFrame(cols)
+
+    per_seg = apply_per_segment(index, plan.terms, fn,
+                                METRICS_SCHEMA if metrics else TOPK_SCHEMA)
+    if metrics:
+        return per_seg
+    return per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+
+
+def _clause_topk(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
+                 cursor: Optional[Tuple[float, int]] = None,
+                 with_metrics: bool = False) -> DataFrame:
+    if not plan.clauses:
+        return index.spark.createDataFrame(
+            [], TOPK_SCHEMA if with_metrics else "docid long, score double"
+        )
+    out = _clause_frame(index, plan, k, theta_seed, cursor)
+    return out if with_metrics else out.select("docid", "score")
+
+
+def _clause_metrics(index: Index, plan: ClausePlan, k: int, theta_seed: float) -> dict:
+    """Exact block-skip effectiveness of the plan a default call runs: the
+    per-segment counter rows summed on the driver (bounded by the segment
+    count)."""
+    rows = _clause_frame(index, plan, k, theta_seed, metrics=True).collect() if plan.clauses else []
+    tot = sum(int(r["blocks_total"]) for r in rows)
+    dec = sum(int(r["blocks_decoded"]) for r in rows)
+    return {"blocks_total": tot, "blocks_decoded": dec, "ratio": (dec / tot) if tot else None}
+
+
+# largest posting list a seed will decode on the driver: bounded work
+# (<= a few hundred 256-entry blocks through the parquet row-group seek)
+# regardless of corpus size — the same term-dictionary-seek shape as
+# term_stats_for, never data-sized
+AUTO_SEED_DECODE_CAP = 100_000
+
+
+def _kth_partial(index: Index, plan: ClausePlan, term: str, w: float, k: int) -> float:
+    """k-th best w·score(tf, dl) over one term's postings, read on the
+    driver through the pyarrow row-group seek on this snapshot's
+    term-sorted segment files (the FST term-dictionary *seek* shape, no
+    Spark job); 0.0 on fewer than k postings or any read failure. Raw
+    postings: tombstones are NOT applied."""
+    try:
+        import pyarrow.parquet as pq
+
+        tbl = pq.ParquetDataset(
+            [f for _, f in index.segment_files()], filesystem=index.paths.fs,
+            filters=[("term", "==", term)],
+        ).read(columns=["block_data"])
+    except Exception:
+        return 0.0
+    tfs, dls = [], []
+    for blocks in tbl["block_data"].to_pylist():
+        for b in blocks or ():
+            _, tf, dl = decode_block(bytes(b))
+            tfs.append(tf)
+            dls.append(dl)
+    if sum(len(x) for x in tfs) < k:
+        return 0.0
+    s = np.asarray(plan.sim.score(term, np.concatenate(tfs), np.concatenate(dls)),
+                   np.float64) * w
+    return float(np.partition(s, len(s) - k)[len(s) - k])
+
+
+def auto_seed_theta(index: Index, plan: ClausePlan, k: int) -> float:
+    """Driver-side (no Spark job) global lower bound of the k-th best
+    score — the default-on MaxScoreAccumulator analog
+    (search/MaxScoreAccumulator.java:23; Lucene's concurrent slices share a
+    threshold for free, a batch engine derives one on the driver).
+
+    Clauses only ADD score, so any SHOULD term clause t with df(t) >= k
+    yields >= k docs scoring at least their w·partial on t alone. Two
+    tiers over those term clauses:
+
+    1. the EXACT k-th partial of the rarest one (df <= decode cap), its
+       postings decoded through the parquet row-group seek;
+    2. stats only: w · score(tf=1, dl=max_dl) for each (every registered
+       similarity is monotone up in tf, down in doclen).
+
+    Sound only with >= 2 SHOULD clauses, no MUST (the qualifying set
+    shrinks below df), no msm, no exclusions (they can remove the term's
+    docs) and no live tombstones (df counts deleted docs). Returns 0.0 (no
+    seed) otherwise."""
+    cl = plan.clauses
+    if (len(cl) < 2 or any(must for _, must, _ in cl) or plan.msm > 0
+            or plan.excluded or index.has_deletes):
+        return 0.0
+    single = [next(iter(m.items())) for m, _, _ in cl if len(m) == 1]
+    stats = index.term_stats_for([t for t, _ in single])
+    elig = sorted((stats[t][0], t, w) for t, w in single if stats[t][0] >= k)
+    best = 0.0
+    if elig and elig[0][0] <= AUTO_SEED_DECODE_CAP:
+        best = _kth_partial(index, plan, elig[0][1], elig[0][2], k)
+    max_dl = int(getattr(index.field_stats, "max_dl", 0) or 0)
+    if max_dl > 0:
+        one, dl = np.array([1], np.int64), np.array([max_dl], np.int64)
+        for _df, t, w in elig:
+            best = max(best, float(plan.sim.score(t, one, dl)[0]) * w)
+    # downward slack covers float re-association across paths
+    return best * PRUNE_SCALE[plan.dtype] if best > 0.0 else 0.0
+
+
+def _explicit_seed(index: Index, plan: ClausePlan, k: int) -> float:
+    """Cross-segment threshold seed from the CHEAPEST clause alone (lowest
+    lead df): its global k-th score is a lower bound of the full query's
+    k-th, since clauses only add. A term clause whose list is small is
+    decoded on the driver (no deletes: the raw decode cannot apply
+    tombstones); anything else runs the clause on the pruned path, one
+    job. 0.0 (no seed) with MUST, msm or exclusions."""
+    cl = plan.clauses
+    if not cl or any(must for _, must, _ in cl) or plan.msm > 0 or plan.excluded:
+        return 0.0
+    stats = index.term_stats_for(plan.terms)
+    cheapest = min(cl, key=lambda c: min(stats[t][0] for t in c[0]))
+    if len(cheapest[0]) == 1 and not index.has_deletes:
+        ((t, w),) = cheapest[0].items()
+        if k <= stats[t][0] <= AUTO_SEED_DECODE_CAP:
+            kth = _kth_partial(index, plan, t, w, k)
+            if kth > 0.0:
+                return kth * PRUNE_SCALE[plan.dtype]
+    sub = ClausePlan((cheapest,), (), 0, plan.sim, plan.dtype)
+    rows = _clause_topk(index, sub, k).collect()
+    if len(rows) < k:
+        return 0.0
+    return float(rows[-1]["score"]) * PRUNE_SCALE[plan.dtype]
 
 
 def search_topk(
@@ -1145,171 +1418,31 @@ def search_topk(
     theta_seed: float = 0.0,
     similarity: Optional[str] = None,
 ) -> DataFrame:
-    """Top-k via per-segment block-max pruning + global ordered merge.
+    """Top-k of a flat query on the clause kernel (make_clause_topk_fn)
+    plus the global ordered merge.
 
     ``quantize``/``dtype`` default to None = AUTO: float32 quantized (the
     engine default) unless the query is ``tree_origin`` — a flat form the
     rewriter produced from a nested tree — which keeps the tree path's
     float64/unquantized scoring so rewriting never changes the scores of
-    the same query string (ADVICE r5). Explicit arguments always win.
+    the same query string. Explicit arguments always win.
 
     ``theta_seed``: pre-seed every segment's pruning threshold with a global
     lower bound of the k-th score (MaxScoreAccumulator.java:23 analog).
-    The default 0.0 means AUTO: a free stats-only bound is derived on the
-    driver when sound (``auto_seed_theta``; pure disjunctions, no deletes).
-    Pass a negative value to disable seeding entirely, or an explicit
-    positive bound (e.g. from the tighter one-job ``seed_theta`` pass).
+    The default 0.0 means AUTO (``auto_seed_theta``). Pass a negative value
+    to disable seeding, or an explicit positive bound (e.g. from
+    ``seed_theta``).
 
-    ``similarity``: one of scorer seam names ("classic", "boolean",
-    "lm_dirichlet", "lm_jelinek_mercer"); None/"bm25" keeps the default.
-    Every registered similarity is monotone up in tf / down in doclen, so
-    the block-max pruning stays sound — bounds route through the same
-    scorer (similarities.BoundSimilarity.bound)."""
+    ``similarity``: a similarity seam name ("classic", "boolean",
+    "lm_dirichlet", ...); None/"bm25" keeps the default. Every registered
+    similarity is monotone up in tf / down in doclen, so block-max pruning
+    stays sound — bounds route through the same scorer."""
     if quantize is None:
         quantize = not getattr(q, "tree_origin", False)
     if dtype is None:
         dtype = np.float64 if getattr(q, "tree_origin", False) else np.float32
-    plan = None if q.is_match_none else _topk_plan(index, q, boost, dtype, similarity, quantize)
-    if plan is None:
-        return index.spark.createDataFrame(
-            [], TOPK_SCHEMA if with_metrics else "docid long, score double"
-        )
-    weights, req, terms, sim = plan
-    if theta_seed == 0.0:
-        theta_seed = auto_seed_theta(index, q, weights, sim, k, quantize, dtype)
-    fn = make_topk_fn(
-        weights, req, list(q.excluded), k, float(index.field_stats.avgdl()),
-        quantize, dtype, opt_counts=dict(q.optional), msm=q.min_should_match,
-        theta_seed=theta_seed, sim=sim,
-    )
-    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
-    out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
-    return out if with_metrics else out.select("docid", "score")
-
-
-def _topk_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
-               similarity: Optional[str] = None, quantize: bool = True):
-    """Shared setup for the per-segment top-k paths: resolve term weights
-    (through the pluggable similarity when one is named — Similarity seam,
-    SURVEY.md §2.4) and the terms whose postings the segments read; None
-    when the query cannot match."""
-    from .similarities import bind_similarity
-
-    sim = bind_similarity(
-        similarity, q.scoring_terms, index.term_stats_for(list(q.scoring_terms)),
-        index.field_stats, boost, quantize, dtype,
-    )
-    weights = sim.weights if sim is not None else _weights_for(index, q, boost, dtype)
-    req = [t for t, _ in q.required]
-    if not weights or any(t not in weights for t in req):
-        return None
-    if q.min_should_match > sum(c for t, c in q.optional if t in weights):
-        return None  # terms absent from the index can never credit msm
-    return weights, req, sorted(set(weights) | set(q.excluded)), sim
-
-
-# largest posting list the auto seed will decode on the driver: bounded
-# work (<= a few hundred 256-entry blocks through the parquet row-group
-# seek) regardless of corpus size — the same term-dictionary-seek shape as
-# term_stats_for, never data-sized
-AUTO_SEED_DECODE_CAP = 100_000
-
-
-def _driver_term_postings(index: Index, term: str):
-    """(tfs, doclens) of one term's postings, read driver-side through the
-    pyarrow row-group seek on the term-sorted segment postings files (the
-    FST term-dictionary *seek* shape, not a scan; no Spark job). Returns
-    (None, None) on any failure — callers fall back to stats bounds."""
-    try:
-        import pyarrow.parquet as pq
-
-        from ..index import fsio
-
-        files = fsio.list_files(
-            index.paths.fs, index.paths.fs_path(index.paths.postings), suffix=".parquet"
-        )
-        tbl = pq.ParquetDataset(
-            files, filesystem=index.paths.fs, filters=[("term", "==", term)]
-        ).read(columns=["block_data"])
-    except Exception:
-        return None, None
-    tfs, dls = [], []
-    for blocks in tbl["block_data"].to_pylist():
-        for b in blocks or ():
-            _, tf, dl = decode_block(bytes(b))
-            tfs.append(tf)
-            dls.append(dl)
-    if not tfs:
-        return None, None
-    return np.concatenate(tfs), np.concatenate(dls)
-
-
-def auto_seed_theta(
-    index: Index,
-    q: NormalizedQuery,
-    weights: Dict[str, float],
-    sim,
-    k: int,
-    quantize: bool,
-    dtype,
-) -> float:
-    """Driver-side (no Spark job) global lower bound of the k-th best
-    score — the default-on MaxScoreAccumulator analog
-    (search/MaxScoreAccumulator.java:23; Lucene's concurrent slices share a
-    threshold for free, a batch engine derives one on the driver).
-
-    Two tiers, both sound for a pure disjunction (a doc's full score only
-    grows beyond any single term's partial):
-
-    1. EXACT partials of the rarest term (df >= k, df <= decode cap): its
-       postings are decoded through the parquet row-group seek and the
-       k-th best actual score(tf, dl) is a lower bound of the global k-th
-       best full score — the same bound the explicit ``seed_theta`` Spark
-       pass computes, at term-dictionary-seek cost.
-    2. Stats-only fallback: for any SHOULD term t with df(t) >= k, every
-       one of its >= k matching docs scores at least W_t * shape(tf=1,
-       dl=max_dl) on t alone (every registered similarity is monotone up
-       in tf, down in doclen).
-
-    Sound only when: pure disjunction (MUST/minShouldMatch restrict the
-    qualifying set below df; MUST_NOT can exclude the term's docs) and no
-    live tombstones (df counts deleted docs — a tombstoned doc among the
-    top k would fake the bound). Returns 0.0 (no seed) otherwise."""
-    if q.required or q.min_should_match > 0 or q.excluded or len(q.optional) < 2:
-        return 0.0
-    if index.has_deletes:
-        return 0.0
-    stats = index.term_stats_for([t for t, _ in q.optional])
-    avgdl = float(index.field_stats.avgdl())
-
-    def partial(t, tfs, dls):
-        if sim is not None:
-            return np.asarray(sim.score(t, tfs, dls), np.float64)
-        return np.asarray(
-            score_arrays(tfs, dls, weights[t], avgdl, quantize, dtype), np.float64
-        )
-
-    best = 0.0
-    # tier 1: exact k-th partial of the rarest decodable term
-    elig = sorted(
-        (stats[t][0], t)
-        for t, _c in q.optional
-        if t in weights and t in stats and stats[t][0] >= k
-    )
-    if elig and elig[0][0] <= AUTO_SEED_DECODE_CAP:
-        tfs, dls = _driver_term_postings(index, elig[0][1])
-        if tfs is not None and len(tfs) >= k:
-            s = partial(elig[0][1], tfs, dls)
-            best = float(np.partition(s, len(s) - k)[len(s) - k])
-    # tier 2: stats bound over every eligible term (tf=1 at the longest doc)
-    max_dl = int(getattr(index.field_stats, "max_dl", 0) or 0)
-    if max_dl > 0:
-        one = np.array([1], np.int64)
-        dl = np.array([max_dl], np.int64)
-        for _df, t in elig:
-            best = max(best, float(partial(t, one, dl)[0]))
-    # same downward slack as the explicit seed (float re-association)
-    return best * PRUNE_SCALE[dtype] if best > 0.0 else 0.0
+    plan = _flat_plan(index, q, boost, dtype, similarity, quantize)
+    return _clause_topk(index, plan, k, theta_seed, with_metrics=with_metrics)
 
 
 def seed_theta(
@@ -1321,59 +1454,11 @@ def seed_theta(
     dtype=np.float32,
     similarity: Optional[str] = None,
 ) -> float:
-    """Cross-segment pruning-threshold seed (MaxScoreAccumulator analog,
-    search/MaxScoreAccumulator.java:23): the k-th best score of the RAREST
-    scoring term alone. Every doc's full score is >= its partial score, so
-    at least k docs beat this value — a sound global lower bound of the
-    k-th full score, obtained from one cheap pass over the SMALLEST posting
-    list. Each segment then starts pruning immediately instead of waiting
-    for its local top-k to fill. Only valid for pure disjunctions without
-    minShouldMatch (with MUST or msm the qualifying set is a subset of the
-    rare term's postings, so its k-th partial score is NOT a lower bound);
-    returns 0.0 (no seed) otherwise. ``similarity`` MUST match the main
-    query's (a seed from a different scoring function is no lower bound)."""
-    if q.required or q.min_should_match > 0 or not q.optional:
-        return 0.0
-    from .similarities import bind_similarity
-
-    sim = bind_similarity(
-        similarity, q.scoring_terms, index.term_stats_for(list(q.scoring_terms)),
-        index.field_stats, boost, quantize, dtype,
-    )
-    weights = sim.weights if sim is not None else _weights_for(index, q, boost, dtype)
-    if not weights:
-        return 0.0
-    stats = index.term_stats_for(list(weights))
-    rarest = min(weights, key=lambda t: stats[t][0])
-    qtf = dict(q.optional).get(rarest, 1)
-    # r7: when the rarest list is small, decode it on the DRIVER through
-    # the parquet row-group seek (same machinery as auto_seed_theta tier
-    # 1) — the k-th partial is identical to the one-term Spark pass, at
-    # term-dictionary-seek cost instead of a whole job. Declined on live
-    # deletes (the Spark pass applies tombstones; the raw decode cannot).
-    if not index.has_deletes and k <= stats[rarest][0] <= AUTO_SEED_DECODE_CAP:
-        tfs, dls = _driver_term_postings(index, rarest)
-        if tfs is not None and len(tfs) >= k:
-            if sim is not None:
-                s = np.asarray(sim.score(rarest, tfs, dls), np.float64)
-            else:
-                s = np.asarray(
-                    score_arrays(tfs, dls, weights[rarest],
-                                 float(index.field_stats.avgdl()),
-                                 quantize, dtype),
-                    np.float64,
-                )
-            kth = float(np.partition(s, len(s) - k)[len(s) - k])
-            return kth * PRUNE_SCALE[dtype]
-    sub = NormalizedQuery(optional=((rarest, qtf),))
-    rows = search_topk(
-        index, sub, k=k, boost=boost, quantize=quantize, dtype=dtype,
-        similarity=similarity,
-    ).collect()
-    if len(rows) < k:
-        return 0.0
-    # tiny downward slack covers float re-association across paths
-    return float(rows[-1]["score"]) * PRUNE_SCALE[dtype]
+    """Explicit pruning-threshold seed for a flat query (_explicit_seed):
+    the k-th best score of its rarest SHOULD term alone. ``similarity``
+    MUST match the main query's (a seed from a different scoring function
+    is no lower bound)."""
+    return _explicit_seed(index, _flat_plan(index, q, boost, dtype, similarity, quantize), k)
 
 
 def block_skip_metrics(
@@ -1386,38 +1471,27 @@ def block_skip_metrics(
     theta_seed: float = 0.0,
     similarity: Optional[str] = None,
 ) -> dict:
-    """Exact block-skip effectiveness of the top-k path: one metrics row per
-    segment (no dedup-by-value collapse, no dependence on which rows survive
-    the global merge), summed driver-side."""
-    if q.is_match_none:
-        return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    plan = _topk_plan(index, q, boost, dtype, similarity, quantize)
-    if plan is None:
-        return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    weights, req, terms, sim = plan
-    if theta_seed == 0.0:
-        # mirror search_topk's default plan so the reported ratio is what
-        # a default call actually decodes
-        theta_seed = auto_seed_theta(index, q, weights, sim, k, quantize, dtype)
-    fn = make_topk_fn(
-        weights, req, list(q.excluded), k, float(index.field_stats.avgdl()),
-        quantize, dtype, opt_counts=dict(q.optional), msm=q.min_should_match,
-        theta_seed=theta_seed, sim=sim,
-    )
-    return _sum_metrics(apply_per_segment(index, terms, fn.metrics_fn, METRICS_SCHEMA))
+    """Exact block-skip effectiveness of search_topk's plan: one metrics
+    row per segment, summed driver-side."""
+    plan = _flat_plan(index, q, boost, dtype, similarity, quantize)
+    return _clause_metrics(index, plan, k, theta_seed)
 
 
-def _sum_metrics(per_seg: DataFrame) -> dict:
-    """Driver-side sum of the per-segment metrics rows (one row per
-    segment, so bounded by the segment count)."""
-    rows = per_seg.collect()
-    tot = sum(int(r["blocks_total"]) for r in rows)
-    dec = sum(int(r["blocks_decoded"]) for r in rows)
-    return {
-        "blocks_total": tot,
-        "blocks_decoded": dec,
-        "ratio": (dec / tot) if tot else None,
-    }
+def search_after(
+    index: Index,
+    q: NormalizedQuery,
+    k: int,
+    after_score: float,
+    after_docid: int,
+    **kw,
+) -> DataFrame:
+    """Cursor pagination (IndexSearcher.searchAfter, IndexSearcher.java:587-602):
+    hits strictly after the (score desc, docid asc) cursor via the PRUNED
+    clause kernel, so deep paging on a hot term does not re-decode the
+    full posting list."""
+    plan = _flat_plan(index, q, kw.pop("boost", 1.0), kw.pop("dtype", np.float32),
+                      kw.pop("similarity", None), kw.pop("quantize", True))
+    return _clause_topk(index, plan, k, cursor=(float(after_score), int(after_docid)))
 
 
 # ---------------------------------------------------------------------------
@@ -2561,593 +2635,23 @@ def search_tree(
     return df.limit(k) if k else df
 
 
-def make_mixed_topk_fn(
-    clauses: Sequence[Dict[str, int]],
-    excluded: Sequence[str],
-    k: int,
-    avgdl: float,
-    quantize: bool,
-    dtype,
-    theta_seed: float = 0.0,
-    sim=None,
-    weights: Optional[Dict[str, float]] = None,
-    msm: int = 0,
-    cursor: Optional[Tuple[float, int]] = None,
-):
-    """Per-segment scorer for the MIXED single-level disjunction — an OR
-    over pseudo-scorers that are plain terms or AND-of-term groups, e.g.
-    ``(rare AND hot) OR med``.
-
-    This is the batched analog of Lucene composing WAND/MAXSCORE over
-    arbitrary sub-scorers (BooleanScorerSupplier.java:288-317 builds the
-    top-level disjunction from clause ScorerSuppliers; WANDScorer.java:55
-    takes any Scorer, using its getMaxScore bound): a conjunction clause
-    is ONE pseudo-scorer whose max-score bound is the SUM of its members'
-    impact bounds, and the clause list runs through the same
-    essential/non-essential MAXSCORE split as the flat term path
-    (MaxScoreBulkScorer.java:26):
-
-    - clauses are evaluated in descending bound order; once the remaining
-      clauses' summed bounds fall below the running k-th score, their
-      evaluation is restricted to still-competitive candidates;
-    - a TERM clause runs the identical per-block chunked loop as the flat
-      path (per-block competitive-impact bounds, candidate-potential
-      refinement);
-    - a CONJUNCTION clause leads with its rarest member
-      (ConjunctionDISI.java:166-206) — only the small lead list is ever
-      fully decoded, the other members decode block-restricted to the
-      lead's candidates (the whole win vs the exhaustive tree walk, which
-      decodes every leaf's full postings);
-    - MUST_NOT is the same up-front ban mask as the flat path
-      (ReqExclScorer.java:26) so excluded docs never raise theta.
-
-    Scoring matches search_tree's semantics: score = Σ over MATCHING
-    clauses of Σ member term scores (float64 tree defaults).
-
-    ``msm`` > 0 demands at least that many DISTINCT matching clauses per
-    doc (BooleanQuery.Builder.setMinimumNumberShouldMatch over arbitrary
-    clause types) — the clause-granularity freq-counting-WAND analog of
-    the flat path: per-doc matched-clause counts accumulate, theta only
-    rises from docs already GUARANTEED qualified (counts are monotone),
-    candidates additionally keep any doc whose count can still reach
-    msm, and NEW docs stop being admitted once the remaining clauses
-    cannot credit msm.
-
-    ``cursor`` = (after_score, after_docid) enables pruned deep paging
-    (IndexSearcher.searchAfter): a doc whose partial sum already exceeds
-    the cursor score can never re-enter the page (sums only grow) and is
-    dropped from decoding; theta may only rise from docs GUARANTEED to
-    stay at/below the cursor (acc + full remaining bound <= after_score),
-    so the intra-clause theta refresh is disabled — exactly the flat
-    path's cursor rules."""
-    if sim is None:
-        from .similarities import BM25Bound
-
-        sim = BM25Bound(weights, avgdl, quantize, dtype)
-    excl = sorted(set(excluded))
-    scale = PRUNE_SCALE[dtype]
-    chunk_blocks = int(MAXSCORE_CHUNK)
-    cl = [dict(c) for c in clauses]
-    msm = int(msm)
-    after_bound = float(cursor[0]) if cursor is not None else None
-    after_docid = int(cursor[1]) if cursor is not None else None
-    slack = 2.0 - scale  # tiny upward slack for float re-association
-    _Z = np.empty(0, np.int64)
-
-    def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
-        counters = [0, 0]  # blocks_total, blocks_decoded
-        rows = {}
-        for r in pdf.to_dict("records"):  # dicts, not iterrows Series
-            rows.setdefault(r["term"], []).append(r)
-        for t in rows:
-            rows[t].sort(key=lambda r: r["first_docid"])
-
-        # a clause is viable here iff EVERY member has postings in this
-        # segment (conjunction semantics; a term clause is its own member)
-        viable = [c for c in cl if all(t in rows for t in c)]
-        if not viable or msm > len(viable):
-            # a clause missing a term here can credit no doc in this
-            # segment, so msm > len(viable) is segment-level MatchNone
-            return _Z, _Z.astype(np.float64), counters
-
-        terms_here = sorted({t for c in viable for t in c})
-        # blocks_total is a PLAN invariant — every postings block of every
-        # viable query term, each term once — so decode ratios stay
-        # comparable across seeded/unseeded configurations (counting
-        # per-visit totals shrinks the denominator whenever a selection
-        # empties and made a better plan look worse). blocks_decoded
-        # counts decode EVENTS (a block decoded for two clauses is two).
-        counters[0] += sum(
-            len(r["block_first"])
-            for t in terms_here + [t for t in excl if t in rows]
-            for r in rows[t]
-        )
-        _only_decoded = [0, 0]  # _decode_rows sink: slot 0 discarded
-
-        def _dec(r, sel):
-            before = _only_decoded[1]
-            out = _decode_rows(r, sel, _only_decoded)
-            counters[1] += _only_decoded[1] - before
-            return out
-        base = min(int(r["first_docid"]) for t in terms_here for r in rows[t])
-        hi = max(int(r["last_docid"]) for t in terms_here for r in rows[t])
-        n = hi - base + 1
-        if n > 500_000_000:
-            raise ValueError(
-                f"segment docid range {n} too sparse for the dense accumulator; "
-                "use the engine's docid assignment or densify docid_col"
-            )
-
-        if excl:
-            # MUST_NOT as an up-front liveDocs ban (ReqExclScorer.java:26);
-            # see make_topk_fn — excluded docs must never raise theta
-            ex_parts = [
-                _dec(r, None)[0]
-                for t in excl if t in rows for r in rows[t]
-            ]
-            if ex_parts:
-                banned = np.unique(np.concatenate(ex_parts))
-                deleted = (
-                    banned if deleted is None else np.union1d(deleted, banned)
-                )
-
-        def decode_term(t, sel=None):
-            if sel is not None and len(sel) == 0:
-                z = np.empty(0, np.int64)
-                return z, z, z
-            parts = [_dec(r, sel) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            if sel is not None and len(ids):
-                m = sel[np.searchsorted(sel, ids).clip(max=len(sel) - 1)] == ids
-                ids, tfs, dls = ids[m], tfs[m], dls[m]
-            live = _live_mask(ids, deleted)
-            if live is not None:
-                ids, tfs, dls = ids[live], tfs[live], dls[live]
-            return ids, tfs, dls
-
-        def block_ubs(t, r):
-            imp = r.get("block_imp")
-            if imp is None or isinstance(imp, float):
-                return sim.score(
-                    t,
-                    np.asarray(r["block_maxtf"], dtype=np.int64),
-                    np.asarray(r["block_mindl"], dtype=np.int64),
-                ).astype(np.float64)
-            lens = np.fromiter((len(x) for x in imp), np.int64, len(imp))
-            flat = (
-                np.concatenate([np.asarray(x, np.int64) for x in imp])
-                if len(imp) else np.empty(0, np.int64)
-            )
-            s = sim.score(t, flat[0::2], flat[1::2]).astype(np.float64)
-            starts = np.concatenate(([0], np.cumsum(lens // 2)[:-1]))
-            return np.maximum.reduceat(s, starts) if len(s) else s
-
-        _ub_cache: Dict[str, list] = {}
-
-        def term_ubs(t):
-            if t not in _ub_cache:
-                _ub_cache[t] = [block_ubs(t, r) for r in rows[t]]
-            return _ub_cache[t]
-
-        def umax(t):
-            return max(
-                (float(u.max()) for u in term_ubs(t) if len(u)),
-                default=sim.bound(
-                    t,
-                    max(int(r["max_tf"]) for r in rows[t]),
-                    min(int(r["min_doclen"]) for r in rows[t]),
-                ),
-            )
-
-        # clause bound = Σ qtf · member bound (a MUST group's getMaxScore
-        # is the sum of its members' — BooleanScorerSupplier.java:288-317)
-        cub = np.array(
-            [sum(w * umax(t) for t, w in c.items()) for c in viable],
-            dtype=np.float64,
-        )
-
-        def nblocks(t):
-            return sum(len(r["block_first"]) for r in rows[t])
-
-        def dfsum(t):
-            return sum(int(r["df"]) for r in rows[t])
-
-        def cost(c):
-            # estimated blocks decoded: a term clause scans its own list; a
-            # conjunction decodes its rarest member plus, for every other
-            # member, at most one block per lead posting (leapfrog)
-            ms = sorted(c, key=dfsum)
-            return nblocks(ms[0]) + sum(
-                min(nblocks(t), dfsum(ms[0])) for t in ms[1:]
-            )
-
-        # evaluation order is ASCENDING decode cost, not descending bound:
-        # cheap clauses land their EXACT contributions in `acc` first, so
-        # when an expensive conjunction runs last (rest == 0) the
-        # per-candidate potential test compares against real partial
-        # totals instead of every later clause's max — the batch analog of
-        # WANDScorer's essential-list iteration, where non-essential
-        # (cheap, low-bound) clauses are only ever probed on candidates
-        # and the expensive clause drives. Any fixed order is SOUND (the
-        # suffix bounds below are computed over it); the order only
-        # changes how fast theta sharpens.
-        order = sorted(range(len(viable)), key=lambda j: cost(viable[j]))
-        viable = [viable[int(j)] for j in order]
-        cubs = cub[np.array(order, dtype=np.int64)]
-        suffix = np.concatenate((np.cumsum(cubs[::-1])[::-1], [0.0]))
-
-        acc = np.zeros(n, dtype=np.float64)
-        seen = np.zeros(n, dtype=bool)
-        nmatch = np.zeros(n, dtype=np.int64) if msm > 0 else None
-        nclauses = len(viable)
-        theta = float(theta_seed) if theta_seed > 0 else -np.inf
-        CHUNK = chunk_blocks
-
-        def kth(vals: np.ndarray) -> float:
-            return float(np.partition(vals, len(vals) - k)[len(vals) - k])
-
-        def bump_theta(rest=0.0):
-            # theta rises only from docs GUARANTEED to qualify; in cursor
-            # mode additionally GUARANTEED on the page — bound strictly
-            # below the cursor score, or tying it with a docid past the
-            # cursor (ADVICE r6: plain <= admitted the page-1 boundary
-            # tie group and could prune genuine later-page hits)
-            nonlocal theta
-            qual = seen if nmatch is None else seen & (nmatch >= msm)
-            if after_bound is not None:
-                tot = acc + rest
-                qual = qual & (
-                    (tot < after_bound)
-                    | ((tot == after_bound)
-                       & (np.arange(n, dtype=np.int64) + base > after_docid))
-                )
-            if int(qual.sum()) >= k:
-                theta = max(theta, kth(acc[qual]))
-
-        for i, c in enumerate(viable):
-            rest = float(suffix[i + 1])
-            sel: Optional[np.ndarray] = None
-            sel_theta = -np.inf
-
-            def refresh_sel():
-                # same lazy competitive-candidate set as the flat path:
-                # a doc outside was proven unable to reach theta even with
-                # every remaining clause at its full bound
-                nonlocal sel, sel_theta
-                if theta <= 0 or (sel is not None and theta <= sel_theta * 1.05):
-                    return
-                mask = seen & (acc + suffix[i] >= theta * scale)
-                if nmatch is not None:
-                    # count-hopeless docs can drop outright: the remaining
-                    # clauses cannot lift them to msm
-                    mask &= nmatch + (nclauses - i) >= msm
-                if after_bound is not None:
-                    # partial sum already past the cursor: can never
-                    # re-enter the page (sums only grow)
-                    mask &= acc <= after_bound * slack
-                sel = np.flatnonzero(mask) + base
-                sel_theta = theta
-
-            if len(c) == 1:
-                ((t, w),) = c.items()
-                fw = float(w)
-                # once the remaining clauses (this one included) cannot
-                # credit msm, blocks only matter for existing candidates
-                new_docs_ok = nmatch is None or (nclauses - i) >= msm
-                for r, ub in zip(rows[t], term_ubs(t)):
-                    bf = np.asarray(r["block_first"], dtype=np.int64)
-                    bl = np.asarray(r["block_last"], dtype=np.int64)
-                    data = r["block_data"]
-                    nb = len(bf)
-                    ubw = ub * fw
-                    border = np.argsort(-ubw, kind="stable")
-                    for j in range(0, nb, CHUNK):
-                        cidx = border[j : j + CHUNK]
-                        if theta > 0 or not new_docs_ok:
-                            refresh_sel()
-                            if new_docs_ok and theta > 0:
-                                keep = ubw[cidx] + rest >= theta * scale
-                            elif new_docs_ok:
-                                keep = np.ones(len(cidx), dtype=bool)
-                            else:
-                                keep = np.zeros(len(cidx), dtype=bool)
-                            cand_set = sel if sel is not None else (
-                                (np.flatnonzero(seen) + base)
-                                if not new_docs_ok else None
-                            )
-                            if cand_set is not None and len(cand_set):
-                                lo = np.searchsorted(cand_set, bf[cidx], "left")
-                                hi2 = np.searchsorted(cand_set, bl[cidx], "right")
-                                has = hi2 > lo
-                                if theta > 0 and nmatch is None:
-                                    # per-block candidate potential (msm
-                                    # keeps the coarse test: its
-                                    # candidates are kept for COUNT too)
-                                    for z in np.flatnonzero(has):
-                                        cmax = float(
-                                            acc[cand_set[lo[z]:hi2[z]] - base].max()
-                                        )
-                                        if cmax + ubw[cidx[z]] + rest < theta * scale:
-                                            has[z] = False
-                                keep |= has
-                            cidx = cidx[keep]
-                        counters[1] += len(cidx)
-                        if len(cidx) == 0:
-                            continue
-                        parts = [decode_block(bytes(data[x])) for x in cidx]
-                        ids = np.concatenate([p[0] for p in parts])
-                        tfs = np.concatenate([p[1] for p in parts])
-                        dls = np.concatenate([p[2] for p in parts])
-                        live = _live_mask(ids, deleted)
-                        if live is not None:
-                            ids, tfs, dls = ids[live], tfs[live], dls[live]
-                        if len(ids) == 0:
-                            continue
-                        s = np.asarray(sim.score(t, tfs, dls), np.float64) * fw
-                        acc[ids - base] += s
-                        seen[ids - base] = True
-                        if nmatch is not None:
-                            nmatch[ids - base] += 1
-                        if after_bound is None:
-                            bump_theta()
-            else:
-                members = sorted(
-                    c, key=lambda t: sum(int(r["df"]) for r in rows[t])
-                )
-                refresh_sel()
-                essential = theta <= 0 or cubs[i] + rest >= theta * scale
-                new_docs_ok = nmatch is None or (nclauses - i) >= msm
-                # non-essential conjunction (or no room for new docs to
-                # reach msm): only still-competitive docs can be
-                # affected, so even the LEAD decode is restricted
-                if essential and new_docs_ok:
-                    lead_sel = None
-                elif sel is not None:
-                    lead_sel = sel
-                else:
-                    lead_sel = np.flatnonzero(seen) + base
-                ids, tfs, dls = decode_term(members[0], sel=lead_sel)
-                if len(ids) == 0:
-                    continue
-                cm = np.zeros(n, dtype=bool)
-                cm[ids - base] = True
-                csd = np.zeros(n, dtype=np.float64)
-                csd[ids - base] = (
-                    np.asarray(sim.score(members[0], tfs, dls), np.float64)
-                    * float(c[members[0]])
-                )
-                cand = ids
-                alive = True
-                for mi in range(1, len(members)):
-                    m = members[mi]
-                    fw = float(c[m])
-                    rest_m = float(
-                        sum(umax(t) * c[t] for t in members[mi + 1:])
-                    )
-                    last = mi == len(members) - 1
-                    # block-max leapfrog over the member's postings
-                    # (BlockMaxConjunctionBulkScorer.java:36): blocks of ALL
-                    # (term,salt) rows are chunked TOGETHER in descending
-                    # upper-bound order; a block decodes only if it holds a
-                    # candidate whose completed-so-far total plus this
-                    # block's bound plus every remaining bound could still
-                    # reach theta. On the LAST member, docs finish their
-                    # clause score as chunks complete, so theta refreshes
-                    # INSIDE the member walk and later (low-bound) chunks
-                    # skip — the within-conjunction analog of the term
-                    # path's progressive MAXSCORE windows.
-                    rws = rows[m]
-                    bfs = [np.asarray(r["block_first"], np.int64) for r in rws]
-                    bls = [np.asarray(r["block_last"], np.int64) for r in rws]
-                    ubs = term_ubs(m)
-                    flat_ub = (
-                        np.concatenate(ubs) * fw if ubs else np.empty(0)
-                    )
-                    flat_bf = np.concatenate(bfs) if bfs else np.empty(0, np.int64)
-                    flat_bl = np.concatenate(bls) if bls else np.empty(0, np.int64)
-                    row_of = np.concatenate(
-                        [np.full(len(b), ri, np.int64) for ri, b in enumerate(bfs)]
-                    ) if bfs else np.empty(0, np.int64)
-                    blk_of = np.concatenate(
-                        [np.arange(len(b), dtype=np.int64) for b in bfs]
-                    ) if bfs else np.empty(0, np.int64)
-                    nb = len(flat_bf)
-                    border = np.argsort(-flat_ub, kind="stable")
-                    nm = np.zeros(n, dtype=bool)
-                    done = np.zeros(n, dtype=bool) if last else None
-                    for j in range(0, nb, CHUNK):
-                        cidx = border[j : j + CHUNK]
-                        lo = np.searchsorted(cand, flat_bf[cidx], "left")
-                        hi2 = np.searchsorted(cand, flat_bl[cidx], "right")
-                        has = hi2 > lo
-                        if theta > 0:
-                            for z in np.flatnonzero(has):
-                                within = cand[lo[z]:hi2[z]] - base
-                                pmax = float((acc[within] + csd[within]).max())
-                                if (pmax + flat_ub[cidx[z]] + rest_m + rest
-                                        < theta * scale):
-                                    has[z] = False
-                        cidx = cidx[has]
-                        counters[1] += len(cidx)
-                        if len(cidx) == 0:
-                            continue
-                        parts = [
-                            decode_block(
-                                bytes(rws[row_of[x]]["block_data"][blk_of[x]])
-                            )
-                            for x in cidx
-                        ]
-                        ids2 = np.concatenate([p[0] for p in parts])
-                        tf2 = np.concatenate([p[1] for p in parts])
-                        dl2 = np.concatenate([p[2] for p in parts])
-                        inc = (
-                            cand[np.searchsorted(cand, ids2).clip(max=len(cand) - 1)]
-                            == ids2
-                        )
-                        ids2, tf2, dl2 = ids2[inc], tf2[inc], dl2[inc]
-                        live = _live_mask(ids2, deleted)
-                        if live is not None:
-                            ids2, tf2, dl2 = ids2[live], tf2[live], dl2[live]
-                        if len(ids2) == 0:
-                            continue
-                        nm[ids2 - base] = True
-                        csd[ids2 - base] += (
-                            np.asarray(sim.score(m, tf2, dl2), np.float64) * fw
-                        )
-                        if last and after_bound is None:
-                            done[ids2 - base] = True
-                            # full-clause matches: acc + csd are exact
-                            # partial totals — but only docs GUARANTEED
-                            # to qualify (count after this clause >= msm)
-                            # may raise theta
-                            dq = done if nmatch is None else (
-                                done & (nmatch + 1 >= msm)
-                            )
-                            if int(dq.sum()) >= k:
-                                theta = max(theta, kth((acc + csd)[dq]))
-                    cm &= nm
-                    if not cm.any():
-                        alive = False
-                        break
-                    cand = np.flatnonzero(cm) + base
-                if alive:
-                    idx = np.flatnonzero(cm)
-                    if len(idx):
-                        acc[idx] += csd[idx]
-                        seen[idx] = True
-                        if nmatch is not None:
-                            nmatch[idx] += 1
-                        if after_bound is None:
-                            bump_theta()
-            if after_bound is not None:
-                # cursor mode: theta only from docs GUARANTEED at/below
-                # the cursor — sound with the clause's FULL remaining
-                # bound, known only at clause end (flat-path rule)
-                bump_theta(rest=rest)
-
-        if nmatch is None:
-            matched = np.flatnonzero(seen) + base
-        else:
-            matched = np.flatnonzero(seen & (nmatch >= msm)) + base
-        if len(matched) == 0:
-            return _Z, _Z.astype(np.float64), counters
-        final = acc[matched - base]
-        if after_bound is not None:
-            # keep hits strictly after the (score desc, docid asc) cursor
-            ok = (final < after_bound) | (
-                (final == after_bound) & (matched > after_docid)
-            )
-            matched, final = matched[ok], final[ok]
-            if len(matched) == 0:
-                return _Z, _Z.astype(np.float64), counters
-        out_ids, out_sc = _select_topk(matched, final, k)
-        return out_ids, out_sc, counters
-
-    def topk_fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        ids, scores, counters = run(pdf, deleted)
-        return pd.DataFrame(
-            {
-                "docid": ids,
-                "score": scores,
-                "blocks_total": np.full(len(ids), counters[0], dtype=np.int64),
-                "blocks_decoded": np.full(len(ids), counters[1], dtype=np.int64),
-            }
-        )
-
-    def metrics_fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        _, _, counters = run(pdf, deleted)
-        return pd.DataFrame(
-            {
-                "segment_id": np.array([int(key[0])], dtype=np.int64),
-                "blocks_total": np.array([counters[0]], dtype=np.int64),
-                "blocks_decoded": np.array([counters[1]], dtype=np.int64),
-            }
-        )
-
-    topk_fn.metrics_fn = metrics_fn
-    return topk_fn
-
-
-def _auto_seed_theta_mixed(
-    index: Index,
-    clauses: Sequence[Dict[str, int]],
-    excluded: Sequence[str],
-    weights: Dict[str, float],
-    sim,
-    k: int,
-    quantize: bool,
-    dtype,
-) -> float:
-    """Driver-side pruning-threshold seed for the mixed disjunction
-    (MaxScoreAccumulator.java:23 analog, see auto_seed_theta): every
-    clause only ADDS score, so any single TERM clause t with df(t) >= k
-    yields >= k docs whose final score is at least qtf·partial(t) — a
-    sound global lower bound of the k-th best. Declined when exclusions
-    or deletes could remove those docs from the result set."""
-    if excluded or index.has_deletes:
-        return 0.0
-    term_clauses = [
-        (next(iter(c)), c[next(iter(c))]) for c in clauses if len(c) == 1
-    ]
-    if not term_clauses:
-        return 0.0
-    stats = index.term_stats_for([t for t, _ in term_clauses])
-    avgdl = float(index.field_stats.avgdl())
-
-    def partial(t, tfs, dls):
-        if sim is not None:
-            return np.asarray(sim.score(t, tfs, dls), np.float64)
-        return np.asarray(
-            score_arrays(tfs, dls, weights[t], avgdl, quantize, dtype), np.float64
-        )
-
-    best = 0.0
-    elig = sorted(
-        (stats[t][0], t, w)
-        for t, w in term_clauses
-        if t in weights and t in stats and stats[t][0] >= k
-    )
-    if elig and elig[0][0] <= AUTO_SEED_DECODE_CAP:
-        _df, t, w = elig[0]
-        tfs, dls = _driver_term_postings(index, t)
-        if tfs is not None and len(tfs) >= k:
-            s = partial(t, tfs, dls) * float(w)
-            best = float(np.partition(s, len(s) - k)[len(s) - k])
-    max_dl = int(getattr(index.field_stats, "max_dl", 0) or 0)
-    if max_dl > 0:
-        one = np.array([1], np.int64)
-        dl = np.array([max_dl], np.int64)
-        for _df, t, w in elig:
-            best = max(best, float(partial(t, one, dl)[0]) * float(w))
-    return best * PRUNE_SCALE[dtype] if best > 0.0 else 0.0
-
-
-def _mixed_plan(index: Index, node, quantize: bool, dtype,
-                similarity: Optional[str]):
-    """Shared setup for the mixed-disjunction pruned paths: shape check,
-    weight/similarity resolution, dead-clause elimination. None when the
-    tree is not the supported shape; (clauses, excl, weights, sim, rows)
-    when it is ((clauses=[] means provably MatchNone))."""
-    from .plan import mixed_or_clauses
-    from .similarities import bind_similarity
-
+def _tree_plan(index: Index, node, quantize: bool, dtype,
+               similarity: Optional[str]) -> Optional[ClausePlan]:
+    """Lower a clause-shaped tree (plan.mixed_or_clauses: top-level MUST
+    terms, SHOULD term / AND-of-term clauses, MUST_NOT terms) for the
+    clause kernel; None when the tree needs the exhaustive search_tree.
+    Term weights are unboosted (qtf 1); boosts ride on the clause member
+    weights (every similarity is linear in its weight); a SHOULD clause
+    credits 1 toward msm."""
     shape = mixed_or_clauses(node)
     if shape is None:
         return None
-    clauses, excl, msm = shape
-    terms = sorted({t for c in clauses for t in c})
-    sim = bind_similarity(
-        similarity, {t: 1 for t in terms}, index.term_stats_for(terms),
-        index.field_stats, 1.0, quantize, dtype,
-    )
-    q1 = NormalizedQuery(optional=tuple((t, 1) for t in terms))
-    weights = sim.weights if sim is not None else _weights_for(index, q1, 1.0, dtype)
-    live = [c for c in clauses if all(t in weights for t in c)]
-    if msm > len(live):
-        msm = -1  # clauses on unindexed terms can never credit msm
-    return live, excl, msm, weights, sim, sorted({t for c in live for t in c} | set(excl))
+    should, excluded, msm, must = shape
+    clauses = [({t: w}, True, 0) for t, w in sorted(must.items())]
+    clauses += [(c, False, 1) for c in should]
+    terms = {t for c, _, _ in clauses for t in c}
+    return _clause_plan(index, clauses, excluded, msm, {t: 1 for t in sorted(terms)},
+                        1.0, quantize, dtype, similarity)
 
 
 def seed_theta_tree(
@@ -3158,35 +2662,12 @@ def seed_theta_tree(
     dtype=np.float64,
     similarity: Optional[str] = None,
 ) -> float:
-    """Cross-segment threshold seed for MIXED trees (the two-job
-    seed_theta analog, MaxScoreAccumulator.java:23): evaluate the single
-    CHEAPEST clause alone on the pruned path — its global k-th score is a
-    lower bound of the full query's k-th (clauses only add). This is the
-    knob for conjunction-only trees, where the free stats-based
-    _auto_seed_theta_mixed has no term clause to seed from. Declined
-    (0.0) on exclusions/deletes or when the tree is not the mixed shape."""
-    plan = _mixed_plan(index, node, quantize, dtype, similarity)
-    if plan is None:
-        return 0.0
-    live, excl, msm, weights, sim, _terms = plan
-    if not live or msm != 0 or excl or index.has_deletes:
-        return 0.0
-    stats = index.term_stats_for(sorted({t for c in live for t in c}))
-
-    def lead_df(c):
-        return min(stats.get(t, (1 << 60, 0))[0] for t in c)
-
-    cheapest = min(live, key=lead_df)
-    fn = make_mixed_topk_fn(
-        [cheapest], [], k, float(index.field_stats.avgdl()), quantize, dtype,
-        sim=sim, weights=weights,
-    )
-    per_seg = apply_per_segment(index, sorted(cheapest), fn, TOPK_SCHEMA)
-    out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
-    vals = out.select("score").collect()
-    if len(vals) < k:
-        return 0.0
-    return float(vals[-1]["score"]) * PRUNE_SCALE[dtype]
+    """Explicit pruning-threshold seed for a clause-shaped tree
+    (_explicit_seed: its cheapest clause's global k-th) — the knob for
+    conjunction-only trees, where auto_seed_theta has no term clause to
+    seed from. 0.0 when the tree is not clause-shaped."""
+    plan = _tree_plan(index, node, quantize, dtype, similarity)
+    return 0.0 if plan is None else _explicit_seed(index, plan, k)
 
 
 def search_tree_topk(
@@ -3199,35 +2680,18 @@ def search_tree_topk(
     with_metrics: bool = False,
     theta_seed: float = 0.0,
 ) -> Optional[DataFrame]:
-    """Pruned top-k for MIXED single-level disjunctions like
-    ``(rare AND hot) OR med`` (see make_mixed_topk_fn). Returns None when
-    the tree is not the supported shape (caller falls back to the
+    """Pruned top-k of a clause-shaped tree like ``(rare AND hot) OR med``
+    or ``+hot (rare AND word) mid`` on the clause kernel. Returns None
+    when the tree is not that shape (the caller falls back to the
     exhaustive search_tree) — scoring defaults are the tree path's
     (float64, unquantized), so the lowering changes the PLAN, never the
-    scores."""
+    scores beyond float64 summation order."""
     if k is None:
         return None  # full materialization: pruning has nothing to prune
-    plan = _mixed_plan(index, node, quantize, dtype, similarity)
+    plan = _tree_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return None
-    live, excl, msm, weights, sim, terms = plan
-    if not live or msm < 0:
-        return index.spark.createDataFrame(
-            [], TOPK_SCHEMA if with_metrics else "docid long, score double"
-        )
-    if theta_seed == 0.0 and msm == 0:
-        # msm restricts the qualifying set below any term clause's df, so
-        # the stats-based seed is unsound there (same rule as the flat path)
-        theta_seed = _auto_seed_theta_mixed(
-            index, live, excl, weights, sim, k, quantize, dtype
-        )
-    fn = make_mixed_topk_fn(
-        live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
-        theta_seed=theta_seed, sim=sim, weights=weights, msm=msm,
-    )
-    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
-    out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
-    return out if with_metrics else out.select("docid", "score")
+    return _clause_topk(index, plan, k, theta_seed, with_metrics=with_metrics)
 
 
 def search_tree_after(
@@ -3241,25 +2705,12 @@ def search_tree_after(
     similarity: Optional[str] = None,
 ) -> DataFrame:
     """Cursor pagination for query TREES (IndexSearcher.searchAfter,
-    IndexSearcher.java:587-602): mixed single-level disjunctions page on
-    the PRUNED clause path (theta seeds from cursor-guaranteed docs,
-    past-cursor partials stop decoding); any other tree shape falls back
-    to the exhaustive evaluation filtered by the cursor."""
-    plan = _mixed_plan(index, node, quantize, dtype, similarity)
+    IndexSearcher.java:587-602): clause-shaped trees page on the clause
+    kernel; any other tree falls back to the exhaustive evaluation
+    filtered by the cursor."""
+    plan = _tree_plan(index, node, quantize, dtype, similarity)
     if plan is not None:
-        live, excl, msm, weights, sim, terms = plan
-        if not live or msm < 0:
-            return index.spark.createDataFrame([], "docid long, score double")
-        fn = make_mixed_topk_fn(
-            live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
-            sim=sim, weights=weights, msm=msm,
-            cursor=(float(after_score), int(after_docid)),
-        )
-        per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
-        return (
-            per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
-            .limit(k).select("docid", "score")
-        )
+        return _clause_topk(index, plan, k, cursor=(float(after_score), int(after_docid)))
     full = search_tree(index, node, k=None, quantize=quantize, dtype=dtype,
                        similarity=similarity)
     cond = (F.col("score") < float(after_score)) | (
@@ -3281,33 +2732,22 @@ def tree_skip_metrics(
     similarity: Optional[str] = None,
     theta_seed: float = 0.0,
 ) -> dict:
-    """block_skip_metrics for the mixed-tree pruned path: exact per-segment
+    """block_skip_metrics for clause-shaped trees: exact per-segment
     decode counters for the plan search_query would actually run."""
-    plan = _mixed_plan(index, node, quantize, dtype, similarity)
+    plan = _tree_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    live, excl, msm, weights, sim, terms = plan
-    if not live or msm < 0:
-        return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    if theta_seed == 0.0 and msm == 0:
-        theta_seed = _auto_seed_theta_mixed(
-            index, live, excl, weights, sim, k, quantize, dtype
-        )
-    fn = make_mixed_topk_fn(
-        live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
-        theta_seed=theta_seed, sim=sim, weights=weights, msm=msm,
-    )
-    return _sum_metrics(apply_per_segment(index, terms, fn.metrics_fn, METRICS_SCHEMA))
+    return _clause_metrics(index, plan, k, theta_seed)
 
 
 def search_query(index: Index, q, k: int = 10, **kw) -> DataFrame:
-    """Dispatch parse() output: NormalizedQuery -> pruned per-segment top-k
-    path; query tree -> BooleanQuery.rewrite analog first (nested
+    """Dispatch parse() output: NormalizedQuery -> the clause kernel
+    (search_topk); query tree -> BooleanQuery.rewrite analog first (nested
     same-occur booleans flatten, single-clause wrappers unwrap), so
-    associative shapes built by hand still lower to the pruned path;
-    MIXED single-level disjunctions — ``(A AND B) OR C`` — lower to the
-    clause-level block-max path (search_tree_topk); only genuinely
-    irregular trees take the exhaustive evaluation."""
+    associative shapes built by hand still lower to the flat form;
+    clause-shaped trees — ``(A AND B) OR C``, ``+A (B AND C) D`` — run on
+    the clause kernel too (search_tree_topk); only genuinely irregular
+    trees take the exhaustive evaluation."""
     if isinstance(q, NormalizedQuery):
         return search_topk(index, q, k=k, **kw)
     from .plan import flatten, rewrite
@@ -3325,40 +2765,6 @@ def search_query(index: Index, q, k: int = 10, **kw) -> DataFrame:
     if pruned is not None:
         return pruned
     return search_tree(index, q, k=k, **kw)
-
-
-def search_after(
-    index: Index,
-    q: NormalizedQuery,
-    k: int,
-    after_score: float,
-    after_docid: int,
-    **kw,
-) -> DataFrame:
-    """Cursor pagination (IndexSearcher.searchAfter, IndexSearcher.java:587-602):
-    hits strictly after the (score desc, docid asc) cursor via the PRUNED
-    per-segment path — theta seeds from cursor-guaranteed candidates and
-    partial sums already past the cursor stop being decoded, so deep paging
-    on a hot term does not re-decode the full posting list."""
-    quantize = kw.pop("quantize", True)
-    dtype = kw.pop("dtype", np.float32)
-    boost = kw.pop("boost", 1.0)
-    similarity = kw.pop("similarity", None)
-    plan = None if q.is_match_none else _topk_plan(index, q, boost, dtype, similarity, quantize)
-    if plan is None:
-        return index.spark.createDataFrame([], "docid long, score double")
-    weights, req, terms, sim = plan
-    fn = make_topk_fn(
-        weights, req, list(q.excluded), k, float(index.field_stats.avgdl()),
-        quantize, dtype, cursor=(float(after_score), int(after_docid)),
-        opt_counts=dict(q.optional), msm=q.min_should_match, sim=sim,
-    )
-    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-        .select("docid", "score")
-    )
 
 
 def search_after_exhaustive(

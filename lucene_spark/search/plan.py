@@ -556,31 +556,33 @@ def flatten(node) -> NormalizedQuery | None:
 
 
 def mixed_or_clauses(node):
-    """Detect the MIXED single-level disjunction shape — a top-level OR
-    whose clauses are plain terms or pure AND-of-term groups (plus
-    top-level MUST_NOT terms), e.g. ``(rare AND hot) OR med``. Returns
-    (clauses, excluded) where each clause is a {term: qtf} dict, or None
-    when the tree needs the general evaluator.
+    """Detect the clause shape the executor's clause kernel runs: a
+    top-level boolean of plain MUST terms, SHOULD clauses that are plain
+    terms or pure AND-of-term groups, and MUST_NOT terms — e.g.
+    ``(rare AND hot) OR med`` or ``+hot (rare AND word) mid``. None when
+    the tree needs the general evaluator.
 
-    This is the shape BooleanScorerSupplier composes WAND over arbitrary
-    sub-scorers for (BooleanScorerSupplier.java:288-317, WANDScorer.java:55
-    — a MUST group is ONE pseudo-scorer whose max-score bound is the sum
-    of its members' bounds); the executor's search_tree_topk lowers it to
-    the per-segment block-max path instead of the exhaustive walk.
+    This is the shape BooleanScorerSupplier composes one top-level scorer
+    for from clause ScorerSuppliers (BooleanScorerSupplier.java:288-317,
+    WANDScorer.java:55 — a MUST group is ONE pseudo-scorer whose max-score
+    bound is the sum of its members' bounds).
 
-    Returns (clauses, excluded, msm): ``msm`` is the tree's
-    minimumNumberShouldMatch over these clauses (0 = plain disjunction;
-    r6 supports it on the pruned path — each clause credits one distinct
-    match, the freq-counting-WAND analog at clause granularity)."""
+    Returns (clauses, excluded, msm, must): each SHOULD clause is a
+    {term: weight} dict, ``must`` the {term: weight} dict of the MUST
+    terms; weights fold every boost (BM25 is linear in the weight). ``msm``
+    is the tree's minimumNumberShouldMatch over the SHOULD clauses, each
+    crediting one: without MUST, msm <= 1 is the plain disjunction (0);
+    with MUST, msm = 1 still demands one SHOULD match. -1 is the MatchNone
+    sentinel (msm > #SHOULD clauses)."""
     if not isinstance(node, QBool) or node.boost != 1.0:
         return None
     clauses: List[Dict[str, float]] = []
     excluded: List[str] = []
+    must: Dict[str, float] = {}
     for occ, child in node.clauses:
+        plain = isinstance(child, QTerm) and child.field is None
         if occ == SHOULD:
-            if isinstance(child, QTerm) and child.field is None:
-                # clause weight = the term's boost (BoostQuery folding;
-                # BM25 is linear in the weight) — r6 accepts any boost
+            if plain:
                 clauses.append({child.term: float(child.boost)})
             elif (isinstance(child, QBool)
                   and child.msm == 0 and child.clauses
@@ -594,21 +596,20 @@ def mixed_or_clauses(node):
                 clauses.append(d)
             else:
                 return None
+        elif not plain:
+            return None
         elif occ == MUST_NOT:
-            if isinstance(child, QTerm) and child.field is None:
-                excluded.append(child.term)
-            else:
-                return None
+            excluded.append(child.term)
         else:
-            return None  # top-level MUST -> conjunction-led scorer shape
-    if not clauses:
+            must[child.term] = must.get(child.term, 0.0) + float(child.boost)
+    if not clauses and not must:
         return None
     msm = int(node.msm or 0)
     if msm > len(clauses):
         msm = -1  # MatchNone sentinel (msm > #SHOULD clauses)
-    elif msm <= 1:
+    elif msm <= 1 and not must:
         msm = 0  # a disjunction already demands >= 1 matching clause
-    return clauses, sorted(set(excluded)), msm
+    return clauses, sorted(set(excluded)), msm, must
 
 
 def parse(query: str, stop_words=ENGLISH_STOP_WORDS):

@@ -30,9 +30,9 @@ formula shapes (behavior only, no code):
 
 All are monotone increasing in tf and non-increasing in doclen, so the
 per-block impact metadata (block_maxtf, block_mindl) yields sound score
-upper bounds for every one of them — the block-max MAXSCORE/WAND pruned
-path (executor.make_topk_fn) works unchanged with a bound similarity
-plugged in: scoring and per-block bounds both route through
+upper bounds for every one of them — the block-max MAXSCORE/WAND clause
+kernel (executor.make_clause_topk_fn) works unchanged with a bound
+similarity plugged in: scoring and per-block bounds both route through
 ``BoundSimilarity.score``.
 
 Parity vs oracle modes mirror BM25: parity scores through the byte4

@@ -190,7 +190,7 @@ def test_auto_seed_theta_default_on_and_sound(built_index):
     unsound shapes (MUST / msm / NOT / deletes / unknown max_dl)."""
     import numpy as np
     from lucene_spark.search.executor import (
-        auto_seed_theta, block_skip_metrics, search_topk, _topk_plan,
+        auto_seed_theta, block_skip_metrics, search_topk, _flat_plan,
     )
     from lucene_spark.search.plan import normalize
 
@@ -207,26 +207,23 @@ def test_auto_seed_theta_default_on_and_sound(built_index):
         assert m_auto["blocks_decoded"] <= m_off["blocks_decoded"]
 
     # unsound shapes -> no seed
+    def plan(q):
+        return _flat_plan(built_index, q, 1.0, np.float32)
+
     plan_q = normalize(should=["import", "vector"])
-    weights, _, _, sim = _topk_plan(built_index, plan_q, 1.0, np.float32)
     assert auto_seed_theta(
-        built_index, normalize(must=["import"], should=["vector"]),
-        weights, sim, 10, True, np.float32,
+        built_index, plan(normalize(must=["import"], should=["vector"])), 10,
     ) == 0.0
     assert auto_seed_theta(
-        built_index, normalize(should=["import", "vector"], min_should_match=2),
-        weights, sim, 10, True, np.float32,
+        built_index, plan(normalize(should=["import", "vector"], min_should_match=2)), 10,
     ) == 0.0
     # must_not with a term the analyzer keeps (stopwords like "the" are
     # dropped at normalize time, leaving excluded=() — which IS seed-sound)
     assert auto_seed_theta(
-        built_index, normalize(should=["import", "vector"], must_not=["return"]),
-        weights, sim, 10, True, np.float32,
+        built_index, plan(normalize(should=["import", "vector"], must_not=["return"])), 10,
     ) == 0.0
     # eligible shape -> a positive seed on this corpus
-    assert auto_seed_theta(
-        built_index, plan_q, weights, sim, 10, True, np.float32,
-    ) > 0.0
+    assert auto_seed_theta(built_index, plan(plan_q), 10) > 0.0
 
 
 def test_auto_seed_disabled_with_deletes(spark, tmp_path):
@@ -235,7 +232,7 @@ def test_auto_seed_disabled_with_deletes(spark, tmp_path):
     import numpy as np
     from lucene_spark.index.builder import IndexConfig, build_index
     from lucene_spark.search.executor import (
-        Index, auto_seed_theta, search_topk, _topk_plan,
+        Index, auto_seed_theta, search_topk, _flat_plan,
     )
     from lucene_spark.search.plan import normalize
 
@@ -244,10 +241,10 @@ def test_auto_seed_disabled_with_deletes(spark, tmp_path):
     cfg = IndexConfig(docid_col="docid", order_cols=("docid",), num_segments=2)
     idx = Index(spark, build_index(spark, docs, str(tmp_path / "delseed"), cfg))
     q = normalize(should=["alpha", "beta"], pre_analyzed=True)
-    weights, _, _, sim = _topk_plan(idx, q, 1.0, np.float32)
-    assert auto_seed_theta(idx, q, weights, sim, 10, True, np.float32) > 0.0
+    plan = _flat_plan(idx, q, 1.0, np.float32)
+    assert auto_seed_theta(idx, plan, 10) > 0.0
     idx.delete_docs([5])
-    assert auto_seed_theta(idx, q, weights, sim, 10, True, np.float32) == 0.0
+    assert auto_seed_theta(idx, plan, 10) == 0.0
     got = {r["docid"] for r in search_topk(idx, q, k=10).collect()}
     assert 5 not in got and len(got) == 10
 

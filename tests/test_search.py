@@ -108,6 +108,8 @@ QUERIES = [
     ("not", dict(should=["import"], must_not=["vector"])),
     ("and not", dict(must=["import", "def"], must_not=["return"])),
     ("stop only", dict(should=["the"])),
+    ("or msm2", dict(should=["import", "return", "class", "vector"], min_should_match=2)),
+    ("req_fold", dict(must=["import"], should=["import", "return", "class"])),
 ]
 
 
@@ -125,25 +127,34 @@ def test_topk_matches_reference(built_index, ref_index, name, clauses, k):
     terms = list(clauses.get("must", [])) + list(clauses.get("should", []))
     want = ref_search(ref_index, terms, k=k, mode=mode,
                       must_not=clauses.get("must_not", ()))
-    # and+should: reference 'and' mode ignores optional-should scoring;
-    # recompute expected via optional-aware reference
-    if clauses.get("must") and clauses.get("should"):
-        want = _ref_req_opt(ref_index, clauses["must"], clauses["should"], k)
+    # and+should / msm: the reference's 'and' and 'or' modes ignore
+    # optional-should scoring and msm; recompute expected via the
+    # optional-aware reference
+    msm = clauses.get("min_should_match", 0)
+    if clauses.get("must") and clauses.get("should") or msm:
+        want = _ref_req_opt(ref_index, clauses.get("must", []), clauses["should"], k, msm)
+        assert want, name
 
     assert [r["docid"] for r in got] == [d for d, _ in want], name
     for r, (_, s) in zip(got, want):
-        assert r["score"] == pytest.approx(s, rel=1e-6), name
+        assert r["score"] == s, name
 
 
-def _ref_req_opt(idx, must, should, k):
-    """Reference ReqOptSumScorer: docs matching all MUST; score adds SHOULD."""
+def _ref_req_opt(idx, must, should, k, msm=0):
+    """Reference ReqOptSumScorer: docs matching all MUST (or, without
+    MUST, any SHOULD) and at least ``msm`` SHOULD clause instances; score
+    adds SHOULD, float32 in sorted-term order."""
     from collections import Counter
 
     from lucene_spark.pyref import score_term
 
     must_c, should_c = Counter(must), Counter(should)
     per = {t: score_term(idx, t) for t in set(must) | set(should)}
-    docs = set.intersection(*(set(per[t]) for t in must_c))
+    if must_c:
+        docs = set.intersection(*(set(per[t]) for t in must_c))
+    else:
+        docs = set().union(*(set(per[t]) for t in should_c))
+    docs = {d for d in docs if sum(c for t, c in should_c.items() if d in per[t]) >= msm}
     out = []
     for d in docs:
         s = np.float32(0)

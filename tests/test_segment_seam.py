@@ -132,6 +132,23 @@ def test_generation_snapshot_after_append(spark, tmp_path):
         _agrees(idx, q, _rows(search_topk(idx, q, k=40)), 40)
     assert max(d for d, _ in _rows(search_topk(old, q, k=40))) < 20
 
+    # the driver-side seed reads only the snapshot's segments: short
+    # "alpha alpha alpha" docs appended after the commit would otherwise
+    # seed theta above the snapshot's true k-th score and empty the result
+    d2 = str(tmp_path / "idx2")
+    rows = [(i, " ".join((["alpha"] if i < 30 else []) + ["beta"]
+                         + [f"filler{(i * 7 + j) % 50}" for j in range(20)]))
+            for i in range(40)]
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, content string"), d2, cfg)
+    more = spark.createDataFrame([(i, "alpha alpha alpha") for i in range(100, 120)],
+                                 "doc_id long, content string")
+    old = Index(spark, append_to_index(spark, more, d2, cfg, keep_commits=True),
+                generation=0)
+    q = normalize(should=["alpha", "beta"], pre_analyzed=True)
+    got = _rows(search_topk(old, q, k=5))
+    assert len(got) == 5 and max(d for d, _ in got) < 40
+    _agrees(old, q, got, 5)
+
 
 def test_multireader_and_object_store_root(spark, tmp_path):
     from lucene_spark.corpus import make_corpus

@@ -34,23 +34,30 @@ def test_mixed_shape_detection():
     conj = QBool(((MUST, QTerm("a")), (MUST, QTerm("b"))))
     t = _tree((SHOULD, conj), (SHOULD, QTerm("c")), (MUST_NOT, QTerm("d")))
     got = mixed_or_clauses(t)
-    assert got == ([{"a": 1, "b": 1}, {"c": 1}], ["d"], 0)
+    assert got == ([{"a": 1, "b": 1}, {"c": 1}], ["d"], 0, {})
     # duplicate member -> qtf weight
     conj2 = QBool(((MUST, QTerm("a")), (MUST, QTerm("a"))))
     assert mixed_or_clauses(_tree((SHOULD, conj2)))[0] == [{"a": 2}]
     # msm rides along (r6): <=1 normalizes to 0, infeasible -> -1 sentinel
     m2 = mixed_or_clauses(QBool(((SHOULD, conj), (SHOULD, QTerm("x"))), msm=2))
-    assert m2 == ([{"a": 1, "b": 1}, {"x": 1}], [], 2)
+    assert m2 == ([{"a": 1, "b": 1}, {"x": 1}], [], 2, {})
     assert mixed_or_clauses(QBool(((SHOULD, conj),), msm=1))[2] == 0
     assert mixed_or_clauses(QBool(((SHOULD, conj),), msm=5))[2] == -1
     # clause boosts fold into the weights (r6): term boost, conj boost,
     # member boost all multiply (BM25 linear in W)
     bconj = QBool(((MUST, QTerm("a", boost=3.0)), (MUST, QTerm("b"))), boost=2.0)
     got_b = mixed_or_clauses(_tree((SHOULD, bconj), (SHOULD, QTerm("c", boost=0.5))))
-    assert got_b == ([{"a": 6.0, "b": 2.0}, {"c": 0.5}], [], 0)
+    assert got_b == ([{"a": 6.0, "b": 2.0}, {"c": 0.5}], [], 0, {})
+    # top-level MUST terms (any boost) lower next to the SHOULD clauses;
+    # with MUST present, msm = 1 still demands one SHOULD match
+    assert mixed_or_clauses(_tree((MUST, QTerm("a")), (SHOULD, conj))) == (
+        [{"a": 1, "b": 1}], [], 0, {"a": 1.0})
+    assert mixed_or_clauses(QBool(((MUST, QTerm("e", boost=2.0)), (SHOULD, conj),
+                                   (SHOULD, QTerm("c"))), msm=1))[2:] == (1, {"e": 2.0})
+    assert mixed_or_clauses(QBool(((MUST, QTerm("e")), (SHOULD, conj)), msm=2))[2] == -1
     # unsupported shapes fall back (None)
     assert mixed_or_clauses(QTerm("a")) is None
-    assert mixed_or_clauses(_tree((MUST, QTerm("a")), (SHOULD, conj))) is None
+    assert mixed_or_clauses(_tree((MUST, conj), (SHOULD, QTerm("c")))) is None
     assert mixed_or_clauses(QBool(((SHOULD, conj),), boost=2.0)) is None
     nested = QBool(((MUST, conj), (MUST, QTerm("e"))))
     assert mixed_or_clauses(_tree((SHOULD, nested))) is None
@@ -328,3 +335,70 @@ def test_search_tree_after_matches_exhaustive(mixed_index, trial):
     )
     assert got == want
     assert got[0]  # vacuity guard
+
+
+@pytest.mark.parametrize("trial", range(10))
+def test_must_led_randomized_differentials(mixed_index, trial):
+    """MUST-led trees (top-level MUST terms next to SHOULD terms and AND
+    groups, MUST_NOT, msm 0-2, boosts) on the clause kernel == the
+    exhaustive tree, across similarities, first page and a cursor page."""
+    from lucene_spark.search.executor import (
+        search_tree, search_tree_after, search_tree_topk,
+    )
+
+    rng = random.Random(9300 + trial)
+    vocab = ["med", "rare", "hot"] + [f"w{i}" for i in range(30)]
+
+    def boost():
+        return rng.choice([1.0, 1.0, 0.5, 2.0])
+
+    cls = [(MUST, QTerm(rng.choice(["hot", "hot", "med", "w3", "w7"]), boost=boost()))
+           for _ in range(rng.randrange(1, 3))]
+    for _ in range(rng.randrange(1, 4)):
+        if rng.random() < 0.5:
+            cls.append((SHOULD, QTerm(rng.choice(vocab), boost=boost())))
+        else:
+            m = tuple((MUST, QTerm(rng.choice(vocab), boost=boost()))
+                      for _ in range(rng.randrange(2, 4)))
+            cls.append((SHOULD, QBool(m, boost=boost())))
+    if rng.random() < 0.4:
+        cls.append((MUST_NOT, QTerm(rng.choice(["ban", "w5"]))))
+    nsh = sum(1 for o, _ in cls if o == SHOULD)
+    tree = QBool(tuple(cls), msm=rng.choice([0, 1, 2]) if nsh >= 2 else rng.choice([0, 1]))
+    assert mixed_or_clauses(tree)[3]  # MUST-led shape, not the fallback
+    sim = rng.choice([None, "classic", "lm_dirichlet", "dfr_ine_l_h2"])
+    k = rng.choice([3, 10, 50])
+    _check(mixed_index, tree, k=k, similarity=sim)
+    full = search_tree(mixed_index, tree, k=None, similarity=sim).collect()
+    if len(full) <= k:
+        return  # no second page to test
+    # the cursor is the pruned first page's last hit (float64 sums of the
+    # two paths may differ in the last bit, so the exhaustive ranking is
+    # compared at 9 decimals)
+    cur = search_tree_topk(mixed_index, tree, k=k, similarity=sim).collect()[-1]
+    rc = round(cur["score"], 9)
+    ordered = sorted(({"score": round(r["score"], 9), "docid": r["docid"]} for r in full),
+                     key=lambda r: (-r["score"], r["docid"]))
+    want = _canon([r for r in ordered
+                   if r["score"] < rc or (r["score"] == rc and r["docid"] > cur["docid"])][:k])
+    got = _canon(search_tree_after(mixed_index, tree, k, float(cur["score"]),
+                                   int(cur["docid"]), similarity=sim).collect())
+    assert got == want and got[0]
+
+
+def test_search_query_runs_must_led_tree_pruned(mixed_index, monkeypatch):
+    """A MUST-led tree takes the clause kernel: search_query never calls
+    the exhaustive search_tree for it."""
+    import lucene_spark.search.executor as ex
+    from lucene_spark.search.plan import parse
+
+    tree = parse("+hot (rare AND w3) med", stop_words=NOSTOP)
+    assert isinstance(tree, QBool)
+    want = _canon(ex.search_tree(mixed_index, tree, k=10).collect())
+
+    def no_tree(*a, **kw):
+        raise AssertionError("search_tree called for a clause-shaped tree")
+
+    monkeypatch.setattr(ex, "search_tree", no_tree)
+    got = _canon(ex.search_query(mixed_index, tree, k=10).collect())
+    assert got == want and got[0]
