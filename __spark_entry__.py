@@ -5,8 +5,8 @@ sf0.001. ``queries()`` exposes one callable per implemented operator from
 SURVEY.md §2 (plus the training-pipeline ops); ``oracle_sql()`` gives the
 DuckDB-runnable ANSI SQL equivalent for each.
 
-Fulltext queries run through the real index (segment build + salted merge +
-per-segment block-max top-k) in float64/unquantized scoring mode so the
+Fulltext queries run through the real index (per-segment build + global
+term stats + per-segment block-max top-k) in float64/unquantized scoring mode so the
 plain-SQL oracle can reproduce the scores; the Lucene float32 parity mode
 is exercised by the pytest golden/differential suite instead.
 """
@@ -54,7 +54,7 @@ from lucene_spark.search.executor import (
 )
 from lucene_spark.search.plan import normalize
 
-INDEX_FORMAT_VERSION = 6  # v6: per-block competitive impact pairs
+INDEX_FORMAT_VERSION = 7  # v7: segment files are the only postings
 _INDEX_CACHE: dict = {}
 
 K1, B = 1.2, 0.75

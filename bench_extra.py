@@ -237,7 +237,7 @@ def cmd_ratio10m() -> None:
     cfg = IndexConfig(num_segments=max(cpus, n // 25000),
                       hot_df_threshold=max(200, n // 20),
                       merge_bucket_segments=max(2, cpus // 8))
-    if not os.path.exists(os.path.join(idx_dir, "_merged", "_SUCCESS")):
+    if not os.path.exists(os.path.join(idx_dir, "field_stats.json")):
         t0 = time.perf_counter()
         build_index(spark, spark.read.parquet(corpus), idx_dir, cfg)
         print(f"build {n}: {time.perf_counter() - t0:.1f}s")

@@ -12,8 +12,8 @@ Maps Lucene's write path (SURVEY.md §3.2) onto Spark:
     [index/FreqProxTermsWriter.java:83-111]   parquet shards via pyarrow
   commit -> segments_N manifest             per-segment manifest JSON, written
     [index/IndexWriter.java:4158]             last (atomic rename) = lineage
-  SegmentMerger.mergeTerms                  term-partitioned shuffle,
-    [index/SegmentMerger.java:116-149]        hot terms salted by segment range
+  TermStates.build (stats over the leaves)  term_stats: groupBy(term) sum of
+    [search/TermStates.java:96-121]           the per-segment df/ttf rows
 
 Scale design (10^12 files):
   - docid assignment: range-partition once on (repo,path,commit), write the
@@ -22,11 +22,13 @@ Scale design (10^12 files):
   - segment build is shuffle-free, one file-granular task per segment
     (session.slice_tasks); every heavy transform is pandas/numpy inside
     the task (Arrow tables, no per-row Python at the Spark boundary).
-  - merge shuffles only term-level rows (term, segment, encoded blocks) --
-    tiny compared to raw postings; hot terms (df >= hot_df_threshold) are
-    salted into (term, segment-range-bucket) sub-keys so no reducer sees an
-    unbounded posting list. Bucket order == docid order, so a salted term's
-    global posting list is the ordered concat of its bucket rows.
+  - no merge step: postings live only in the per-segment files. Segments
+    hold disjoint ascending docid ranges, so a term's global posting list
+    is the segment_id-ordered concat of its segment rows, and every query
+    path reads the segment files directly. Finalize is one small
+    aggregation of the segment rows' (term, df, ttf) into the global
+    term_stats table: an append writes its new segments and the stats,
+    never the existing postings.
   - resume: a segment whose manifest JSON exists is skipped (lineage +
     doc/posting-count metrics live in the manifest).
 """
@@ -56,11 +58,14 @@ from . import fsio
 # validated at Index.open (SegmentInfos version-check analog,
 # lucene/core/src/java/org/apache/lucene/index/SegmentInfos.java:305 —
 # Lucene refuses to open indexes written by a newer/incompatible codec).
+# v7: no merged postings copy — the segment files are the only postings and
+# generation markers live in term_stats (a v6 engine would look for
+# merged/); v6 indexes stay readable, their merged*/ dirs are ignored.
 # v6: per-block competitive impact pairs (block_imp column; readers of v5
 # indexes fall back to the corner bound). v5: parquet per-segment
 # tombstones; v4 and earlier used numbered tombstones/delete-*.json files,
 # migrated at open.
-INDEX_FORMAT_VERSION = 6
+INDEX_FORMAT_VERSION = 7
 
 
 MANIFEST_SCHEMA = (
@@ -112,8 +117,10 @@ class IndexConfig:
     stop_words: Optional[frozenset] = None
     num_segments: int = 0  # 0 -> auto (target_docs_per_segment)
     target_docs_per_segment: int = 250_000  # Lucene slice bound (IndexSearcher.java:323-341)
-    hot_df_threshold: int = 100_000  # df above this gets salted at merge
-    merge_bucket_segments: int = 8  # segments per salt bucket for hot terms
+    # accepted and ignored: existing callers still pass them, and the
+    # build has no merge step for them to tune
+    hot_df_threshold: int = 100_000
+    merge_bucket_segments: int = 8
     keep_content: bool = True  # store content in docs table for hydration
     index_positions: bool = False  # store per-posting positions (phrase queries)
     # store per-occurrence (start, end) CHAR offsets alongside positions
@@ -266,22 +273,14 @@ class IndexPaths:
         return os.path.join(self.root, "postings")
 
     @property
-    def merged(self) -> str:
-        return self.merged_g(0)
-
-    @property
     def term_stats(self) -> str:
         return self.term_stats_g(0)
 
-    def merged_g(self, generation: int) -> str:
+    def term_stats_g(self, generation: int) -> str:
         # snapshot-global artifacts are generation-suffixed; field_stats.json
         # (written LAST, atomic rename via the FS seam) records the live generation:
         # an append that crashes mid-finalize leaves the previous snapshot
         # fully readable (same manifest-last commit idea as segments)
-        base = os.path.join(self.root, "merged")
-        return base if generation == 0 else f"{base}-g{generation}"
-
-    def term_stats_g(self, generation: int) -> str:
         base = os.path.join(self.root, "term_stats")
         return base if generation == 0 else f"{base}-g{generation}"
 
@@ -864,18 +863,14 @@ def read_manifests(paths: IndexPaths) -> List[dict]:
     return [fsio.read_json(paths.fs, m) for m in files]
 
 
-def _flatten_field(col_name: str):
-    """segment-ordered concat of one per-segment block-list field."""
-    return F.flatten(F.transform("__o__", lambda x: x[col_name])).alias(col_name)
-
-
 def finalize_index(
     spark: SparkSession, paths: IndexPaths, cfg: IndexConfig, generation: int = 0
 ) -> None:
-    """Global artifacts over the full segment set: term stats, salted merged
-    index, then field stats — written LAST (atomic rename via fsio) as the
-    snapshot commit marker recording the live generation. Idempotent (skips
-    what exists)."""
+    """Global artifacts over the full segment set: term stats (one small
+    aggregation of the per-segment rows), then field stats — written LAST
+    (atomic rename via fsio) as the snapshot commit marker recording the
+    live generation. Postings stay in the segment files only. Idempotent
+    (skips what exists)."""
     import sys
     import time as _time
 
@@ -883,79 +878,16 @@ def finalize_index(
     _t0 = _time.perf_counter()
     manifest_rows = read_manifests(paths)
 
-    merged_done = fsio.exists(
-        paths.fs, paths.fs_path(os.path.join(paths.merged_g(generation), "_SUCCESS"))
-    )
-    seg_postings = spark.read.parquet(paths.postings)
-
     # --- global term stats (aggregate across segments == TermStates.build)
     ts_path = paths.term_stats_g(generation)
     if not fsio.exists(paths.fs, paths.fs_path(os.path.join(ts_path, "_SUCCESS"))):
         (
-            seg_postings.groupBy("term")
+            spark.read.parquet(paths.postings).groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
             .repartition(max(1, spark.sparkContext.defaultParallelism // 2), "term")
             .sortWithinPartitions("term")
             .write.mode("overwrite")
             .parquet(ts_path)
-        )
-
-    # --- merge: term-partitioned shuffle with hot-term salting
-    if not merged_done:
-        term_stats = spark.read.parquet(ts_path)
-        hot = term_stats.filter(F.col("df") >= cfg.hot_df_threshold).select("term")
-        bucket = (F.col("segment_id") / F.lit(cfg.merge_bucket_segments)).cast("int")
-        with_salt = seg_postings.join(
-            F.broadcast(hot.withColumn("__hot__", F.lit(True))), "term", "left"
-        ).withColumn("salt", F.when(F.col("__hot__").isNotNull(), bucket).otherwise(F.lit(0)))
-
-        # segments hold disjoint ascending docid ranges -> the global posting
-        # list is the segment_id-ordered concat of per-segment block lists
-        # (SegmentMerger.mergeTerms docBase remap; docids already global).
-        # Pure JVM aggregation: collect_list of structs, array_sort on the
-        # leading segment_id, flatten — NO Python in the merge (per-group
-        # pandas UDFs cost ~0.2 ms/group, which dominates at real-vocabulary
-        # scale with millions of terms).
-        blk_cols = [
-            "block_first", "block_last", "block_maxtf", "block_mindl",
-            "block_imp", "block_data", "block_pos",
-        ]
-        if "block_off" in seg_postings.columns:
-            blk_cols.append("block_off")
-        if "block_imp" not in seg_postings.columns:
-            # appending to a pre-v6 index: its segment files have no impact
-            # pairs, so the merged snapshot stays corner-bound throughout
-            # (readers fall back per-term; mixing would need mergeSchema)
-            blk_cols.remove("block_imp")
-        ordered = F.array_sort(
-            F.collect_list(F.struct("segment_id", *blk_cols))
-        )
-        merged = (
-            with_salt.drop("__hot__")
-            .groupBy("term", "salt")
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("ttf").alias("ttf"),
-                F.min("first_docid").alias("first_docid"),
-                F.max("last_docid").alias("last_docid"),
-                F.max("max_tf").alias("max_tf"),
-                F.min("min_doclen").alias("min_doclen"),
-                ordered.alias("__o__"),
-            )
-            .select(
-                "term", "salt", "df", "ttf", "first_docid", "last_docid",
-                "max_tf", "min_doclen",
-                # flatten returns NULL when any element is null, so a
-                # positions-off index keeps block_pos = NULL after merge
-                *[_flatten_field(c) for c in blk_cols],
-            )
-        )
-        nmerge = max(4, spark.sparkContext.defaultParallelism)
-        (
-            merged.repartition(nmerge, "term")
-            .sortWithinPartitions("term", "salt")
-            .write.mode("overwrite")
-            .parquet(paths.merged_g(generation))
         )
 
     # --- field stats = snapshot commit marker (TermStates/FieldStats analog,
@@ -1021,7 +953,7 @@ def build_index(
     index_dir: str,
     cfg: IndexConfig | None = None,
 ) -> IndexPaths:
-    """Full build: stage -> segments -> global stats -> salted merge."""
+    """Full build: stage -> per-segment invert -> global term stats."""
     cfg = cfg or IndexConfig()
     from ..functions.lang import LANG_PACKS
 
@@ -1069,7 +1001,7 @@ def build_index(
     fsio.mkdirs(paths.fs, paths.fs_path(index_dir))
     gen = live_generation(paths)
     if gen is not None and fsio.exists(
-        paths.fs, paths.fs_path(os.path.join(paths.merged_g(gen), "_SUCCESS"))
+        paths.fs, paths.fs_path(os.path.join(paths.term_stats_g(gen), "_SUCCESS"))
     ):
         return paths  # fully built (resume no-op)
     build_segments(spark, docs, paths, cfg)
@@ -1206,11 +1138,10 @@ def purge_deletes(
     ).collect()
 
     finalize_index(spark, paths, cfg, generation=old_gen + 1)
-    for p in (paths.term_stats_g(old_gen), paths.merged_g(old_gen)):
-        try:
-            fsio.delete(paths.fs, paths.fs_path(p))
-        except OSError:
-            pass
+    try:
+        fsio.delete(paths.fs, paths.fs_path(paths.term_stats_g(old_gen)))
+    except OSError:
+        pass
     # a purge rewrites segment files IN PLACE, so every retained commit's
     # per-segment data is gone — drop stale markers so list_commits stays
     # truthful (Lucene's SnapshotDeletionPolicy blocks merges from deleting
@@ -1228,8 +1159,8 @@ def purge_deletes(
 
 def list_commits(index_dir: str) -> list:
     """Openable commit generations, oldest first (DirectoryReader
-    .listCommits analog): retained per-generation markers whose merged
-    snapshot still exists, plus the live commit."""
+    .listCommits analog): retained per-generation markers whose term
+    stats still exist, plus the live commit."""
     paths = IndexPaths(index_dir)
     gens = set()
     for f in fsio.list_files(paths.fs, paths.fs_path(paths.root),
@@ -1237,7 +1168,7 @@ def list_commits(index_dir: str) -> list:
         base = os.path.basename(f)
         g = int(base[len("field_stats-g"):-len(".json")])
         if fsio.exists(paths.fs, paths.fs_path(
-                os.path.join(paths.merged_g(g), "_SUCCESS"))):
+                os.path.join(paths.term_stats_g(g), "_SUCCESS"))):
             gens.add(g)
     live = live_generation(paths)
     if live is not None:
@@ -1347,8 +1278,7 @@ def append_to_index(
     if not keep_commits:
         # KeepOnlyLastCommit (the reference's default deletion policy):
         # old generation's artifacts are unreachable -> best-effort GC
-        for p in (paths.term_stats_g(old_gen), paths.merged_g(old_gen),
-                  paths.field_stats_g(old_gen)):
+        for p in (paths.term_stats_g(old_gen), paths.field_stats_g(old_gen)):
             try:
                 fsio.delete(paths.fs, paths.fs_path(p))
             except OSError:

@@ -11,11 +11,12 @@ violation COUNTS, never data.
 
 Checks:
   segments   manifest docid ranges disjoint/ordered; max_doc == sum(num_docs)
-  postings   per (term, salt) row: blocks decode; docids strictly ascending
-             within the row; block_first/last/maxtf/mindl match the decoded
+  postings   per (term, segment) row of the segment files queries read:
+             blocks decode; docids strictly ascending within the row;
+             block_first/last/maxtf/mindl match the decoded
              content (the skip/impact metadata MUST be exact or block-max
              pruning would be unsound); row df/ttf match the decode
-  term_stats global df/ttf per term == sum over the term's salted rows
+  term_stats global df/ttf per term == sum over the term's segment rows
   norms      decoded (docid, doclen) pairs agree with the norms table;
              norm_byte == SmallFloat intToByte4(doclen)
   stored     sha256(content) == content_sha256 for every stored row (the
@@ -45,7 +46,7 @@ from ..functions.codec import (
 from ..functions.smallfloat import int_to_byte4
 
 _POSTINGS_REPORT_SCHEMA = (
-    "term string, salt int, n_postings long, sum_tf long, violations string"
+    "term string, segment_id int, n_postings long, sum_tf long, violations string"
 )
 
 
@@ -146,9 +147,9 @@ def _check_postings_map(check_positions: bool):
                     viol.append("row-df-mismatch")
                 if int(r["ttf"]) != tf_total:
                     viol.append("row-ttf-mismatch")
-                out.append((r["term"], int(r["salt"]), n, tf_total, ";".join(viol)))
+                out.append((r["term"], int(r["segment_id"]), n, tf_total, ";".join(viol)))
             yield pd.DataFrame(
-                out, columns=["term", "salt", "n_postings", "sum_tf", "violations"]
+                out, columns=["term", "segment_id", "n_postings", "sum_tf", "violations"]
             )
 
     return run
@@ -176,8 +177,8 @@ def check_index(index, check_positions: bool = True) -> dict:
     }
 
     # --- postings structural decode
-    has_pos = check_positions and "block_pos" in index.merged.columns
-    rows = index.merged
+    rows = index.seg_postings
+    has_pos = check_positions and "block_pos" in rows.columns
     per_row = rows.mapInPandas(
         _check_postings_map(has_pos), _POSTINGS_REPORT_SCHEMA
     ).cache()

@@ -69,11 +69,12 @@ PRUNE_SCALE = {np.float32: 1.0 - 1e-4, np.float64: 1.0 - 1e-9}
 class Index:
     """Opened index: stats + lazy DataFrames (DirectoryReader analog).
 
-    ``generation`` opens a RETAINED past commit (DirectoryReader.open(
-    IndexCommit) analog): the per-generation marker supplies that commit's
-    stats and snapshot bounds (max segment id / max docid), and the segment
-    -level DataFrames filter later appends out (docid/segment_id predicates
-    -> parquet row-group pruning, no data rewrite). Commits are retained by
+    Every open is a point-in-time view of one commit: its marker supplies
+    the stats and snapshot bounds (max segment id / max docid), and the
+    segment-level DataFrames filter later appends out (docid/segment_id
+    predicates -> parquet row-group pruning, no data rewrite). A live open
+    reads the current commit; ``generation`` opens a RETAINED past commit
+    (DirectoryReader.open(IndexCommit) analog). Commits are retained by
     ``append_to_index(keep_commits=True)`` (SnapshotDeletionPolicy analog);
     the default policy GCs them (KeepOnlyLastCommitDeletionPolicy). Deletes
     are snapshot-global here (tombstones ride beside the commits), a
@@ -131,17 +132,15 @@ class Index:
         self.has_term_vectors: Optional[bool] = None if tv is None else bool(tv)
         # stamped by finalize_index; None on pre-stamp indexes
         self.analysis_fingerprint: Optional[str] = fs.get("analysis_fingerprint")
-        self._merged_dir = paths.merged_g(self.generation)
         self._term_stats_dir = paths.term_stats_g(self.generation)
-        # snapshot bounds (None on live opens or pre-snapshot markers):
-        # segment-level reads filter out segments/docids appended later
+        # snapshot bounds of the opened commit (None on pre-snapshot
+        # markers): every open is a point-in-time view, so segment-level
+        # reads filter out segments/docids appended after its commit
         self._snap_max_sid = (
-            int(fs["max_segment_id"])
-            if generation is not None and "max_segment_id" in fs else None
+            int(fs["max_segment_id"]) if "max_segment_id" in fs else None
         )
         self._snap_max_docid = (
-            int(fs["max_docid"])
-            if generation is not None and "max_docid" in fs else None
+            int(fs["max_docid"]) if "max_docid" in fs else None
         )
         self._stats_cache: Dict[str, Optional[Tuple[int, int]]] = {}
         self._deleted: Optional[np.ndarray] = None
@@ -300,10 +299,6 @@ class Index:
     def open(cls, spark: SparkSession, index_dir: str) -> "Index":
         return cls(spark, IndexPaths(index_dir))
 
-    @property
-    def merged(self) -> DataFrame:
-        return self.spark.read.parquet(self._merged_dir)
-
     def _snap_seg(self, df: DataFrame) -> DataFrame:
         return (df.filter(F.col("segment_id") <= self._snap_max_sid)
                 if self._snap_max_sid is not None else df)
@@ -314,6 +309,9 @@ class Index:
 
     @property
     def seg_postings(self) -> DataFrame:
+        """This snapshot's per-segment postings rows — the only postings
+        (one row per (term, segment); a term's segment rows hold disjoint
+        ascending docid ranges)."""
         return self._snap_seg(self.spark.read.parquet(self.paths.postings))
 
     def segment_files(self) -> List[Tuple[int, str]]:
@@ -365,18 +363,26 @@ class Index:
         Reads the term_stats parquet directly with a pushed-down filter
         (row-group pruning on the term-sorted files) instead of launching a
         Spark job — this is the FST term-dictionary *seek*, not a scan.
-        Results are memoized per Index instance."""
+        Results are memoized per Index instance. Raises RuntimeError when
+        this reader's commit was garbage-collected by a later append."""
         requested = list(terms)
         terms = [t for t in requested if t not in self._stats_cache]
         if terms:
-            try:
-                import pyarrow.parquet as pq
+            import pyarrow.parquet as pq
 
-                from ..index import fsio
+            from ..index import fsio
 
-                files = fsio.list_files(
-                    self.paths.fs, self.paths.fs_path(self._term_stats_dir), suffix=".parquet"
+            ts_dir = self.paths.fs_path(self._term_stats_dir)
+            files = fsio.list_files(self.paths.fs, ts_dir, suffix=".parquet")
+            if not files and not fsio.exists(self.paths.fs, ts_dir):
+                raise RuntimeError(
+                    f"generation {self.generation} of the index at {self.paths.root} "
+                    "was superseded by a later commit and garbage-collected; "
+                    "reopen the Index, or append with keep_commits=True to "
+                    "retain this commit"
                 )
+            found = {}
+            if files:
                 tbl = pq.ParquetDataset(
                     files, filesystem=self.paths.fs, filters=[("term", "in", list(terms))]
                 ).read()
@@ -386,9 +392,6 @@ class Index:
                         zip(tbl["df"].to_pylist(), tbl["ttf"].to_pylist()),
                     )
                 )
-            except Exception:  # fall back to a Spark job
-                rows = self.term_stats.filter(F.col("term").isin(list(terms))).collect()
-                found = {r["term"]: (r["df"], r["ttf"]) for r in rows}
             for t in terms:
                 self._stats_cache[t] = found.get(t)
         return {t: self._stats_cache[t] for t in requested if self._stats_cache.get(t)}
@@ -554,11 +557,11 @@ def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
 
 
 def decoded_postings(
-    index: Index, terms: Sequence[str], use_segments: bool = False,
-    apply_deletes: bool = True,
+    index: Index, terms: Sequence[str], apply_deletes: bool = True,
 ) -> DataFrame:
     """(term, docid, tf, doclen) LIVE rows for the given terms, decoded from
-    block binaries in mapInPandas (Arrow batches, numpy decode); tombstoned
+    the snapshot's segment files (``Index.seg_postings``, one row per
+    (term, segment)) in mapInPandas (Arrow batches, numpy decode); tombstoned
     docs are removed by a distributed anti-join against the tombstone
     parquet (no driver-side delete set). ``apply_deletes=False`` yields the
     raw rows (query-cache entries store raw sets and apply live-docs at
@@ -567,7 +570,7 @@ def decoded_postings(
     ranges) never materialize the term list on the driver; ``terms=None``
     decodes EVERY term (full-scan consumers like check_index — no broadcast
     of the whole vocabulary)."""
-    src = index.seg_postings if use_segments else index.merged
+    src = index.seg_postings
     if terms is None:
         rows = src.select("term", "block_data")
     elif isinstance(terms, DataFrame):

@@ -173,7 +173,8 @@ Arrow-kernel tokenization with zero per-token Python objects.
 ## Notes
 - Index build = stage (range partition + sha256) -> per-partition segment
   invert/encode/write (file-granular tasks, workers read staged parquet
-  directly) -> global term/field stats -> salted term-partitioned merge.
+  directly) -> global term/field stats (no merge step: the segment files
+  are the only postings).
   All phases included in the timing.
 - Query latency + block-skip metrics are reported by `bench.py`
   (BENCH_r{{N}}.json, driver-run).

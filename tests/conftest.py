@@ -22,8 +22,8 @@ def tmpdir_index():
 
 @pytest.fixture(scope="session")
 def built_index(spark, tmp_path_factory):
-    """A 600-doc deterministic corpus indexed once per test session,
-    with a low hot-term threshold so salting paths are exercised."""
+    """A 600-doc deterministic corpus indexed once per test session in 4
+    segments, so hot terms span every segment."""
     from lucene_spark.corpus import corpus_spark_df
     from lucene_spark.index.builder import IndexConfig, build_index
     from lucene_spark.search.executor import Index

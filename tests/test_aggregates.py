@@ -178,7 +178,7 @@ def test_rescore_reorders_by_combined_score(built_index):
 
 
 def test_common_terms_split(built_index):
-    """'import' is hot (salted at df>=100), idents are rare: the split must
+    """'import' is hot (df>=100), idents are rare: the split must
     send hot terms to SHOULD and rare ones to MUST."""
     from lucene_spark.search.aggregates import common_terms_query
 

@@ -35,7 +35,7 @@ def test_corrupted_block_metadata_detected(spark, tmp_path):
     idx = Index(spark, build_index(spark, docs, d, cfg))
     assert check_index(idx)["clean"]
 
-    f = sorted(glob.glob(os.path.join(d, "merged", "*.parquet")))[0]
+    f = sorted(glob.glob(os.path.join(d, "postings", "segment-*.parquet")))[0]
     tbl = pq.read_table(f)
     pdf = tbl.to_pandas()
     # overstate one row's max_tf (and break its df) in place

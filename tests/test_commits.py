@@ -99,3 +99,49 @@ def IndexPaths_(d):
     from lucene_spark.index.builder import IndexPaths
 
     return IndexPaths(d)
+
+
+def _hits(df):
+    return [(r["docid"], round(r["score"], 6)) for r in df.collect()]
+
+
+def test_live_reader_is_point_in_time(spark, tmp_path):
+    """An Index opened before an append keeps answering from its own
+    commit: segments appended later are invisible on the pruned and the
+    exhaustive path alike, and both equal the generation=0 answer."""
+    from lucene_spark.search.executor import search_exhaustive
+
+    d = str(tmp_path / "idx")
+    filler = " ".join(f"w{j}" for j in range(20))
+    rows = [(i, ("alpha " if i < 30 else "") + "beta " + filler) for i in range(40)]
+    paths = _build(spark, d, rows)
+    stale = Index(spark, paths)
+    more = spark.createDataFrame(
+        [(i, "alpha alpha alpha") for i in range(100, 110)], "doc_id long, content string"
+    )
+    append_to_index(spark, more, d, IndexConfig(**CFG), keep_commits=True)
+
+    q = normalize(should=["alpha", "beta"], pre_analyzed=True)
+    pruned = _hits(search_topk(stale, q, k=5))
+    exhaustive = _hits(search_exhaustive(stale, q, k=5))
+    frozen = _hits(search_topk(Index(spark, paths, generation=0), q, k=5))
+    assert pruned == exhaustive == frozen
+    assert [docid for docid, _ in pruned] == [0, 1, 2, 3, 4]
+    assert stale.docs.count() == 40
+
+
+def test_collected_commit_reader_says_so(spark, tmp_path):
+    """A reader whose commit a default append garbage-collected fails with
+    a message naming the superseded generation, on both query paths."""
+    from lucene_spark.search.executor import search_exhaustive
+
+    d = str(tmp_path / "idx")
+    paths = _build(spark, d, ROWS1)
+    stale = Index(spark, paths)
+    df2 = spark.createDataFrame(ROWS2, "doc_id long, content string")
+    append_to_index(spark, df2, d, IndexConfig(**CFG))  # keep_commits=False
+    q = normalize(should=["alpha"], pre_analyzed=True)
+    for run in (search_topk, search_exhaustive):
+        with pytest.raises(RuntimeError, match=r"generation 0 .*superseded.*keep_commits=True"):
+            run(stale, q, k=5)
+    assert search_topk(Index(spark, paths), q, k=50).count() == 30

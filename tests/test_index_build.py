@@ -58,7 +58,7 @@ def test_norms_match_reference(built_index, ref_index):
 
 
 def test_merged_postings_roundtrip(built_index, ref_index):
-    """Merged (salted) postings decode to exactly the reference postings."""
+    """Segment postings decode to exactly the reference postings."""
     from lucene_spark.search.executor import decoded_postings
 
     terms = ["import", "return", "def", "public", "error", "vector"]
@@ -70,31 +70,34 @@ def test_merged_postings_roundtrip(built_index, ref_index):
         assert got.get(t, {}) == ref_index.postings.get(t, {}), t
 
 
-def test_hot_terms_are_salted(built_index):
-    """df >= 100 terms must be split into multiple salt buckets (4 segments
-    / bucket size 2 -> 2 buckets)."""
-    merged = built_index.merged
-    hot = merged.filter(F.col("term") == "import").select("salt").distinct().count()
-    assert hot == 2
-    rare = (
-        merged.groupBy("term")
-        .agg(F.countDistinct("salt").alias("n"))
-        .filter(F.col("n") > 1)
+def _hot_term_segment_rows(built_index, term="import"):
+    return (
+        built_index.seg_postings.filter(F.col("term") == term)
+        .orderBy("segment_id")
+        .collect()
     )
-    ts = {r["term"] for r in rare.collect()}
-    stats = built_index.term_stats_for(list(ts))
-    assert all(stats[t][0] >= 100 for t in ts)
+
+
+def test_hot_terms_are_salted(built_index):
+    """A hot (df >= 100) term is split across the segments, one row per
+    segment (4 segments -> 4 rows), and those rows' df/ttf sum to the global
+    term stats. The per-segment rows are the only partitioning of a term's
+    postings; there is no salted merged copy."""
+    rows = _hot_term_segment_rows(built_index)
+    assert len(rows) == 4
+    assert sorted(r["segment_id"] for r in rows) == sorted({r["segment_id"] for r in rows})
+    df, ttf = built_index.term_stats_for(["import"])["import"]
+    assert df >= 100
+    assert (df, ttf) == (sum(r["df"] for r in rows), sum(r["ttf"] for r in rows))
 
 
 def test_salted_postings_in_docid_order(built_index):
-    rows = (
-        built_index.merged.filter(F.col("term") == "import")
-        .orderBy("salt")
-        .collect()
-    )
-    firsts = [r["first_docid"] for r in rows]
-    lasts = [r["last_docid"] for r in rows]
-    for prev_last, nxt_first in zip(lasts, firsts[1:]):
+    """A hot term's per-segment rows hold ascending, disjoint
+    [first_docid, last_docid] ranges in segment_id order."""
+    rows = _hot_term_segment_rows(built_index)
+    spans = [(r["first_docid"], r["last_docid"]) for r in rows]
+    assert all(first <= last for first, last in spans)
+    for (_, prev_last), (nxt_first, _) in zip(spans, spans[1:]):
         assert prev_last < nxt_first
 
 
@@ -108,17 +111,26 @@ def test_resume_skips_completed_segments(spark, tmpdir_index):
     cfg = IndexConfig(num_segments=4, hot_df_threshold=50, merge_bucket_segments=2)
     paths = build_index(spark, docs, tmpdir_index, cfg)
 
-    merged_before = {
-        (r["term"], r["salt"]): (r["df"], r["ttf"], r["first_docid"], r["last_docid"])
-        for r in spark.read.parquet(paths.merged).collect()
-    }
+    def snapshot():
+        seg_rows = {
+            (r["term"], r["segment_id"], r["df"], r["ttf"], r["first_docid"], r["last_docid"])
+            for r in spark.read.parquet(paths.postings).select(
+                "term", "segment_id", "df", "ttf", "first_docid", "last_docid"
+            ).collect()
+        }
+        stats = {
+            (r["term"], r["df"], r["ttf"])
+            for r in spark.read.parquet(paths.term_stats).collect()
+        }
+        return seg_rows, stats
+
+    before = snapshot()
     # simulate a killed build: remove half the manifests + downstream outputs
     manifests = sorted(glob.glob(os.path.join(paths.segments, "*.json")))
     for m in manifests[: len(manifests) // 2]:
         os.remove(m)
     import shutil
 
-    shutil.rmtree(paths.merged)
     shutil.rmtree(paths.term_stats)
     os.remove(paths.field_stats)
 
@@ -126,11 +138,7 @@ def test_resume_skips_completed_segments(spark, tmpdir_index):
     manifests2 = sorted(glob.glob(os.path.join(paths.segments, "*.json")))
     rows = [json.load(open(m)) for m in manifests2]
     assert len(rows) == 4
-    merged_after = {
-        (r["term"], r["salt"]): (r["df"], r["ttf"], r["first_docid"], r["last_docid"])
-        for r in spark.read.parquet(paths.merged).collect()
-    }
-    assert merged_after == merged_before
+    assert snapshot() == before
     # manifest metrics sum to global field stats (lineage invariant)
     with open(paths.field_stats) as f:
         fs = json.load(f)
@@ -153,12 +161,14 @@ def test_append_swaps_generation_atomically(spark, tmpdir_index):
     cfg = IndexConfig(num_segments=2)
     paths = build_index(spark, docs, tmpdir_index, cfg)
     assert live_generation(paths) == 0
+    assert os.path.exists(os.path.join(paths.term_stats_g(0), "_SUCCESS"))
+    assert not glob.glob(os.path.join(tmpdir_index, "merged*"))
     batch2 = corpus_spark_df(spark, 60, seed=9)
     append_to_index(spark, batch2, tmpdir_index, cfg)
     assert live_generation(paths) == 1
-    assert os.path.exists(os.path.join(paths.merged_g(1), "_SUCCESS"))
-    assert not os.path.exists(paths.merged_g(0))  # GC'd
-    assert not os.path.exists(paths.term_stats_g(0))
+    assert os.path.exists(os.path.join(paths.term_stats_g(1), "_SUCCESS"))
+    assert not os.path.exists(paths.term_stats_g(0))  # GC'd
+    assert not glob.glob(os.path.join(tmpdir_index, "merged*"))
     idx = Index(spark, paths)
     assert idx.generation == 1
     assert idx.field_stats.max_doc == 160
