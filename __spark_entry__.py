@@ -2235,8 +2235,9 @@ PERCOLATE_QUERIES = [
 
 
 def q_percolate(spark, sf):
-    """Term-partitioned percolation (Monitor query-index pre-filter): the
-    plan is one equi-join on term + one aggregation, no cross product."""
+    """Percolation with the Monitor query-index pre-filter contract (a
+    query and a doc share a term): distinct stored-query shapes run
+    through the per-doc candidate-and-verify kernel, no shuffle of docs."""
     from lucene_spark.streaming import percolate_prefiltered
 
     qdf = spark.createDataFrame(PERCOLATE_QUERIES, "qid int, terms array<string>, min_match int")
@@ -2251,8 +2252,9 @@ PERCOLATE_FULL_QUERIES = [
 
 
 def q_percolate_full(spark, sf):
-    """Full-shape percolation (min_match + NOT + exact phrase): every
-    constraint a shuffle join; the phrase uses the position-anchor trick."""
+    """Full-shape percolation (min_match + NOT + exact phrase): each
+    candidate shape is verified per doc, the phrase by a substring test on
+    the space-joined tokens."""
     from lucene_spark.streaming import percolate_full
 
     qdf = spark.createDataFrame(
@@ -2274,9 +2276,9 @@ PERCOLATE_TREE_QUERIES = [
 def q_percolate_tree(spark, sf):
     """Arbitrary-query percolation (QueryDecomposer.java:33 analog):
     stored queries are STRINGS in the engine's syntax — nested booleans,
-    NOT, exact phrases, prefix/wildcard — decomposed to DNF clauses and
-    evaluated via the shuffle-join legs of percolate_full (patterns
-    expand against the batch vocabulary first)."""
+    NOT, exact phrases, prefix/wildcard — decomposed to DNF clauses,
+    each verified per doc by the percolator's one candidate-and-verify
+    kernel."""
     from lucene_spark.streaming import percolate_tree
 
     return percolate_tree(_docs(spark, sf), PERCOLATE_TREE_QUERIES).orderBy(
@@ -2295,9 +2297,9 @@ PERCOLATE_VERIFY_QUERIES = [
 def q_percolate_verify(spark, sf):
     """Percolation of the shapes the decomposer previously REFUSED
     (VERDICT r5 missing#5 — monitor/CandidateMatcher.java verify analog):
-    sloppy 2-term phrases (position band-join verify after the terms-leg
-    prefilter), fuzzy terms (batch-vocab Damerau expansion), and term
-    ranges (in-range vocab join)."""
+    sloppy 2-term phrases (a position check after the pair's terms pick
+    the candidates), fuzzy terms (Damerau distance per doc token), and
+    term ranges (string compare per doc token)."""
     from lucene_spark.streaming import percolate_tree
 
     return percolate_tree(_docs(spark, sf), PERCOLATE_VERIFY_QUERIES).orderBy(

@@ -8,7 +8,8 @@ file holds the extra instrumentation the optimization round needs):
 
 Timings here isolate single operators (guide §1.4: noop sink / count forced
 outside the sink cost) and label jobs (guide §1.5) so the Spark UI maps
-stages to operators. Env mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+stages to operators. Env mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS
+(default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -20,10 +21,14 @@ import time
 import numpy as np
 
 
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def _spark():
     from lucene_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     return get_spark("bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
 
 
@@ -224,7 +229,7 @@ def cmd_ratio10m() -> None:
     from lucene_spark.search.plan import MUST, QBool, QTerm, SHOULD, normalize
 
     spark = _spark()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     scratch = os.environ.get("BENCH_SCRATCH", "/dev/shm/lucene_spark_bench")
     n = int(os.environ.get("BENCH_RATIO_DOCS", "10000000"))
     corpus = f"{scratch}/corpus_{n}"

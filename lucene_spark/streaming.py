@@ -4,8 +4,13 @@ Two pieces are genuinely streaming-shaped:
 
   Monitor (percolator)  [lucene/monitor/src/java/org/apache/lucene/monitor/Monitor.java:42]
       reverse search: stored queries matched against a document stream.
-      -> Structured Streaming stream-static join: stream of docs joined
-         against a small static query-term table.
+      -> every entry point lowers its stored queries to distinct clause
+         shapes and runs one per-doc candidate-and-verify kernel
+         (``_match``): a presearcher index of the shapes' anchor terms
+         picks each doc's candidates, and each candidate is verified
+         against that one doc (CandidateMatcher.java). The kernel is one
+         mapInPandas over the docs: no doc is shuffled, and the plan runs
+         in append mode on a stream.
 
   NRT refresh / SearcherManager  [index/DirectoryReader.java:241-278]
       -> foreachBatch incremental index append: each micro-batch builds new
@@ -16,164 +21,187 @@ Two pieces are genuinely streaming-shaped:
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from .pipeline.textstats import tokens
-
-# --- caps for the bitmask fast path (r7). The mask plan evaluates every
-# (doc, distinct-clause-shape) pair with a broadcast nested-loop join over
-# per-doc presence bitmasks — no shuffled join legs at all — so it is only
-# deployed when the broadcast side and the mask width are provably small;
-# anything larger falls back to the proven equi-join legs (which scale in
-# Σ df rather than docs × shapes).
-_MASK_MAX_TERMS = 4096      # distinct stored-query terms covered by the mask
-_MASK_INLINE_TERMS = 62     # single-long inline mask: zero extra shuffles
-_MASK_MAX_SETS = 8192       # distinct clause shapes broadcast to every task
-_MASK_MAX_EXISTS = 32       # inline exists() constraints (patterns/ranges)
 # stored-query table small enough to dedup on the driver (one collect
 # replaces the 3-shuffle Spark-side dedup; ~100 B/row of driver memory)
 _DRIVER_DEDUP_QUERIES = 100_000
 
-# int64 bit values; bit 63 as the negative two's-complement literal so the
-# python int always fits a Spark LongType
-_POW2 = [1 << i for i in range(63)] + [-(1 << 63)]
+
+def _like_regex(pattern: str) -> str:
+    """Python regex for a LIKE pattern as ``decompose_query`` emits it:
+    ``%`` any run, ``_`` one character, ``\\`` escapes the next one."""
+    out, chars = [], iter(pattern)
+    for c in chars:
+        if c == "\\":
+            out.append(re.escape(next(chars, "\\")))
+        elif c == "%":
+            out.append(".*")
+        elif c == "_":
+            out.append(".")
+        else:
+            out.append(re.escape(c))
+    return "".join(out)
 
 
-def _spread(docs: DataFrame) -> DataFrame:
-    """See session.spread_small: the percolator's mask plan does all its
-    work in the scan stage (mask + constraint expressions + broadcast
-    crossJoin) — observed 3 tasks on 32 cores at sf1.0 before this."""
-    from .session import spread_small
+def _token_test(kind: str, arg):
+    """token -> bool for one pattern, fuzzy or range constraint; the
+    constraint holds for a doc when some token of it passes."""
+    if kind == "pattern":
+        # DOTALL: Spark's LIKE lets % and _ match a newline inside a token
+        return re.compile(_like_regex(arg), re.S).fullmatch
+    if kind == "fuzzy":
+        from .functions.fuzzy import damerau_levenshtein
 
-    return spread_small(docs)
-
-
-def _doc_masks(docs: DataFrame, text_col: str, iv, keep_cols=()) -> DataFrame:
-    """(doc_id, *keep_cols, __mask__ array<long>) — per-doc presence bitmask
-    over the interesting vocabulary ``iv`` (sorted distinct stored-query
-    terms). |iv| <= 62: one inline expression, no shuffle; larger: explode +
-    broadcast-join + bit-fold, one narrow (doc_id, bit) shuffle. Project
-    early: the text column never leaves this function (guide §2.3)."""
-    docs = _spread(docs)
-    toks_d = F.array_distinct(tokens(text_col))
-    n_words = max(1, (len(iv) + 63) // 64)
-    if len(iv) <= _MASK_INLINE_TERMS:
-        def bitof(t):
-            c = F.when(t == iv[0], F.lit(_POW2[0]).cast("long"))
-            for j, w in enumerate(iv[1:], 1):
-                c = c.when(t == w, F.lit(_POW2[j]).cast("long"))
-            return c.otherwise(F.lit(0).cast("long"))
-
-        hits = F.array_intersect(toks_d, F.array(*[F.lit(t) for t in iv]))
-        mask = F.aggregate(hits, F.lit(0).cast("long"),
-                           lambda acc, t: acc.bitwiseOR(bitof(t)))
-        return docs.select("doc_id", *keep_cols, F.array(mask).alias("__mask__"))
-
-    spark = docs.sparkSession
-    iv_df = spark.createDataFrame(
-        [(t, j) for j, t in enumerate(iv)], "term string, bit int"
-    )
-    base = docs.select("doc_id", *keep_cols, toks_d.alias("__toksd__"))
-    dterms = base.select("doc_id", F.explode("__toksd__").alias("term"))
-    bits = (
-        dterms.join(F.broadcast(iv_df), "term")
-        .groupBy("doc_id")
-        .agg(F.collect_set("bit").alias("__bits__"))
-    )
-    pow2 = F.array(*[F.lit(v).cast("long") for v in _POW2])
-    zero = F.array_repeat(F.lit(0).cast("long"), n_words)
-    mask = F.aggregate(
-        F.coalesce(F.col("__bits__"), F.array().cast("array<int>")),
-        zero,
-        lambda acc, b: F.transform(
-            acc,
-            lambda x, i: F.when(
-                i == F.floor(b / 64).cast("int"),
-                x.bitwiseOR(F.get(pow2, b % 64)),
-            ).otherwise(x),
-        ),
-    )
-    return (
-        base.join(bits, "doc_id", "left")
-        .withColumn("__mask__", mask)
-        .drop("__toksd__", "__bits__")
-    )
+        term, edits = arg
+        return lambda t: (abs(len(t) - len(term)) <= edits
+                          and damerau_levenshtein(t, term) <= edits)
+    lo, hi = arg
+    return lambda t: lo <= t <= hi
 
 
-def _covers(dm, sm, n_words):
-    """Every bit of set-mask ``sm`` present in doc-mask ``dm``."""
-    c = None
-    for i in range(n_words):
-        ci = dm.getItem(i).bitwiseAND(sm.getItem(i)) == sm.getItem(i)
-        c = ci if c is None else (c & ci)
-    return c
+def _candidate_index(shapes):
+    """Driver side of ``_match``: (compiled shapes, anchor term -> shape
+    positions, anchorless positions, token tests).
 
-
-def _disjoint(dm, sm, n_words):
-    c = None
-    for i in range(n_words):
-        ci = dm.getItem(i).bitwiseAND(sm.getItem(i)) == F.lit(0).cast("long")
-        c = ci if c is None else (c & ci)
-    return c
-
-
-def _popcount_and(dm, sm, n_words):
-    s = None
-    for i in range(n_words):
-        si = F.bit_count(dm.getItem(i).bitwiseAND(sm.getItem(i)))
-        s = si if s is None else (s + si)
-    return s
-
-
-def _mask_words(terms, bit_of, n_words):
-    """Python-side mask words for one clause's term set."""
-    words = [0] * n_words
-    for t in terms:
-        b = bit_of[t]
-        words[b // 64] |= 1 << (b % 64)
-    # wrap to signed int64 for Spark LongType
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-
-
-def percolate_batch(docs: DataFrame, queries: DataFrame, text_col: str = "text") -> DataFrame:
-    """Match stored queries against a batch/stream of documents.
-
-    ``queries``: (qid int, terms array<string>, min_match int) — a doc
-    matches when >= min_match of the query's distinct terms occur in it.
-    Per-doc matching against the broadcast query table (MemoryIndex-style,
-    MemoryIndex.java:201): no shuffle, no stateful aggregation, so the plan
-    is a pure stream-static join that runs in append mode without
-    watermarks. For LARGE stored-query sets use percolate_prefiltered —
-    this broadcast form evaluates every query against every doc.
-
-    r7: duplicate (terms, min_match) shapes cross-evaluate once and fan
-    back out (the same Monitor QueryIndex dedup the prefiltered form
-    already did) — the crossJoin side shrinks by the duplication factor
-    while results stay identical. The dedup runs on the driver when the
-    (static) query table is small, else through the Spark-side
-    _dedup_stored."""
-    spark = queries.sparkSession
-    got = _driver_dedup(queries, ["terms", "min_match"])
-    if got is not None:
-        uniq_rows, mapping = got
-        uniq = F.broadcast(spark.createDataFrame(
-            [(q, sorted(t), m) for q, (t, m) in uniq_rows],
-            "qid int, terms array<string>, min_match int",
-        ))
-    else:
-        u, mapping = _dedup_stored(
-            queries.select("qid", "terms", "min_match"), ["terms", "min_match"]
+    A shape whose terms are all required (``min_match >= |terms|``), or
+    which has an exact phrase, is listed under ONE required term, the
+    longest (any choice is correct; it only moves cost). Any other shape
+    with ``min_match >= 1`` is listed under each of its terms. The rest
+    (``min_match <= 0``, or clauses of only patterns/fuzzies/ranges) is a
+    candidate for every doc."""
+    compiled, anchors, every = [], {}, []
+    test_ids: dict = {}
+    for s in shapes:
+        terms = tuple(sorted(s["terms"]))
+        mm = int(s["min_match"])
+        phrases = [list(p) for p in s.get("phrases", ())]
+        tests = (
+            [("pattern", p) for p in s.get("patterns", ())]
+            + [("fuzzy", tuple(f)) for f in s.get("fuzzies", ())]
+            + [("range", tuple(r)) for r in s.get("ranges", ())]
         )
-        uniq = F.broadcast(u)
-    toked = _spread(docs).withColumn("__toks__", F.array_distinct(tokens(text_col)))
-    j = toked.crossJoin(uniq)
-    matches = (
-        j.withColumn("n_matched", F.size(F.array_intersect("__toks__", "terms")).cast("long"))
-        .filter(F.col("n_matched") >= F.col("min_match"))
-        .select("qid", "doc_id", "n_matched")
+        pos = len(compiled)
+        compiled.append((
+            int(s["sid"]), terms, mm, tuple(s.get("nots", ())),
+            tuple(" " + " ".join(p) + " " for p in phrases),
+            tuple(test_ids.setdefault(t, len(test_ids)) for t in tests),
+            tuple(tuple(x) for x in s.get("sloppy", ())),
+        ))
+        required = set(terms) if terms and mm >= len(terms) else set()
+        required |= {t for p in phrases for t in p}
+        if required:
+            anchors.setdefault(max(required, key=lambda t: (len(t), t)), []).append(pos)
+        elif mm >= 1:
+            for t in terms:
+                anchors.setdefault(t, []).append(pos)
+        else:
+            every.append(pos)
+    return compiled, anchors, every, [_token_test(k, a) for k, a in test_ids]
+
+
+def _verify_doc(text, index):
+    """[(sid, n_matched)] of every shape in ``index`` that ``text``
+    matches. Tokens are ``textstats.tokens``: split on " ", empties
+    dropped; a null text matches nothing."""
+    if not isinstance(text, str):
+        return []
+    compiled, anchors, every, tests = index
+    toks = [t for t in text.split(" ") if t]
+    ts = set(toks)
+    cand = set(every)
+    for t in ts:
+        cand.update(anchors.get(t, ()))
+    held: dict = {}  # token-test id -> some doc token passes it
+    joined = positions = None
+    out = []
+
+    def holds(j):
+        if j not in held:
+            held[j] = any(map(tests[j], ts))
+        return held[j]
+
+    for i in cand:
+        sid, terms, mm, nots, phrases, test_ids, sloppy = compiled[i]
+        n = sum(t in ts for t in terms)
+        if n < mm or any(t in ts for t in nots):
+            continue
+        if phrases:
+            # an exact phrase is a run of consecutive tokens: it occurs iff
+            # ' p1 p2 .. ' is a substring of the space-joined token string
+            if joined is None:
+                joined = " " + " ".join(toks) + " "
+            if not all(p in joined for p in phrases):
+                continue
+        if not all(map(holds, test_ids)):
+            continue
+        if sloppy:
+            if positions is None:
+                positions = {}
+                for k, t in enumerate(toks):
+                    positions.setdefault(t, []).append(k)
+            # |pa + gap - pb| <= slop is Lucene's 2-term matchLength
+            # (SloppyPhraseMatcher.java:200-236); two slots never share a
+            # position
+            if not all(
+                any(a != b and abs(a + gap - b) <= slop
+                    for a in positions.get(ta, ()) for b in positions.get(tb, ()))
+                for ta, tb, gap, slop in sloppy
+            ):
+                continue
+        out.append((sid, n))
+    return out
+
+
+def _match(docs: DataFrame, text_col: str, shapes) -> DataFrame:
+    """(sid, doc_id, n_matched) of every matching (doc, clause shape) pair:
+    Monitor's presearcher and CandidateMatcher in one mapInPandas pass.
+
+    A shape is a dict: ``sid``; ``terms`` of which at least ``min_match``
+    distinct ones must occur (their count is ``n_matched``); and optional
+    ``nots`` (none may occur), ``phrases`` (exact token runs), ``patterns``
+    (LIKE, some token matches each), ``sloppy`` (ta, tb, gap, slop),
+    ``fuzzies`` (term, edits: some token within Damerau distance) and
+    ``ranges`` (lo, hi: some token inside), every one of which must hold.
+    The candidate index is built on the driver and ships in the task
+    closure, so the driver holds every distinct shape."""
+    index = _candidate_index(shapes)
+    schema = StructType([
+        StructField("sid", IntegerType()), docs.schema["doc_id"],
+        StructField("n_matched", LongType()),
+    ])
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [(sid, d, n)
+                    for d, text in zip(pdf["doc_id"].tolist(), pdf[text_col].tolist())
+                    for sid, n in _verify_doc(text, index)]
+            if rows:
+                yield pd.DataFrame(rows, columns=["sid", "doc_id", "n_matched"])
+
+    return docs.select("doc_id", text_col).mapInPandas(run, schema)
+
+
+def _fan_out(matches: DataFrame, mapping: DataFrame, extra=()) -> DataFrame:
+    # mapping is stored-query-sized (never doc-scaled): force the broadcast
+    # so the match side is NOT shuffled for the fan-out (guide §3.1)
+    return (
+        matches.withColumnRenamed("sid", "__rep__")
+        .join(F.broadcast(mapping), "__rep__")
+        .select("qid", "doc_id", *extra)
     )
-    return _fan_out(matches, mapping, extra=("n_matched",))
+
+
+def _collect_small(df: DataFrame, cap: int):
+    """Collect up to ``cap`` rows; None when the frame is larger (the
+    caller takes its distributed registration path)."""
+    rows = df.limit(cap + 1).collect()
+    return None if len(rows) > cap else rows
 
 
 def _driver_dedup(queries: DataFrame, shape_cols):
@@ -216,8 +244,8 @@ def _dedup_stored(queries: DataFrame, shape_cols):
     """Collapse duplicate stored-query SHAPES to one representative qid
     (Monitor QueryIndex analog — the reference indexes each distinct query
     once and fans matches back out): alerting workloads repeat shapes
-    massively, and every join leg downstream scales in Σ df(term) over
-    stored-query ROWS. Returns (uniq, mapping): uniq holds one row per
+    massively, and the kernel verifies each distinct shape once per
+    candidate doc. Returns (uniq, mapping): uniq holds one row per
     distinct shape under its min-qid representative; mapping (__rep__, qid)
     restores per-qid results — identical shapes match identical docs."""
     skey = F.sha2(F.to_json(F.struct(*[F.col(c) for c in shape_cols])), 256)
@@ -229,174 +257,46 @@ def _dedup_stored(queries: DataFrame, shape_cols):
     return uniq, mapping
 
 
-def _fan_out(matches: DataFrame, mapping: DataFrame, extra=()) -> DataFrame:
-    # mapping is stored-query-sized (never doc-scaled): force the broadcast
-    # so the match side is NOT shuffled for the fan-out (guide §3.1)
-    return (
-        matches.withColumnRenamed("qid", "__rep__")
-        .join(F.broadcast(mapping), "__rep__")
-        .select("qid", "doc_id", *extra)
-    )
+def _registered(queries: DataFrame, shape_cols):
+    """(uniq_rows, mapping) of the distinct stored-query shapes, as
+    _driver_dedup returns them; a table past _DRIVER_DEDUP_QUERIES dedups
+    through _dedup_stored and its distinct shapes are collected."""
+    got = _driver_dedup(queries, shape_cols)
+    if got is not None:
+        return got
+    uniq, mapping = _dedup_stored(queries.select("qid", *shape_cols), shape_cols)
+    return [(r["qid"], tuple(r[c] for c in shape_cols)) for r in uniq.collect()], mapping
 
 
-def _prefilter_body(docs: DataFrame, queries: DataFrame, text_col: str) -> DataFrame:
-    dterms = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(text_col))).alias("term")
-    )
-    qterms = queries.select(
-        "qid", "min_match", F.explode(F.array_distinct("terms")).alias("term")
-    )
-    return (
-        dterms.join(qterms, "term")
-        .groupBy("qid", "doc_id", "min_match")
-        .agg(F.count("*").alias("n_matched"))
-        .filter(F.col("n_matched") >= F.col("min_match"))
-        .select("qid", "doc_id", "n_matched")
-    )
+def percolate_batch(docs: DataFrame, queries: DataFrame, text_col: str = "text") -> DataFrame:
+    """Match stored queries against a batch/stream of documents.
 
+    ``queries``: (qid int, terms array<string>, min_match int) — a doc
+    matches when >= min_match of the query's distinct terms occur in it;
+    a ``min_match <= 0`` query matches every non-null doc. Returns
+    (qid, doc_id, n_matched).
 
-def _collect_small(df: DataFrame, cap: int):
-    """Collect up to ``cap`` rows; None when the frame is larger (the
-    caller falls back to the fully distributed plan)."""
-    rows = df.limit(cap + 1).collect()
-    return None if len(rows) > cap else rows
+    Duplicate (terms, min_match) shapes match once and fan back out
+    (Monitor QueryIndex dedup); each distinct shape runs through the
+    per-doc kernel (``_match``, MemoryIndex.java:201 analog). The plan
+    has no shuffle and no stateful aggregation, so it is the append-mode
+    stream-static form (``percolate_stream``)."""
+    rows, mapping = _registered(queries, ["terms", "min_match"])
+    shapes = [{"sid": q, "terms": set(t or ()), "min_match": int(m)}
+              for q, (t, m) in rows]
+    return _fan_out(_match(docs, text_col, shapes), mapping, extra=("n_matched",))
 
 
 def percolate_prefiltered(docs: DataFrame, queries: DataFrame, text_col: str = "text") -> DataFrame:
-    """Term-partitioned percolation for large stored-query sets — the
-    Monitor's query-index pre-filter (monitor/Monitor.java:42,
-    CandidateMatcher.java): a (doc, query) pair is considered only when
-    they SHARE a term. Results are identical to percolate_batch
-    (differential-tested). Duplicate (terms, min_match) shapes run once
-    and fan back out (_dedup_stored, Monitor QueryIndex analog).
-
-    r7 plan: when the DISTINCT shapes and their term vocabulary are small
-    (caps above), matching runs as per-doc presence BITMASKS against the
-    broadcast shape table — n_matched is a popcount, the only join is the
-    broadcast fan-out, and nothing doc-scaled is ever shuffled. The shape
-    dedup itself runs on the driver for small query tables (one collect,
-    no shuffles). Larger registries keep the equi-join + aggregation plan
-    (scales in Σ df)."""
-    spark = docs.sparkSession
-    got = _driver_dedup(queries, ["terms", "min_match"])
-    if got is not None:
-        uniq_rows, mapping = got
-        iv = sorted({t for _q, (terms, _m) in uniq_rows for t in terms})
-        if len(uniq_rows) <= _MASK_MAX_SETS and len(iv) <= _MASK_MAX_TERMS:
-            n_words = max(1, (len(iv) + 63) // 64)
-            bit_of = {t: j for j, t in enumerate(iv)}
-            srows = [
-                (q, _mask_words(terms, bit_of, n_words), int(m))
-                for q, (terms, m) in uniq_rows
-            ]
-            sets_df = spark.createDataFrame(
-                srows, "qid int, req array<bigint>, min_match int"
-            )
-            docm = _doc_masks(docs, text_col, iv)
-            nm = _popcount_and(F.col("__mask__"), F.col("req"), n_words)
-            matches = (
-                docm.crossJoin(F.broadcast(sets_df))
-                .withColumn("n_matched", nm.cast("long"))
-                # the equi-join plan only ever SEES pairs sharing a term,
-                # so n_matched >= 1 is part of its contract — keep it
-                .filter((F.col("n_matched") >= F.col("min_match"))
-                        & (F.col("n_matched") >= 1))
-                .select("qid", "doc_id", "n_matched")
-            )
-            return _fan_out(matches, mapping, extra=("n_matched",))
-        uniq = F.broadcast(spark.createDataFrame(
-            [(q, sorted(t), int(m)) for q, (t, m) in uniq_rows],
-            "qid int, terms array<string>, min_match int",
-        ))
-        return _fan_out(_prefilter_body(docs, uniq, text_col), mapping,
-                        extra=("n_matched",))
-    uniq, mapping = _dedup_stored(
-        queries.select("qid", "terms", "min_match"), ["terms", "min_match"]
-    )
-    return _fan_out(_prefilter_body(docs, uniq, text_col), mapping,
-                    extra=("n_matched",))
-
-
-def _percolate_full_masked(docs, shapes, q_mapping, iv, text_col) -> DataFrame:
-    """Bitmask plan for percolate_full's deduped shapes (r7): the positive
-    and NOT legs evaluate as mask ops against the broadcast shape table;
-    only the phrase constraint keeps its position-anchor join, restricted
-    to the shapes that have one. Results identical to the join-leg plan."""
-    spark = docs.sparkSession
-    n_words = max(1, (len(iv) + 63) // 64)
-    bit_of = {t: j for j, t in enumerate(iv)}
-    phs = sorted({tuple(r["phrase"] or []) for r in shapes if (r["phrase"] or [])})
-    ph_idx = {p: j for j, p in enumerate(phs)}
-    inline_ph = 0 < len(phs) <= _MASK_MAX_EXISTS
-    srows, slot_rows = [], []
-    for r in shapes:
-        qid = int(r["qid"])
-        phrase = [t for t in (r["phrase"] or [])]
-        srows.append((
-            qid,
-            _mask_words(set(r["terms"] or []), bit_of, n_words),
-            _mask_words(set(r["not_terms"] or []), bit_of, n_words),
-            int(r["min_match"]),
-            bool(phrase),
-            ph_idx[tuple(phrase)] if (phrase and inline_ph) else -1,
-        ))
-        if not inline_ph:
-            for slot, term in enumerate(phrase):
-                slot_rows.append((qid, len(phrase), slot, term))
-    sets_df = spark.createDataFrame(
-        srows,
-        "qid int, req array<bigint>, nots array<bigint>, "
-        "min_match int, has_ph boolean, phi int",
-    )
-    keep = []
-    if inline_ph:
-        # an exact phrase is a consecutive run of whitespace tokens: it
-        # occurs iff ' p1 p2 .. ' substrings the space-normalized token
-        # string — the whole positions/anchor leg becomes one flag column
-        joined = F.concat(
-            F.lit(" "), F.array_join(tokens(text_col), " "), F.lit(" ")
-        )
-        keep.append(F.array(*[
-            joined.contains(" " + " ".join(p) + " ") for p in phs
-        ]).alias("__phf__"))
-    docm = _doc_masks(docs, text_col, iv, keep_cols=keep)
-    nm = _popcount_and(F.col("__mask__"), F.col("req"), n_words)
-    cond = (
-        (F.col("n_matched") >= F.col("min_match"))
-        & (F.col("n_matched") >= 1)
-        & _disjoint(F.col("__mask__"), F.col("nots"), n_words)
-    )
-    if inline_ph:
-        cond = cond & (~F.col("has_ph") | F.get(F.col("__phf__"), F.col("phi")))
-    cand = (
-        docm.crossJoin(F.broadcast(sets_df))
-        .withColumn("n_matched", nm.cast("long"))
-        .filter(cond)
-        .select("qid", "doc_id", "n_matched", "has_ph")
-    )
-    if inline_ph or not slot_rows:
-        return _fan_out(cand.drop("has_ph"), q_mapping, extra=("n_matched",))
-    slots = spark.createDataFrame(
-        slot_rows, "qid int, n_slots int, slot int, term string"
-    )
-    dpos = docs.select(
-        "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-    )
-    anchored = (
-        dpos.join(F.broadcast(slots), "term")
-        .select("qid", "doc_id", "n_slots", "slot",
-                (F.col("pos") - F.col("slot")).alias("anchor"))
-        .groupBy("qid", "doc_id", "anchor", "n_slots")
-        .agg(F.count_distinct("slot").alias("hit_slots"))
-        .filter(F.col("hit_slots") == F.col("n_slots"))
-        .select("qid", "doc_id")
-        .distinct()
-    )
-    ok = cand.filter(~F.col("has_ph")).drop("has_ph").unionByName(
-        cand.filter(F.col("has_ph")).drop("has_ph")
-        .join(anchored, ["qid", "doc_id"], "left_semi")
-    )
-    return _fan_out(ok, q_mapping, extra=("n_matched",))
+    """Percolation with the Monitor's query-index pre-filter contract
+    (monitor/Monitor.java:42, CandidateMatcher.java): a (doc, query) pair
+    is considered only when they SHARE a term, so ``n_matched >= 1`` holds
+    on top of ``min_match``. Otherwise identical to ``percolate_batch``
+    (same queries schema, same (qid, doc_id, n_matched) rows)."""
+    rows, mapping = _registered(queries, ["terms", "min_match"])
+    shapes = [{"sid": q, "terms": set(t or ()), "min_match": max(int(m), 1)}
+              for q, (t, m) in rows]
+    return _fan_out(_match(docs, text_col, shapes), mapping, extra=("n_matched",))
 
 
 def percolate_full(
@@ -409,112 +309,27 @@ def percolate_full(
 
     ``queries``: (qid int, terms array<string>, min_match int,
                   not_terms array<string>, phrase array<string>)
-    — a doc matches when >= min_match of ``terms`` occur, NONE of
+    — a doc matches when >= max(min_match, 1) of ``terms`` occur, NONE of
     ``not_terms`` occur (empty/null = no exclusion), and ``phrase`` (an
-    exact consecutive-token run; empty/null = no phrase) occurs.
+    exact consecutive-token run; empty/null = no phrase) occurs. Returns
+    (qid, doc_id, n_matched), one row per matching doc row.
 
-    Streaming note: the NOT/phrase legs aggregate, so in Structured
-    Streaming run this from ``foreachBatch`` (micro-batch = static frame);
-    the pure pre-filter (``percolate_batch``) remains the append-mode
-    stream-static form.
-
-    All three constraints are shuffle joins — no cross product, no
-    per-doc Python:
-      positive   explode+equi-join on term (the existing pre-filter);
-      NOT        anti-join candidates against (doc, excluded-term) hits;
-      phrase     anchor trick: join doc (term, pos) rows with the
-                 phrase's (term, slot-offset) rows, anchor = pos - offset;
-                 a doc position anchors the phrase iff ALL slots agree on
-                 the anchor — count distinct slots per (qid, doc, anchor)
-                 and keep groups hitting the full slot count.
-    """
-    got = _driver_dedup(
-        queries.select("qid", "terms", "min_match", "not_terms", "phrase"),
-        ["terms", "min_match", "not_terms", "phrase"],
-    )
-    if got is not None:
-        uniq_rows, q_mapping = got
-        shapes = [
-            {"qid": q, "terms": sorted(t), "min_match": int(m),
-             "not_terms": sorted(n), "phrase": list(p)}
-            for q, (t, m, n, p) in uniq_rows
-        ]
-        iv = sorted(
-            {t for r in shapes for t in r["terms"]}
-            | {t for r in shapes for t in r["not_terms"]}
-        )
-        if len(shapes) <= _MASK_MAX_SETS and len(iv) <= _MASK_MAX_TERMS:
-            return _percolate_full_masked(docs, shapes, q_mapping, iv, text_col)
-        queries = docs.sparkSession.createDataFrame(
-            [(r["qid"], r["terms"], r["min_match"], r["not_terms"], r["phrase"])
-             for r in shapes],
-            "qid int, terms array<string>, min_match int, "
-            "not_terms array<string>, phrase array<string>",
-        )
-    else:
-        queries, q_mapping = _dedup_stored(
-            queries.select("qid", "terms", "min_match", "not_terms", "phrase"),
-            ["terms", "min_match", "not_terms", "phrase"],
-        )
-    cand = _prefilter_body(docs, queries, text_col)
-
-    # one tiny agg over the (small) stored-query table decides which legs
-    # exist at all: a NOT-free set skips the exclusion join, a phrase-free
-    # set skips the full positions explode — the expensive legs only run
-    # when some stored query needs them
-    flags = queries.agg(
-        F.max(F.size(F.coalesce("not_terms", F.array()))).alias("n"),
-        F.max(F.size(F.coalesce("phrase", F.array()))).alias("p"),
-    ).collect()[0]
-    any_nots = (flags["n"] or 0) > 0
-    any_phrase = (flags["p"] or 0) > 0
-
-    dterms = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(text_col))).alias("term")
-    )
-    if any_nots:
-        qnot = queries.select(
-            "qid", F.explode_outer("not_terms").alias("term")
-        ).filter(F.col("term").isNotNull())
-        excluded_pairs = qnot.join(dterms, "term").select("qid", "doc_id").distinct()
-        cand = cand.join(excluded_pairs, ["qid", "doc_id"], "left_anti")
-    if not any_phrase:
-        return _fan_out(cand, q_mapping, extra=("n_matched",))
-
-    has_phrase = queries.filter(F.size(F.coalesce("phrase", F.array())) > 0)
-    slots = has_phrase.select(
-        "qid",
-        F.size("phrase").alias("n_slots"),
-        F.posexplode("phrase").alias("slot", "term"),
-    )
-    dpos = docs.select(
-        "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-    )
-    anchored = (
-        dpos.join(slots, "term")
-        .select("qid", "doc_id", "n_slots", "slot", (F.col("pos") - F.col("slot")).alias("anchor"))
-        .groupBy("qid", "doc_id", "anchor", "n_slots")
-        .agg(F.count_distinct("slot").alias("hit_slots"))
-        .filter(F.col("hit_slots") == F.col("n_slots"))
-        .select("qid", "doc_id")
-        .distinct()
-    )
-    phrase_fail = (
-        has_phrase.select("qid")
-        .join(cand, "qid")
-        .select("qid", "doc_id")
-        .join(anchored, ["qid", "doc_id"], "left_anti")
-    )
-    return _fan_out(
-        cand.join(phrase_fail, ["qid", "doc_id"], "left_anti"), q_mapping,
-        extra=("n_matched",),
-    )
+    Distinct shapes run through the per-doc kernel (``_match``): the
+    phrase is a substring test on the space-joined tokens, the NOTs a set
+    lookup."""
+    rows, mapping = _registered(queries, ["terms", "min_match", "not_terms", "phrase"])
+    shapes = [
+        {"sid": q, "terms": set(t or ()), "min_match": max(int(m), 1),
+         "nots": set(n or ()), "phrases": [list(p)] if p else []}
+        for q, (t, m, n, p) in rows
+    ]
+    return _fan_out(_match(docs, text_col, shapes), mapping, extra=("n_matched",))
 
 
 def decompose_query(node, max_clauses: int = 64):
     """QueryDecomposer analog (monitor/QueryDecomposer.java:33): lower a
-    parsed query tree to a disjunction of conjunctive clauses the join
-    machinery can evaluate. Each clause is
+    parsed query tree to a disjunction of conjunctive clauses the
+    percolator's per-doc kernel verifies. Each clause is
     ``{terms, nots, phrases, patterns, sloppy, fuzzies, ranges}``: the doc
     must contain EVERY term, NONE of the nots, every exact phrase
     (consecutive), at least one token matching every LIKE pattern, every
@@ -532,8 +347,8 @@ def decompose_query(node, max_clauses: int = 64):
     r6 (the Monitor's CandidateMatcher verify analog,
     monitor/CandidateMatcher.java — VERDICT r5 missing#5): sloppy TWO-term
     phrases ("a b"~2; the pair's terms also join the clause's required
-    terms as the prefilter), fuzzy terms (term~1, Damerau), and term
-    ranges ([lo TO hi]) now lower to verify legs instead of refusing.
+    terms as the candidate anchor), fuzzy terms (term~1, Damerau), and
+    term ranges ([lo TO hi]) lower to verified constraints.
     Still refused loudly: >2-term sloppy phrases, non-transposition fuzzy,
     field ranges, NOT over phrase/prefix, pure-negative booleans."""
     from .search.plan import (
@@ -596,9 +411,9 @@ def decompose_query(node, max_clauses: int = 64):
                         "sloppy percolation supports 2-term phrases only"
                     )
                 (ta, oa), (tb, ob) = n.terms_off
-                # the pair's terms are ALSO required terms: the cheap
-                # equi-join leg prefilters, the positions band-join
-                # verifies (CandidateMatcher.java two-phase shape)
+                # the pair's terms are ALSO required terms: they pick the
+                # candidates, the position check verifies
+                # (CandidateMatcher.java two-phase shape)
                 return one(terms={ta, tb},
                            sloppy=[(ta, tb, int(ob - oa), int(n.slop))])
             terms = []
@@ -723,212 +538,6 @@ def _set_key(s: dict) -> str:
     ], default=list)
 
 
-def _tree_mask_applicable(sets) -> bool:
-    iv = {t for s in sets for t in s["terms"]} | {t for s in sets for t in s["nots"]}
-    pats = {p for s in sets for p in s["patterns"]}
-    rngs = {r for s in sets for r in s["ranges"]}
-    return (
-        len(sets) <= _MASK_MAX_SETS
-        and len(iv) <= _MASK_MAX_TERMS
-        and len(pats) <= _MASK_MAX_EXISTS
-        and len(rngs) <= _MASK_MAX_EXISTS
-    )
-
-
-def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
-    """(sid, doc_id) matches of every distinct clause shape (r7 mask plan):
-    term/NOT constraints are per-doc presence bitmasks checked against the
-    broadcast shape table; patterns/ranges are inline exists() columns;
-    fuzzies expand against the batch vocabulary (the one UDF leg) into a
-    per-doc matched-constraint set; phrases/sloppy keep their position
-    join legs, restricted to the shapes that carry them. No doc-scaled
-    shuffle anywhere except the fuzzy vocabulary aggregation."""
-    iv = sorted(
-        {t for s in sets for t in s["terms"]}
-        | {t for s in sets for t in s["nots"]}
-    )
-    pats = sorted({p for s in sets for p in s["patterns"]})
-    rngs = sorted({r for s in sets for r in s["ranges"]})
-    fzs = sorted({f for s in sets for f in s["fuzzies"]})
-    # exact phrases lower to inline substring flags when few are distinct
-    # (a phrase is a consecutive run of whitespace tokens, so it occurs
-    # iff ' p1 p2 .. ' substrings the space-normalized token string — no
-    # positions explode, no anchor join); many distinct phrases keep the
-    # join leg below
-    phs = sorted({tuple(p) for s in sets for p in s["phrases"]})
-    inline_ph = 0 < len(phs) <= _MASK_MAX_EXISTS
-    n_words = max(1, (len(iv) + 63) // 64)
-    bit_of = {t: j for j, t in enumerate(iv)}
-    pat_idx = {p: j for j, p in enumerate(pats)}
-    rng_idx = {r: j for j, r in enumerate(rngs)}
-    fz_idx = {f: j for j, f in enumerate(fzs)}
-    ph_idx = {p: j for j, p in enumerate(phs)}
-    srows = [
-        (
-            int(s["sid"]),
-            _mask_words(s["terms"], bit_of, n_words),
-            _mask_words(s["nots"], bit_of, n_words),
-            sorted({pat_idx[p] for p in s["patterns"]}),
-            sorted({rng_idx[r] for r in s["ranges"]}),
-            sorted({fz_idx[f] for f in s["fuzzies"]}),
-            sorted({ph_idx[tuple(p)] for p in s["phrases"]}) if inline_ph else [],
-        )
-        for s in sets
-    ]
-    sets_df = spark.createDataFrame(
-        srows,
-        "sid int, req array<bigint>, nots array<bigint>, "
-        "patr array<int>, rngr array<int>, fzr array<int>, phr array<int>",
-    )
-    toks_d = F.array_distinct(tokens(text_col))
-
-    # single-arg closures: pyspark derives the lambda-variable count from
-    # the signature, so extra default args would bind the (element, index)
-    # pair instead of the captured constant
-    def _like_fn(p):
-        return lambda t: t.like(p)
-
-    def _range_fn(lo, hi):
-        return lambda t: (t >= lo) & (t <= hi)
-
-    keep = []
-    if pats:
-        keep.append(F.array(*[
-            F.exists(toks_d, _like_fn(p)) for p in pats
-        ]).alias("__pat__"))
-    if rngs:
-        keep.append(F.array(*[
-            F.exists(toks_d, _range_fn(lo, hi)) for lo, hi in rngs
-        ]).alias("__rng__"))
-    if inline_ph:
-        joined = F.concat(
-            F.lit(" "), F.array_join(tokens(text_col), " "), F.lit(" ")
-        )
-        keep.append(F.array(*[
-            joined.contains(" " + " ".join(p) + " ") for p in phs
-        ]).alias("__phf__"))
-    docm = _doc_masks(docs, text_col, iv, keep_cols=keep)
-    if fzs:
-        from .functions.fuzzy import damerau_pair_predicate
-
-        fz_df = spark.createDataFrame(
-            [(t, int(e), j) for (t, e), j in fz_idx.items()],
-            "fterm string, fedits int, fid int",
-        )
-        vocab = docs.select(F.explode(toks_d).alias("term")).distinct()
-        fmatch = (
-            vocab.crossJoin(F.broadcast(fz_df))
-            .filter(damerau_pair_predicate(
-                F.col("term"), F.col("fterm"), F.col("fedits")))
-            .select("term", "fid")
-        )
-        dterms = docs.select("doc_id", F.explode(toks_d).alias("term"))
-        fhits = (
-            dterms.join(fmatch, "term")
-            .groupBy("doc_id")
-            .agg(F.collect_set("fid").alias("__fz__"))
-        )
-        docm = docm.join(fhits, "doc_id", "left")
-
-    cond = _covers(F.col("__mask__"), F.col("req"), n_words) & _disjoint(
-        F.col("__mask__"), F.col("nots"), n_words
-    )
-    if pats:
-        cond = cond & F.forall("patr", lambda j: F.get(F.col("__pat__"), j))
-    if rngs:
-        cond = cond & F.forall("rngr", lambda j: F.get(F.col("__rng__"), j))
-    if fzs:
-        fz_set = F.coalesce(F.col("__fz__"), F.array().cast("array<int>"))
-        cond = cond & F.forall(
-            "fzr", lambda j: F.exists(fz_set, lambda x: x == j)
-        )
-    if inline_ph:
-        cond = cond & F.forall("phr", lambda j: F.get(F.col("__phf__"), j))
-    matches = (
-        docm.crossJoin(F.broadcast(sets_df)).filter(cond).select("sid", "doc_id")
-    )
-
-    ph_sets = [] if inline_ph else [s for s in sets if s["phrases"]]
-    sl_sets = [s for s in sets if s["sloppy"]]
-    dpos = None
-    if ph_sets or sl_sets:
-        dpos = docs.select(
-            "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-        )
-    if ph_sets:
-        slot_rows = [
-            (int(s["sid"]), len(s["phrases"]), pid, len(phr), slot, term)
-            for s in ph_sets
-            for pid, phr in enumerate(s["phrases"])
-            for slot, term in enumerate(phr)
-        ]
-        slots = spark.createDataFrame(
-            slot_rows,
-            "sid int, n_ph int, pid int, n_slots int, slot int, term string",
-        )
-        anchored = (
-            dpos.join(F.broadcast(slots), "term")
-            .select("sid", "n_ph", "pid", "doc_id", "n_slots", "slot",
-                    (F.col("pos") - F.col("slot")).alias("anchor"))
-            .groupBy("sid", "n_ph", "pid", "doc_id", "anchor", "n_slots")
-            .agg(F.count_distinct("slot").alias("hit_slots"))
-            .filter(F.col("hit_slots") == F.col("n_slots"))
-            .select("sid", "n_ph", "pid", "doc_id")
-            .distinct()
-        )
-        ok_p = (
-            anchored.groupBy("sid", "n_ph", "doc_id")
-            .agg(F.count_distinct("pid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_ph"))
-            .select("sid", "doc_id")
-        )
-        ph_ids = [int(s["sid"]) for s in ph_sets]
-        matches = matches.filter(~F.col("sid").isin(ph_ids)).unionByName(
-            matches.filter(F.col("sid").isin(ph_ids))
-            .join(ok_p, ["sid", "doc_id"], "left_semi")
-        )
-    if sl_sets:
-        sl_rows = [
-            (int(s["sid"]), len(s["sloppy"]), slid, ta, tb, int(gap), int(slop))
-            for s in sl_sets
-            for slid, (ta, tb, gap, slop) in enumerate(s["sloppy"])
-        ]
-        srow = spark.createDataFrame(
-            sl_rows,
-            "sid int, n_sl int, slid int, ta string, tb string, "
-            "gap int, slop int",
-        )
-        pa = srow.join(dpos, srow.ta == dpos.term).select(
-            "sid", "n_sl", "slid", "tb", "gap", "slop", "doc_id",
-            F.col("pos").alias("pos_a"),
-        )
-        pb = dpos.select(
-            F.col("doc_id").alias("doc_id_b"), F.col("term").alias("term_b"),
-            F.col("pos").alias("pos_b"),
-        )
-        hit = pa.join(
-            pb,
-            (F.col("doc_id") == F.col("doc_id_b"))
-            & (F.col("term_b") == F.col("tb"))
-            & (F.col("pos_b") != F.col("pos_a"))
-            & (F.col("pos_b") >= F.col("pos_a") + F.col("gap") - F.col("slop"))
-            & (F.col("pos_b") <= F.col("pos_a") + F.col("gap") + F.col("slop")),
-        )
-        ok_s = (
-            hit.select("sid", "n_sl", "slid", "doc_id").distinct()
-            .groupBy("sid", "n_sl", "doc_id")
-            .agg(F.count_distinct("slid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_sl"))
-            .select("sid", "doc_id")
-        )
-        sl_ids = [int(s["sid"]) for s in sl_sets]
-        matches = matches.filter(~F.col("sid").isin(sl_ids)).unionByName(
-            matches.filter(F.col("sid").isin(sl_ids))
-            .join(ok_s, ["sid", "doc_id"], "left_semi")
-        )
-    return matches
-
-
 def percolate_tree(
     docs: DataFrame,
     stored,
@@ -936,7 +545,8 @@ def percolate_tree(
 ) -> DataFrame:
     """Arbitrary-query percolation: stored queries are STRINGS in the
     engine's query syntax (nested booleans, +must / -not, "phrases",
-    prefix* and wild?card*), decomposed per QueryDecomposer.
+    prefix* and wild?card*, "a b"~2, term~1, [lo TO hi]), decomposed per
+    QueryDecomposer (``decompose_query``).
     ``stored``: list of (qid, query_string) for small registration sets,
     OR a DataFrame(qid, query) — then parsing + decomposition run
     DISTRIBUTED inside mapInPandas (the registration path scales with the
@@ -946,15 +556,12 @@ def percolate_tree(
     tokenizer is a plain whitespace split, so stopwords are ordinary
     terms here.
 
-    r7 execution plan: matching runs on DISTINCT clause shapes (Monitor
-    QueryIndex analog), and additionally on distinct QUERY shapes (the
-    set of clause shapes a query decomposes to), so the (qid, doc_id)
-    fan-out is the LAST operator with nothing shuffled after it. When the
-    distinct shapes fit the bitmask caps, the term/NOT/pattern/range legs
-    evaluate as per-doc bitmask + inline-exists expressions against the
-    broadcast shape table (_tree_match_core) — no doc-scaled shuffle;
-    larger registries fall back to the equi-join legs
-    (_percolate_tree_joins, scales in Σ df over clause rows). Returns
+    Matching runs on DISTINCT clause shapes (Monitor QueryIndex analog),
+    each requiring all of its terms, through the per-doc kernel
+    (``_match``). A doc matches a query when it matches any of its
+    clauses: the clause matches fold to distinct (query shape, doc) rows
+    — a query shape is the set of clause shapes a query decomposes to —
+    and the broadcast fan-out to qids is the last operator. Returns
     (qid, doc_id) distinct."""
     from .search.plan import parse_tree
 
@@ -994,367 +601,60 @@ def percolate_tree(
                                "sloppy", "fuzzies", "ranges")), 256,
         )
         keyed = clauses.withColumn("skey", skey)
-        set_rows = _collect_small(
-            keyed.drop("qid", "cid").dropDuplicates(["skey"]), _MASK_MAX_SETS
+        set_rows = sorted(
+            keyed.drop("qid", "cid").dropDuplicates(["skey"]).collect(),
+            key=lambda r: r["skey"],
         )
-        if set_rows is not None:
-            sets = []
-            sid_rows = []
-            for r in sorted(set_rows, key=lambda r: r["skey"]):
-                d = _set_dict(r)
-                d["sid"] = len(sets)
-                sid_rows.append((r["skey"], d["sid"]))
-                sets.append(d)
-            if _tree_mask_applicable(sets):
-                sid_df = spark.createDataFrame(sid_rows, "skey string, sid int")
-                qshape = (
-                    keyed.select("qid", "skey").distinct()
-                    .join(F.broadcast(sid_df), "skey")
-                    .groupBy("qid")
-                    .agg(F.sort_array(F.collect_set("sid")).alias("sig"))
-                )
-                shapes_w = qshape.groupBy("sig").agg(
-                    F.min("qid").alias("shape_id")
-                )
-                member_df = shapes_w.select(
-                    "shape_id", F.explode("sig").alias("sid")
-                )
-                qid_of_shape = qshape.join(shapes_w, "sig").select(
-                    "shape_id", "qid"
-                )
-                matches = _tree_match_core(docs, text_col, sets, spark)
-                shape_match = (
-                    matches.join(F.broadcast(member_df), "sid")
-                    .select("shape_id", "doc_id")
-                    .distinct()
-                )
-                return shape_match.join(qid_of_shape, "shape_id").select(
-                    "qid", "doc_id"
-                )
-        # too many distinct shapes / vocabulary for the mask plan
-        flags = clauses.agg(
-            F.max(F.size("phrases")).alias("p"),
-            F.max(F.size("patterns")).alias("x"),
-            F.max(F.size("not_terms")).alias("n"),
-            F.max(F.size("sloppy")).alias("s"),
-            F.max(F.size("fuzzies")).alias("f"),
-            F.max(F.size("ranges")).alias("r"),
-        ).collect()[0]
-        return _percolate_tree_joins(
-            docs, clauses.persist(), text_col,
-            any_phrases=(flags["p"] or 0) > 0,
-            any_patterns=(flags["x"] or 0) > 0,
-            any_nots=(flags["n"] or 0) > 0,
-            any_sloppy=(flags["s"] or 0) > 0,
-            any_fuzzy=(flags["f"] or 0) > 0,
-            any_ranges=(flags["r"] or 0) > 0,
+        sets = [{**_set_dict(r), "sid": sid} for sid, r in enumerate(set_rows)]
+        sid_df = spark.createDataFrame(
+            [(r["skey"], sid) for sid, r in enumerate(set_rows)],
+            "skey string, sid int",
         )
-
-    # --- list registration: parse + dedup entirely on the driver (each
-    # DISTINCT query string parses once; alerting sets repeat massively)
-    parse_cache: dict = {}
-    sets_by_key: dict = {}
-    qid_keys = []
-    rows = []
-    for qid, qstr in stored:
-        qs = str(qstr)
-        if qs not in parse_cache:
-            parse_cache[qs] = decompose_query(
-                parse_tree(qs, stop_words=frozenset())
-            )
-        cl = parse_cache[qs]
-        keys = []
-        for ci, c in enumerate(cl):
-            rows.append(_crow(qid, ci, c))
-            k = _set_key(_set_dict(rows[-1]))
-            if k not in sets_by_key:
-                d = _set_dict(rows[-1])
-                d["sid"] = len(sets_by_key)
-                sets_by_key[k] = d
-            keys.append(sets_by_key[k]["sid"])
-        qid_keys.append((int(qid), tuple(sorted(set(keys)))))
-    sets = sorted(sets_by_key.values(), key=lambda d: d["sid"])
-    if _tree_mask_applicable(sets):
-        shape_of: dict = {}
-        member_rows = []
-        q_rows = []
-        for qid, sig in qid_keys:
-            if sig not in shape_of:
-                shape_of[sig] = qid
-                member_rows.extend((qid, sid) for sid in sig)
-            q_rows.append((shape_of[sig], qid))
-        member_df = spark.createDataFrame(member_rows, "shape_id int, sid int")
-        qid_of_shape = spark.createDataFrame(q_rows, "shape_id int, qid int")
-        matches = _tree_match_core(docs, text_col, sets, spark)
-        shape_match = (
-            matches.join(F.broadcast(member_df), "sid")
-            .select("shape_id", "doc_id")
-            .distinct()
+        qsig = (
+            keyed.select("qid", "skey").distinct()
+            .join(F.broadcast(sid_df), "skey")
+            .groupBy("qid")
+            .agg(F.sort_array(F.collect_set("sid")).alias("sig"))
         )
-        return shape_match.join(qid_of_shape, "shape_id").select("qid", "doc_id")
-    clauses = spark.createDataFrame(rows, _CLAUSE_SCHEMA)
-    return _percolate_tree_joins(
-        docs, clauses, text_col,
-        any_phrases=any(r["phrases"] for r in rows),
-        any_patterns=any(r["patterns"] for r in rows),
-        any_nots=any(r["not_terms"] for r in rows),
-        any_sloppy=any(r["sloppy"] for r in rows),
-        any_fuzzy=any(r["fuzzies"] for r in rows),
-        any_ranges=any(r["ranges"] for r in rows),
+        shapes = qsig.groupBy("sig").agg(F.min("qid").alias("shape"))
+        members = shapes.select(F.explode("sig").alias("sid"), "shape")
+        qids = qsig.join(shapes, "sig").select(F.col("shape").alias("__rep__"), "qid")
+    else:
+        # list registration: parse + dedup entirely on the driver (each
+        # DISTINCT query string parses once; alerting sets repeat massively)
+        sig_of: dict = {}      # query string -> frozenset of clause sids
+        shape_of: dict = {}    # clause-sid set -> query shape id
+        sets_by_key: dict = {}
+        qid_rows = []
+        for qid, qstr in stored:
+            qs = str(qstr)
+            if qs not in sig_of:
+                sids = set()
+                for ci, c in enumerate(
+                    decompose_query(parse_tree(qs, stop_words=frozenset()))
+                ):
+                    d = _set_dict(_crow(qid, ci, c))
+                    d = sets_by_key.setdefault(_set_key(d), {**d, "sid": len(sets_by_key)})
+                    sids.add(d["sid"])
+                sig_of[qs] = frozenset(sids)
+            qid_rows.append((shape_of.setdefault(sig_of[qs], len(shape_of)), int(qid)))
+        sets = list(sets_by_key.values())
+        members = spark.createDataFrame(
+            [(sid, shape) for sig, shape in shape_of.items() for sid in sorted(sig)],
+            "sid int, shape int",
+        )
+        qids = spark.createDataFrame(qid_rows, "__rep__ int, qid int")
+    for s in sets:
+        s["min_match"] = len(s["terms"])
+    # a query matches when any of its clauses does: distinct (query
+    # shape, doc) rows first, so the qid fan-out is the last operator
+    hits = (
+        _match(docs, text_col, sets)
+        .join(F.broadcast(members), "sid")
+        .select(F.col("shape").alias("sid"), "doc_id")
+        .distinct()
     )
-
-
-def _percolate_tree_joins(
-    docs: DataFrame,
-    clauses: DataFrame,
-    text_col: str,
-    any_phrases: bool,
-    any_patterns: bool,
-    any_nots: bool,
-    any_sloppy: bool,
-    any_fuzzy: bool,
-    any_ranges: bool,
-) -> DataFrame:
-    """The fully distributed equi-join legs (pre-r7 plan), kept for
-    registries beyond the mask caps: every leg is a shuffle equi-join
-    scaling in Σ terms; the only broadcast is the pattern table (patterns
-    expand against the BATCH VOCABULARY first)."""
-    dterms = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(text_col))).alias("term")
-    )
-    # --- clause-set dedup (Monitor QueryIndex analog: identical stored
-    # queries are indexed once, monitor/QueryIndex.java caches by hash):
-    # alerting workloads repeat clause shapes massively, and every join leg
-    # below scales in Σ df(term) over CLAUSE rows — running the legs on
-    # distinct (terms, nots, phrases, patterns) sets and mapping back to
-    # qids at the end cuts that volume by the duplication factor
-    clauses = clauses.withColumn(
-        "skey",
-        F.sha2(F.to_json(F.struct("terms", "not_terms", "phrases", "patterns",
-                                  "sloppy", "fuzzies", "ranges")), 256),
-    )
-    sets = (
-        clauses.select("skey", "terms", "not_terms", "phrases", "patterns",
-                       "sloppy", "fuzzies", "ranges")
-        .dropDuplicates(["skey"])
-        .persist()
-    )
-    key = ["skey"]
-
-    # --- terms leg: all of the clause's terms present
-    tleg = sets.filter(F.size("terms") > 0).select(
-        *key, F.size("terms").alias("n_terms"), F.explode("terms").alias("term")
-    )
-    ok_t = (
-        tleg.join(dterms, "term")
-        .groupBy(*key, "n_terms", "doc_id")
-        .agg(F.count_distinct("term").alias("nm"))
-        .filter(F.col("nm") == F.col("n_terms"))
-        .select(*key, "doc_id")
-    )
-
-    # --- pattern leg: expand LIKE patterns against the batch vocabulary,
-    # then equi-join; every pattern must be matched by >= 1 doc token
-    ok_x = None
-    if any_patterns:
-        prow = sets.filter(F.size("patterns") > 0).select(
-            *key, F.size("patterns").alias("n_pat"), F.explode("patterns").alias("pat")
-        )
-        vocab = dterms.select("term").distinct()
-        pterm = vocab.join(F.broadcast(prow), F.expr("term LIKE pat"))
-        ok_x = (
-            pterm.join(dterms, "term")
-            .groupBy(*key, "n_pat", "doc_id")
-            .agg(F.count_distinct("pat").alias("nm"))
-            .filter(F.col("nm") == F.col("n_pat"))
-            .select(*key, "doc_id")
-        )
-
-    # --- phrase leg: anchor trick per phrase, then all phrases present
-    ok_p = None
-    dpos = None
-    if any_phrases or any_sloppy:
-        dpos = docs.select(
-            "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-        )
-    if any_phrases:
-        ph = sets.filter(F.size("phrases") > 0).select(
-            *key, F.size("phrases").alias("n_ph"),
-            F.posexplode("phrases").alias("pid", "phr"),
-        )
-        slots = ph.select(
-            *key, "n_ph", "pid", F.size("phr").alias("n_slots"),
-            F.posexplode("phr").alias("slot", "term"),
-        )
-        anchored = (
-            dpos.join(slots, "term")
-            .select(*key, "n_ph", "pid", "doc_id", "n_slots",
-                    "slot", (F.col("pos") - F.col("slot")).alias("anchor"))
-            .groupBy(*key, "n_ph", "pid", "doc_id", "anchor", "n_slots")
-            .agg(F.count_distinct("slot").alias("hit_slots"))
-            .filter(F.col("hit_slots") == F.col("n_slots"))
-            .select(*key, "n_ph", "pid", "doc_id")
-            .distinct()
-        )
-        ok_p = (
-            anchored.groupBy(*key, "n_ph", "doc_id")
-            .agg(F.count_distinct("pid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_ph"))
-            .select(*key, "doc_id")
-        )
-
-    # --- sloppy-phrase leg (r6 verify pass, monitor/CandidateMatcher.java
-    # analog): 2-term sloppy phrases match when SOME position pair sits
-    # within the slop band — |pa + gap - pb| <= slop is exactly Lucene's
-    # 2-term matchLength (SloppyPhraseMatcher.java:200-236) — evaluated as
-    # an equi-join on (term, doc) with a position band predicate, so the
-    # fan-out per doc is bounded by the slop window, not tf_a * tf_b.
-    # (The pair's terms are already required by the terms leg — that leg
-    # is the cheap prefilter, this one the verifier.)
-    ok_s = None
-    if any_sloppy:
-        srow = sets.filter(F.size("sloppy") > 0).select(
-            *key, F.size("sloppy").alias("n_sl"),
-            F.posexplode("sloppy").alias("sid", "sp"),
-        ).select(
-            *key, "n_sl", "sid", F.col("sp.ta").alias("ta"),
-            F.col("sp.tb").alias("tb"), F.col("sp.gap").alias("gap"),
-            F.col("sp.slop").alias("slop"),
-        )
-        pa = srow.join(dpos, srow.ta == dpos.term).select(
-            *key, "n_sl", "sid", "tb", "gap", "slop", "doc_id",
-            F.col("pos").alias("pos_a"),
-        )
-        pb = dpos.select(
-            F.col("doc_id").alias("doc_id_b"), F.col("term").alias("term_b"),
-            F.col("pos").alias("pos_b"),
-        )
-        hit = pa.join(
-            pb,
-            (F.col("doc_id") == F.col("doc_id_b"))
-            & (F.col("term_b") == F.col("tb"))
-            & (F.col("pos_b") != F.col("pos_a"))  # slots never collide
-            & (F.col("pos_b") >= F.col("pos_a") + F.col("gap") - F.col("slop"))
-            & (F.col("pos_b") <= F.col("pos_a") + F.col("gap") + F.col("slop")),
-        )
-        ok_s = (
-            hit.select(*key, "n_sl", "sid", "doc_id").distinct()
-            .groupBy(*key, "n_sl", "doc_id")
-            .agg(F.count_distinct("sid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_sl"))
-            .select(*key, "doc_id")
-        )
-
-    # --- fuzzy leg (r6): expand each stored fuzzy constraint against the
-    # batch VOCABULARY (|vocab| x |distinct fuzzies| vectorized Damerau —
-    # the same expansion shape as the pattern leg's LIKE scan), then
-    # equi-join; every fuzzy must be matched by >= 1 doc token
-    ok_f = None
-    if any_fuzzy:
-        from .functions.fuzzy import damerau_pair_predicate
-
-        frow = sets.filter(F.size("fuzzies") > 0).select(
-            *key, F.size("fuzzies").alias("n_fz"),
-            F.posexplode("fuzzies").alias("fid", "fz"),
-        ).select(
-            *key, "n_fz", "fid", F.col("fz.fterm").alias("fterm"),
-            F.col("fz.fedits").alias("fedits"),
-        )
-        vocab = dterms.select("term").distinct()
-        fdist = frow.select("fterm", "fedits").distinct()
-        fmatch = vocab.crossJoin(F.broadcast(fdist)).filter(
-            damerau_pair_predicate(F.col("term"), F.col("fterm"), F.col("fedits"))
-        )
-        fterm = fmatch.join(F.broadcast(frow), ["fterm", "fedits"])
-        ok_f = (
-            fterm.join(dterms, "term")
-            .groupBy(*key, "n_fz", "doc_id")
-            .agg(F.count_distinct("fid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_fz"))
-            .select(*key, "doc_id")
-        )
-
-    # --- term-range leg (r6): in-range vocabulary -> equi-join; every
-    # range must cover >= 1 doc token (TermRangeQuery match semantics)
-    ok_r = None
-    if any_ranges:
-        rrow = sets.filter(F.size("ranges") > 0).select(
-            *key, F.size("ranges").alias("n_rg"),
-            F.posexplode("ranges").alias("rid", "rg"),
-        ).select(
-            *key, "n_rg", "rid", F.col("rg.rlo").alias("rlo"),
-            F.col("rg.rhi").alias("rhi"),
-        )
-        vocab_r = dterms.select("term").distinct()
-        rterm = vocab_r.join(
-            F.broadcast(rrow),
-            (F.col("term") >= F.col("rlo")) & (F.col("term") <= F.col("rhi")),
-        )
-        ok_r = (
-            rterm.join(dterms, "term")
-            .groupBy(*key, "n_rg", "doc_id")
-            .agg(F.count_distinct("rid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_rg"))
-            .select(*key, "doc_id")
-        )
-
-    # --- combine: every applicable leg must hold
-    LEGS = ["t", "p", "x", "s", "f", "r"]
-
-    def tag(df, name):
-        return df.withColumns(
-            {g: F.lit(1 if g == name else 0) for g in LEGS}
-        )
-
-    sat = tag(ok_t, "t")
-    for leg_df, name in ((ok_p, "p"), (ok_x, "x"), (ok_s, "s"),
-                         (ok_f, "f"), (ok_r, "r")):
-        if leg_df is not None:
-            sat = sat.unionByName(tag(leg_df, name))
-    sat = sat.groupBy(*key, "doc_id").agg(
-        *[F.max(g).alias(g) for g in LEGS]
-    )
-    meta = sets.select(
-        *key, F.size("terms").alias("n_terms"), F.size("phrases").alias("n_ph"),
-        F.size("patterns").alias("n_pat"), F.size("sloppy").alias("n_sl"),
-        F.size("fuzzies").alias("n_fz"), F.size("ranges").alias("n_rg"),
-    )
-    match = (
-        sat.join(meta, key)
-        .filter((F.col("n_terms") == 0) | (F.col("t") == 1))
-        .filter((F.col("n_ph") == 0) | (F.col("p") == 1))
-        .filter((F.col("n_pat") == 0) | (F.col("x") == 1))
-        .filter((F.col("n_sl") == 0) | (F.col("s") == 1))
-        .filter((F.col("n_fz") == 0) | (F.col("f") == 1))
-        .filter((F.col("n_rg") == 0) | (F.col("r") == 1))
-        .select(*key, "doc_id")
-    )
-
-    # --- NOT leg: anti-join docs containing any excluded term
-    if any_nots:
-        nrow = sets.select(*key, F.explode("not_terms").alias("term"))
-        bad = nrow.join(dterms, "term").select(*key, "doc_id").distinct()
-        match = match.join(bad, key + ["doc_id"], "left_anti")
-
-    qmap = clauses.select("qid", "skey").distinct()
-    out = match.join(qmap, "skey").select("qid", "doc_id").distinct()
-    # materialize so the interned clause/set caches can be released
-    # immediately — a long-running percolation loop would otherwise
-    # accumulate cached blocks across calls (ADVICE r5). r7: persist +
-    # eager count instead of localCheckpoint — a checkpointed block
-    # evicted under memory pressure is UNRECOVERABLE (lineage truncated;
-    # observed as "Block rdd_N does not exist" + job death in the r6
-    # sf1.0 driver bench), while an evicted MEMORY_AND_DISK persist block
-    # just recomputes. The match set is qid×doc pairs, orders of
-    # magnitude below the inputs.
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sets.unpersist()
-    if clauses.is_cached:
-        clauses.unpersist()
-    return out
+    return _fan_out(hits, qids)
 
 
 def percolate_stream(spark: SparkSession, stream_df: DataFrame, queries: DataFrame,

@@ -1,10 +1,25 @@
 """Training-data pipeline operators: dedup, similarity, text stats, multimodal."""
 
+import fnmatch
 import hashlib
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from lucene_spark.functions.fuzzy import damerau_levenshtein
+from lucene_spark.search.plan import (
+    MUST,
+    MUST_NOT,
+    SHOULD,
+    QBool,
+    QFuzzy,
+    QPhrase,
+    QPrefix,
+    QRange,
+    QTerm,
+    QWildcard,
+)
 
 
 @pytest.fixture(scope="module")
@@ -427,8 +442,8 @@ def test_ivf_fixed_centroids_and_object_store_root(spark, tmp_path):
 
 
 def test_percolate_full_not_and_phrase(spark):
-    """Full-shape percolation: min_match + NOT + exact phrase, each as a
-    shuffle join; brute-force python differential."""
+    """Full-shape percolation: min_match + NOT + exact phrase, each
+    verified per doc; brute-force python differential."""
     from lucene_spark.streaming import percolate_full
 
     docs = spark.createDataFrame(
@@ -542,23 +557,50 @@ def test_decompose_query_shapes():
         d('"hash join fast"~2')
 
 
+def _ev(node, toks):
+    """Brute-force match of a parsed query tree against one doc's tokens."""
+    ts = set(toks)
+    if isinstance(node, QTerm):
+        return node.term in ts
+    if isinstance(node, QFuzzy):
+        return any(damerau_levenshtein(t, node.term) <= node.max_edits
+                   for t in ts)
+    if isinstance(node, QRange):
+        return any(node.lo <= t <= node.hi for t in ts)
+    if isinstance(node, QPhrase) and node.slop > 0:
+        (ta, oa), (tb, ob) = node.terms_off
+        gap = ob - oa
+        pa = [i for i, t in enumerate(toks) if t == ta]
+        pb = [i for i, t in enumerate(toks) if t == tb]
+        return any(a != b and abs(a + gap - b) <= node.slop
+                   for a in pa for b in pb)
+    if isinstance(node, QPhrase):
+        terms = [t for t, _ in node.terms_off]
+        return any(
+            toks[i : i + len(terms)] == terms
+            for i in range(len(toks) - len(terms) + 1)
+        )
+    if isinstance(node, QPrefix):
+        return any(t.startswith(node.prefix) for t in ts)
+    if isinstance(node, QWildcard):
+        return any(fnmatch.fnmatchcase(t, node.pattern) for t in ts)
+    if isinstance(node, QBool):
+        musts = [c for o, c in node.clauses if o == MUST]
+        shoulds = [c for o, c in node.clauses if o == SHOULD]
+        nots = [c for o, c in node.clauses if o == MUST_NOT]
+        pos = (all(_ev(m, toks) for m in musts) if musts
+               else any(_ev(s, toks) for s in shoulds))
+        return pos and not any(_ev(n, toks) for n in nots)
+    raise AssertionError(type(node))
+
+
 def test_percolate_tree_randomized_differential(spark):
     """percolate_tree vs a direct python evaluator of the parsed tree on
-    randomized docs: DNF + join legs must reproduce boolean semantics."""
-    import fnmatch
+    randomized docs: DNF + the matching kernel must reproduce boolean
+    semantics."""
     import random
 
-    from lucene_spark.search.plan import (
-        MUST,
-        MUST_NOT,
-        QBool,
-        QPhrase,
-        QPrefix,
-        QTerm,
-        QWildcard,
-        SHOULD,
-        parse_tree,
-    )
+    from lucene_spark.search.plan import parse_tree
     from lucene_spark.streaming import percolate_tree
 
     rng = random.Random(427)
@@ -582,49 +624,11 @@ def test_percolate_tree_randomized_differential(spark):
         (11, '"spark window"~1 OR quer*'),
     ]
 
-    def ev(node, toks):
-        from lucene_spark.functions.fuzzy import damerau_levenshtein
-        from lucene_spark.search.plan import QFuzzy, QRange
-
-        ts = set(toks)
-        if isinstance(node, QTerm):
-            return node.term in ts
-        if isinstance(node, QFuzzy):
-            return any(damerau_levenshtein(t, node.term) <= node.max_edits
-                       for t in ts)
-        if isinstance(node, QRange):
-            return any(node.lo <= t <= node.hi for t in ts)
-        if isinstance(node, QPhrase) and node.slop > 0:
-            (ta, oa), (tb, ob) = node.terms_off
-            gap = ob - oa
-            pa = [i for i, t in enumerate(toks) if t == ta]
-            pb = [i for i, t in enumerate(toks) if t == tb]
-            return any(a != b and abs(a + gap - b) <= node.slop
-                       for a in pa for b in pb)
-        if isinstance(node, QPhrase):
-            terms = [t for t, _ in node.terms_off]
-            return any(
-                toks[i : i + len(terms)] == terms
-                for i in range(len(toks) - len(terms) + 1)
-            )
-        if isinstance(node, QPrefix):
-            return any(t.startswith(node.prefix) for t in ts)
-        if isinstance(node, QWildcard):
-            return any(fnmatch.fnmatchcase(t, node.pattern) for t in ts)
-        if isinstance(node, QBool):
-            musts = [c for o, c in node.clauses if o == MUST]
-            shoulds = [c for o, c in node.clauses if o == SHOULD]
-            nots = [c for o, c in node.clauses if o == MUST_NOT]
-            pos = (all(ev(m, toks) for m in musts) if musts
-                   else any(ev(s, toks) for s in shoulds))
-            return pos and not any(ev(n, toks) for n in nots)
-        raise AssertionError(type(node))
-
     want = sorted(
         (qid, d)
         for qid, q in stored
         for d, t in docs
-        if ev(parse_tree(q, stop_words=frozenset()), t.split())
+        if _ev(parse_tree(q, stop_words=frozenset()), t.split())
     )
     ddf = spark.createDataFrame(docs, "doc_id long, text string")
     got = sorted(
@@ -681,6 +685,184 @@ def test_percolate_dedup_fans_back_out(spark):
     pre = percolate_prefiltered(docs, qdf.select("qid", "terms", "min_match"))
     n = {(r["qid"], r["doc_id"]): r["n_matched"] for r in pre.collect()}
     assert n[(1, 0)] == n[(2, 0)] == n[(3, 0)] == 2  # spark+join both hit
+
+
+@pytest.mark.parametrize(
+    "query,as_df",
+    [("spar*", False), ("[a TO z]", False), ("sprak~1", False), ("spar*", True),
+     ("a_b*", False)],
+    ids=["prefix", "range", "fuzzy", "prefix-dataframe", "escaped-prefix"],
+)
+def test_percolate_tree_termless_registry(spark, query, as_df):
+    """A registry whose clauses hold no term (only a pattern, a range or a
+    fuzzy) percolates like any other: every doc is a candidate and the
+    verification decides. A LIKE metacharacter in a prefix is literal."""
+    from lucene_spark.search.plan import parse_tree
+    from lucene_spark.streaming import percolate_tree
+
+    docs = [(0, "spark join"), (1, "spork window"), (2, "hash table"),
+            (3, "spaRk"), (4, None), (5, "a_bc axbc")]
+    stored = [(1, query)]
+    reg = spark.createDataFrame(stored, "qid int, query string") if as_df else stored
+    ddf = spark.createDataFrame(docs, "doc_id long, text string")
+    got = sorted((r["qid"], r["doc_id"]) for r in percolate_tree(ddf, reg).collect())
+    tree = parse_tree(query, stop_words=frozenset())
+    want = sorted((1, d) for d, t in docs if t is not None and _ev(tree, t.split()))
+    assert got == want and want
+
+
+def test_percolate_overcap_registry_differential(spark):
+    """Registries past the sizes the percolator once capped (> 4096
+    distinct terms, > 8192 distinct clause shapes), with NOTs, phrases, a
+    pattern, a fuzzy, a range and a sloppy pair: percolate_tree (list and
+    DataFrame registration, the latter past the 20k-row driver path),
+    percolate_full and percolate_prefiltered equal a brute force."""
+    import random
+
+    from lucene_spark.search.plan import parse_tree
+    from lucene_spark.streaming import (
+        _set_key,
+        decompose_query,
+        percolate_full,
+        percolate_prefiltered,
+        percolate_tree,
+    )
+
+    rng = random.Random(611)
+    pool = [f"w{i}" for i in range(60)]
+    docs = [(i, " ".join(rng.choices(pool, k=rng.randint(4, 12))))
+            for i in range(150)]
+    toks = {d: t.split() for d, t in docs}
+    ddf = spark.createDataFrame(docs, "doc_id long, text string")
+
+    def w():
+        return rng.choice(pool)
+
+    def bigram():  # a phrase that occurs in some doc
+        t = toks[rng.randrange(len(docs))]
+        i = rng.randrange(len(t) - 1)
+        return t[i:i + 2]
+
+    stored = []
+    for q in range(2100):
+        unseen = " OR ".join(f"u{q}_{j}" for j in range(4))
+        s = f"({w()} OR {unseen}) AND {w()}" + (f" -{w()}" if q % 3 == 0 else "")
+        stored.append((q, s))
+    stored += [(3000 + i, '"%s %s" -%s' % (*bigram(), w())) for i in range(20)]
+    stored += [(4000, "w1*"), (4001, "w1? AND w2*"), (4002, "w12~1 AND w3"),
+               (4003, "[w50 TO w55] -w7"), (4004, '"w4 w5"~2'),
+               (4005, '"w8 w9"~1 OR w1?')]
+    trees = {q: parse_tree(s, stop_words=frozenset()) for q, s in stored}
+    clauses = [c for t in trees.values() for c in decompose_query(t)]
+    assert len({t for c in clauses for t in c["terms"] | c["nots"]}) > 4096
+    assert len({_set_key(c) for c in clauses}) > 8192
+
+    want = {(q, d) for q in trees for d in toks if _ev(trees[q], toks[d])}
+    got = {(r["qid"], r["doc_id"]) for r in percolate_tree(ddf, stored).collect()}
+    assert got == want and want
+    reps = 20_001 // len(stored) + 1
+    qdf = spark.createDataFrame(
+        [(q * reps + r, s) for q, s in stored for r in range(reps)],
+        "qid int, query string",
+    )
+    got = {(r["qid"], r["doc_id"]) for r in percolate_tree(ddf, qdf).collect()}
+    assert got == {(q * reps + r, d) for q, d in want for r in range(reps)}
+
+    full = []
+    for q in range(8300):
+        phrase = bigram() if q % 7 == 0 else []
+        nots = [w()] if q % 5 == 0 else []
+        full.append((q, [w(), w(), f"v{q}"], 0 if q % 50 == 0 else 2, nots, phrase))
+    want_n = {}
+    for q, ts, mm, nots, phrase in full:
+        for d, tk in toks.items():
+            n = len(set(ts) & set(tk))
+            if n >= max(mm, 1):
+                want_n[(q, d)] = (n, not set(nots) & set(tk) and (
+                    not phrase or any(tk[i:i + len(phrase)] == phrase
+                                      for i in range(len(tk)))))
+    fdf = spark.createDataFrame(
+        full, "qid int, terms array<string>, min_match int, "
+              "not_terms array<string>, phrase array<string>")
+    got = sorted((r["qid"], r["doc_id"], r["n_matched"])
+                 for r in percolate_full(ddf, fdf).collect())
+    assert got == sorted((q, d, n) for (q, d), (n, ok) in want_n.items() if ok)
+    pre = percolate_prefiltered(ddf, fdf.select("qid", "terms", "min_match"))
+    got = {(r["qid"], r["doc_id"]): r["n_matched"] for r in pre.collect()}
+    assert got == {k: n for k, (n, _ok) in want_n.items()}
+
+
+def test_percolate_edge_semantics(spark):
+    """Null text matches nothing; an empty text matches only min_match <= 0
+    batch queries; tokens split on single spaces with empties dropped;
+    prefiltered adds n_matched >= 1; a duplicate doc_id row gives one tree
+    row but two percolate_full rows."""
+    from lucene_spark.streaming import (
+        percolate_batch,
+        percolate_full,
+        percolate_prefiltered,
+        percolate_tree,
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "spark join"), (4, "  spark   ")],
+        "doc_id long, text string",
+    )
+    q = spark.createDataFrame(
+        [(1, ["spark"], 0), (2, ["spark", "join"], 1), (3, ["absent"], 0)],
+        "qid int, terms array<string>, min_match int",
+    )
+    assert rows(percolate_batch(docs, q)) == [
+        (1, 2, 0), (1, 3, 1), (1, 4, 1), (2, 3, 2), (2, 4, 1),
+        (3, 2, 0), (3, 3, 0), (3, 4, 0),
+    ]
+    assert rows(percolate_prefiltered(docs, q)) == [
+        (1, 3, 1), (1, 4, 1), (2, 3, 2), (2, 4, 1),
+    ]
+    dup = spark.createDataFrame(
+        [(7, "spark join"), (7, "spark join")], "doc_id long, text string"
+    )
+    assert rows(percolate_tree(dup, [(1, "spark")])) == [(1, 7)]
+    fq = spark.createDataFrame(
+        [(1, ["spark"], 1, [], [])],
+        "qid int, terms array<string>, min_match int, "
+        "not_terms array<string>, phrase array<string>",
+    )
+    assert rows(percolate_full(dup, fq)) == [(1, 7, 1), (1, 7, 1)]
+
+
+def test_percolate_plans_never_shuffle_docs(spark, docs):
+    """Tree and full percolation plans hold one MapInPandas (the per-doc
+    kernel) with no Exchange below it: docs are never shuffled."""
+    from lucene_spark.streaming import percolate_full, percolate_tree
+
+    def subtree(plan, node):
+        lines = plan.splitlines()
+        i = next(k for k, ln in enumerate(lines) if node in ln)
+
+        def col(ln):
+            return len(ln) - len(ln.lstrip(" :+-"))
+
+        out = []
+        for ln in lines[i + 1:]:
+            if col(ln) <= col(lines[i]):
+                break
+            out.append(ln)
+        return out
+
+    fq = spark.createDataFrame(
+        [(1, ["spark", "join"], 1, ["katze"], ["spark", "join"])],
+        "qid int, terms array<string>, min_match int, "
+        "not_terms array<string>, phrase array<string>",
+    )
+    for df in (percolate_tree(docs, [(1, '"spark join" -katze'), (2, "wind*")]),
+               percolate_full(docs, fq)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        assert not [ln for ln in subtree(plan, "MapInPandas") if "Exchange" in ln], plan
 
 
 def test_lsh_hot_bucket_guard_star_reduces(spark):
