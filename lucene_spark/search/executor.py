@@ -7,10 +7,11 @@ Physical strategy mirrors Lucene's BooleanScorerSupplier choices
                       (windowed BooleanScorer analog; always correct; used as
                       the oracle and for non-top-k consumers: counts, facets)
   top-k path       -> per-segment vectorized block-max MAXSCORE/WAND inside
-                      slice-local tasks (apply_per_segment; WANDScorer.java:55,
-                      MaxScoreBulkScorer.java:26,
-                      BlockMaxConjunctionBulkScorer.java:36), then a global
-                      merge: orderBy(score desc, docid asc).limit(k)
+                      slice-local tasks of one Python job (_gather_topk;
+                      WANDScorer.java:55, MaxScoreBulkScorer.java:26,
+                      BlockMaxConjunctionBulkScorer.java:36), each task
+                      cutting its segments' hits to k, then a driver merge
+                      of the k x slices rows returned as a local DataFrame
                       == per-leaf collectors + TopDocs.merge
                       (TopScoreDocCollector.java:64-170, TopDocs.java:203-228)
 
@@ -31,10 +32,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.codec import decode_block
 from ..index.builder import IndexPaths, segment_tombstones
-from ..session import slice_tasks
+from ..session import gather_slices, slice_tasks
 from .plan import (
     MUST,
     MUST_NOT,
@@ -51,10 +53,21 @@ from .plan import (
 )
 from .scorer import FieldStats, score_arrays, term_weights
 
-TOPK_SCHEMA = "docid long, score double, blocks_total long, blocks_decoded long"
-METRICS_SCHEMA = "segment_id long, blocks_total long, blocks_decoded long"
-DECODED_SCHEMA = "term string, docid long, tf int, doclen int"
-TOMBSTONE_SCHEMA = "docid long, segment_id int"
+# schemas are built once: a DDL string costs a py4j parse on every use
+HITS_SCHEMA = StructType().add("docid", "long").add("score", "double")
+HITS_METRICS_SCHEMA = (
+    StructType().add("docid", "long").add("score", "double")
+    .add("blocks_total", "long").add("blocks_decoded", "long")
+)
+DECODED_SCHEMA = (
+    StructType().add("term", "string").add("docid", "long")
+    .add("tf", "integer").add("doclen", "integer")
+)
+TOMBSTONE_SCHEMA = StructType().add("docid", "long").add("segment_id", "integer")
+OFFSETS_SCHEMA = (
+    StructType().add("docid", "long").add("term", "string")
+    .add("start", "integer").add("end", "integer")
+)
 
 # MAXSCORE theta-refresh window (blocks decoded between threshold refreshes,
 # MaxScoreBulkScorer.java:26 window analog); module-level so tests can shrink
@@ -514,6 +527,10 @@ def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
     return sel_ids[ordr], sel_sc[ordr]
 
 
+_EMPTY_IDS = np.empty(0, np.int64)
+_EMPTY_SCORES = np.empty(0, np.float64)
+
+
 # skip/impact metadata every per-segment scorer needs; block streams are
 # requested explicitly so the positions/offsets payloads are never read
 # unless the operator decodes them (on a positions+offsets index the unused
@@ -525,21 +542,19 @@ _SCORE_COLS = (
 )
 
 
-def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
-                      streams: Sequence[str] = ("block_data",)) -> DataFrame:
-    """Slice-local per-segment execution (IndexSearcher slices + searchLeaf,
-    IndexSearcher.java:323-341,760): the snapshot's segment files are dealt
-    into slices (session.slice_tasks), and each task reads its own
-    segments with pyarrow — the ``terms`` filter prunes row groups, and
-    only the skip metadata plus ``streams`` are read — along with each
-    segment's OWN tombstones (per-segment liveDocs, PendingDeletes.java:31;
-    nothing is materialized on the driver or captured in closures).
-    ``fn((segment_id,), postings_pdf, deleted_or_None) -> pdf`` runs only
-    for segments holding rows."""
+def _segment_reader(index: Index, terms: Sequence[str],
+                    streams: Sequence[str] = ("block_data",)):
+    """``read(segs)`` for a slice task: yields ``(segment_id, postings_pdf,
+    deleted_or_None)`` for each of the slice's segments holding rows for
+    ``terms``. Each segment is read with pyarrow — the ``terms`` filter
+    prunes row groups, and only the skip metadata plus ``streams`` are read
+    — along with its OWN tombstones (per-segment liveDocs,
+    PendingDeletes.java:31; nothing is materialized on the driver or
+    captured in closures)."""
     paths, tombs, terms = index.paths, index.tombstone_files, list(terms)
     cols = list(_SCORE_COLS) + [s for s in streams if s not in _SCORE_COLS]
 
-    def run_slice(segs):
+    def read(segs):
         import pyarrow.dataset as ds
 
         for sid, path in segs:
@@ -551,9 +566,71 @@ def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
             if tbl.num_rows == 0:
                 continue
             deleted = segment_tombstones(paths.fs, tombs, sid) if tombs else None
-            yield fn((sid,), tbl.to_pandas(), deleted)
+            yield sid, tbl.to_pandas(), deleted
+
+    return read
+
+
+def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: StructType,
+                      streams: Sequence[str] = ("block_data",)) -> DataFrame:
+    """Slice-local per-segment execution with a data-sized output
+    (IndexSearcher slices + searchLeaf, IndexSearcher.java:323-341,760):
+    the snapshot's segment files are dealt into slices
+    (session.slice_tasks), and each task reads its own segments
+    (``_segment_reader``). ``fn((segment_id,), postings_pdf,
+    deleted_or_None) -> pdf`` runs only for segments holding rows."""
+    read = _segment_reader(index, terms, streams)
+
+    def run_slice(segs):
+        for sid, pdf, deleted in read(segs):
+            yield fn((sid,), pdf, deleted)
 
     return slice_tasks(index.spark, index.segment_files(), run_slice, schema)
+
+
+def _gather_topk(index: Index, terms: Sequence[str], run, k: int,
+                 streams: Sequence[str] = ("block_data",)):
+    """Slice-local per-segment top-k with a k-bounded output: one Python
+    job, one task per slice (session.gather_slices). Each task runs
+    ``run(postings_pdf, deleted) -> (ids, scores, (blocks_total,
+    blocks_decoded))`` on each of its segments and cuts their hits to <= k
+    (per-leaf collectors); the driver merges the <= k x slices rows
+    (TopDocs.merge, TopDocs.java:203-228). Both cuts are ``_select_topk``
+    (score desc, docid asc, float64 compare), so the merge is exact and
+    driver memory is bounded by k x slices. Returns (ids, scores_float64,
+    blocks_total, blocks_decoded) summed over every segment read."""
+    read = _segment_reader(index, terms, streams)
+
+    def slice_topk(segs):
+        ids, scores, total, decoded = [_EMPTY_IDS], [_EMPTY_SCORES], 0, 0
+        for _sid, pdf, deleted in read(segs):
+            i, s, (t, d) = run(pdf, deleted)
+            ids.append(i)
+            scores.append(np.asarray(s, np.float64))
+            total, decoded = total + int(t), decoded + int(d)
+        return (*_select_topk(np.concatenate(ids), np.concatenate(scores), k), total, decoded)
+
+    parts = gather_slices(index.spark, index.segment_files(), slice_topk)
+    ids, scores = _select_topk(np.concatenate([p[0] for p in parts]),
+                               np.concatenate([p[1] for p in parts]), k)
+    return ids, scores, sum(p[2] for p in parts), sum(p[3] for p in parts)
+
+
+def _hits_frame(spark: SparkSession, ids=None, scores=None,
+                metrics: Optional[Tuple[int, int]] = None) -> DataFrame:
+    """A merged top-k as a local DataFrame (a LocalTableScan: collecting
+    it runs no job); empty without ``ids``. ``metrics`` adds the
+    query's summed (blocks_total, blocks_decoded) to every row."""
+    import pyarrow as pa
+
+    ids = _EMPTY_IDS if ids is None else ids
+    cols = {"docid": ids, "score": _EMPTY_SCORES if scores is None else scores}
+    schema = HITS_SCHEMA
+    if metrics is not None:
+        schema = HITS_METRICS_SCHEMA
+        cols["blocks_total"] = np.full(len(ids), metrics[0], np.int64)
+        cols["blocks_decoded"] = np.full(len(ids), metrics[1], np.int64)
+    return spark.createDataFrame(pa.table(cols), schema)
 
 
 def decoded_postings(
@@ -1262,53 +1339,34 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
     return run
 
 
-def _clause_frame(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
-                  cursor: Optional[Tuple[float, int]] = None,
-                  metrics: bool = False) -> DataFrame:
-    """Run the clause kernel on every segment: the merged top-k
-    (TOPK_SCHEMA; per-leaf collectors + TopDocs.merge) or, with
-    ``metrics``, one decode-counter row per segment (METRICS_SCHEMA —
-    emitted even when the segment contributes no hits). ``theta_seed``
-    0.0 derives the auto seed (never in cursor mode: a first-page bound
-    is no bound for a later page); a negative value disables seeding."""
+def _clause_hits(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
+                 cursor: Optional[Tuple[float, int]] = None):
+    """Run the clause kernel on every segment and merge: (ids, scores,
+    blocks_total, blocks_decoded) of the global top-k (_gather_topk).
+    ``theta_seed`` 0.0 derives the auto seed (never in cursor mode: a
+    first-page bound is no bound for a later page); a negative value
+    disables seeding."""
     if theta_seed == 0.0 and cursor is None:
         theta_seed = auto_seed_theta(index, plan, k)
     run = make_clause_topk_fn(plan, k, theta_seed, cursor)
-
-    def fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        ids, scores, (total, decoded) = run(pdf, deleted)
-        if metrics:
-            ids, scores = np.array([int(key[0])], np.int64), None
-        cols = {"segment_id": ids} if metrics else {"docid": ids, "score": scores}
-        cols["blocks_total"] = np.full(len(ids), total, dtype=np.int64)
-        cols["blocks_decoded"] = np.full(len(ids), decoded, dtype=np.int64)
-        return pd.DataFrame(cols)
-
-    per_seg = apply_per_segment(index, plan.terms, fn,
-                                METRICS_SCHEMA if metrics else TOPK_SCHEMA)
-    if metrics:
-        return per_seg
-    return per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+    return _gather_topk(index, plan.terms, run, k)
 
 
 def _clause_topk(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
                  cursor: Optional[Tuple[float, int]] = None,
                  with_metrics: bool = False) -> DataFrame:
     if not plan.clauses:
-        return index.spark.createDataFrame(
-            [], TOPK_SCHEMA if with_metrics else "docid long, score double"
-        )
-    out = _clause_frame(index, plan, k, theta_seed, cursor)
-    return out if with_metrics else out.select("docid", "score")
+        return _hits_frame(index.spark, metrics=(0, 0) if with_metrics else None)
+    ids, scores, total, decoded = _clause_hits(index, plan, k, theta_seed, cursor)
+    return _hits_frame(index.spark, ids, scores,
+                       (total, decoded) if with_metrics else None)
 
 
 def _clause_metrics(index: Index, plan: ClausePlan, k: int, theta_seed: float) -> dict:
     """Exact block-skip effectiveness of the plan a default call runs: the
-    per-segment counter rows summed on the driver (bounded by the segment
-    count)."""
-    rows = _clause_frame(index, plan, k, theta_seed, metrics=True).collect() if plan.clauses else []
-    tot = sum(int(r["blocks_total"]) for r in rows)
-    dec = sum(int(r["blocks_decoded"]) for r in rows)
+    decode counters of every segment, summed per slice and on the
+    driver."""
+    tot, dec = _clause_hits(index, plan, k, theta_seed)[2:] if plan.clauses else (0, 0)
     return {"blocks_total": tot, "blocks_decoded": dec, "ratio": (dec / tot) if tot else None}
 
 
@@ -1404,10 +1462,10 @@ def _explicit_seed(index: Index, plan: ClausePlan, k: int) -> float:
             if kth > 0.0:
                 return kth * PRUNE_SCALE[plan.dtype]
     sub = ClausePlan((cheapest,), (), 0, plan.sim, plan.dtype)
-    rows = _clause_topk(index, sub, k).collect()
-    if len(rows) < k:
+    _ids, scores, _, _ = _clause_hits(index, sub, k)
+    if len(scores) < k:
         return 0.0
-    return float(rows[-1]["score"]) * PRUNE_SCALE[plan.dtype]
+    return float(scores[-1]) * PRUNE_SCALE[plan.dtype]
 
 
 def search_topk(
@@ -1621,8 +1679,7 @@ def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
         )
 
     return apply_per_segment(
-        index, terms, fn, "docid long, term string, start int, end int",
-        streams=("block_data", "block_off"),
+        index, terms, fn, OFFSETS_SCHEMA, streams=("block_data", "block_off"),
     )
 
 
@@ -1833,18 +1890,7 @@ def make_phrase_topk_fn(
         sel_ids, sel_sc = _select_topk(docs, scores, k)
         return sel_ids, sel_sc, counters
 
-    def topk_fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        ids, scores, counters = run(pdf, deleted)
-        return pd.DataFrame(
-            {
-                "docid": ids,
-                "score": scores,
-                "blocks_total": np.full(len(ids), counters[0], dtype=np.int64),
-                "blocks_decoded": np.full(len(ids), counters[1], dtype=np.int64),
-            }
-        )
-
-    return topk_fn
+    return run
 
 
 def require_positions(index: Index, what: str) -> None:
@@ -1858,6 +1904,9 @@ def require_positions(index: Index, what: str) -> None:
             "position data (IndexConfig(index_positions=False)); rebuild "
             "with index_positions=True"
         )
+
+
+_PHRASE_STREAMS = ("block_data", "block_pos")
 
 
 def search_phrase(
@@ -1882,15 +1931,12 @@ def search_phrase(
     from .scorer import idf as _idf
 
     require_positions(index, "PhraseQuery")
-    per_seg = _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype,
-                              stop_words, similarity)
-    if per_seg is None:
-        return index.spark.createDataFrame([], "docid long, score double")
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-        .select("docid", "score")
-    )
+    phr = _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype,
+                          stop_words, similarity)
+    if phr is None:
+        return _hits_frame(index.spark)
+    ids, scores, _, _ = _gather_topk(index, *phr, k, streams=_PHRASE_STREAMS)
+    return _hits_frame(index.spark, ids, scores)
 
 
 def phrase_scores(
@@ -1905,15 +1951,23 @@ def phrase_scores(
 ) -> DataFrame:
     """ALL (docid, score) phrase matches, uncut — the tree-evaluation
     building block for PhraseQuery clauses inside nested booleans."""
-    per_seg = _phrase_per_seg(index, phrase, slop, None, boost, quantize, dtype,
-                              stop_words, similarity)
-    if per_seg is None:
-        return index.spark.createDataFrame([], "docid long, score double")
-    return per_seg.select("docid", "score")
+    phr = _phrase_per_seg(index, phrase, slop, None, boost, quantize, dtype,
+                          stop_words, similarity)
+    if phr is None:
+        return _hits_frame(index.spark)
+    terms, run = phr
+
+    def fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
+        ids, scores, _counters = run(pdf, deleted)
+        return pd.DataFrame({"docid": ids, "score": scores})
+
+    return apply_per_segment(index, terms, fn, HITS_SCHEMA, streams=_PHRASE_STREAMS)
 
 
 def _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype, stop_words,
                     similarity=None):
+    """(distinct terms, per-segment phrase scorer) of a phrase, or None
+    when it cannot match (fewer than two terms, or a term absent)."""
     from collections import Counter
 
     from .scorer import idf as _idf
@@ -1938,12 +1992,10 @@ def _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype, stop_words,
         similarity, dict(Counter(t for t, _ in terms_off)), stats,
         index.field_stats, boost, quantize, dtype,
     )
-    fn = make_phrase_topk_fn(
+    return distinct, make_phrase_topk_fn(
         terms_off, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    return apply_per_segment(index, distinct, fn, TOPK_SCHEMA,
-                             streams=("block_data", "block_pos"))
 
 
 def make_multiphrase_fn(
@@ -2149,18 +2201,7 @@ def make_multiphrase_fn(
         sel_ids, sel_sc = _select_topk(docs, scores, k)
         return sel_ids, sel_sc, counters
 
-    def topk_fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        ids, scores, counters = run(pdf, deleted)
-        return pd.DataFrame(
-            {
-                "docid": ids,
-                "score": scores,
-                "blocks_total": np.full(len(ids), counters[0], dtype=np.int64),
-                "blocks_decoded": np.full(len(ids), counters[1], dtype=np.int64),
-            }
-        )
-
-    return topk_fn
+    return run
 
 
 def ngram_phrase_rewrite(terms: Sequence[str], n: int) -> List[Tuple[str, int]]:
@@ -2255,7 +2296,7 @@ def search_multi_phrase(
 
     require_positions(index, "MultiPhraseQuery")
     if not slots:
-        return index.spark.createDataFrame([], "docid long, score double")
+        return _hits_frame(index.spark)
     base_off = int(slots[0][0])
     # terms repeating across slots are handled by the rptGroups machinery
     # inside the matcher (union-find groups + multi-term init/advance,
@@ -2267,7 +2308,7 @@ def search_multi_phrase(
     for off, alts in norm_slots:
         live = tuple(t for t in alts if t in stats)
         if not live:  # a slot with no existing alternative can't match
-            return index.spark.createDataFrame([], "docid long, score double")
+            return _hits_frame(index.spark)
         live_slots.append((off, live))
     n = index.field_stats.doc_count
     w = float(
@@ -2279,17 +2320,12 @@ def search_multi_phrase(
         index.field_stats, boost, quantize, dtype,
     )
     distinct = sorted({t for _, a in live_slots for t in a})
-    fn = make_multiphrase_fn(
+    run = make_multiphrase_fn(
         live_slots, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    per_seg = apply_per_segment(index, distinct, fn, TOPK_SCHEMA,
-                                streams=("block_data", "block_pos"))
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-        .select("docid", "score")
-    )
+    ids, scores, _, _ = _gather_topk(index, distinct, run, k, streams=_PHRASE_STREAMS)
+    return _hits_frame(index.spark, ids, scores)
 
 
 def blended_term_topk(

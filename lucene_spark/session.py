@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _default_driver_mem() -> str:
@@ -38,17 +39,25 @@ def spread_small(df):
     return df
 
 
-def slice_tasks(spark: SparkSession, items: list, fn, schema: str,
-                n_tasks: int | None = None) -> DataFrame:
-    """File-granular tasks: deal a small driver-side list (segment files,
-    staged shards) round-robin into ``min(len(items), n_tasks or
-    defaultParallelism)`` slices and run ``fn(slice) -> iterable of pandas
-    frames`` once per slice, one task each, in a single ``mapInPandas``
-    over ``spark.range``. Tasks read their own files (IndexSearcher slices
-    + searchLeaf, IndexSearcher.java:323-341,760): no input scan, no
-    Exchange for AQE to coalesce, no JVM->Python copy of the data."""
+def _slices(spark: SparkSession, items: list, n_tasks: int | None) -> list:
+    """Deal a small driver-side list round-robin into ``min(len(items),
+    n_tasks or defaultParallelism)`` slices (at least one)."""
     n = max(1, min(len(items), n_tasks or spark.sparkContext.defaultParallelism))
-    slices = [items[i::n] for i in range(n)]
+    return [items[i::n] for i in range(n)]
+
+
+def slice_tasks(spark: SparkSession, items: list, fn, schema: StructType,
+                n_tasks: int | None = None) -> DataFrame:
+    """File-granular tasks, data-sized output: deal a small driver-side
+    list (segment files, staged shards) into slices (``_slices``) and run
+    ``fn(slice) -> iterable of pandas frames`` once per slice, one task
+    each, in a single ``mapInPandas`` over ``spark.range``. Tasks read
+    their own files (IndexSearcher slices + searchLeaf,
+    IndexSearcher.java:323-341,760): no input scan, no Exchange for AQE to
+    coalesce, no JVM->Python copy of the data. ``schema`` is a prebuilt
+    StructType (a DDL string costs a py4j parse per call)."""
+    slices = _slices(spark, items, n_tasks)
+    n = len(slices)
 
     def run(batches):
         for pdf in batches:
@@ -56,6 +65,20 @@ def slice_tasks(spark: SparkSession, items: list, fn, schema: str,
                 yield from fn(slices[int(i)])
 
     return spark.range(0, n, 1, n).mapInPandas(run, schema)
+
+
+def gather_slices(spark: SparkSession, items: list, fn) -> list:
+    """File-granular tasks, bounded output: the same slices as
+    ``slice_tasks``, but ``fn(slice) -> one small picklable value`` runs in
+    one Python RDD job (one stage, one task per slice) and the values come
+    back to the driver in slice order — the per-slice collectors whose
+    results the caller merges (IndexSearcher.search over slices +
+    TopDocs.merge). No SQL plan is built, so there is no schema to parse
+    and no operator between the tasks and the driver."""
+    slices = _slices(spark, items, None)
+    n = len(slices)
+    rdd = spark.sparkContext.parallelize(range(n), n)
+    return rdd.mapPartitions(lambda ids: [fn(slices[i]) for i in ids]).collect()
 
 
 def get_spark(app: str = "lucene_spark", master: str | None = None,

@@ -1,7 +1,8 @@
-"""Slice-local per-segment seam (executor.apply_per_segment) and the
-worker daemon (lucene_spark.daemon): plan shape, results on every index
-kind the seam lists files for, the tombstoned-segment regression, and
-daemon start-up."""
+"""Slice-local per-segment seam (executor._gather_topk for top-k,
+executor.apply_per_segment for data-sized outputs) and the worker daemon
+(lucene_spark.daemon): job shape, the per-slice cut on ties, results on
+every index kind the seam lists files for, the tombstoned-segment
+regression, and daemon start-up."""
 
 import os
 import shutil
@@ -18,10 +19,14 @@ from lucene_spark.index.builder import IndexConfig, append_to_index, build_index
 from lucene_spark.search.executor import (
     Index,
     block_skip_metrics,
+    search_after,
     search_exhaustive,
+    search_multi_phrase,
     search_phrase,
     search_topk,
+    search_tree_after,
     search_tree_topk,
+    tree_skip_metrics,
 )
 from lucene_spark.search.plan import SHOULD, QBool, QTerm, normalize, parse_tree
 
@@ -74,23 +79,79 @@ def _jobs(spark, name, call):
 
 @pytest.mark.parametrize("deleted", [False, True], ids=["live", "tombstoned"])
 def test_one_stage_no_exchange(spark, three_seg, deleted):
+    """Every pruned top-k runs one job of one stage, one task per slice,
+    inside the search call; the frame it returns is local, so collecting
+    it runs no job."""
     idx = three_seg[deleted]
     assert idx.has_deletes == deleted
     want_tasks = [min(3, spark.sparkContext.defaultParallelism)]
+    q = normalize(should=["import", "def"])
+    tree = parse_tree("(import AND def) OR return")
     frames = {
-        "topk": lambda: search_topk(idx, normalize(should=["import", "def"]), k=5),
-        "tree": lambda: search_tree_topk(idx, parse_tree("(import AND def) OR return"), k=5),
+        "topk": lambda: search_topk(idx, q, k=5),
+        "after": lambda: search_after(idx, q, 5, 1e9, -1),
+        "tree": lambda: search_tree_topk(idx, tree, k=5),
+        "tree_after": lambda: search_tree_after(idx, tree, 5, 1e9, -1),
         "phrase": lambda: search_phrase(idx, ["import", "def"], k=5),
+        "multi_phrase": lambda: search_multi_phrase(idx, [(0, ["import"]), (1, ["def", "os"])], k=5),
     }
     for name, make in frames.items():
-        df = make()
-        _, tasks = _jobs(spark, f"seam-{name}-{deleted}", df.collect)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan and "FlatMapCoGroupsInPandas" not in plan, plan
+        df, tasks = _jobs(spark, f"seam-{name}-{deleted}", make)
         assert tasks == want_tasks, (name, tasks)
-    m, tasks = _jobs(spark, f"seam-metrics-{deleted}",
-                     lambda: block_skip_metrics(idx, normalize(should=["import", "def"]), k=5))
-    assert m["blocks_total"] > 0 and tasks == want_tasks
+        rows, tasks = _jobs(spark, f"seam-{name}-collect-{deleted}", df.collect)
+        assert rows and tasks == [], (name, tasks)
+    for name, metrics in {"flat": lambda: block_skip_metrics(idx, q, k=5),
+                          "tree": lambda: tree_skip_metrics(idx, tree, k=5)}.items():
+        m, tasks = _jobs(spark, f"seam-metrics-{name}-{deleted}", metrics)
+        assert m["blocks_total"] > 0 and tasks == want_tasks, (name, tasks)
+
+
+@pytest.fixture(scope="module")
+def all_ties(spark, tmp_path_factory):
+    """80 identical docs in 10 segments (>= 2 segments per slice at the
+    suite's parallelism), so every hit of every query ties; and a copy
+    with small docids tombstoned."""
+    base = tmp_path_factory.mktemp("ties")
+    rows = [(i, "alpha beta gamma delta") for i in range(80)]
+    cfg = IndexConfig(docid_col="doc_id", content_col="content", num_segments=10,
+                      order_cols=("doc_id",), index_positions=True)
+    paths = build_index(spark, spark.createDataFrame(rows, "doc_id long, content string"),
+                        str(base / "live"), cfg)
+    shutil.copytree(paths.root, str(base / "tomb"))
+    tomb = Index.open(spark, str(base / "tomb"))
+    tomb.delete_docs([0, 3, 4, 17, 41])
+    return Index(spark, paths), tomb
+
+
+@pytest.mark.parametrize("deleted", [False, True], ids=["live", "tombstoned"])
+def test_slice_cut_keeps_smallest_docids_on_ties(spark, all_ties, deleted):
+    """The per-slice cut and the driver merge keep the docid-asc tie order:
+    on an all-ties index every pruned top-k is the smallest live docids."""
+    idx = all_ties[deleted]
+    assert len(idx.segment_files()) >= 2 * spark.sparkContext.defaultParallelism
+    q = normalize(should=["alpha", "beta"], pre_analyzed=True)
+    full = _rows(search_exhaustive(idx, q, k=None, quantize=True, dtype=np.float32))
+    live = [d for d, _ in full]
+    assert live == sorted(live) and len(set(s for _, s in full)) == 1
+    assert len(live) == (75 if deleted else 80)
+    tree = parse_tree("(alpha AND beta) OR gamma")
+    searches = {
+        "topk": lambda k: search_topk(idx, q, k=k),
+        "tree": lambda k: search_tree_topk(idx, tree, k=k),
+        "phrase": lambda k: search_phrase(idx, ["alpha", "beta"], k=k),
+        "multi_phrase": lambda k: search_multi_phrase(
+            idx, [(0, ["alpha"]), (1, ["beta", "zeta"])], k=k),
+    }
+    for name, search in searches.items():
+        for k in (1, 13, 200):
+            got = _rows(search(k))
+            assert [d for d, _ in got] == live[:k], (name, k)
+            assert len({s for _, s in got}) == 1, (name, k)
+    first = _rows(search_topk(idx, q, k=13))
+    assert first[0][1] == pytest.approx(full[0][1], rel=1e-5)
+    d, s = first[-1]
+    page = _rows(search_after(idx, q, 13, s, d))
+    assert [d for d, _ in page] == live[13:26] and {s for _, s in page} == {s}
 
 
 def test_tombstoned_segment_without_query_term(spark, tmp_path):
