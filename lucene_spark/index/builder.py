@@ -47,7 +47,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
 
 from ..analysis import ENGLISH_STOP_WORDS, analyze_batch
 from ..functions.codec import encode_postings
@@ -70,10 +69,9 @@ INDEX_FORMAT_VERSION = 7
 
 
 MANIFEST_SCHEMA = (
-    StructType().add("segment_id", "integer").add("first_docid", "long")
-    .add("last_docid", "long").add("num_docs", "long").add("doc_count", "long")
-    .add("sum_doclen", "long").add("max_doclen", "long").add("num_terms", "long")
-    .add("num_postings", "long").add("status", "string").add("resumed", "boolean")
+    "segment_id int, first_docid long, last_docid long, num_docs long, "
+    "doc_count long, sum_doclen long, max_doclen long, num_terms long, "
+    "num_postings long, status string, resumed boolean"
 )
 
 POSTINGS_ARROW_SCHEMA = pa.schema(

@@ -26,7 +26,7 @@ import json
 import os
 import re
 from dataclasses import dataclass
-from typing import Dict, Iterable, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -53,21 +53,11 @@ from .plan import (
 )
 from .scorer import FieldStats, score_arrays, term_weights
 
-# schemas are built once: a DDL string costs a py4j parse on every use
+DECODED_SCHEMA = "term string, docid long, tf int, doclen int"
+TOMBSTONE_SCHEMA = "docid long, segment_id int"
+# every top-k answer is a local frame of this schema, built in Python (a
+# DDL string would cost a py4j parse on every query)
 HITS_SCHEMA = StructType().add("docid", "long").add("score", "double")
-HITS_METRICS_SCHEMA = (
-    StructType().add("docid", "long").add("score", "double")
-    .add("blocks_total", "long").add("blocks_decoded", "long")
-)
-DECODED_SCHEMA = (
-    StructType().add("term", "string").add("docid", "long")
-    .add("tf", "integer").add("doclen", "integer")
-)
-TOMBSTONE_SCHEMA = StructType().add("docid", "long").add("segment_id", "integer")
-OFFSETS_SCHEMA = (
-    StructType().add("docid", "long").add("term", "string")
-    .add("start", "integer").add("end", "integer")
-)
 
 # MAXSCORE theta-refresh window (blocks decoded between threshold refreshes,
 # MaxScoreBulkScorer.java:26 window analog); module-level so tests can shrink
@@ -504,13 +494,14 @@ def _live_mask(ids: np.ndarray, deleted: Optional[np.ndarray]) -> Optional[np.nd
     return deleted[pos] != ids
 
 
-def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
-    """Exact (score desc, docid asc) top-k in O(m): Lucene's collector
-    tie-break (TopScoreDocCollector docid-asc on equal score) — a plain
-    argpartition picks an ARBITRARY subset of docs tied at the k-th score,
-    which diverges from the exhaustive path / oracle on tie-heavy corpora.
-    Returns (ids, scores_float64) sorted (score desc, docid asc)."""
-    f64 = scores.astype(np.float64)
+def _topk_rows(ids: np.ndarray, f64: np.ndarray, k: Optional[int],
+               ords: Optional[np.ndarray] = None) -> np.ndarray:
+    """Positions of the exact (score desc, docid asc) top-k in O(m), in
+    that order: Lucene's collector tie-break (TopScoreDocCollector
+    docid-asc on equal score) — a plain argpartition picks an ARBITRARY
+    subset of docs tied at the k-th score, which diverges from the
+    exhaustive path / oracle on tie-heavy corpora. ``ords`` (a hit's
+    source, e.g. its shard) breaks ties on equal (score, docid), asc."""
     kk = len(ids) if k is None else min(k, len(ids))
     if kk < len(ids):
         v = -np.partition(-f64, kk - 1)[kk - 1]  # k-th best score value
@@ -518,15 +509,26 @@ def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
         need = kk - len(greater)
         ties = np.flatnonzero(f64 == v)
         if need < len(ties):  # smallest docids among the tied tail
-            ties = ties[np.argpartition(ids[ties], need - 1)[:need]] if need else ties[:0]
+            if ords is not None:
+                ties = ties[np.lexsort((ords[ties], ids[ties]))[:need]]
+            else:
+                ties = ties[np.argpartition(ids[ties], need - 1)[:need]] if need else ties[:0]
         part = np.concatenate([greater, ties])
     else:
         part = np.arange(len(ids))
-    sel_ids, sel_sc = ids[part], f64[part]
-    ordr = np.lexsort((sel_ids, -sel_sc))
-    return sel_ids[ordr], sel_sc[ordr]
+    keys = (ids[part], -f64[part]) if ords is None else (ords[part], ids[part], -f64[part])
+    return part[np.lexsort(keys)]
 
 
+def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
+    """Exact top-k (``_topk_rows``): (ids, scores_float64) sorted (score
+    desc, docid asc)."""
+    f64 = scores.astype(np.float64)
+    sel = _topk_rows(ids, f64, k)
+    return ids[sel], f64[sel]
+
+
+_EMPTY_ORDS = np.empty(0, np.int32)
 _EMPTY_IDS = np.empty(0, np.int64)
 _EMPTY_SCORES = np.empty(0, np.float64)
 
@@ -571,7 +573,7 @@ def _segment_reader(index: Index, terms: Sequence[str],
     return read
 
 
-def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: StructType,
+def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
                       streams: Sequence[str] = ("block_data",)) -> DataFrame:
     """Slice-local per-segment execution with a data-sized output
     (IndexSearcher slices + searchLeaf, IndexSearcher.java:323-341,760):
@@ -588,49 +590,79 @@ def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: StructType
     return slice_tasks(index.spark, index.segment_files(), run_slice, schema)
 
 
-def _gather_topk(index: Index, terms: Sequence[str], run, k: int,
-                 streams: Sequence[str] = ("block_data",)):
-    """Slice-local per-segment top-k with a k-bounded output: one Python
-    job, one task per slice (session.gather_slices). Each task runs
+@dataclass(frozen=True)
+class _TopkSource:
+    """One index's part of a gathered top-k (_gather_topk): its segments
+    are read for ``terms`` plus the block ``streams``, and
     ``run(postings_pdf, deleted) -> (ids, scores, (blocks_total,
-    blocks_decoded))`` on each of its segments and cuts their hits to <= k
+    blocks_decoded))`` — the per-segment kernel — scores each one."""
+
+    index: Index
+    terms: Sequence[str]
+    run: Callable
+    streams: Sequence[str] = ("block_data",)
+
+
+def _cut(ords: list, ids: list, scores: list, k: int):
+    """Concatenate hit arrays and keep the exact top-k ``_topk_rows``
+    order (score desc, docid asc, ord asc)."""
+    ords, ids, scores = (np.concatenate(a) for a in (ords, ids, scores))
+    sel = _topk_rows(ids, scores, k, ords)
+    return ords[sel], ids[sel], scores[sel]
+
+
+def _gather_topk(sources: Sequence[Optional[_TopkSource]], k: int):
+    """Slice-local per-segment top-k with a k-bounded output: the segments
+    of every source are dealt into slices and run in one Python job, one
+    task per slice (session.gather_slices). Each task scores each of its
+    segments with its source's kernel and cuts their hits to <= k
     (per-leaf collectors); the driver merges the <= k x slices rows
-    (TopDocs.merge, TopDocs.java:203-228). Both cuts are ``_select_topk``
-    (score desc, docid asc, float64 compare), so the merge is exact and
-    driver memory is bounded by k x slices. Returns (ids, scores_float64,
-    blocks_total, blocks_decoded) summed over every segment read."""
-    read = _segment_reader(index, terms, streams)
+    (TopDocs.merge, TopDocs.java:203-228). Both cuts order (score desc,
+    docid asc, source position asc) with a float64 compare, so the merge
+    is exact and driver memory is bounded by k x slices. A ``None`` source
+    contributes nothing; with no segment to read no job runs. Returns
+    (ords, ids, scores_float64, blocks_total, blocks_decoded): each hit's
+    source position, and the counters summed over every segment read."""
+    live = {o: src for o, src in enumerate(sources) if src is not None}
+    items = [(o, sid, path) for o, src in live.items()
+             for sid, path in src.index.segment_files()]
+    if not items:
+        return _EMPTY_ORDS, _EMPTY_IDS, _EMPTY_SCORES, 0, 0
+    reads = {o: _segment_reader(src.index, src.terms, src.streams) for o, src in live.items()}
+    runs = {o: src.run for o, src in live.items()}
 
     def slice_topk(segs):
-        ids, scores, total, decoded = [_EMPTY_IDS], [_EMPTY_SCORES], 0, 0
-        for _sid, pdf, deleted in read(segs):
-            i, s, (t, d) = run(pdf, deleted)
-            ids.append(i)
-            scores.append(np.asarray(s, np.float64))
-            total, decoded = total + int(t), decoded + int(d)
-        return (*_select_topk(np.concatenate(ids), np.concatenate(scores), k), total, decoded)
+        ords, ids, scores = [_EMPTY_ORDS], [_EMPTY_IDS], [_EMPTY_SCORES]
+        total = decoded = 0
+        for o, sid, path in segs:
+            for _sid, pdf, deleted in reads[o]([(sid, path)]):
+                i, s, (t, d) = runs[o](pdf, deleted)
+                ords.append(np.full(len(i), o, np.int32))
+                ids.append(i)
+                scores.append(np.asarray(s, np.float64))
+                total, decoded = total + int(t), decoded + int(d)
+        return (*_cut(ords, ids, scores, k), total, decoded)
 
-    parts = gather_slices(index.spark, index.segment_files(), slice_topk)
-    ids, scores = _select_topk(np.concatenate([p[0] for p in parts]),
-                               np.concatenate([p[1] for p in parts]), k)
-    return ids, scores, sum(p[2] for p in parts), sum(p[3] for p in parts)
+    spark = next(iter(live.values())).index.spark
+    parts = gather_slices(spark, items, slice_topk)
+    ords, ids, scores = _cut(*([p[j] for p in parts] for j in range(3)), k)
+    return ords, ids, scores, sum(p[3] for p in parts), sum(p[4] for p in parts)
 
 
-def _hits_frame(spark: SparkSession, ids=None, scores=None,
-                metrics: Optional[Tuple[int, int]] = None) -> DataFrame:
+def _hits_frame(spark: SparkSession, ids=None, scores=None) -> DataFrame:
     """A merged top-k as a local DataFrame (a LocalTableScan: collecting
-    it runs no job); empty without ``ids``. ``metrics`` adds the
-    query's summed (blocks_total, blocks_decoded) to every row."""
+    it runs no job); empty without ``ids``."""
     import pyarrow as pa
 
-    ids = _EMPTY_IDS if ids is None else ids
-    cols = {"docid": ids, "score": _EMPTY_SCORES if scores is None else scores}
-    schema = HITS_SCHEMA
-    if metrics is not None:
-        schema = HITS_METRICS_SCHEMA
-        cols["blocks_total"] = np.full(len(ids), metrics[0], np.int64)
-        cols["blocks_decoded"] = np.full(len(ids), metrics[1], np.int64)
-    return spark.createDataFrame(pa.table(cols), schema)
+    cols = {"docid": _EMPTY_IDS if ids is None else ids,
+            "score": _EMPTY_SCORES if scores is None else scores}
+    return spark.createDataFrame(pa.table(cols), HITS_SCHEMA)
+
+
+def _topk_frame(index: Index, source: Optional[_TopkSource], k: int) -> DataFrame:
+    """One source's gathered top-k as a local (docid, score) frame."""
+    _ords, ids, scores, _, _ = _gather_topk([source], k)
+    return _hits_frame(index.spark, ids, scores)
 
 
 def decoded_postings(
@@ -1339,34 +1371,24 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
     return run
 
 
-def _clause_hits(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
-                 cursor: Optional[Tuple[float, int]] = None):
-    """Run the clause kernel on every segment and merge: (ids, scores,
-    blocks_total, blocks_decoded) of the global top-k (_gather_topk).
-    ``theta_seed`` 0.0 derives the auto seed (never in cursor mode: a
-    first-page bound is no bound for a later page); a negative value
-    disables seeding."""
+def _clause_source(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
+                   cursor: Optional[Tuple[float, int]] = None) -> Optional[_TopkSource]:
+    """The clause kernel over ``index`` as a gather source; None when the
+    plan has no clause. ``theta_seed`` 0.0 derives the auto seed (never in
+    cursor mode: a first-page bound is no bound for a later page); a
+    negative value disables seeding."""
+    if not plan.clauses:
+        return None
     if theta_seed == 0.0 and cursor is None:
         theta_seed = auto_seed_theta(index, plan, k)
-    run = make_clause_topk_fn(plan, k, theta_seed, cursor)
-    return _gather_topk(index, plan.terms, run, k)
-
-
-def _clause_topk(index: Index, plan: ClausePlan, k: int, theta_seed: float = 0.0,
-                 cursor: Optional[Tuple[float, int]] = None,
-                 with_metrics: bool = False) -> DataFrame:
-    if not plan.clauses:
-        return _hits_frame(index.spark, metrics=(0, 0) if with_metrics else None)
-    ids, scores, total, decoded = _clause_hits(index, plan, k, theta_seed, cursor)
-    return _hits_frame(index.spark, ids, scores,
-                       (total, decoded) if with_metrics else None)
+    return _TopkSource(index, plan.terms, make_clause_topk_fn(plan, k, theta_seed, cursor))
 
 
 def _clause_metrics(index: Index, plan: ClausePlan, k: int, theta_seed: float) -> dict:
     """Exact block-skip effectiveness of the plan a default call runs: the
     decode counters of every segment, summed per slice and on the
     driver."""
-    tot, dec = _clause_hits(index, plan, k, theta_seed)[2:] if plan.clauses else (0, 0)
+    tot, dec = _gather_topk([_clause_source(index, plan, k, theta_seed)], k)[3:]
     return {"blocks_total": tot, "blocks_decoded": dec, "ratio": (dec / tot) if tot else None}
 
 
@@ -1462,7 +1484,7 @@ def _explicit_seed(index: Index, plan: ClausePlan, k: int) -> float:
             if kth > 0.0:
                 return kth * PRUNE_SCALE[plan.dtype]
     sub = ClausePlan((cheapest,), (), 0, plan.sim, plan.dtype)
-    _ids, scores, _, _ = _clause_hits(index, sub, k)
+    scores = _gather_topk([_clause_source(index, sub, k)], k)[2]
     if len(scores) < k:
         return 0.0
     return float(scores[-1]) * PRUNE_SCALE[plan.dtype]
@@ -1475,12 +1497,11 @@ def search_topk(
     boost: float = 1.0,
     quantize: Optional[bool] = None,
     dtype=None,
-    with_metrics: bool = False,
     theta_seed: float = 0.0,
     similarity: Optional[str] = None,
 ) -> DataFrame:
     """Top-k of a flat query on the clause kernel (make_clause_topk_fn)
-    plus the global ordered merge.
+    plus the global ordered merge (_gather_topk).
 
     ``quantize``/``dtype`` default to None = AUTO: float32 quantized (the
     engine default) unless the query is ``tree_origin`` — a flat form the
@@ -1498,12 +1519,21 @@ def search_topk(
     "lm_dirichlet", ...); None/"bm25" keeps the default. Every registered
     similarity is monotone up in tf / down in doclen, so block-max pruning
     stays sound — bounds route through the same scorer."""
+    return _topk_frame(
+        index, _flat_source(index, q, k, boost, quantize, dtype, theta_seed, similarity), k
+    )
+
+
+def _flat_source(index: Index, q: NormalizedQuery, k: int = 10, boost: float = 1.0,
+                 quantize: Optional[bool] = None, dtype=None, theta_seed: float = 0.0,
+                 similarity: Optional[str] = None) -> Optional[_TopkSource]:
+    """search_topk's gather source (same arguments and defaults)."""
     if quantize is None:
         quantize = not getattr(q, "tree_origin", False)
     if dtype is None:
         dtype = np.float64 if getattr(q, "tree_origin", False) else np.float32
     plan = _flat_plan(index, q, boost, dtype, similarity, quantize)
-    return _clause_topk(index, plan, k, theta_seed, with_metrics=with_metrics)
+    return _clause_source(index, plan, k, theta_seed)
 
 
 def seed_theta(
@@ -1552,7 +1582,9 @@ def search_after(
     full posting list."""
     plan = _flat_plan(index, q, kw.pop("boost", 1.0), kw.pop("dtype", np.float32),
                       kw.pop("similarity", None), kw.pop("quantize", True))
-    return _clause_topk(index, plan, k, cursor=(float(after_score), int(after_docid)))
+    return _topk_frame(
+        index, _clause_source(index, plan, k, cursor=(float(after_score), int(after_docid))), k
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1679,7 +1711,8 @@ def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
         )
 
     return apply_per_segment(
-        index, terms, fn, OFFSETS_SCHEMA, streams=("block_data", "block_off"),
+        index, terms, fn, "docid long, term string, start int, end int",
+        streams=("block_data", "block_off"),
     )
 
 
@@ -1931,12 +1964,8 @@ def search_phrase(
     from .scorer import idf as _idf
 
     require_positions(index, "PhraseQuery")
-    phr = _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype,
-                          stop_words, similarity)
-    if phr is None:
-        return _hits_frame(index.spark)
-    ids, scores, _, _ = _gather_topk(index, *phr, k, streams=_PHRASE_STREAMS)
-    return _hits_frame(index.spark, ids, scores)
+    return _topk_frame(index, _phrase_source(index, phrase, slop, k, boost, quantize,
+                                             dtype, stop_words, similarity), k)
 
 
 def phrase_scores(
@@ -1951,23 +1980,26 @@ def phrase_scores(
 ) -> DataFrame:
     """ALL (docid, score) phrase matches, uncut — the tree-evaluation
     building block for PhraseQuery clauses inside nested booleans."""
-    phr = _phrase_per_seg(index, phrase, slop, None, boost, quantize, dtype,
-                          stop_words, similarity)
-    if phr is None:
+    src = _phrase_source(index, phrase, slop, None, boost, quantize, dtype,
+                         stop_words, similarity)
+    if src is None:
         return _hits_frame(index.spark)
-    terms, run = phr
+    run = src.run  # the closure must not capture the source's Index
 
     def fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
         ids, scores, _counters = run(pdf, deleted)
         return pd.DataFrame({"docid": ids, "score": scores})
 
-    return apply_per_segment(index, terms, fn, HITS_SCHEMA, streams=_PHRASE_STREAMS)
+    return apply_per_segment(index, src.terms, fn, "docid long, score double",
+                             streams=src.streams)
 
 
-def _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype, stop_words,
-                    similarity=None):
-    """(distinct terms, per-segment phrase scorer) of a phrase, or None
-    when it cannot match (fewer than two terms, or a term absent)."""
+def _phrase_source(index, phrase, slop=0, k=10, boost=1.0, quantize=True,
+                   dtype=np.float32, stop_words=None,
+                   similarity=None) -> Optional[_TopkSource]:
+    """The per-segment phrase scorer over ``index`` as a gather source
+    (search_phrase's arguments and defaults), or None when the phrase
+    cannot match (fewer than two terms, or a term absent)."""
     from collections import Counter
 
     from .scorer import idf as _idf
@@ -1992,10 +2024,11 @@ def _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype, stop_words,
         similarity, dict(Counter(t for t, _ in terms_off)), stats,
         index.field_stats, boost, quantize, dtype,
     )
-    return distinct, make_phrase_topk_fn(
+    run = make_phrase_topk_fn(
         terms_off, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
+    return _TopkSource(index, distinct, run, _PHRASE_STREAMS)
 
 
 def make_multiphrase_fn(
@@ -2324,8 +2357,7 @@ def search_multi_phrase(
         live_slots, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    ids, scores, _, _ = _gather_topk(index, distinct, run, k, streams=_PHRASE_STREAMS)
-    return _hits_frame(index.spark, ids, scores)
+    return _topk_frame(index, _TopkSource(index, distinct, run, _PHRASE_STREAMS), k)
 
 
 def blended_term_topk(
@@ -2716,7 +2748,6 @@ def search_tree_topk(
     quantize: bool = False,
     dtype=np.float64,
     similarity: Optional[str] = None,
-    with_metrics: bool = False,
     theta_seed: float = 0.0,
 ) -> Optional[DataFrame]:
     """Pruned top-k of a clause-shaped tree like ``(rare AND hot) OR med``
@@ -2730,7 +2761,7 @@ def search_tree_topk(
     plan = _tree_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return None
-    return _clause_topk(index, plan, k, theta_seed, with_metrics=with_metrics)
+    return _topk_frame(index, _clause_source(index, plan, k, theta_seed), k)
 
 
 def search_tree_after(
@@ -2749,7 +2780,9 @@ def search_tree_after(
     filtered by the cursor."""
     plan = _tree_plan(index, node, quantize, dtype, similarity)
     if plan is not None:
-        return _clause_topk(index, plan, k, cursor=(float(after_score), int(after_docid)))
+        return _topk_frame(
+            index, _clause_source(index, plan, k, cursor=(float(after_score), int(after_docid))), k
+        )
     full = search_tree(index, node, k=None, quantize=quantize, dtype=dtype,
                        similarity=similarity)
     cond = (F.col("score") < float(after_score)) | (

@@ -27,13 +27,12 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StructType
 
 from .plan import NormalizedQuery
 
 HL_SCHEMA = (
-    StructType().add("docid", "long").add("passage_start", "integer")
-    .add("passage_end", "integer").add("n_hits", "integer").add("passage_score", "double")
+    "docid long, passage_start int, passage_end int, n_hits int,"
+    " passage_score double"
 )
 
 

@@ -37,7 +37,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StructType
 
 # An interval is (start, end, inner_width).
 Interval = Tuple[int, int, int]
@@ -707,8 +706,7 @@ def batch_eval_ordered_unordered(
 # ---------------------------------------------------------------------------
 
 INTERVALS_SCHEMA = (
-    StructType().add("docid", "long").add("n_intervals", "integer")
-    .add("min_gaps", "integer").add("min_width", "integer").add("doclen", "integer")
+    "docid long, n_intervals int, min_gaps int, min_width int, doclen int"
 )
 
 

@@ -7,9 +7,11 @@ per-leaf docBase; collection/term statistics aggregate across leaves
 (IndexSearcher.termStatistics sums df/ttf over all contexts). Here each
 shard is a full index directory built on its own (per-tenant, per-day,
 per-bucket — the natural 100 TB layout), and a query runs as ONE Spark
-plan: per-shard pruned top-k subplans under shard-OVERRIDDEN global
-statistics, unioned, globally ordered. No shard's data is rewritten and
-nothing shuffles across shards except the k-row results.
+job: every shard's segments are dealt into the same slices, each scored
+by its shard's pruned kernel under shard-OVERRIDDEN global statistics,
+each slice cut to k, and the driver merges the slices (executor
+._gather_topk). No shard's data is rewritten and nothing leaves a task
+but its k-row cut.
 
 Statistics: weights (idf, p_c, ...) must come from the COMBINED corpus or
 shards would score incomparably — ``_StatsView`` wraps each shard and
@@ -30,9 +32,18 @@ from __future__ import annotations
 
 from typing import Dict, List, Sequence, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .executor import Index
+from .executor import (
+    HITS_SCHEMA,
+    Index,
+    _flat_source,
+    _gather_topk,
+    _phrase_offsets,
+    _phrase_source,
+    require_positions,
+)
 from .scorer import FieldStats
 
 
@@ -107,13 +118,28 @@ class _StatsView:
         return getattr(self._inner, name)
 
 
+def _union_topk(indexes: Sequence[Index], sources, k: int, with_shard: bool) -> DataFrame:
+    """Gather one source per shard in one job and return the global
+    (score desc, docid asc, shard asc) top-k as a local frame; the shard
+    ordinal is each source's position."""
+    import pyarrow as pa
+
+    ords, ids, scores, _, _ = _gather_topk(sources, k)
+    cols = {"docid": ids, "score": scores}
+    schema = HITS_SCHEMA
+    if with_shard:
+        cols = {"shard": ords, **cols}
+        schema = StructType([StructField("shard", IntegerType(), False), *HITS_SCHEMA.fields])
+    return indexes[0].spark.createDataFrame(pa.table(cols), schema)
+
+
 def multi_search_topk(
     indexes: Sequence[Index], q, k: int = 10, with_shard: bool = False, **kw
 ) -> DataFrame:
-    """Top-k over the logical union of the shards: per-shard pruned
-    subplans under combined statistics, one union, one global
-    (score desc, docid asc) cut — a single Spark job."""
-    from .executor import search_topk
+    """Top-k over the logical union of the shards: each shard's pruned
+    kernel under combined statistics (search_topk's arguments), every
+    shard's segments in one job, one global (score desc, docid asc, shard
+    asc) cut."""
     from .plan import NormalizedQuery
 
     if not isinstance(q, NormalizedQuery):
@@ -123,17 +149,9 @@ def multi_search_topk(
     )
     fstats = combined_field_stats(indexes)
     tstats = combined_term_stats(indexes, terms)
-    parts = []
-    for ord_, idx in enumerate(indexes):
-        view = _StatsView(idx, fstats, tstats)
-        df = search_topk(view, q, k=k, **kw)
-        parts.append(df.select(F.lit(ord_).alias("shard"), "docid", "score"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.orderBy(F.col("score").desc(), F.col("docid").asc(),
-                      F.col("shard").asc()).limit(k)
-    return out if with_shard else out.select("docid", "score")
+    sources = [_flat_source(_StatsView(idx, fstats, tstats), q, k, **kw) for idx in indexes]
+    return _union_topk(indexes, sources, k, with_shard)
+
 
 def multi_search_phrase(
     indexes: Sequence[Index], phrase, slop: int = 0, k: int = 10,
@@ -141,22 +159,14 @@ def multi_search_phrase(
 ) -> DataFrame:
     """PhraseQuery over the shard union: per-shard two-phase phrase
     matchers under combined statistics (the phrase weight sums idf over
-    the UNION corpus dfs), one union, one global cut. Same bit-parity
-    guarantee as multi_search_topk when docids are global."""
-    from .executor import _phrase_offsets, search_phrase
-
+    the UNION corpus dfs), every shard's segments in one job, one global
+    cut. Same bit-parity guarantee as multi_search_topk when docids are
+    global."""
     terms = sorted({t for t, _ in _phrase_offsets(phrase, kw.get("stop_words"))})
     fstats = combined_field_stats(indexes)
     tstats = combined_term_stats(indexes, terms)
-    parts = []
-    for ord_, idx in enumerate(indexes):
-        view = _StatsView(idx, fstats, tstats)
-        df = search_phrase(view, phrase, slop=slop, k=k, **kw)
-        parts.append(df.select(F.lit(ord_).alias("shard"), "docid", "score"))
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    out = out.orderBy(F.col("score").desc(), F.col("docid").asc(),
-                      F.col("shard").asc()).limit(k)
-    return out if with_shard else out.select("docid", "score")
-
+    sources = []
+    for idx in indexes:
+        require_positions(idx, "PhraseQuery")
+        sources.append(_phrase_source(_StatsView(idx, fstats, tstats), phrase, slop, k, **kw))
+    return _union_topk(indexes, sources, k, with_shard)

@@ -5,7 +5,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 def _default_driver_mem() -> str:
@@ -46,7 +45,7 @@ def _slices(spark: SparkSession, items: list, n_tasks: int | None) -> list:
     return [items[i::n] for i in range(n)]
 
 
-def slice_tasks(spark: SparkSession, items: list, fn, schema: StructType,
+def slice_tasks(spark: SparkSession, items: list, fn, schema: str,
                 n_tasks: int | None = None) -> DataFrame:
     """File-granular tasks, data-sized output: deal a small driver-side
     list (segment files, staged shards) into slices (``_slices``) and run
@@ -54,8 +53,7 @@ def slice_tasks(spark: SparkSession, items: list, fn, schema: StructType,
     each, in a single ``mapInPandas`` over ``spark.range``. Tasks read
     their own files (IndexSearcher slices + searchLeaf,
     IndexSearcher.java:323-341,760): no input scan, no Exchange for AQE to
-    coalesce, no JVM->Python copy of the data. ``schema`` is a prebuilt
-    StructType (a DDL string costs a py4j parse per call)."""
+    coalesce, no JVM->Python copy of the data."""
     slices = _slices(spark, items, n_tasks)
     n = len(slices)
 

@@ -20,7 +20,6 @@ Two pieces are genuinely streaming-shaped:
 
 from __future__ import annotations
 
-import functools
 import json
 import re
 
@@ -30,10 +29,6 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 # stored-query table small enough to dedup on the driver (one collect
 # replaces the 3-shuffle Spark-side dedup; ~100 B/row of driver memory)
 _DRIVER_DEDUP_QUERIES = 100_000
-
-# stored-query strings percolate_tree parses and decomposes on the driver;
-# a larger registration table takes its distributed path
-_DRIVER_TREE_QUERIES = 20_000
 
 
 def _like_regex(pattern: str) -> str:
@@ -161,13 +156,6 @@ def _verify_doc(text, index):
     return out
 
 
-# schemas are built once: a DDL string costs a py4j parse on every use
-_SID_FIELD = StructField("sid", IntegerType())
-_N_MATCHED_FIELD = StructField("n_matched", LongType())
-_REP_QID_SCHEMA = StructType().add("__rep__", "integer").add("qid", "integer")
-_SID_SHAPE_SCHEMA = StructType().add("sid", "integer").add("shape", "integer")
-
-
 def _match(docs: DataFrame, text_col: str, shapes) -> DataFrame:
     """(sid, doc_id, n_matched) of every matching (doc, clause shape) pair:
     Monitor's presearcher and CandidateMatcher in one mapInPandas pass.
@@ -181,7 +169,10 @@ def _match(docs: DataFrame, text_col: str, shapes) -> DataFrame:
     The candidate index is built on the driver and ships in the task
     closure, so the driver holds every distinct shape."""
     index = _candidate_index(shapes)
-    schema = StructType([_SID_FIELD, docs.schema["doc_id"], _N_MATCHED_FIELD])
+    schema = StructType([
+        StructField("sid", IntegerType()), docs.schema["doc_id"],
+        StructField("n_matched", LongType()),
+    ])
 
     def run(batches):
         import pandas as pd
@@ -244,7 +235,7 @@ def _driver_dedup(queries: DataFrame, shape_cols):
     uniq_rows = [(min(qids), k) for k, qids in groups.items()]
     mapping_df = queries.sparkSession.createDataFrame(
         [(min(qids), q) for qids in groups.values() for q in qids],
-        _REP_QID_SCHEMA,
+        "__rep__ int, qid int",
     )
     return uniq_rows, mapping_df
 
@@ -547,18 +538,6 @@ def _set_key(s: dict) -> str:
     ], default=list)
 
 
-@functools.lru_cache(maxsize=_DRIVER_TREE_QUERIES)
-def _decomposed(qs: str) -> tuple:
-    """``decompose_query`` of one stored query string, memoized across
-    percolate_tree calls: a registry percolates batch after batch, and
-    parsing plus decomposing it is most of a driver-side call. Bounded by
-    the driver path's own registration ceiling; callers read the clause
-    dicts and never mutate them."""
-    from .search.plan import parse_tree
-
-    return tuple(decompose_query(parse_tree(qs, stop_words=frozenset())))
-
-
 def percolate_tree(
     docs: DataFrame,
     stored,
@@ -584,13 +563,15 @@ def percolate_tree(
     — a query shape is the set of clause shapes a query decomposes to —
     and the broadcast fan-out to qids is the last operator. Returns
     (qid, doc_id) distinct."""
+    from .search.plan import parse_tree
+
     spark = docs.sparkSession
 
     if isinstance(stored, DataFrame):
         # small registration tables take the driver path outright (each
         # DISTINCT string parses once; one collect replaces the whole
         # distributed decomposition round-trip)
-        qrows = _collect_small(stored.select("qid", "query"), _DRIVER_TREE_QUERIES)
+        qrows = _collect_small(stored.select("qid", "query"), 20_000)
         if qrows is not None:
             stored = [(r["qid"], r["query"]) for r in qrows]
 
@@ -598,10 +579,15 @@ def percolate_tree(
         import pandas as pd
 
         def decomp(pdf_iter):
+            cache = {}
             for pdf in pdf_iter:
                 rows = []
                 for qid, qstr in zip(pdf["qid"], pdf["query"]):
-                    for ci, c in enumerate(_decomposed(str(qstr))):
+                    qs = str(qstr)
+                    if qs not in cache:
+                        tree = parse_tree(qs, stop_words=frozenset())
+                        cache[qs] = decompose_query(tree)
+                    for ci, c in enumerate(cache[qs]):
                         rows.append(_crow(qid, ci, c))
                 yield pd.DataFrame(
                     rows, columns=["qid", "cid", "terms", "not_terms",
@@ -644,7 +630,9 @@ def percolate_tree(
             qs = str(qstr)
             if qs not in sig_of:
                 sids = set()
-                for ci, c in enumerate(_decomposed(qs)):
+                for ci, c in enumerate(
+                    decompose_query(parse_tree(qs, stop_words=frozenset()))
+                ):
                     d = _set_dict(_crow(qid, ci, c))
                     d = sets_by_key.setdefault(_set_key(d), {**d, "sid": len(sets_by_key)})
                     sids.add(d["sid"])
@@ -653,9 +641,9 @@ def percolate_tree(
         sets = list(sets_by_key.values())
         members = spark.createDataFrame(
             [(sid, shape) for sig, shape in shape_of.items() for sid in sorted(sig)],
-            _SID_SHAPE_SCHEMA,
+            "sid int, shape int",
         )
-        qids = spark.createDataFrame(qid_rows, _REP_QID_SCHEMA)
+        qids = spark.createDataFrame(qid_rows, "__rep__ int, qid int")
     for s in sets:
         s["min_match"] = len(s["terms"])
     # a query matches when any of its clauses does: distinct (query

@@ -660,24 +660,6 @@ def test_percolate_tree_dataframe_registration(spark):
     assert a == b and a
 
 
-def test_percolate_tree_reuses_decomposition(spark, monkeypatch):
-    """A registry percolated again is not parsed again: the second call
-    parses no stored query and returns the same rows."""
-    from lucene_spark.search import plan
-    from lucene_spark.streaming import percolate_tree
-
-    ddf = spark.createDataFrame([(0, "spark join reuse"), (1, "flink reuse window")],
-                                "doc_id long, text string")
-    stored = [(1, "(spark OR flink) AND reuse"), (2, '"reuse window" -spark'),
-              (3, "reuse AND (join OR stream)"), (4, "(spark OR flink) AND reuse")]
-    first = sorted(tuple(r) for r in percolate_tree(ddf, stored).collect())
-    calls = []
-    real = plan.parse_tree
-    monkeypatch.setattr(plan, "parse_tree", lambda *a, **kw: calls.append(a) or real(*a, **kw))
-    again = sorted(tuple(r) for r in percolate_tree(ddf, stored).collect())
-    assert calls == [] and again == first == [(1, 0), (1, 1), (2, 1), (3, 0), (4, 0), (4, 1)]
-
-
 def test_percolate_dedup_fans_back_out(spark):
     """Duplicate stored-query shapes (Monitor QueryIndex dedup) yield
     per-qid results identical to unique-qid evaluation."""

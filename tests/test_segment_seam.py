@@ -28,6 +28,7 @@ from lucene_spark.search.executor import (
     search_tree_topk,
     tree_skip_metrics,
 )
+from lucene_spark.search.multireader import multi_search_phrase, multi_search_topk
 from lucene_spark.search.plan import SHOULD, QBool, QTerm, normalize, parse_tree
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -104,6 +105,15 @@ def test_one_stage_no_exchange(spark, three_seg, deleted):
                           "tree": lambda: tree_skip_metrics(idx, tree, k=5)}.items():
         m, tasks = _jobs(spark, f"seam-metrics-{name}-{deleted}", metrics)
         assert m["blocks_total"] > 0 and tasks == want_tasks, (name, tasks)
+    # a multireader deals every shard's segments into the same slices
+    shards = [three_seg[False], idx]
+    multi = {"mr_topk": lambda: multi_search_topk(shards, q, k=5),
+             "mr_phrase": lambda: multi_search_phrase(shards, ["import", "def"], k=5)}
+    for name, make in multi.items():
+        df, tasks = _jobs(spark, f"seam-{name}-{deleted}", make)
+        assert tasks == [min(6, spark.sparkContext.defaultParallelism)], (name, tasks)
+        rows, tasks = _jobs(spark, f"seam-{name}-collect-{deleted}", df.collect)
+        assert rows and tasks == [], (name, tasks)
 
 
 @pytest.fixture(scope="module")
@@ -147,6 +157,13 @@ def test_slice_cut_keeps_smallest_docids_on_ties(spark, all_ties, deleted):
             got = _rows(search(k))
             assert [d for d, _ in got] == live[:k], (name, k)
             assert len({s for _, s in got}) == 1, (name, k)
+    # the same index twice as two shards: colliding docids tie on (score,
+    # docid) and the shard ordinal orders them
+    for k in (1, 13, 200):
+        got = multi_search_topk([idx, idx], q, k=k, with_shard=True).collect()
+        assert [(r["docid"], r["shard"]) for r in got] == [
+            (d, o) for d in live for o in (0, 1)][:k], k
+        assert len({r["score"] for r in got}) == 1, k
     first = _rows(search_topk(idx, q, k=13))
     assert first[0][1] == pytest.approx(full[0][1], rel=1e-5)
     d, s = first[-1]
