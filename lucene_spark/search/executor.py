@@ -544,6 +544,26 @@ _SCORE_COLS = (
 )
 
 
+# (tombstone dir, segment_id) -> (tuple(tombstone files), sorted deleted
+# docids), kept in each reused Python worker across tasks: cloudpickle ships
+# this module-level function by reference, so the dict is the worker's own.
+# Tombstone files are write-once with UUID names and purge_deletes removes
+# them, so the file tuple identifies their content; a new tuple replaces the
+# entry, and entries never accumulate per segment.
+_TOMBSTONES: dict = {}
+
+
+def _segment_deletes(fs, tomb_dir: str, files: Sequence[str], sid: int) -> np.ndarray:
+    """``builder.segment_tombstones`` read once per worker per tombstone set."""
+    files = tuple(files)
+    hit = _TOMBSTONES.get((tomb_dir, sid))
+    if hit is None or hit[0] != files:
+        deleted = segment_tombstones(fs, files, sid)
+        deleted.flags.writeable = False  # shared by every later query
+        hit = _TOMBSTONES[(tomb_dir, sid)] = (files, deleted)
+    return hit[1]
+
+
 def _segment_reader(index: Index, terms: Sequence[str],
                     streams: Sequence[str] = ("block_data",)):
     """``read(segs)`` for a slice task: yields ``(segment_id, postings_pdf,
@@ -552,7 +572,7 @@ def _segment_reader(index: Index, terms: Sequence[str],
     prunes row groups, and only the skip metadata plus ``streams`` are read
     — along with its OWN tombstones (per-segment liveDocs,
     PendingDeletes.java:31; nothing is materialized on the driver or
-    captured in closures)."""
+    captured in closures), read once per worker (``_segment_deletes``)."""
     paths, tombs, terms = index.paths, index.tombstone_files, list(terms)
     cols = list(_SCORE_COLS) + [s for s in streams if s not in _SCORE_COLS]
 
@@ -567,7 +587,7 @@ def _segment_reader(index: Index, terms: Sequence[str],
             )
             if tbl.num_rows == 0:
                 continue
-            deleted = segment_tombstones(paths.fs, tombs, sid) if tombs else None
+            deleted = _segment_deletes(paths.fs, paths.tombstones, tombs, sid) if tombs else None
             yield sid, tbl.to_pandas(), deleted
 
     return read

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,8 +82,40 @@ def gather_slices(spark: SparkSession, items: list, fn) -> list:
     return rdd.mapPartitions(lambda ids: [fn(slices[i]) for i in ids]).collect()
 
 
+# Linux sun_path holds 107 bytes and Spark names each socket
+# "<dir>/.<uuid>.sock", 43 bytes after the directory, so the directory may
+# be 64 bytes long; Spark's own check on spark.python.unix.domain.socket.dir
+# (run when the first Python task starts) allows at most 61.
+_SOCK_DIR_MAX = 61
+_sock_dir: str | None = None
+
+
+def _socket_dir() -> str:
+    """This process's private directory for the Python workers' Unix domain
+    sockets, made on first use and removed at exit (a process that dies
+    without ``spark.stop()`` would otherwise leave its ``.<uuid>.sock``
+    files behind). Under the temp directory when the path fits, else under
+    /tmp: in a long TMPDIR / java.io.tmpdir, SparkContext start-up fails
+    with "AF_UNIX path too long", and a directory of 62-64 characters
+    fails the first Python task on Spark's check."""
+    global _sock_dir
+    if _sock_dir is None:
+        base = tempfile.gettempdir()
+        # mkdtemp appends "/lsuds-" plus 8 random characters
+        if len(base) + 15 > _SOCK_DIR_MAX:
+            base = "/tmp"
+        _sock_dir = tempfile.mkdtemp(prefix="lsuds-", dir=base)
+        atexit.register(shutil.rmtree, _sock_dir, True)
+    return _sock_dir
+
+
 def get_spark(app: str = "lucene_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """The session every entry point runs on. The builder chain below sets
+    scale defaults (shuffle width, driver heap, split sizes, scratch dir)
+    and how Python runs: workers fork from ``lucene_spark.daemon`` and talk
+    to the JVM over Unix domain sockets in this process's private
+    ``_socket_dir()``."""
     # Python workers inherit this env: keep large numpy/pandas buffers
     # inside the process between tasks instead of munmap/re-fault cycles —
     # with 32 concurrent workers the kernel page-zeroing otherwise
@@ -121,6 +156,13 @@ def get_spark(app: str = "lucene_spark", master: str | None = None,
         # plus a gate on CPython < 3.13's per-task zip directory re-reads
         # (~150 ms of every Python task on a 4-core host; daemon.py)
         .config("spark.python.daemon.module", "lucene_spark.daemon")
+        # the JVM talks to Python workers, the accumulator server and the
+        # local-data servers over Unix domain sockets: Spark sets no
+        # TCP_NODELAY on those connections, and over TCP Nagle plus the
+        # 40 ms delayed ACK stalled every Python task twice (a no-op task's
+        # median ran 63 ms over TCP, 19 ms here, on a 4-core host)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
     )
     # s3mock:// scheme for the cluster-shaped smoke test: Spark serves the
     # scheme via a RawLocalFileSystem subclass (tiny committed jar); the

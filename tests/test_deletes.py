@@ -60,6 +60,43 @@ def test_delete_keeps_stats_until_purge(deletable_index):
             assert s == before[d]
 
 
+def test_later_deletes_reach_cached_tombstones(spark, tmp_path):
+    """Workers keep each segment's tombstones across queries, keyed on the
+    tombstone file set: a delete between two searches in one session must
+    reach the second search, never a stale cached array."""
+    from lucene_spark.corpus import corpus_spark_df
+    from lucene_spark.index.builder import IndexConfig, build_index
+    from lucene_spark.search import executor
+    from lucene_spark.search.executor import Index, search_exhaustive, search_topk
+
+    # one segment, so every query is one task and the reused workers take
+    # turns: after a few searches each of them holds the segment's entry
+    cfg = IndexConfig(num_segments=1)
+    idx = Index(spark, build_index(spark, corpus_spark_df(spark, 200, seed=21), str(tmp_path), cfg))
+    q = normalize(should=["import"])
+    ranked = lambda df: [(r["docid"], r["score"]) for r in df.collect()]
+    first = ranked(search_topk(idx, q, k=10))
+    idx.delete_docs([first[0][0]])
+    for _ in range(8):
+        second = ranked(search_topk(idx, q, k=10))
+    assert first[0][0] not in {d for d, _ in second}
+    idx.delete_docs([second[0][0]])
+    third = ranked(search_topk(idx, q, k=10))
+    want = ranked(search_exhaustive(idx, q, k=10, quantize=True, dtype=np.float32))
+    assert [d for d, _ in third] == [d for d, _ in want]
+    assert [s for _, s in third] == pytest.approx([s for _, s in want], rel=1e-6)
+    assert not {first[0][0], second[0][0]} & {d for d, _ in third}
+
+    # the same key on the driver: one read per file set, a new set replaces it
+    (sid, _), = idx.segment_files()
+    read = lambda: executor._segment_deletes(idx.paths.fs, idx.paths.tombstones,
+                                             idx.tombstone_files, sid)
+    held = read()
+    assert read() is held and set(held) == set(idx.deleted)
+    idx.delete_docs([third[0][0]])
+    assert set(read()) == set(idx.deleted) == set(held) | {third[0][0]}
+
+
 def test_delete_by_term(deletable_index):
     from lucene_spark.search.executor import count_hits
 

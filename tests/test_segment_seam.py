@@ -8,6 +8,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -270,6 +271,49 @@ def test_worker_runs_gated_invalidate_caches(spark):
     assert rows[0]["gated"] == (sys.version_info < (3, 13))
 
 
+def test_workers_use_unix_domain_sockets(spark):
+    """Python tasks reach the JVM over Unix domain sockets in the session's
+    socket directory, on the gather path (a Python RDD job) and in
+    mapInPandas; the directory leaves room for Spark's socket names."""
+    def transport():
+        return (os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED"),
+                os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR"))
+
+    def probe(batches):
+        for _ in batches:
+            yield pd.DataFrame([transport()], columns=["enabled", "sock_dir"])
+
+    sock_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    rdd = spark.sparkContext.parallelize(range(2), 2).mapPartitions(lambda _: [transport()])
+    sql = spark.range(1, numPartitions=1).mapInPandas(probe, "enabled string, sock_dir string")
+    for enabled, got_dir in rdd.collect() + [tuple(r) for r in sql.collect()]:
+        assert enabled == "True"
+        assert got_dir == sock_dir
+    assert len(sock_dir) + 43 <= 107  # "/.<uuid>.sock" within sun_path
+    assert len(sock_dir) <= 61  # Spark's check on the socket-dir setting
+
+
+@pytest.mark.parametrize("base_len, under_tmpdir", [(46, True), (47, False)])
+def test_socket_dir_fits_spark_limit(monkeypatch, base_len, under_tmpdir):
+    """The socket directory goes under the temp directory exactly when the
+    path fits Spark's 61-character limit, and under /tmp otherwise."""
+    from lucene_spark import session
+
+    root = tempfile.mkdtemp(prefix="sockdir-", dir="/tmp")
+    base = os.path.join(root, "d" * (base_len - len(root) - 1))
+    os.mkdir(base)
+    monkeypatch.setattr(tempfile, "tempdir", base)
+    monkeypatch.setattr(session, "_sock_dir", None)
+    try:
+        made = session._socket_dir()
+        assert os.path.dirname(made) == (base if under_tmpdir else "/tmp")
+        assert len(made) <= 61 and session._socket_dir() == made
+        if not under_tmpdir:
+            os.rmdir(made)
+    finally:
+        shutil.rmtree(root)
+
+
 @pytest.mark.skipif(sys.version_info >= (3, 13),
                     reason="CPython 3.13 invalidates zip caches lazily; no gate")
 def test_gate_rereads_only_rewritten_archives(tmp_path, monkeypatch):
@@ -317,3 +361,40 @@ def test_startup_outside_repo(tmp_path):
                          capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
     assert "HITS [0]" in out.stdout, out.stdout
+
+
+def test_startup_under_long_tmpdir(tmp_path):
+    """A TMPDIR and java.io.tmpdir too long for a Unix socket path: the
+    session still starts, indexes, searches and percolates, and its socket
+    directory is gone once the process exits."""
+    long_tmp = tmp_path / ("t" * 50) / ("u" * 50)
+    long_tmp.mkdir(parents=True)
+    assert len(str(long_tmp)) >= 100
+    script = (
+        "from lucene_spark.session import _socket_dir, get_spark\n"
+        "from lucene_spark.index.builder import IndexConfig, build_index\n"
+        "from lucene_spark.search.executor import Index, search_topk\n"
+        "from lucene_spark.search.plan import normalize\n"
+        "from lucene_spark.streaming import percolate_batch\n"
+        "spark = get_spark('long-tmp', master='local[1]')\n"
+        "print('SOCKDIR', _socket_dir())\n"
+        "df = spark.createDataFrame([(0, 'alpha beta'), (1, 'alpha')], 'doc_id long, content string')\n"
+        "cfg = IndexConfig(docid_col='doc_id', content_col='content', num_segments=1, order_cols=('doc_id',))\n"
+        "idx = Index(spark, build_index(spark, df, 'idx', cfg))\n"
+        "print('HITS', [r['docid'] for r in search_topk(idx, normalize(should=['beta'], pre_analyzed=True), k=5).collect()])\n"
+        "qs = spark.createDataFrame([(7, ['beta'], 1)], 'qid int, terms array<string>, min_match int')\n"
+        "docs = df.withColumnRenamed('content', 'text')\n"
+        "print('MATCH', [(r['qid'], r['doc_id']) for r in percolate_batch(docs, qs).collect()])\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(long_tmp),
+               PYSPARK_SUBMIT_ARGS=f'--driver-java-options "-Djava.io.tmpdir={long_tmp}" pyspark-shell',
+               PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "HITS [0]" in out.stdout and "MATCH [(7, 0)]" in out.stdout, out.stdout
+    sock_dir = out.stdout.split("SOCKDIR ", 1)[1].split()[0]
+    assert os.path.basename(sock_dir).startswith("lsuds-")
+    assert not os.path.exists(sock_dir)
+    assert not list(tmp_path.rglob("*.sock")) and not list(tmp_path.rglob("lsuds-*"))
