@@ -830,23 +830,29 @@ def search_exhaustive(
 # Per-segment block-max top-k: one clause kernel for every boolean shape
 # ---------------------------------------------------------------------------
 
+def _select_blocks(row, sel: Optional[np.ndarray], counters: List[int]) -> np.ndarray:
+    """Indices of a term row's blocks that intersect the sorted candidate
+    docids ``sel`` (every block when ``sel`` is None), counted into
+    ``counters`` as [blocks seen, blocks kept] (advanceShallow/block-skip
+    analog, ImpactsDISI.java:67-80)."""
+    bf = np.asarray(row["block_first"], dtype=np.int64)
+    counters[0] += len(bf)
+    if sel is None:
+        keep = np.arange(len(bf))
+    else:
+        bl = np.asarray(row["block_last"], dtype=np.int64)
+        keep = np.flatnonzero(np.searchsorted(sel, bl, "right") > np.searchsorted(sel, bf, "left"))
+    counters[1] += len(keep)
+    return keep
+
+
 def _decode_rows(row, sel: Optional[np.ndarray], counters: List[int]):
     """Decode a term's blocks, optionally only blocks intersecting the
-    sorted candidate docids `sel` (advanceShallow/block-skip analog,
-    ImpactsDISI.java:67-80)."""
-    bf = np.asarray(row["block_first"], dtype=np.int64)
-    bl = np.asarray(row["block_last"], dtype=np.int64)
-    data = row["block_data"]
-    counters[0] += len(bf)
-    if sel is not None:
-        lo = np.searchsorted(sel, bf, "left")
-        hi = np.searchsorted(sel, bl, "right")
-        keep = np.flatnonzero(hi > lo)
-    else:
-        keep = np.arange(len(bf))
-    counters[1] += len(keep)
+    sorted candidate docids `sel` (_select_blocks): (ids, tfs, doclens)."""
+    keep = _select_blocks(row, sel, counters)
     if len(keep) == 0:
         return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
+    data = row["block_data"]
     parts = [decode_block(bytes(data[i])) for i in keep]
     return tuple(np.concatenate(x) for x in zip(*parts))
 
@@ -1614,41 +1620,23 @@ def search_after(
 def _decode_rows_pos(row, sel: Optional[np.ndarray], counters: List[int]):
     """Like _decode_rows but also decodes the positions stream of the kept
     blocks (two-phase verify: position decode only touches blocks holding
-    candidates, TwoPhaseIterator.java:31)."""
-    bf = np.asarray(row["block_first"], dtype=np.int64)
-    bl = np.asarray(row["block_last"], dtype=np.int64)
+    candidates, TwoPhaseIterator.java:31): (ids, tfs, doclens, positions)."""
+    from ..functions.codec import decode_block_positions
+
     data, pdata = row["block_data"], row["block_pos"]
     if pdata is None or (isinstance(pdata, float) and np.isnan(pdata)):
         raise ValueError(
             "index was built without position data; cannot run PhraseQuery "
             "(rebuild with IndexConfig(index_positions=True))"
         )
-    counters[0] += len(bf)
-    if sel is not None:
-        lo = np.searchsorted(sel, bf, "left")
-        hi = np.searchsorted(sel, bl, "right")
-        keep = np.flatnonzero(hi > lo)
-    else:
-        keep = np.arange(len(bf))
-    counters[1] += len(keep)
-    z = np.empty(0, np.int64)
+    keep = _select_blocks(row, sel, counters)
     if len(keep) == 0:
-        return z, z, z, z
-    ids_l, tfs_l, dls_l, pos_l = [], [], [], []
+        return tuple(np.empty(0, np.int64) for _ in range(4))
+    parts = []
     for i in keep:
         ids, tfs, dls = decode_block(bytes(data[i]))
-        from ..functions.codec import decode_block_positions
-
-        pos_l.append(decode_block_positions(bytes(pdata[i]), tfs))
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-        dls_l.append(dls)
-    return (
-        np.concatenate(ids_l),
-        np.concatenate(tfs_l),
-        np.concatenate(dls_l),
-        np.concatenate(pos_l),
-    )
+        parts.append((ids, tfs, dls, decode_block_positions(bytes(pdata[i]), tfs)))
+    return tuple(np.concatenate(x) for x in zip(*parts))
 
 
 def _decode_rows_off(row, sel: Optional[np.ndarray], counters: List[int]):
@@ -1657,39 +1645,20 @@ def _decode_rows_off(row, sel: Optional[np.ndarray], counters: List[int]):
     occurrence (IndexOptions ..._AND_OFFSETS read path)."""
     from ..functions.codec import decode_block_offsets
 
-    bf = np.asarray(row["block_first"], dtype=np.int64)
-    bl = np.asarray(row["block_last"], dtype=np.int64)
     data, odata = row["block_data"], row.get("block_off") if hasattr(row, "get") else row["block_off"]
     if odata is None or (isinstance(odata, float) and np.isnan(odata)):
         raise ValueError(
             "index was built without offset data; rebuild with "
             "IndexConfig(index_offsets=True) or use the analysis offset source"
         )
-    counters[0] += len(bf)
-    if sel is not None:
-        lo = np.searchsorted(sel, bf, "left")
-        hi = np.searchsorted(sel, bl, "right")
-        keep = np.flatnonzero(hi > lo)
-    else:
-        keep = np.arange(len(bf))
-    counters[1] += len(keep)
-    z = np.empty(0, np.int64)
+    keep = _select_blocks(row, sel, counters)
     if len(keep) == 0:
-        return z, z, z, z
-    ids_l, tfs_l, st_l, en_l = [], [], [], []
+        return tuple(np.empty(0, np.int64) for _ in range(4))
+    parts = []
     for i in keep:
         ids, tfs, _dls = decode_block(bytes(data[i]))
-        st, en = decode_block_offsets(bytes(odata[i]), tfs)
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-        st_l.append(st)
-        en_l.append(en)
-    return (
-        np.concatenate(ids_l),
-        np.concatenate(tfs_l),
-        np.concatenate(st_l),
-        np.concatenate(en_l),
-    )
+        parts.append((ids, tfs, *decode_block_offsets(bytes(odata[i]), tfs)))
+    return tuple(np.concatenate(x) for x in zip(*parts))
 
 
 def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
@@ -1754,194 +1723,201 @@ def _phrase_offsets(phrase, stop_words) -> List[Tuple[str, int]]:
     return [(t, o - base) for t, o in pairs]
 
 
-def make_phrase_topk_fn(
-    terms_off: Sequence[Tuple[str, int]],
+def make_phrase_fn(
+    slots: Sequence[Tuple[int, Tuple[str, ...]]],
     weight: float,
-    k: int,
+    k: Optional[int],
     slop: int,
     avgdl: float,
     quantize: bool,
     dtype,
     sim=None,
 ):
-    """Per-segment phrase scorer: conjunction approximation over docids
-    (positions untouched), then position decode + exact/sloppy matcher on
-    surviving candidates only (PhraseScorer.twoPhaseIterator analog)."""
-    from ..functions.phrase import sloppy_2term_doc_freqs, sloppy_phrase_freq
+    """Per-segment scorer for PhraseQuery and MultiPhraseQuery (one matcher
+    pair, ExactPhraseMatcher.java:149 / SloppyPhraseMatcher.java:205).
+    ``slots`` = [(offset, (alternatives...))]: a slot matches where ANY of
+    its alternatives occurs (UnionPostingsEnum, MultiPhraseQuery.java:412);
+    a PhraseQuery has one alternative per slot. Phase 1 intersects docids
+    over the distinct alternative sets, rarest first (positions untouched);
+    phase 2 decodes positions of candidate blocks only and runs the matcher
+    the slot shape picks (PhraseScorer.twoPhaseIterator analog):
 
-    distinct = sorted({t for t, _ in terms_off})
+    - slop 0: one intersection of fused (doc, position - offset) keys;
+    - two one-alternative slots on distinct terms: the batched 2-term
+      chain (sloppy_2term_doc_freqs);
+    - no term shared across slots: the batched n-term walk over the slots'
+      position unions (sloppy_nterm_doc_freqs);
+    - repeating terms, one alternative per slot: the batched rptGroups walk
+      (sloppy_rpt_doc_freqs);
+    - otherwise, or when an offset is >= 256 (the batched walks order pps
+      by ``position * 256 + offset``), the per-doc greedy walk
+      (sloppy_phrase_freq) with union-find repeat groups over slots sharing
+      a term (gatherRptGroups, SloppyPhraseMatcher.java:556-609) and the
+      multi-term init when a repeating slot has several alternatives."""
+    from ..functions.phrase import (
+        sloppy_2term_doc_freqs, sloppy_nterm_doc_freqs, sloppy_phrase_freq,
+        sloppy_rpt_doc_freqs,
+    )
+
+    offs = [int(o) for o, _ in slots]
     POS_BASE = np.int64(1) << np.int64(22)  # fused (doc, adjusted-pos) key space
+    parent = list(range(len(slots)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first_slot: Dict[str, int] = {}
+    for si, (_, alts) in enumerate(slots):
+        for t in alts:
+            parent[find(si)] = find(first_slot.setdefault(t, si))
+    by_root: Dict[int, list] = {}
+    for si in range(len(slots)):
+        by_root.setdefault(find(si), []).append(si)
+    groups = [g for g in by_root.values() if len(g) > 1]
+    multi_term = any(len(slots[si][1]) > 1 for g in groups for si in g)
+    single = all(len(alts) == 1 for _, alts in slots)
+
+    def fused(t, per_term, off, base, shift=0):
+        """A term's (doc - base, position - off + shift) fused keys and
+        its adjusted positions."""
+        ids, tfs, pos = per_term[t]
+        if len(pos) and int(pos.max()) + shift + 1 >= int(POS_BASE):
+            raise ValueError("document positions exceed fused-key space")
+        adj = pos - np.int64(off - shift)
+        return (np.repeat(ids, tfs) - base) * POS_BASE + adj, adj
+
+    def exact(cand, slot_alts, per_term):
+        base = int(cand[0])  # rebase so fused keys fit int64 at any scale
+        keys = None
+        for off, alts in zip(offs, slot_alts):
+            ks = [kt[adj >= 0] for kt, adj in (fused(t, per_term, off, base) for t in alts)]
+            # alternatives CAN share a position (index-time synonym
+            # stacking): the union dedups like UnionPostingsEnum
+            # (MultiPhraseQuery.java:475) before the assume_unique intersect
+            slot_keys = ks[0] if len(ks) == 1 else np.unique(np.concatenate(ks))
+            keys = slot_keys if keys is None else np.intersect1d(
+                keys, slot_keys, assume_unique=True
+            )
+            if len(keys) == 0:
+                return _EMPTY_IDS, _EMPTY_SCORES
+        docs, cnts = np.unique(keys // POS_BASE, return_counts=True)
+        return np.searchsorted(cand, docs + base), cnts
+
+    def two_term(cand, slot_alts, per_term):
+        # shifting by the max offset keeps adjusted positions non-negative
+        base, shift = int(cand[0]), max(offs)
+        (ka, _), (kb, _) = (fused(t, per_term, off, base, shift)
+                            for off, (t,) in zip(offs, slot_alts))
+        docs, freqs = sloppy_2term_doc_freqs(ka, kb, int(POS_BASE), slop, dtype=dtype)
+        return np.searchsorted(cand, docs + base), freqs
+
+    def slot_lists(cand, slot_alts, per_term):
+        """Per slot: every candidate's positions (the union of the slot's
+        alternatives, ascending per doc) and per-doc bounds into them."""
+        plists, bounds = [], []
+        for alts in slot_alts:
+            if len(alts) == 1:  # every candidate holds the slot's one term
+                _ids, tfs, pos = per_term[alts[0]]
+                cnts = tfs
+            else:
+                ci = np.concatenate([
+                    np.repeat(np.searchsorted(cand, per_term[t][0]), per_term[t][1])
+                    for t in alts
+                ])
+                pos = np.concatenate([per_term[t][2] for t in alts])
+                pos = pos[np.lexsort((pos, ci))]
+                cnts = np.bincount(ci, minlength=len(cand))
+            plists.append(pos)
+            bounds.append(np.concatenate(([0], np.cumsum(cnts))))
+        return plists, bounds
+
+    def nterm(cand, slot_alts, per_term):
+        return sloppy_nterm_doc_freqs(*slot_lists(cand, slot_alts, per_term), offs, slop,
+                                      dtype=dtype)
+
+    def rpt(cand, slot_alts, per_term):
+        plists, bounds = slot_lists(cand, slot_alts, per_term)
+        return sloppy_rpt_doc_freqs(plists, bounds, offs, slop, groups, dtype=dtype)
+
+    def walk(cand, slot_alts, per_term):
+        plists, bounds = slot_lists(cand, slot_alts, per_term)
+        rows_l, freqs_l = [], []
+        for i in range(len(cand)):
+            f = sloppy_phrase_freq(
+                [p[b[i] : b[i + 1]] for p, b in zip(plists, bounds)], offs, slop,
+                dtype=dtype, groups=groups, multi_term=multi_term,
+            )
+            if f > 0:
+                rows_l.append(i)
+                freqs_l.append(float(f))
+        return np.array(rows_l, dtype=np.int64), np.array(freqs_l, dtype=np.float64)
+
+    if slop == 0:
+        match = exact
+    elif single and len(slots) == 2 and not groups:
+        match = two_term
+    elif max(offs) >= 256:
+        match = walk
+    elif not groups:
+        match = nterm
+    else:
+        match = rpt if single else walk
 
     def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
         counters = [0, 0]
-        z = np.empty(0, np.int64)
+        none = (_EMPTY_IDS, _EMPTY_SCORES, counters)
         rows: Dict[str, list] = {}
         for r in pdf.to_dict("records"):
             rows.setdefault(r["term"], []).append(r)
         for t in rows:
             rows[t].sort(key=lambda r: r["first_docid"])
-        if any(t not in rows for t in distinct):
-            return z, z.astype(np.float64), counters
+        slot_alts = [tuple(t for t in alts if t in rows) for _, alts in slots]
+        if not all(slot_alts):
+            return none
 
-        # --- phase 1: conjunction on docids, rarest term leads
-        order = sorted(distinct, key=lambda t: sum(int(r["df"]) for r in rows[t]))
+        # --- phase 1: conjunction on docids over the distinct alternative
+        # sets (a repeated phrase term is decoded once), rarest first
         cand = None
-        for t in order:
-            parts = [_decode_rows(r, cand, counters) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            if cand is not None and len(ids):
-                m = cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids
-                ids = ids[m]
-            cand = ids if cand is None else np.intersect1d(cand, ids, assume_unique=True)
+        df = {t: sum(int(r["df"]) for r in rows[t]) for t in rows}
+        for alts in sorted(set(slot_alts), key=lambda a: (sum(df[t] for t in a), a)):
+            union = None
+            for t in alts:
+                ids = np.concatenate([_decode_rows(r, cand, counters)[0] for r in rows[t]])
+                if cand is not None and len(ids):
+                    ids = ids[cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids]
+                union = ids if union is None else np.union1d(union, ids)
+            cand = union if cand is None else np.intersect1d(cand, union, assume_unique=True)
             if len(cand) == 0:
-                return z, z.astype(np.float64), counters
+                return none
         live = _live_mask(cand, deleted)
         if live is not None:
             cand = cand[live]
         if len(cand) == 0:
-            return z, z.astype(np.float64), counters
+            return none
 
         # --- phase 2: decode positions for candidate blocks only
         per_term: Dict[str, tuple] = {}
-        doclens = None
-        for t in distinct:
+        doclens = np.zeros(len(cand), dtype=np.int64)
+        for t in sorted({t for alts in slot_alts for t in alts}):
             parts = [_decode_rows_pos(r, cand, counters) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            pos = np.concatenate([p[3] for p in parts])
-            m = cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids
-            pos = pos[np.repeat(m, tfs)]
-            ids, tfs, dls = ids[m], tfs[m], dls[m]
-            per_term[t] = (ids, tfs, pos)
-            if doclens is None:
-                doclens = dls  # any term's postings carry the doc's length
-        assert doclens is not None and all(
-            len(per_term[t][0]) == len(cand) for t in distinct
-        )
+            ids, tfs, dls, pos = (np.concatenate(x) for x in zip(*parts))
+            j = np.searchsorted(cand, ids)
+            m = cand[j.clip(max=len(cand) - 1)] == ids
+            doclens[j[m]] = dls[m]
+            per_term[t] = (ids[m], tfs[m], pos[np.repeat(m, tfs)])
 
-        # --- matcher: phraseFreq per candidate doc
-        if slop == 0:
-            base = int(cand[0])  # rebase so fused keys fit int64 at any scale
-            keys = None
-            for t, off in terms_off:
-                ids, tfs, pos = per_term[t]
-                if len(pos) and int(pos.max()) + 1 >= int(POS_BASE):
-                    raise ValueError("document positions exceed fused-key space")
-                adj = pos - np.int64(off)
-                kt = (np.repeat(ids, tfs) - base) * POS_BASE + adj
-                kt = kt[adj >= 0]
-                keys = kt if keys is None else np.intersect1d(keys, kt, assume_unique=True)
-                if len(keys) == 0:
-                    return z, z.astype(np.float64), counters
-            docs, cnts = np.unique(keys // POS_BASE, return_counts=True)
-            docs = docs + base
-            sel = np.searchsorted(cand, docs)
-            freqs = cnts.astype(np.float64)
-            dls_m = doclens[sel]
-        elif len(terms_off) == 2 and terms_off[0][0] != terms_off[1][0]:
-            # --- vectorized 2-distinct-term sloppy matcher: one batched
-            # merged-boundary pass over ALL candidate docs (no per-doc
-            # Python walk; see sloppy_2term_doc_freqs). Fused keys shift
-            # adjusted positions by max offset so they stay non-negative.
-            base = int(cand[0])
-            shift = np.int64(max(o for _, o in terms_off))
-            fused = []
-            for t, off in terms_off:
-                ids, tfs, pos = per_term[t]
-                if len(pos) and int(pos.max()) + int(shift) + 1 >= int(POS_BASE):
-                    raise ValueError("document positions exceed fused-key space")
-                adj = pos - np.int64(off) + shift
-                fused.append((np.repeat(ids, tfs) - base) * POS_BASE + adj)
-            docs, freqs32 = sloppy_2term_doc_freqs(
-                fused[0], fused[1], int(POS_BASE), slop, dtype=dtype
-            )
-            if len(docs) == 0:
-                return z, z.astype(np.float64), counters
-            docs = docs + base
-            sel = np.searchsorted(cand, docs)
-            freqs = freqs32.astype(np.float64)
-            dls_m = doclens[sel]
-        elif (
-            len({t for t, _ in terms_off}) == len(terms_off)
-            and max(o for _, o in terms_off) < 256
-        ):
-            # offset < 256 keeps the (pos, off) key fusion exact; longer
-            # phrases (offsets >= 256) take the per-doc walk below
-            # --- batched n-distinct-term sloppy matcher: the synchronized
-            # micro-step walk runs every candidate doc through the exact
-            # greedy pq traversal simultaneously (sloppy_nterm_doc_freqs;
-            # no per-candidate-doc Python loop, VERDICT r3 wrong#4)
-            from ..functions.phrase import sloppy_nterm_doc_freqs
-
-            plists = [per_term[t][2] for t, _ in terms_off]
-            bnds = [
-                np.concatenate(([0], np.cumsum(per_term[t][1])))
-                for t, _ in terms_off
-            ]
-            offs = [o for _, o in terms_off]
-            rows_i, freqs_d = sloppy_nterm_doc_freqs(
-                plists, bnds, offs, slop, dtype=dtype
-            )
-            if len(rows_i) == 0:
-                return z, z.astype(np.float64), counters
-            docs = cand[rows_i]
-            freqs = freqs_d.astype(np.float64)
-            dls_m = doclens[rows_i]
-        else:
-            # repeating phrase terms (rptGroups, simple case — every pp is
-            # one term so group members share ONE positions list)
-            bounds = {
-                t: np.concatenate(([0], np.cumsum(per_term[t][1])))
-                for t in distinct
-            }
-            offs = [o for _, o in terms_off]
-            tlist = [t for t, _ in terms_off]
-            members: Dict[str, list] = {}
-            for i, t in enumerate(tlist):
-                members.setdefault(t, []).append(i)
-            groups = [g for g in members.values() if len(g) > 1]
-            if max(offs) < 256:
-                # batched rptGroups walk: the synchronized micro-step
-                # machinery + vectorized collision chains — no
-                # per-candidate-doc Python (sloppy_rpt_doc_freqs,
-                # bit-identical randomized differential vs the scalar walk)
-                from ..functions.phrase import sloppy_rpt_doc_freqs
-
-                plists = [per_term[t][2] for t, _ in terms_off]
-                bnds = [bounds[t] for t, _ in terms_off]
-                rows_i, freqs_d = sloppy_rpt_doc_freqs(
-                    plists, bnds, offs, slop, groups, dtype=dtype
-                )
-                if len(rows_i) == 0:
-                    return z, z.astype(np.float64), counters
-                docs = cand[rows_i]
-                freqs = freqs_d.astype(np.float64)
-                dls_m = doclens[rows_i]
-            else:
-                docs_l, freqs_l, dls_l = [], [], []
-                for i, d in enumerate(cand):
-                    plists = []
-                    for t, _ in terms_off:
-                        b = bounds[t]
-                        plists.append(per_term[t][2][b[i] : b[i + 1]])
-                    f = sloppy_phrase_freq(plists, offs, slop, dtype=dtype, terms=tlist)
-                    if f > 0:
-                        docs_l.append(d)
-                        freqs_l.append(float(f))
-                        dls_l.append(doclens[i])
-                if not docs_l:
-                    return z, z.astype(np.float64), counters
-                docs = np.array(docs_l, dtype=np.int64)
-                freqs = np.array(freqs_l, dtype=np.float64)
-                dls_m = np.array(dls_l, dtype=np.int64)
-
+        rows_i, freqs = match(cand, slot_alts, per_term)
+        if len(rows_i) == 0:
+            return none
+        freqs, dls_m = np.asarray(freqs, dtype=np.float64), doclens[rows_i]
         if sim is not None:
             scores = sim.phrase_score(freqs, dls_m)
         else:
             scores = score_arrays(freqs, dls_m, weight, avgdl, quantize, dtype)
-        sel_ids, sel_sc = _select_topk(docs, scores, k)
-        return sel_ids, sel_sc, counters
+        return (*_select_topk(cand[rows_i], scores, k), counters)
 
     return run
 
@@ -1981,8 +1957,6 @@ def search_phrase(
     holes preserved), a term list, or [(term, offset)] pairs. A non-BM25
     ``similarity`` scores the phrase freq through the Similarity seam
     (one SimScorer per term occurrence, summed — MultiSimilarity analog)."""
-    from .scorer import idf as _idf
-
     require_positions(index, "PhraseQuery")
     return _topk_frame(index, _phrase_source(index, phrase, slop, k, boost, quantize,
                                              dtype, stop_words, similarity), k)
@@ -2017,244 +1991,45 @@ def phrase_scores(
 def _phrase_source(index, phrase, slop=0, k=10, boost=1.0, quantize=True,
                    dtype=np.float32, stop_words=None,
                    similarity=None) -> Optional[_TopkSource]:
-    """The per-segment phrase scorer over ``index`` as a gather source
-    (search_phrase's arguments and defaults), or None when the phrase
-    cannot match (fewer than two terms, or a term absent)."""
+    """A PhraseQuery (search_phrase's arguments and defaults) lowered to
+    one-alternative slots (_slots_source); None when the phrase has fewer
+    than two terms."""
+    terms_off = _phrase_offsets(phrase, stop_words)
+    if len(terms_off) < 2:
+        return None
+    return _slots_source(index, [(o, (t,)) for t, o in terms_off], slop, k, boost,
+                         quantize, dtype, similarity)
+
+
+def _slots_source(index, slots, slop, k, boost, quantize, dtype,
+                  similarity) -> Optional[_TopkSource]:
+    """The phrase kernel (make_phrase_fn) over ``index`` as a gather source.
+    ``slots`` = [(offset, (alternatives...))]; an alternative absent from
+    the index is ignored, and None is returned when a slot has none left
+    (it can never match). weight = boost * Σ idf over every existing
+    alternative in slot order: one TermStatistics per term occurrence, so
+    a repeated phrase term counts once per position (PhraseQuery's
+    termStats, MultiPhraseQuery's allTermStats, MultiPhraseQuery.java:
+    228-236). A non-BM25 ``similarity`` scores the phrase freq with one
+    SimScorer per occurrence, summed (the occurrence counts ride the qtf
+    slot of bind_similarity)."""
     from collections import Counter
 
     from .scorer import idf as _idf
     from .similarities import bind_similarity
 
-    terms_off = _phrase_offsets(phrase, stop_words)
-    if len(terms_off) < 2:
+    stats = index.term_stats_for(sorted({t for _, alts in slots for t in alts}))
+    live = [(off, tuple(t for t in alts if t in stats)) for off, alts in slots]
+    if not all(alts for _, alts in live):
         return None
-    distinct = sorted({t for t, _ in terms_off})
-    stats = index.term_stats_for(distinct)
-    if any(t not in stats for t in distinct):
-        return None  # a missing term can never align
+    occ = [t for _, alts in live for t in alts]
     n = index.field_stats.doc_count
-    w = float(
-        dtype(boost)
-        * dtype(sum(float(_idf(stats[t][0], n, dtype)) for t, _ in terms_off))
-    )
-    # non-BM25 similarity: one TermStatistics per phrase-term OCCURRENCE
-    # (PhraseQuery.createWeight builds termStats per position, repeats
-    # included) — occurrence counts ride the qtf slot of the binder
-    sim = bind_similarity(
-        similarity, dict(Counter(t for t, _ in terms_off)), stats,
-        index.field_stats, boost, quantize, dtype,
-    )
-    run = make_phrase_topk_fn(
-        terms_off, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
-        sim=sim,
-    )
-    return _TopkSource(index, distinct, run, _PHRASE_STREAMS)
-
-
-def make_multiphrase_fn(
-    slots: Sequence[Tuple[int, Tuple[str, ...]]],
-    weight: float,
-    k: Optional[int],
-    slop: int,
-    avgdl: float,
-    quantize: bool,
-    dtype,
-    sim=None,
-):
-    """Per-segment MultiPhraseQuery scorer: a slot matches where ANY of its
-    alternative terms occurs (UnionPostingsEnum, MultiPhraseQuery.java:412);
-    conjunction runs over per-slot docid unions, then the exact/sloppy
-    matcher runs over per-slot position unions."""
-    from ..functions.phrase import sloppy_phrase_freq
-
-    distinct = sorted({t for _, alts in slots for t in alts})
-    POS_BASE = np.int64(1) << np.int64(22)
-
-    def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
-        counters = [0, 0]
-        z = np.empty(0, np.int64)
-        rows: Dict[str, list] = {}
-        for r in pdf.to_dict("records"):
-            rows.setdefault(r["term"], []).append(r)
-        for t in rows:
-            rows[t].sort(key=lambda r: r["first_docid"])
-        slot_alts = [[t for t in alts if t in rows] for _, alts in slots]
-        if any(not a for a in slot_alts):
-            return z, z.astype(np.float64), counters
-
-        def term_ids(t, sel):
-            parts = [_decode_rows(r, sel, counters) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            if sel is not None and len(ids):
-                m = sel[np.searchsorted(sel, ids).clip(max=len(sel) - 1)] == ids
-                ids = ids[m]
-            return ids
-
-        # --- phase 1: conjunction over slot UNIONS, lowest-df slot first
-        slot_df = [sum(int(r["df"]) for t in alts for r in rows[t]) for alts in slot_alts]
-        order = np.argsort(slot_df)
-        cand = None
-        for si in order:
-            u = None
-            for t in slot_alts[si]:
-                ids = term_ids(t, cand)
-                u = ids if u is None else np.union1d(u, ids)
-            cand = u if cand is None else np.intersect1d(cand, u, assume_unique=True)
-            if cand is None or len(cand) == 0:
-                return z, z.astype(np.float64), counters
-        live = _live_mask(cand, deleted)
-        if live is not None:
-            cand = cand[live]
-        if len(cand) == 0:
-            return z, z.astype(np.float64), counters
-
-        # --- phase 2: positions for candidate blocks only
-        per_term: Dict[str, tuple] = {}
-        dl = np.zeros(len(cand), dtype=np.int64)
-        for t in distinct:
-            parts = [_decode_rows_pos(r, cand, counters) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            pos = np.concatenate([p[3] for p in parts])
-            m = cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids
-            pos = pos[np.repeat(m, tfs)]
-            ids, tfs, dls = ids[m], tfs[m], dls[m]
-            per_term[t] = (ids, tfs, pos)
-            dl[np.searchsorted(cand, ids)] = dls
-
-        base = int(cand[0])
-        if slop == 0:
-            keys = None
-            for (off, _), alts in zip(slots, slot_alts):
-                ks = []
-                for t in alts:
-                    ids, tfs, pos = per_term[t]
-                    adj = pos - np.int64(off)
-                    kt = (np.repeat(ids, tfs) - base) * POS_BASE + adj
-                    ks.append(kt[adj >= 0])
-                # a slot's alternatives CAN share a position once index-time
-                # synonym stacking exists (both synonyms occupy the same
-                # position, ADVICE r4) — np.unique dedupes before the
-                # assume_unique intersection, and matches the reference's
-                # UnionPostingsEnum position-dedup (MultiPhraseQuery.java:475)
-                slot_keys = np.unique(np.concatenate(ks))
-                keys = slot_keys if keys is None else np.intersect1d(
-                    keys, slot_keys, assume_unique=True
-                )
-                if len(keys) == 0:
-                    return z, z.astype(np.float64), counters
-            docs, cnts = np.unique(keys // POS_BASE, return_counts=True)
-            docs = docs + base
-            sel = np.searchsorted(cand, docs)
-            freqs = cnts.astype(np.float64)
-            dls_m = dl[sel]
-        else:
-            bounds = {t: np.concatenate(([0], np.cumsum(per_term[t][1]))) for t in distinct}
-            tpos = {t: np.searchsorted(per_term[t][0], cand) for t in distinct}
-            offs = [o for o, _ in slots]
-            # repeat groups across slots (gatherRptGroups multi-term case,
-            # SloppyPhraseMatcher.java:556-609): union-find over slots
-            # sharing a repeating term; hasMultiTermRpts when a repeating
-            # slot has several alternatives
-            term_slots: Dict[str, list] = {}
-            for si, alts in enumerate(slot_alts):
-                for t in alts:
-                    term_slots.setdefault(t, []).append(si)
-            parent = list(range(len(slots)))
-
-            def _find(x: int) -> int:
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for t, ss in term_slots.items():
-                if len(ss) > 1:
-                    r0 = _find(ss[0])
-                    for s2 in ss[1:]:
-                        parent[_find(s2)] = r0
-            by_root: Dict[int, list] = {}
-            for si in range(len(slots)):
-                by_root.setdefault(_find(si), []).append(si)
-            rpt_groups = [g for g in by_root.values() if len(g) > 1]
-            has_multi = any(
-                len(slot_alts[si]) > 1 for g in rpt_groups for si in g
-            )
-            if not rpt_groups:
-                # no term repeats across slots: each slot is a virtual
-                # distinct term whose per-doc positions are the sorted
-                # union of its alternatives — EXACTLY the n-distinct-term
-                # batched walk's contract (sloppy_nterm_doc_freqs), so all
-                # candidate docs advance together instead of a per-doc
-                # Python loop (VERDICT r3 wrong#4, multiphrase leg)
-                from ..functions.phrase import sloppy_nterm_doc_freqs
-
-                slot_plists, slot_bounds = [], []
-                for (off, _), alts in zip(slots, slot_alts):
-                    ap, ac = [], []
-                    for t in alts:
-                        ids, tfs, pos = per_term[t]
-                        ci = np.searchsorted(cand, ids)
-                        ap.append(pos)
-                        ac.append(np.repeat(ci, tfs))
-                    all_pos = np.concatenate(ap)
-                    all_ci = np.concatenate(ac)
-                    order = np.lexsort((all_pos, all_ci))
-                    slot_plists.append(all_pos[order])
-                    cnts = np.bincount(all_ci, minlength=len(cand))
-                    slot_bounds.append(
-                        np.concatenate(([0], np.cumsum(cnts))).astype(np.int64)
-                    )
-                doc_rows, bfreqs = sloppy_nterm_doc_freqs(
-                    slot_plists, slot_bounds, offs, slop, dtype=dtype
-                )
-                if len(doc_rows) == 0:
-                    return z, z.astype(np.float64), counters
-                docs = cand[doc_rows]
-                freqs = np.asarray(bfreqs, dtype=np.float64)
-                dls_m = dl[doc_rows]
-                if sim is not None:
-                    scores = sim.phrase_score(freqs, dls_m)
-                else:
-                    scores = score_arrays(freqs, dls_m, weight, avgdl, quantize, dtype)
-                sel_ids, sel_sc = _select_topk(docs, scores, k)
-                return sel_ids, sel_sc, counters
-            docs_l, freqs_l, dls_l = [], [], []
-            for i, d in enumerate(cand):
-                plists = []
-                for (off, _), alts in zip(slots, slot_alts):
-                    ps = []
-                    for t in alts:
-                        ids, tfs, pos = per_term[t]
-                        j = tpos[t][i]
-                        if j < len(ids) and ids[j] == d:
-                            b = bounds[t]
-                            ps.append(pos[b[j] : b[j + 1]])
-                    merged = np.sort(np.concatenate(ps)) if ps else np.empty(0, np.int64)
-                    plists.append(merged)
-                f = sloppy_phrase_freq(
-                    plists, offs, slop, dtype=dtype,
-                    groups=rpt_groups, multi_term=has_multi,
-                )
-                if f > 0:
-                    docs_l.append(d)
-                    freqs_l.append(float(f))
-                    dls_l.append(dl[i])
-            if not docs_l:
-                return z, z.astype(np.float64), counters
-            docs = np.array(docs_l, dtype=np.int64)
-            freqs = np.array(freqs_l, dtype=np.float64)
-            dls_m = np.array(dls_l, dtype=np.int64)
-
-        if sim is not None:
-            scores = sim.phrase_score(freqs, dls_m)
-        else:
-            scores = score_arrays(freqs, dls_m, weight, avgdl, quantize, dtype)
-        sel_ids, sel_sc = _select_topk(docs, scores, k)
-        return sel_ids, sel_sc, counters
-
-    return run
+    w = float(dtype(boost) * dtype(sum(float(_idf(stats[t][0], n, dtype)) for t in occ)))
+    sim = bind_similarity(similarity, dict(Counter(occ)), stats, index.field_stats,
+                          boost, quantize, dtype)
+    run = make_phrase_fn(live, w, k, slop, float(index.field_stats.avgdl()), quantize,
+                         dtype, sim=sim)
+    return _TopkSource(index, sorted(set(occ)), run, _PHRASE_STREAMS)
 
 
 def ngram_phrase_rewrite(terms: Sequence[str], n: int) -> List[Tuple[str, int]]:
@@ -2342,42 +2117,13 @@ def search_multi_phrase(
     the index (allTermStats, MultiPhraseQuery.java:228-236). A non-BM25
     ``similarity`` scores the phrase freq with one SimScorer per existing
     alternative, summed (MultiSimilarity analog)."""
-    from collections import Counter
-
-    from .scorer import idf as _idf
-    from .similarities import bind_similarity
-
     require_positions(index, "MultiPhraseQuery")
     if not slots:
         return _hits_frame(index.spark)
     base_off = int(slots[0][0])
-    # terms repeating across slots are handled by the rptGroups machinery
-    # inside the matcher (union-find groups + multi-term init/advance,
-    # SloppyPhraseMatcher.java:465-497,556-609)
     norm_slots = [(int(o) - base_off, tuple(sorted(set(a)))) for o, a in slots]
-    all_terms = sorted({t for _, a in norm_slots for t in a})
-    stats = index.term_stats_for(all_terms)
-    live_slots = []
-    for off, alts in norm_slots:
-        live = tuple(t for t in alts if t in stats)
-        if not live:  # a slot with no existing alternative can't match
-            return _hits_frame(index.spark)
-        live_slots.append((off, live))
-    n = index.field_stats.doc_count
-    w = float(
-        dtype(boost)
-        * dtype(sum(float(_idf(stats[t][0], n, dtype)) for _, a in live_slots for t in a))
-    )
-    sim = bind_similarity(
-        similarity, dict(Counter(t for _, a in live_slots for t in a)), stats,
-        index.field_stats, boost, quantize, dtype,
-    )
-    distinct = sorted({t for _, a in live_slots for t in a})
-    run = make_multiphrase_fn(
-        live_slots, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
-        sim=sim,
-    )
-    return _topk_frame(index, _TopkSource(index, distinct, run, _PHRASE_STREAMS), k)
+    return _topk_frame(index, _slots_source(index, norm_slots, slop, k, boost, quantize,
+                                            dtype, similarity), k)
 
 
 def blended_term_topk(

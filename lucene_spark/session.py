@@ -5,6 +5,7 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
+import stat
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,21 +93,46 @@ _sock_dir: str | None = None
 
 def _socket_dir() -> str:
     """This process's private directory for the Python workers' Unix domain
-    sockets, made on first use and removed at exit (a process that dies
-    without ``spark.stop()`` would otherwise leave its ``.<uuid>.sock``
-    files behind). Under the temp directory when the path fits, else under
-    /tmp: in a long TMPDIR / java.io.tmpdir, SparkContext start-up fails
-    with "AF_UNIX path too long", and a directory of 62-64 characters
-    fails the first Python task on Spark's check."""
+    sockets, ``lsuds-<pid>-XXXXXXXX``, made on first use and removed at exit
+    (a process that dies without ``spark.stop()`` would otherwise leave its
+    ``.<uuid>.sock`` files behind). Under the temp directory when the path
+    fits, else under /tmp: in a long TMPDIR / java.io.tmpdir, SparkContext
+    start-up fails with "AF_UNIX path too long", and a directory of 62-64
+    characters fails the first Python task on Spark's check. A process
+    killed by a signal skips ``atexit``; the next process to make its
+    directory in the same place removes such leftovers (_sweep_socket_dirs)."""
     global _sock_dir
     if _sock_dir is None:
         base = tempfile.gettempdir()
-        # mkdtemp appends "/lsuds-" plus 8 random characters
-        if len(base) + 15 > _SOCK_DIR_MAX:
+        prefix = f"lsuds-{os.getpid()}-"
+        # mkdtemp appends 8 random characters to the prefix
+        if len(os.path.join(base, prefix)) + 8 > _SOCK_DIR_MAX:
             base = "/tmp"
-        _sock_dir = tempfile.mkdtemp(prefix="lsuds-", dir=base)
+        _sock_dir = tempfile.mkdtemp(prefix=prefix, dir=base)
         atexit.register(shutil.rmtree, _sock_dir, True)
+        _sweep_socket_dirs(base)
     return _sock_dir
+
+
+def _sweep_socket_dirs(base: str) -> None:
+    """Remove every ``lsuds-<pid>-*`` directory in ``base`` that this user
+    owns and whose process no longer runs."""
+    uid = os.getuid()
+    for name in os.listdir(base):
+        tag, _, rest = name.partition("-")
+        pid, sep, _ = rest.partition("-")
+        if tag != "lsuds" or not sep or not pid.isdigit():
+            continue
+        path = os.path.join(base, name)
+        try:
+            st = os.lstat(path)
+            if not stat.S_ISDIR(st.st_mode) or st.st_uid != uid:
+                continue
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(path, ignore_errors=True)
+        except OSError:  # gone already, or a live process of another user
+            pass
 
 
 def get_spark(app: str = "lucene_spark", master: str | None = None,

@@ -355,25 +355,91 @@ def test_multi_phrase_rpt_matcher_goldens():
     ) == []
 
 
-def test_multi_phrase_single_term_repeats_equal_phrase(built_index, ref_index):
-    """Slots [(a),(b),(a)] with slop must equal PhraseQuery "a b a"~slop:
-    same weight (duplicate termStats) and same rptGroups walk."""
+# one doc laid out so that slots at offsets (0, 279, 540) with slop 455
+# match: alpha at 119, beta at 108/121/247/262, gamma at 147/507, "delta"
+# fillers elsewhere
+_LONG_LAYOUT = {119: "alpha", 108: "beta", 121: "beta", 247: "beta", 262: "beta",
+                147: "gamma", 507: "gamma"}
+
+
+@pytest.fixture(scope="module")
+def phrase_table(spark, tmp_path_factory):
+    """A seeded repeat-heavy corpus with stopwords, the long layout doc and
+    one doc holding "zeta" (so only the last segment has that term),
+    indexed in 3 segments, and its pure-Python reference index."""
+    import random
+
+    from lucene_spark.index.builder import IndexConfig, build_index
+    from lucene_spark.pyref import build_ref_index
+    from lucene_spark.search.executor import Index
+
+    rng = random.Random(23)
+    vocab = ["alpha", "beta", "gamma", "delta", "the"]
+    rows = [(i, " ".join(rng.choices(vocab, k=rng.randrange(2, 40)))) for i in range(200)]
+    rows.append((200, " ".join(_LONG_LAYOUT.get(p, "delta") for p in range(520))))
+    rows.append((201, "zeta beta gamma"))
+    docs = spark.createDataFrame(rows, "docid long, content string")
+    idx = Index(
+        spark,
+        build_index(
+            spark, docs, str(tmp_path_factory.mktemp("phrase_table") / "idx"),
+            IndexConfig(docid_col="docid", order_cols=("docid",), num_segments=3,
+                        hot_df_threshold=400, index_positions=True),
+        ),
+    )
+    return idx, build_ref_index(rows)
+
+
+def test_multi_phrase_single_term_repeats_equal_phrase(phrase_table):
+    """A PhraseQuery and the MultiPhraseQuery of its one-alternative slots
+    score identically (same weight, same matcher) and equal the reference,
+    bit for bit in float32, across exact, sloppy, repeating-term, stopword
+    hole and offset >= 256 shapes."""
+    from lucene_spark.pyref import search_phrase as ref_phrase
     from lucene_spark.search.executor import search_multi_phrase, search_phrase
 
-    mp = [
-        (r["docid"], r["score"])
-        for r in search_multi_phrase(
-            built_index, [(0, ["import"]), (1, ["return"]), (2, ["import"])],
-            slop=2, k=10,
-        ).collect()
+    idx, ref = phrase_table
+    shapes = [
+        ("alpha beta", [("alpha", 0), ("beta", 1)], 0),
+        ("alpha beta", [("alpha", 0), ("beta", 1)], 2),
+        ("gamma alpha delta", [("gamma", 0), ("alpha", 1), ("delta", 2)], 3),
+        ("alpha beta alpha", [("alpha", 0), ("beta", 1), ("alpha", 2)], 2),
+        ("beta the gamma", [("beta", 0), ("gamma", 2)], 0),
+        ([("alpha", 0), ("beta", 279), ("gamma", 540)],
+         [("alpha", 0), ("beta", 279), ("gamma", 540)], 455),
     ]
-    ph = [
-        (r["docid"], r["score"])
-        for r in search_phrase(
-            built_index, ["import", "return", "import"], slop=2, k=10
-        ).collect()
+    for phrase, terms_off, slop in shapes:
+        ph = [(r["docid"], r["score"])
+              for r in search_phrase(idx, phrase, slop=slop, k=15).collect()]
+        mp = [(r["docid"], r["score"])
+              for r in search_multi_phrase(idx, [(o, [t]) for t, o in terms_off],
+                                           slop=slop, k=15).collect()]
+        want = ref_phrase(ref, terms_off, slop=slop, k=15)
+        assert ph == mp == want and want, (phrase, slop)
+
+
+def test_multi_phrase_edge_shapes_match_reference(phrase_table):
+    """Multi-phrase vs the reference where the kernel must pick its path
+    from the slot shape and the segment: sloppy slots at offsets >= 256 run
+    the per-doc walk (the batched n-term walk orders pps by position * 256
+    + offset and scores the long layout doc 0.0131 instead of 0.0101 phrase
+    freq), and an alternative that only some segments hold is skipped in
+    the others."""
+    from lucene_spark.pyref import search_multi_phrase as ref_mp
+    from lucene_spark.search.executor import search_multi_phrase
+
+    idx, ref = phrase_table
+    cases = [
+        ([(0, ["alpha"]), (279, ["beta"]), (540, ["gamma"])], 455, [200]),
+        ([(0, ["alpha", "zeta"]), (1, ["beta"])], 0, None),
+        ([(0, ["alpha", "zeta"]), (1, ["beta"]), (2, ["gamma"])], 1, None),
     ]
-    assert mp == ph and len(mp) > 0
+    for slots, slop, docs in cases:
+        got = [(r["docid"], r["score"])
+               for r in search_multi_phrase(idx, slots, slop=slop, k=15).collect()]
+        want = ref_mp(ref, slots, slop=slop, k=15)
+        assert got == want and want, (slots, slop)
+        assert docs is None or [d for d, _ in want] == docs
 
 
 def test_multi_phrase_multiterm_repeats_matches_pyref(spark, tmp_path):

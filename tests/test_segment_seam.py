@@ -293,12 +293,15 @@ def test_workers_use_unix_domain_sockets(spark):
     assert len(sock_dir) <= 61  # Spark's check on the socket-dir setting
 
 
-@pytest.mark.parametrize("base_len, under_tmpdir", [(46, True), (47, False)])
-def test_socket_dir_fits_spark_limit(monkeypatch, base_len, under_tmpdir):
+@pytest.mark.parametrize("over, under_tmpdir", [(0, True), (1, False)])
+def test_socket_dir_fits_spark_limit(monkeypatch, over, under_tmpdir):
     """The socket directory goes under the temp directory exactly when the
-    path fits Spark's 61-character limit, and under /tmp otherwise."""
+    path fits Spark's 61-character limit, and under /tmp otherwise: a base
+    at the limit for this pid's "/lsuds-<pid>-" plus 8 random characters,
+    and one character over it."""
     from lucene_spark import session
 
+    base_len = 61 - len(f"/lsuds-{os.getpid()}-") - 8 + over
     root = tempfile.mkdtemp(prefix="sockdir-", dir="/tmp")
     base = os.path.join(root, "d" * (base_len - len(root) - 1))
     os.mkdir(base)
@@ -307,11 +310,44 @@ def test_socket_dir_fits_spark_limit(monkeypatch, base_len, under_tmpdir):
     try:
         made = session._socket_dir()
         assert os.path.dirname(made) == (base if under_tmpdir else "/tmp")
+        assert os.path.basename(made).startswith(f"lsuds-{os.getpid()}-")
         assert len(made) <= 61 and session._socket_dir() == made
         if not under_tmpdir:
             os.rmdir(made)
     finally:
         shutil.rmtree(root)
+
+
+def test_socket_dir_of_killed_process_is_swept():
+    """A process that ends without running atexit (os._exit, as on a
+    signal) leaves its socket directory; the next process to make one in
+    the same base removes it, and keeps the directory of a live process."""
+    base = tempfile.mkdtemp(prefix="sweep-", dir="/tmp")
+    script = (
+        "import os, sys\n"
+        "from lucene_spark.session import _socket_dir\n"
+        "print(_socket_dir(), flush=True)\n"
+        "os._exit(0) if sys.argv[1] == 'kill' else None\n"
+    )
+    env = dict(os.environ, TMPDIR=base,
+               PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+
+    def make(how):
+        out = subprocess.run([sys.executable, "-c", script, how], env=env,
+                             capture_output=True, text=True, timeout=120)
+        assert out.returncode == 0, out.stderr[-3000:]
+        return out.stdout.split()[0]
+
+    live = os.path.join(base, f"lsuds-{os.getpid()}-live0000")
+    try:
+        os.mkdir(live)
+        killed = make("kill")
+        assert os.path.dirname(killed) == base and os.path.isdir(killed)
+        exited = make("exit")
+        assert not os.path.exists(killed) and not os.path.exists(exited)
+        assert os.path.isdir(live)
+    finally:
+        shutil.rmtree(base)
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),
