@@ -4,8 +4,9 @@ Schema matches BASELINE.json input_hint exactly:
   (repo:string, path:string, commit:string, lang:string, content:string)
 
 Generation is fully deterministic (seeded RNG, fixed ordering):
-  - Zipf-skewed hot tokens ('import', 'return', 'def', 'public') so the
-    hot-term salting path is exercised;
+  - Zipf-skewed hot tokens ('import', 'return', 'def', 'public') so hot
+    terms span many blocks in every segment (block-max pruning has
+    something to skip);
   - a few docs with >255-char identifiers (token-length splitting);
   - a few empty files.
 """

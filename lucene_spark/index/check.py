@@ -11,7 +11,9 @@ violation COUNTS, never data.
 
 Checks:
   segments   manifest docid ranges disjoint/ordered; max_doc == sum(num_docs)
-  postings   per (term, segment) row of the segment files queries read:
+  postings   one row per (term, segment) in the segment files queries read
+             (the per-segment reader maps each term to its one row; a
+             repeat counts as duplicate_term_rows); per row:
              blocks decode; docids strictly ascending within the row;
              block_first/last/maxtf/mindl match the decoded
              content (the skip/impact metadata MUST be exact or block-max
@@ -183,9 +185,12 @@ def check_index(index, check_positions: bool = True) -> dict:
         _check_postings_map(has_pos), _POSTINGS_REPORT_SCHEMA
     ).cache()
     bad_rows = per_row.filter(F.col("violations") != "")
+    dups = (per_row.groupBy("term", "segment_id").count()
+            .agg(F.sum(F.col("count") - 1)).collect()[0][0])
     report["postings"] = {
         "rows_checked": per_row.count(),
         "rows_with_violations": bad_rows.count(),
+        "duplicate_term_rows": int(dups or 0),
         "sample_violations": [
             (r["term"], r["violations"]) for r in bad_rows.limit(5).collect()
         ],
@@ -275,6 +280,7 @@ def check_index(index, check_positions: bool = True) -> dict:
     clean = (
         report["segments"]["overlapping_ranges"] == 0
         and report["postings"]["rows_with_violations"] == 0
+        and report["postings"]["duplicate_term_rows"] == 0
         and report["term_stats"]["terms_mismatched"] == 0
         and report["norms"]["norm_byte_mismatches"] == 0
         and report["norms"]["posting_doclen_mismatches"] == 0

@@ -35,15 +35,10 @@ def _norm(a):
 def cosine_topk(df: DataFrame, query_vec, k: int = 10, vec_col: str = "embedding",
                 id_col: str = "vec_id") -> DataFrame:
     """Exact brute-force cosine top-k against a literal query vector."""
-    from ..session import spread_small
-
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     qn = float(np.sqrt(np.dot(np.array(query_vec, dtype=np.float64),
                               np.array(query_vec, dtype=np.float64))))
     cos = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * F.lit(qn))
-    # the per-row dot/norm expressions are the whole job: spread a small
-    # candidate set over the cores instead of the scan's few splits
-    df = spread_small(df)
     return (
         df.select(F.col(id_col), F.round(cos, 4).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())

@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.codec import decode_block
+from ..functions.codec import decode_block, decode_block_offsets, decode_block_positions
 from ..index.builder import IndexPaths, segment_tombstones
 from ..session import gather_slices, slice_tasks
 from .plan import (
@@ -566,13 +566,18 @@ def _segment_deletes(fs, tomb_dir: str, files: Sequence[str], sid: int) -> np.nd
 
 def _segment_reader(index: Index, terms: Sequence[str],
                     streams: Sequence[str] = ("block_data",)):
-    """``read(segs)`` for a slice task: yields ``(segment_id, postings_pdf,
-    deleted_or_None)`` for each of the slice's segments holding rows for
-    ``terms``. Each segment is read with pyarrow — the ``terms`` filter
-    prunes row groups, and only the skip metadata plus ``streams`` are read
-    — along with its OWN tombstones (per-segment liveDocs,
-    PendingDeletes.java:31; nothing is materialized on the driver or
-    captured in closures), read once per worker (``_segment_deletes``)."""
+    """``read(segs)`` for a slice task: yields ``(segment_id, rows,
+    deleted_or_None)`` for each of the slice's segments holding postings
+    for ``terms``. A segment file holds ONE postings row per term (one
+    seek per term per leaf, TermStates.java:96-121), so ``rows`` maps each
+    term to its one record: a dict of the skip metadata plus ``streams``.
+    A file that repeats a term raises (check_index counts such rows as
+    ``postings.duplicate_term_rows``). Each segment is read with pyarrow —
+    the ``terms`` filter prunes row groups — along with its OWN tombstones
+    (per-segment liveDocs, PendingDeletes.java:31; nothing is materialized
+    on the driver or captured in closures), read once per worker
+    (``_segment_deletes``). This is the only code that knows a segment
+    file's row layout."""
     paths, tombs, terms = index.paths, index.tombstone_files, list(terms)
     cols = list(_SCORE_COLS) + [s for s in streams if s not in _SCORE_COLS]
 
@@ -587,8 +592,13 @@ def _segment_reader(index: Index, terms: Sequence[str],
             )
             if tbl.num_rows == 0:
                 continue
+            recs = tbl.to_pandas().to_dict("records")  # dicts, not iterrows Series
+            rows = {r["term"]: r for r in recs}
+            if len(rows) < len(recs):
+                raise ValueError(f"{path} holds more than one postings row for a term "
+                                 "(check_index: postings.duplicate_term_rows)")
             deleted = _segment_deletes(paths.fs, paths.tombstones, tombs, sid) if tombs else None
-            yield sid, tbl.to_pandas(), deleted
+            yield sid, rows, deleted
 
     return read
 
@@ -599,13 +609,14 @@ def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
     (IndexSearcher slices + searchLeaf, IndexSearcher.java:323-341,760):
     the snapshot's segment files are dealt into slices
     (session.slice_tasks), and each task reads its own segments
-    (``_segment_reader``). ``fn((segment_id,), postings_pdf,
-    deleted_or_None) -> pdf`` runs only for segments holding rows."""
+    (``_segment_reader``). ``fn((segment_id,), rows, deleted_or_None) ->
+    pdf`` runs only for segments holding rows; ``rows`` maps each term to
+    its one postings record."""
     read = _segment_reader(index, terms, streams)
 
     def run_slice(segs):
-        for sid, pdf, deleted in read(segs):
-            yield fn((sid,), pdf, deleted)
+        for sid, rows, deleted in read(segs):
+            yield fn((sid,), rows, deleted)
 
     return slice_tasks(index.spark, index.segment_files(), run_slice, schema)
 
@@ -613,9 +624,10 @@ def apply_per_segment(index: Index, terms: Sequence[str], fn, schema: str,
 @dataclass(frozen=True)
 class _TopkSource:
     """One index's part of a gathered top-k (_gather_topk): its segments
-    are read for ``terms`` plus the block ``streams``, and
-    ``run(postings_pdf, deleted) -> (ids, scores, (blocks_total,
-    blocks_decoded))`` — the per-segment kernel — scores each one."""
+    are read for ``terms`` plus the block ``streams``, and ``run(rows,
+    deleted) -> (ids, scores, (blocks_total, blocks_decoded))`` — the
+    per-segment kernel, given ``_segment_reader``'s term -> record map —
+    scores each one."""
 
     index: Index
     terms: Sequence[str]
@@ -655,8 +667,8 @@ def _gather_topk(sources: Sequence[Optional[_TopkSource]], k: int):
         ords, ids, scores = [_EMPTY_ORDS], [_EMPTY_IDS], [_EMPTY_SCORES]
         total = decoded = 0
         for o, sid, path in segs:
-            for _sid, pdf, deleted in reads[o]([(sid, path)]):
-                i, s, (t, d) = runs[o](pdf, deleted)
+            for _sid, rows, deleted in reads[o]([(sid, path)]):
+                i, s, (t, d) = runs[o](rows, deleted)
                 ords.append(np.full(len(i), o, np.int32))
                 ids.append(i)
                 scores.append(np.asarray(s, np.float64))
@@ -830,31 +842,37 @@ def search_exhaustive(
 # Per-segment block-max top-k: one clause kernel for every boolean shape
 # ---------------------------------------------------------------------------
 
-def _select_blocks(row, sel: Optional[np.ndarray], counters: List[int]) -> np.ndarray:
-    """Indices of a term row's blocks that intersect the sorted candidate
-    docids ``sel`` (every block when ``sel`` is None), counted into
-    ``counters`` as [blocks seen, blocks kept] (advanceShallow/block-skip
-    analog, ImpactsDISI.java:67-80)."""
+def _decode_rows(row, sel: Optional[np.ndarray], counters: List[int],
+                 occ: Optional[Tuple[str, Callable, int]] = None):
+    """Decode the blocks of a term's record whose docid range holds one of
+    the sorted candidate docids ``sel`` (every block when ``sel`` is None;
+    advanceShallow/block-skip analog, ImpactsDISI.java:67-80) and return
+    (ids, tfs, doclens) of the docs IN ``sel`` only. ``counters`` gains
+    [blocks of the term, blocks decoded]. ``occ`` = (stream, decode(blob,
+    tfs) -> arrays, number of arrays) appends per-occurrence arrays
+    (positions, offsets) decoded from ``stream``, cut to the returned
+    docs. The one body of the block decoders."""
     bf = np.asarray(row["block_first"], dtype=np.int64)
-    counters[0] += len(bf)
     if sel is None:
         keep = np.arange(len(bf))
     else:
         bl = np.asarray(row["block_last"], dtype=np.int64)
         keep = np.flatnonzero(np.searchsorted(sel, bl, "right") > np.searchsorted(sel, bf, "left"))
+    counters[0] += len(bf)
     counters[1] += len(keep)
-    return keep
-
-
-def _decode_rows(row, sel: Optional[np.ndarray], counters: List[int]):
-    """Decode a term's blocks, optionally only blocks intersecting the
-    sorted candidate docids `sel` (_select_blocks): (ids, tfs, doclens)."""
-    keep = _select_blocks(row, sel, counters)
     if len(keep) == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
+        return tuple(np.empty(0, np.int64) for _ in range(3 + (occ[2] if occ else 0)))
     data = row["block_data"]
-    parts = [decode_block(bytes(data[i])) for i in keep]
-    return tuple(np.concatenate(x) for x in zip(*parts))
+    parts = []
+    for i in keep:
+        ids, tfs, dls = decode_block(bytes(data[i]))
+        parts.append((ids, tfs, dls, *(occ[1](bytes(row[occ[0]][i]), tfs) if occ else ())))
+    ids, tfs, *rest = (np.concatenate(x) for x in zip(*parts))
+    if sel is None:
+        return (ids, tfs, *rest)
+    m = sel[np.searchsorted(sel, ids).clip(max=len(sel) - 1)] == ids
+    per_occ = np.repeat(m, tfs)
+    return (ids[m], tfs[m], rest[0][m], *(x[per_occ] for x in rest[1:]))
 
 
 @dataclass
@@ -923,7 +941,7 @@ def _flat_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
 
 def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
                         cursor: Optional[Tuple[float, int]] = None):
-    """Per-segment scorer ``run(pdf, deleted) -> (docids, scores,
+    """Per-segment scorer ``run(rows, deleted) -> (docids, scores,
     [blocks_total, blocks_decoded])`` for a ClausePlan: the batched analog
     of MAXSCORE/WAND over arbitrary clause scorers (WANDScorer.java:55,
     MaxScoreBulkScorer.java:26). A clause's bound is Σ w · (member's
@@ -993,16 +1011,10 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
     units += [({t: [(slot_of[ci, t], float(w))] for t, w in m.items()}, c)
               for ci, (m, must, c) in enumerate(plan.clauses) if not must]
 
-    def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
-        """``deleted`` is this segment's sorted tombstone array."""
+    def run(rows: Dict[str, dict], deleted: Optional[np.ndarray]):
+        """``rows`` maps each term to its postings record in this segment
+        (_segment_reader); ``deleted`` is its sorted tombstone array."""
         counters = [0, 0]  # blocks_total, blocks_decoded
-        rows = {}
-        for r in pdf.to_dict("records"):  # dicts, not iterrows Series
-            rows.setdefault(r["term"], []).append(r)
-        # a term may arrive as several (term,salt) rows: keep in docid order
-        for t in rows:
-            rows[t].sort(key=lambda r: r["first_docid"])
-
         # a clause is viable here iff EVERY member has postings in this
         # segment; the segment matches nothing without the MUST unit or
         # when the viable clauses cannot credit msm
@@ -1013,19 +1025,17 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
 
         terms_here = sorted({t for u in viable for t in u[0]})
         counters[0] += sum(
-            len(r["block_first"])
-            for t in terms_here + [t for t in excl if t in rows]
-            for r in rows[t]
+            len(rows[t]["block_first"]) for t in terms_here + [t for t in excl if t in rows]
         )
 
-        def _dec(r, sel):
+        def _dec(t, sel):
             visit = [0, 0]  # blocks_total is counted once, above
-            out = _decode_rows(r, sel, visit)
+            out = _decode_rows(rows[t], sel, visit)
             counters[1] += visit[1]
             return out
 
-        base = min(int(r["first_docid"]) for t in terms_here for r in rows[t])
-        hi = max(int(r["last_docid"]) for t in terms_here for r in rows[t])
+        base = min(int(rows[t]["first_docid"]) for t in terms_here)
+        hi = max(int(rows[t]["last_docid"]) for t in terms_here)
         n = hi - base + 1
         if n > 500_000_000:
             # dense accumulator assumes segment-local docid ranges (the
@@ -1036,32 +1046,25 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
             )
 
         if excl:
-            ex_parts = [_dec(r, None)[0] for t in excl if t in rows for r in rows[t]]
+            ex_parts = [_dec(t, None)[0] for t in excl if t in rows]
             if ex_parts:
                 banned = np.unique(np.concatenate(ex_parts))
                 deleted = banned if deleted is None else np.union1d(deleted, banned)
 
         def decode_term(t, sel=None):
-            if sel is not None and len(sel) == 0:
-                return _Z, _Z, _Z
-            parts = [_dec(r, sel) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            if sel is not None and len(ids):
-                m = sel[np.searchsorted(sel, ids).clip(max=len(sel) - 1)] == ids
-                ids, tfs, dls = ids[m], tfs[m], dls[m]
+            ids, tfs, dls = _dec(t, sel)
             live = _live_mask(ids, deleted)  # tombstoned docs never score
             if live is not None:
                 ids, tfs, dls = ids[live], tfs[live], dls[live]
             return ids, tfs, dls
 
-        def block_ubs(t, r):
-            """Per-block score upper bounds for one (term, salt) row: max
-            over the block's competitive (tf, doclen) impact pairs
+        def block_ubs(t):
+            """Per-block score upper bounds for a term's record: max over
+            the block's competitive (tf, doclen) impact pairs
             (CompetitiveImpactAccumulator.java:26 — tight even for
             unbounded-tf shapes like Classic's sqrt(tf)); corner
             (block_maxtf, block_mindl) fallback for pre-v6 indexes."""
+            r = rows[t]
             imp = r.get("block_imp")
             if imp is None or isinstance(imp, float):  # absent column / null row
                 return sim.score(
@@ -1078,40 +1081,47 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
             starts = np.concatenate(([0], np.cumsum(lens // 2)[:-1]))
             return np.maximum.reduceat(s, starts) if len(s) else s
 
-        _ub_cache: Dict[str, list] = {}
+        _ub_cache: Dict[str, np.ndarray] = {}
 
         def term_ubs(t):
             if t not in _ub_cache:
-                _ub_cache[t] = [block_ubs(t, r) for r in rows[t]]
+                _ub_cache[t] = block_ubs(t)
             return _ub_cache[t]
 
         def umax(t):
             # max over per-block bounds == the term's tightest whole-list
             # bound (MaxScoreCache.java:74 computes the same from impacts)
-            return max(
-                (float(u.max()) for u in term_ubs(t) if len(u)),
-                default=sim.bound(
-                    t,
-                    max(int(r["max_tf"]) for r in rows[t]),
-                    min(int(r["min_doclen"]) for r in rows[t]),
-                ),
-            )
+            ub = term_ubs(t)
+            if len(ub):
+                return float(ub.max())
+            return sim.bound(t, int(rows[t]["max_tf"]), int(rows[t]["min_doclen"]))
 
         def wsum(slots):
             return sum(w for _, w in slots)
 
-        def nblocks(t):
-            return sum(len(r["block_first"]) for r in rows[t])
+        def block_bounds(t):
+            r = rows[t]
+            return (np.asarray(r["block_first"], dtype=np.int64),
+                    np.asarray(r["block_last"], dtype=np.int64))
 
-        def dfsum(t):
-            return sum(int(r["df"]) for r in rows[t])
+        def decode_picked(t, cidx):
+            """(ids, tfs, doclens) of the term's blocks ``cidx``, in that order."""
+            data = rows[t]["block_data"]
+            return tuple(np.concatenate(x)
+                         for x in zip(*(decode_block(bytes(data[b])) for b in cidx)))
+
+        def nblocks(t):
+            return len(rows[t]["block_first"])
+
+        def df(t):
+            return int(rows[t]["df"])
 
         def cost(u):
             # estimated blocks decoded: a term clause scans its own list; a
             # conjunction decodes its rarest member plus, for every other
             # member, at most one block per lead posting (leapfrog)
-            ms = sorted(u[0], key=dfsum)
-            return nblocks(ms[0]) + sum(min(nblocks(t), dfsum(ms[0])) for t in ms[1:])
+            ms = sorted(u[0], key=df)
+            return nblocks(ms[0]) + sum(min(nblocks(t), df(ms[0])) for t in ms[1:])
 
         # evaluation order: the MUST unit, then ascending decode cost. Any
         # fixed order is SOUND (the suffix bounds below are computed over
@@ -1196,72 +1206,66 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
             if len(members) == 1:
                 ((t, slots),) = members.items()
                 fw = wsum(slots)
-                for r, ub in zip(rows[t], term_ubs(t)):
-                    bf = np.asarray(r["block_first"], dtype=np.int64)
-                    bl = np.asarray(r["block_last"], dtype=np.int64)
-                    data = r["block_data"]
-                    ubw = ub * fw
-                    # descending block bound: the first chunk seeds theta
-                    # near its final value (batch evaluation has no
-                    # docid-order constraint — the accumulator is dense)
-                    border = np.argsort(-ubw, kind="stable")
-                    for j in range(0, len(bf), CHUNK):
-                        cidx = border[j : j + CHUNK]
-                        if theta > 0 or not new_docs_ok:
-                            refresh_sel()
-                            if new_docs_ok and theta > 0:
-                                keep = ubw[cidx] + rest >= theta * scale
-                            elif new_docs_ok:
-                                keep = np.ones(len(cidx), dtype=bool)
-                            else:
-                                keep = np.zeros(len(cidx), dtype=bool)
-                            cand_set = sel if sel is not None else (
-                                (np.flatnonzero(seen) + base)
-                                if not new_docs_ok else None
-                            )
-                            if cand_set is not None and len(cand_set):
-                                lo = np.searchsorted(cand_set, bf[cidx], "left")
-                                hi2 = np.searchsorted(cand_set, bl[cidx], "right")
-                                has = hi2 > lo
-                                if theta > 0 and nmatch is None:
-                                    # per-block candidate potential: a
-                                    # candidate whose acc + this block's
-                                    # bound + remaining bounds misses theta
-                                    # cannot finish above it (msm keeps the
-                                    # coarse test: its candidates are kept
-                                    # for COUNT too)
-                                    for z in np.flatnonzero(has):
-                                        cmax = float(
-                                            acc[cand_set[lo[z]:hi2[z]] - base].max()
-                                        )
-                                        if cmax + ubw[cidx[z]] + rest < theta * scale:
-                                            has[z] = False
-                                keep |= has
-                            cidx = cidx[keep]
-                        counters[1] += len(cidx)
-                        if len(cidx) == 0:
-                            continue
-                        parts = [decode_block(bytes(data[x])) for x in cidx]
-                        ids = np.concatenate([p[0] for p in parts])
-                        tfs = np.concatenate([p[1] for p in parts])
-                        dls = np.concatenate([p[2] for p in parts])
-                        live = _live_mask(ids, deleted)
-                        if not new_docs_ok:  # only docs already seen
-                            live = seen[ids - base] if live is None else live & seen[ids - base]
-                        if live is not None:
-                            ids, tfs, dls = ids[live], tfs[live], dls[live]
-                        if len(ids) == 0:
-                            continue
-                        s = sim.score(t, tfs, dls)
-                        put(slots, ids, s)
-                        acc[ids - base] += np.asarray(s, np.float64) * fw
-                        seen[ids - base] = True
-                        if nmatch is not None:
-                            nmatch[ids - base] += credit
-                        if after_bound is None:
-                            bump_theta()
+                bf, bl = block_bounds(t)
+                ubw = term_ubs(t) * fw
+                # descending block bound: the first chunk seeds theta
+                # near its final value (batch evaluation has no
+                # docid-order constraint — the accumulator is dense)
+                border = np.argsort(-ubw, kind="stable")
+                for j in range(0, len(bf), CHUNK):
+                    cidx = border[j : j + CHUNK]
+                    if theta > 0 or not new_docs_ok:
+                        refresh_sel()
+                        if new_docs_ok and theta > 0:
+                            keep = ubw[cidx] + rest >= theta * scale
+                        elif new_docs_ok:
+                            keep = np.ones(len(cidx), dtype=bool)
+                        else:
+                            keep = np.zeros(len(cidx), dtype=bool)
+                        cand_set = sel if sel is not None else (
+                            (np.flatnonzero(seen) + base)
+                            if not new_docs_ok else None
+                        )
+                        if cand_set is not None and len(cand_set):
+                            lo = np.searchsorted(cand_set, bf[cidx], "left")
+                            hi2 = np.searchsorted(cand_set, bl[cidx], "right")
+                            has = hi2 > lo
+                            if theta > 0 and nmatch is None:
+                                # per-block candidate potential: a
+                                # candidate whose acc + this block's
+                                # bound + remaining bounds misses theta
+                                # cannot finish above it (msm keeps the
+                                # coarse test: its candidates are kept
+                                # for COUNT too)
+                                for z in np.flatnonzero(has):
+                                    cmax = float(
+                                        acc[cand_set[lo[z]:hi2[z]] - base].max()
+                                    )
+                                    if cmax + ubw[cidx[z]] + rest < theta * scale:
+                                        has[z] = False
+                            keep |= has
+                        cidx = cidx[keep]
+                    counters[1] += len(cidx)
+                    if len(cidx) == 0:
+                        continue
+                    ids, tfs, dls = decode_picked(t, cidx)
+                    live = _live_mask(ids, deleted)
+                    if not new_docs_ok:  # only docs already seen
+                        live = seen[ids - base] if live is None else live & seen[ids - base]
+                    if live is not None:
+                        ids, tfs, dls = ids[live], tfs[live], dls[live]
+                    if len(ids) == 0:
+                        continue
+                    s = sim.score(t, tfs, dls)
+                    put(slots, ids, s)
+                    acc[ids - base] += np.asarray(s, np.float64) * fw
+                    seen[ids - base] = True
+                    if nmatch is not None:
+                        nmatch[ids - base] += credit
+                    if after_bound is None:
+                        bump_theta()
             else:
-                order = sorted(members, key=dfsum)
+                order = sorted(members, key=df)
                 refresh_sel()
                 essential = theta <= 0 or cubs[i] + rest >= theta * scale
                 # non-essential conjunction (or no room for new docs):
@@ -1288,49 +1292,36 @@ def make_clause_topk_fn(plan: ClausePlan, k: int, theta_seed: float = 0.0,
                     fw = wsum(members[m])
                     rest_m = float(sum(umax(t) * wsum(members[t]) for t in order[mi + 1:]))
                     last = mi == len(order) - 1
-                    # block-max leapfrog over the member's postings: blocks
-                    # of ALL (term,salt) rows are chunked TOGETHER in
-                    # descending bound order; a block decodes only if it
-                    # holds a candidate whose completed-so-far total plus
-                    # this block's bound plus every remaining bound could
-                    # still reach theta. On the LAST member, docs finish
-                    # their clause score as chunks complete, so theta
-                    # refreshes INSIDE the walk and later chunks skip
-                    rws = rows[m]
-                    bfs = [np.asarray(r["block_first"], np.int64) for r in rws]
-                    bls = [np.asarray(r["block_last"], np.int64) for r in rws]
-                    flat_ub = np.concatenate(term_ubs(m)) * fw
-                    flat_bf = np.concatenate(bfs)
-                    flat_bl = np.concatenate(bls)
-                    row_of = np.concatenate(
-                        [np.full(len(b), ri, np.int64) for ri, b in enumerate(bfs)])
-                    blk_of = np.concatenate([np.arange(len(b), dtype=np.int64) for b in bfs])
-                    border = np.argsort(-flat_ub, kind="stable")
+                    # block-max leapfrog over the member's postings: its
+                    # blocks are chunked in descending bound order; a block
+                    # decodes only if it holds a candidate whose
+                    # completed-so-far total plus this block's bound plus
+                    # every remaining bound could still reach theta. On the
+                    # LAST member, docs finish their clause score as chunks
+                    # complete, so theta refreshes INSIDE the walk and later
+                    # chunks skip
+                    bf, bl = block_bounds(m)
+                    ubw = term_ubs(m) * fw
+                    border = np.argsort(-ubw, kind="stable")
                     nm = np.zeros(n, dtype=bool)
                     done = np.zeros(n, dtype=bool) if last else None
-                    for j in range(0, len(flat_bf), CHUNK):
+                    for j in range(0, len(bf), CHUNK):
                         cidx = border[j : j + CHUNK]
-                        lo = np.searchsorted(cand, flat_bf[cidx], "left")
-                        hi2 = np.searchsorted(cand, flat_bl[cidx], "right")
+                        lo = np.searchsorted(cand, bf[cidx], "left")
+                        hi2 = np.searchsorted(cand, bl[cidx], "right")
                         has = hi2 > lo
                         if theta > 0:
                             for z in np.flatnonzero(has):
                                 within = cand[lo[z]:hi2[z]] - base
                                 pmax = float((acc[within] + csd[within]).max())
-                                if (pmax + flat_ub[cidx[z]] + rest_m + rest
+                                if (pmax + ubw[cidx[z]] + rest_m + rest
                                         < theta * scale):
                                     has[z] = False
                         cidx = cidx[has]
                         counters[1] += len(cidx)
                         if len(cidx) == 0:
                             continue
-                        parts = [
-                            decode_block(bytes(rws[row_of[x]]["block_data"][blk_of[x]]))
-                            for x in cidx
-                        ]
-                        ids2 = np.concatenate([p[0] for p in parts])
-                        tf2 = np.concatenate([p[1] for p in parts])
-                        dl2 = np.concatenate([p[2] for p in parts])
+                        ids2, tf2, dl2 = decode_picked(m, cidx)
                         inc = cand[np.searchsorted(cand, ids2).clip(max=len(cand) - 1)] == ids2
                         ids2, tf2, dl2 = ids2[inc], tf2[inc], dl2[inc]
                         live = _live_mask(ids2, deleted)
@@ -1617,48 +1608,36 @@ def search_after(
 # PhraseQuery: two-phase per-segment evaluation (positions required)
 # ---------------------------------------------------------------------------
 
-def _decode_rows_pos(row, sel: Optional[np.ndarray], counters: List[int]):
-    """Like _decode_rows but also decodes the positions stream of the kept
-    blocks (two-phase verify: position decode only touches blocks holding
-    candidates, TwoPhaseIterator.java:31): (ids, tfs, doclens, positions)."""
-    from ..functions.codec import decode_block_positions
+def _missing(stream) -> bool:
+    return stream is None or (isinstance(stream, float) and np.isnan(stream))
 
-    data, pdata = row["block_data"], row["block_pos"]
-    if pdata is None or (isinstance(pdata, float) and np.isnan(pdata)):
+
+def _decode_rows_pos(row, sel: Optional[np.ndarray], counters: List[int]):
+    """Like _decode_rows plus the positions of every returned occurrence,
+    decoded from the kept blocks only (two-phase verify: position decode
+    only touches blocks holding candidates, TwoPhaseIterator.java:31):
+    (ids, tfs, doclens, positions)."""
+    if _missing(row.get("block_pos")):
         raise ValueError(
             "index was built without position data; cannot run PhraseQuery "
             "(rebuild with IndexConfig(index_positions=True))"
         )
-    keep = _select_blocks(row, sel, counters)
-    if len(keep) == 0:
-        return tuple(np.empty(0, np.int64) for _ in range(4))
-    parts = []
-    for i in keep:
-        ids, tfs, dls = decode_block(bytes(data[i]))
-        parts.append((ids, tfs, dls, decode_block_positions(bytes(pdata[i]), tfs)))
-    return tuple(np.concatenate(x) for x in zip(*parts))
+    return _decode_rows(row, sel, counters,
+                        ("block_pos", lambda b, tfs: (decode_block_positions(b, tfs),), 1))
 
 
 def _decode_rows_off(row, sel: Optional[np.ndarray], counters: List[int]):
-    """Like _decode_rows_pos but decodes the OFFSETS stream of the kept
-    blocks: returns (ids, tfs, starts, ends) — the char spans of every
-    occurrence (IndexOptions ..._AND_OFFSETS read path)."""
-    from ..functions.codec import decode_block_offsets
-
-    data, odata = row["block_data"], row.get("block_off") if hasattr(row, "get") else row["block_off"]
-    if odata is None or (isinstance(odata, float) and np.isnan(odata)):
+    """Like _decode_rows_pos but with the OFFSETS stream: (ids, tfs,
+    starts, ends) — the char spans of every returned occurrence
+    (IndexOptions ..._AND_OFFSETS read path)."""
+    if _missing(row.get("block_off")):
         raise ValueError(
             "index was built without offset data; rebuild with "
             "IndexConfig(index_offsets=True) or use the analysis offset source"
         )
-    keep = _select_blocks(row, sel, counters)
-    if len(keep) == 0:
-        return tuple(np.empty(0, np.int64) for _ in range(4))
-    parts = []
-    for i in keep:
-        ids, tfs, _dls = decode_block(bytes(data[i]))
-        parts.append((ids, tfs, *decode_block_offsets(bytes(odata[i]), tfs)))
-    return tuple(np.concatenate(x) for x in zip(*parts))
+    ids, tfs, _dls, starts, ends = _decode_rows(
+        row, sel, counters, ("block_off", decode_block_offsets, 2))
+    return ids, tfs, starts, ends
 
 
 def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
@@ -1668,24 +1647,15 @@ def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
     terms = sorted(set(terms))
     sel = np.sort(np.asarray(docids, dtype=np.int64))
 
-    def fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
+    def fn(key, rows: Dict[str, dict], deleted: Optional[np.ndarray]) -> pd.DataFrame:
         counters = [0, 0]
         s = _live_mask(sel, deleted)
         cur = sel if s is None else sel[s]
         out = {"docid": [], "term": [], "start": [], "end": []}
         if len(cur):
-            for t, grp in pdf.groupby("term"):
-                rows = grp.to_dict("records")
-                rows.sort(key=lambda r: r["first_docid"])
-                parts = [_decode_rows_off(r, cur, counters) for r in rows]
-                ids = np.concatenate([p[0] for p in parts])
-                tfs = np.concatenate([p[1] for p in parts])
-                st = np.concatenate([p[2] for p in parts])
-                en = np.concatenate([p[3] for p in parts])
-                m = cur[np.searchsorted(cur, ids).clip(max=len(cur) - 1)] == ids
-                occ = np.repeat(m, tfs)
-                st, en = st[occ], en[occ]
-                ids_occ = np.repeat(ids[m], tfs[m])
+            for t in sorted(rows):
+                ids, tfs, st, en = _decode_rows_off(rows[t], cur, counters)
+                ids_occ = np.repeat(ids, tfs)
                 out["docid"].extend(int(d) for d in ids_occ)
                 out["term"].extend([t] * len(ids_occ))
                 out["start"].extend(int(v) for v in st)
@@ -1703,6 +1673,29 @@ def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
         index, terms, fn, "docid long, term string, start int, end int",
         streams=("block_data", "block_off"),
     )
+
+
+def _intersect_rarest(rows: Dict[str, dict], sets: Iterable[Tuple[str, ...]],
+                      counters: List[int]) -> np.ndarray:
+    """Phase 1 of the positional kernels: the sorted docids holding at least
+    one term of EVERY set in ``sets`` (a set is a union of alternatives,
+    each term present in ``rows``). Distinct sets are intersected rarest
+    first (summed df, then terms), so each later set decodes only blocks
+    holding candidates (ConjunctionDISI.java:166-206); positions stay
+    untouched. Stops early once no candidate is left."""
+    def df(alts):
+        return sum(int(rows[t]["df"]) for t in alts)
+
+    cand = None
+    for alts in sorted(set(sets), key=lambda a: (df(a), a)):
+        union = None
+        for t in alts:
+            ids = _decode_rows(rows[t], cand, counters)[0]
+            union = ids if union is None else np.union1d(union, ids)
+        cand = union if cand is None else np.intersect1d(cand, union, assume_unique=True)
+        if len(cand) == 0:
+            break
+    return cand
 
 
 def _phrase_offsets(phrase, stop_words) -> List[Tuple[str, int]]:
@@ -1866,32 +1859,16 @@ def make_phrase_fn(
     else:
         match = rpt if single else walk
 
-    def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
+    def run(rows: Dict[str, dict], deleted: Optional[np.ndarray]):
         counters = [0, 0]
         none = (_EMPTY_IDS, _EMPTY_SCORES, counters)
-        rows: Dict[str, list] = {}
-        for r in pdf.to_dict("records"):
-            rows.setdefault(r["term"], []).append(r)
-        for t in rows:
-            rows[t].sort(key=lambda r: r["first_docid"])
         slot_alts = [tuple(t for t in alts if t in rows) for _, alts in slots]
         if not all(slot_alts):
             return none
 
         # --- phase 1: conjunction on docids over the distinct alternative
-        # sets (a repeated phrase term is decoded once), rarest first
-        cand = None
-        df = {t: sum(int(r["df"]) for r in rows[t]) for t in rows}
-        for alts in sorted(set(slot_alts), key=lambda a: (sum(df[t] for t in a), a)):
-            union = None
-            for t in alts:
-                ids = np.concatenate([_decode_rows(r, cand, counters)[0] for r in rows[t]])
-                if cand is not None and len(ids):
-                    ids = ids[cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids]
-                union = ids if union is None else np.union1d(union, ids)
-            cand = union if cand is None else np.intersect1d(cand, union, assume_unique=True)
-            if len(cand) == 0:
-                return none
+        # sets (a repeated phrase term is decoded once)
+        cand = _intersect_rarest(rows, slot_alts, counters)
         live = _live_mask(cand, deleted)
         if live is not None:
             cand = cand[live]
@@ -1902,12 +1879,9 @@ def make_phrase_fn(
         per_term: Dict[str, tuple] = {}
         doclens = np.zeros(len(cand), dtype=np.int64)
         for t in sorted({t for alts in slot_alts for t in alts}):
-            parts = [_decode_rows_pos(r, cand, counters) for r in rows[t]]
-            ids, tfs, dls, pos = (np.concatenate(x) for x in zip(*parts))
-            j = np.searchsorted(cand, ids)
-            m = cand[j.clip(max=len(cand) - 1)] == ids
-            doclens[j[m]] = dls[m]
-            per_term[t] = (ids[m], tfs[m], pos[np.repeat(m, tfs)])
+            ids, tfs, dls, pos = _decode_rows_pos(rows[t], cand, counters)
+            doclens[np.searchsorted(cand, ids)] = dls
+            per_term[t] = (ids, tfs, pos)
 
         rows_i, freqs = match(cand, slot_alts, per_term)
         if len(rows_i) == 0:
@@ -1980,8 +1954,8 @@ def phrase_scores(
         return _hits_frame(index.spark)
     run = src.run  # the closure must not capture the source's Index
 
-    def fn(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
-        ids, scores, _counters = run(pdf, deleted)
+    def fn(key, rows: Dict[str, dict], deleted: Optional[np.ndarray]) -> pd.DataFrame:
+        ids, scores, _counters = run(rows, deleted)
         return pd.DataFrame({"docid": ids, "score": scores})
 
     return apply_per_segment(index, src.terms, fn, "docid long, score double",

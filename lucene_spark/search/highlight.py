@@ -41,7 +41,7 @@ def make_highlight_fn(weights: Dict[str, float], docids: np.ndarray, width: int)
 
     terms = sorted(weights)
 
-    def run(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
+    def run(key, rows: Dict[str, dict], deleted: Optional[np.ndarray]) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
                 "docid": np.empty(0, np.int64),
@@ -52,11 +52,6 @@ def make_highlight_fn(weights: Dict[str, float], docids: np.ndarray, width: int)
             }
         )
         counters = [0, 0]
-        rows: Dict[str, list] = {}
-        for r in pdf.to_dict("records"):
-            rows.setdefault(r["term"], []).append(r)
-        for t in rows:
-            rows[t].sort(key=lambda r: r["first_docid"])
         sel = docids
         live = _live_mask(sel, deleted)
         if live is not None:
@@ -70,13 +65,7 @@ def make_highlight_fn(weights: Dict[str, float], docids: np.ndarray, width: int)
         for t in terms:
             if t not in rows:
                 continue
-            parts = [_decode_rows_pos(r, sel, counters) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            pos = np.concatenate([p[3] for p in parts])
-            m = sel[np.searchsorted(sel, ids).clip(max=len(sel) - 1)] == ids
-            pos = pos[np.repeat(m, tfs)]
-            ids, tfs = ids[m], tfs[m]
+            ids, tfs, _dls, pos = _decode_rows_pos(rows[t], sel, counters)
             w = weights[t]
             bounds = np.concatenate(([0], np.cumsum(tfs)))
             for i, d in enumerate(ids):

@@ -711,12 +711,12 @@ INTERVALS_SCHEMA = (
 
 
 def make_intervals_fn(node):
-    from .executor import _decode_rows, _decode_rows_pos, _live_mask
+    from .executor import _decode_rows, _decode_rows_pos, _intersect_rarest, _live_mask
 
     distinct = sorted(set(leaf_terms(node)))
     required = sorted(required_terms(node))
 
-    def run(key, pdf: pd.DataFrame, deleted: Optional[np.ndarray]) -> pd.DataFrame:
+    def run(key, rows: Dict[str, dict], deleted: Optional[np.ndarray]) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
                 "docid": np.empty(0, np.int64),
@@ -727,11 +727,6 @@ def make_intervals_fn(node):
             }
         )
         counters = [0, 0]
-        rows: Dict[str, list] = {}
-        for r in pdf.to_dict("records"):
-            rows.setdefault(r["term"], []).append(r)
-        for t in rows:
-            rows[t].sort(key=lambda r: r["first_docid"])
         if any(t not in rows for t in required):
             return empty
 
@@ -739,28 +734,12 @@ def make_intervals_fn(node):
         # intersect, rarest leads; with no required leaf (pure OR) the
         # candidate set is the union of every present leaf's docids.
         if required:
-            order = sorted(required, key=lambda t: sum(int(r["df"]) for r in rows[t]))
-            cand = None
-            for t in order:
-                parts = [_decode_rows(r, cand, counters) for r in rows[t]]
-                ids = np.concatenate([p[0] for p in parts])
-                if cand is not None and len(ids):
-                    m = cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids
-                    ids = ids[m]
-                cand = ids if cand is None else np.intersect1d(cand, ids, assume_unique=True)
-                if len(cand) == 0:
-                    return empty
+            cand = _intersect_rarest(rows, [(t,) for t in required], counters)
         else:
-            ids_u = [
-                np.concatenate([_decode_rows(r, None, counters)[0] for r in rows[t]])
-                for t in distinct
-                if t in rows
-            ]
+            ids_u = [_decode_rows(rows[t], None, counters)[0] for t in distinct if t in rows]
             if not ids_u:
                 return empty
             cand = np.unique(np.concatenate(ids_u))
-            if len(cand) == 0:
-                return empty
         live = _live_mask(cand, deleted)
         if live is not None:
             cand = cand[live]
@@ -780,18 +759,12 @@ def make_intervals_fn(node):
             if t not in rows:
                 per_term[t] = (zpos, zb)
                 continue
-            parts = [_decode_rows_pos(r, cand, counters) for r in rows[t]]
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            pos = np.concatenate([p[3] for p in parts])
-            m = cand[np.searchsorted(cand, ids).clip(max=len(cand) - 1)] == ids
-            pos = pos[np.repeat(m, tfs)]
-            ids, tfs, dls = ids[m], tfs[m], dls[m]
-            dl_full[np.searchsorted(cand, ids)] = dls
+            ids, tfs, dls, pos = _decode_rows_pos(rows[t], cand, counters)
+            j = np.searchsorted(cand, ids)
+            dl_full[j] = dls
             # scatter per-candidate tf counts (an optional term may miss docs)
             tf_full = np.zeros(len(cand), np.int64)
-            tf_full[np.searchsorted(cand, ids)] = tfs
+            tf_full[j] = tfs
             bounds = np.concatenate(([0], np.cumsum(tf_full)))
             per_term[t] = (pos, bounds)
 

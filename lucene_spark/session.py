@@ -25,23 +25,6 @@ def _default_driver_mem() -> str:
     return f"{max(4, min(48, gib // 3))}g"
 
 
-def spread_small(df):
-    """Round-robin repartition a SMALL frame up to the session's
-    parallelism. Compute-heavy single-pass operators (per-row cosine /
-    mask expressions) otherwise run on the scan's split count, and a
-    small parquet input bin-packs into a handful of splits
-    (spark.sql.files.openCostInBytes), leaving most cores idle. Only
-    fires when the current partition count is below parallelism, so a
-    genuinely large input — already many splits — is never reshuffled."""
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            return df.repartition(par)
-    except Exception:
-        pass
-    return df
-
-
 def _slices(spark: SparkSession, items: list, n_tasks: int | None) -> list:
     """Deal a small driver-side list round-robin into ``min(len(items),
     n_tasks or defaultParallelism)`` slices (at least one)."""

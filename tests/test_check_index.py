@@ -63,3 +63,32 @@ def test_corrupted_block_metadata_detected(spark, tmp_path):
     joined = ";".join(v for _, v in rep["postings"]["sample_violations"])
     assert "maxtf-mismatch" in joined and "row-df-mismatch" in joined
     assert rep["term_stats"]["terms_mismatched"] >= 1
+
+
+def test_duplicate_term_row_detected(spark, built_index, tmp_path):
+    """A segment file that repeats a (term, segment_id) row breaks the one
+    row per term the per-segment reader maps: check_index counts it, and a
+    query over that term refuses rather than reading one of the rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from lucene_spark.index.check import check_index
+    from lucene_spark.search.executor import Index, search_topk
+    from lucene_spark.search.plan import normalize
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(built_index.paths.root, d)
+    f = sorted(glob.glob(os.path.join(d, "postings", "segment-*.parquet")))[0]
+    tbl = pq.read_table(f)
+    term = tbl.column("term")[0].as_py()
+    pq.write_table(pa.concat_tables([tbl, tbl.slice(0, 1)]), f)
+    crc = os.path.join(os.path.dirname(f), "." + os.path.basename(f) + ".crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+    idx = Index.open(spark, d)
+    rep = check_index(idx)
+    assert rep["postings"]["duplicate_term_rows"] == 1
+    assert not rep["clean"]
+    assert check_index(built_index)["postings"]["duplicate_term_rows"] == 0
+    with pytest.raises(Exception, match="more than one postings row"):
+        search_topk(idx, normalize(should=[term], pre_analyzed=True), k=3)
