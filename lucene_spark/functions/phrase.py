@@ -128,8 +128,8 @@ def _sloppy_match_lengths_rpt(
 
     Behavioral model of SloppyPhraseMatcher.java:
       - groups = terms at 2+ phrase positions, members sorted by query
-        offset (sortRptGroups, :542-553; _phrase_offsets yields offsets
-        ascending, so group member order is already by offset);
+        offset (sortRptGroups, :542-553; the engine's slots already arrive
+        in offset order, sorted once in executor._slots_source);
       - init: j-th member of a group starts at the j-th occurrence
         (advanceRepeatGroups simple case, :486-494 — all members share one
         positions list, so fixed advances can never collide);
@@ -149,9 +149,8 @@ def _sloppy_match_lengths_rpt(
         members: dict = {}
         for i, t in enumerate(terms or []):
             members.setdefault(t, []).append(i)
-        groups = [g for g in members.values() if len(g) > 1]
-    else:
-        groups = [sorted(g, key=lambda i: offsets[i]) for g in groups if len(g) > 1]
+        groups = members.values()
+    groups = [sorted(g, key=lambda i: offsets[i]) for g in groups if len(g) > 1]
     for gi, g in enumerate(groups):
         for i in g:
             group_of[i] = gi
@@ -431,174 +430,31 @@ def sloppy_phrase_freq(
     return freq
 
 
-def sloppy_nterm_doc_freqs(
+
+
+def sloppy_doc_freqs(
     plists: Sequence[np.ndarray],
     bounds: Sequence[np.ndarray],
     offsets: Sequence[int],
     slop: int,
+    groups: Sequence[Sequence[int]] = (),
     dtype=np.float32,
 ):
-    """Per-doc phraseFreq for an n-DISTINCT-term sloppy phrase, computed as
-    a SYNCHRONIZED batched walk: every doc runs the exact greedy pq
-    traversal of SloppyPhraseMatcher (java:205-237), but all docs advance
-    one micro-step per vectorized iteration instead of a per-doc Python
-    loop (VERDICT r3 wrong#4 — the 2-term stationary chain generalized to
-    n terms).
+    """Per-doc phraseFreq for a sloppy phrase, computed as a SYNCHRONIZED
+    batched walk: every doc runs the greedy pq traversal of
+    SloppyPhraseMatcher (java:205-237), but all docs advance one
+    micro-step per vectorized iteration instead of a per-doc Python loop.
 
     One micro-step = one execution of the scalar walk's inner-loop body
-    (one index increment on the doc's current mover). The pq is replaced
-    by an argmin over the doc's n current (position, offset) keys — with
-    n distinct offsets the (pos, off) order is strict, so the ord
-    tie-break never fires. Emissions happen at most once per doc per
-    micro-step IN WALK ORDER, and sloppyWeights fold left-to-right in
-    ``dtype``, so freqs are BIT-IDENTICAL to the scalar matcher's float32
-    accumulation.
+    (one index increment on the doc's current mover). The pq is an argmin
+    over the doc's n current keys ``adjusted position * K + offset``, with
+    the offsets rebased on the least and K = 1 << max(8, their largest bit
+    length): the (position, offset) order at any offset, decoded with a
+    shift, and the argmin's first index is the pq's ord tie-break.
 
-    Inputs: per term t, ``plists[t]`` = concatenated ascending positions
-    for every doc, ``bounds[t]`` = row offsets (len docs+1); every doc
-    must have >= 1 position for every term (the conjunction phase
-    guarantees it). Returns (doc_rows, freqs) for rows with freq > 0,
-    where doc_rows index the bounds rows.
-    """
-    n = len(plists)
-    ndocs = len(bounds[0]) - 1
-    if ndocs == 0 or n < 2:
-        return np.empty(0, np.int64), np.empty(0, dtype)
-    offs = np.asarray(offsets, dtype=np.int64)
-    starts = np.stack([np.asarray(b[:-1], np.int64) for b in bounds], axis=1)
-    lens = np.stack(
-        [np.asarray(b[1:], np.int64) - np.asarray(b[:-1], np.int64) for b in bounds],
-        axis=1,
-    )
-    if (lens <= 0).any():
-        raise ValueError("every doc needs >= 1 position per term")
-
-    rows = np.arange(ndocs, dtype=np.int64)
-    cur = np.zeros((ndocs, n), dtype=np.int64)
-    curpos = np.empty((ndocs, n), dtype=np.int64)  # adjusted positions
-    for t in range(n):
-        curpos[:, t] = plists[t][starts[:, t]] - offs[t]
-
-    key = curpos * 256 + offs[None, :]  # (pos, off) strict order; off < 256
-    mover = np.argmin(key, axis=1)
-    end = curpos.max(axis=1)
-    pos_m = np.take_along_axis(curpos, mover[:, None], 1)[:, 0]
-    ml = end - pos_m
-    km = key.copy()
-    km[rows, mover] = np.iinfo(np.int64).max
-    next_pos = km.min(axis=1) >> np.int64(8)
-
-    freqs = np.zeros(ndocs, dtype=dtype)
-    one = dtype(1)
-
-    # active-set compression state
-    act = rows
-    cur_a, curpos_a = cur, curpos
-    starts_a, lens_a = starts, lens
-    mover_a, end_a, ml_a, next_a = mover, end, ml, next_pos
-
-    # Convoy cutoff: when few docs stay active (the longest lists), the
-    # per-iteration numpy dispatch overhead exceeds the scalar walk's cost.
-    # Finish those docs with the scalar matcher FROM SCRATCH, overwriting
-    # their accumulator — the scalar walk is the definition, so the result
-    # stays bit-identical.
-    SCALAR_TAIL = 96
-    dead_a = np.zeros(ndocs, dtype=bool)
-
-    while len(act):
-        if int((~dead_a).sum()) <= SCALAR_TAIL and ndocs > SCALAR_TAIL:
-            for r in act[~dead_a].tolist():
-                pls = [
-                    plists[t][starts[r, t] : starts[r, t] + lens[r, t]]
-                    for t in range(n)
-                ]
-                f = dtype(0)
-                for mlen in sloppy_match_lengths(pls, offsets, slop):
-                    f = f + one / (one + dtype(mlen))
-                freqs[r] = f
-            break
-        m = len(act)
-        rix = np.arange(m)
-        # 1. advance each doc's mover (dead rows advance a stale counter —
-        # harmless, their gathers and emissions are masked out below)
-        cur_a[rix, mover_a] += 1
-        cm = cur_a[rix, mover_a]
-        exhausted = ~dead_a & (cm >= lens_a[rix, mover_a])
-        # exhausted docs: final emission if ml <= slop, then mark dead;
-        # physical compaction is DEFERRED until a quarter of the block is
-        # dead (per-iteration 8-array copies dominated the decay phase)
-        if exhausted.any():
-            er = act[exhausted]
-            eml = ml_a[exhausted]
-            hit = eml <= slop
-            if hit.any():
-                idx = er[hit]
-                freqs[idx] = freqs[idx] + one / (one + eml[hit].astype(dtype))
-            dead_a = dead_a | exhausted
-            n_dead = int(dead_a.sum())
-            if n_dead == m:
-                break
-            if n_dead >= max(32, m // 4):
-                keep = ~dead_a
-                act = act[keep]
-                cur_a = cur_a[keep]
-                curpos_a = curpos_a[keep]
-                starts_a = starts_a[keep]
-                lens_a = lens_a[keep]
-                mover_a = mover_a[keep]
-                end_a = end_a[keep]
-                ml_a = ml_a[keep]
-                next_a = next_a[keep]
-                dead_a = np.zeros(len(act), dtype=bool)
-                m = len(act)
-                rix = np.arange(m)
-        # 2. gather the mover's new adjusted position (grouped by term)
-        p = np.zeros(m, dtype=np.int64)
-        for t in range(n):
-            g = (mover_a == t) & ~dead_a
-            if g.any():
-                p[g] = plists[t][starts_a[g, t] + cur_a[g, t]] - offs[t]
-        live = ~dead_a
-        curpos_a[rix[live], mover_a[live]] = p[live]
-        end_a = np.where(live, np.maximum(end_a, p), end_a)
-        # 3. p > next_pos -> (maybe emit) + re-pop; else shrink match length
-        done = live & (p > next_a)
-        if done.any():
-            hit = done & (ml_a <= slop)
-            if hit.any():
-                idx = act[hit]
-                freqs[idx] = freqs[idx] + one / (one + ml_a[hit].astype(dtype))
-            # re-pop: argmin over all n current keys (mover already pushed)
-            sub = np.flatnonzero(done)
-            keys = curpos_a[sub] * 256 + offs[None, :]
-            mv = np.argmin(keys, axis=1)
-            mover_a[sub] = mv
-            pm = np.take_along_axis(curpos_a[sub], mv[:, None], 1)[:, 0]
-            ml_a[sub] = end_a[sub] - pm
-            keys[np.arange(len(sub)), mv] = np.iinfo(np.int64).max
-            next_a[sub] = keys.min(axis=1) >> np.int64(8)
-        shrink = live & ~done
-        if shrink.any():
-            ml_a = np.where(shrink, np.minimum(ml_a, end_a - p), ml_a)
-
-    out = np.flatnonzero(freqs > 0)
-    return out, freqs[out]
-
-
-def sloppy_rpt_doc_freqs(
-    plists: Sequence[np.ndarray],
-    bounds: Sequence[np.ndarray],
-    offsets: Sequence[int],
-    slop: int,
-    groups: Sequence[Sequence[int]],
-    dtype=np.float32,
-):
-    """Per-doc phraseFreq for a REPEATING-TERM sloppy phrase (simple
-    rptGroups case: every group's members share ONE positions list), as a
-    synchronized batched walk — the micro-step machinery of
-    sloppy_nterm_doc_freqs extended with vectorized collision chains.
-
-    Semantics are the scalar _sloppy_match_lengths_rpt verbatim:
+    ``groups`` are the repeat groups (pp-index lists, empty when no term
+    repeats) in the simple rptGroups case: every group's members share ONE
+    positions list. Semantics are the scalar _sloppy_match_lengths_rpt:
       - init: the j-th member (by offset) of a group starts at the j-th
         occurrence (advanceRepeatGroups simple case,
         SloppyPhraseMatcher.java:486-494); docs with fewer occurrences
@@ -611,13 +467,18 @@ def sloppy_rpt_doc_freqs(
         (advanceRpts, :317-354). One chain round = one vectorized pass
         over all active docs; re-seating is free (the argmin re-pop reads
         current positions).
-    Exhaustion inside a chain emits the current match length like mover
-    exhaustion (the scalar inner loop's single not-ok path). Emissions
-    fold left-to-right in ``dtype`` — bit-identical to the scalar matcher
-    (randomized differential in tests/test_phrase.py).
+    Exhaustion, of the mover or inside a chain, emits the current match
+    length (the scalar inner loop's single not-ok path). Emissions happen
+    at most once per doc per micro-step IN WALK ORDER and sloppyWeights
+    fold left-to-right in ``dtype``, so freqs are BIT-IDENTICAL to the
+    scalar matcher's accumulation (randomized differentials in
+    tests/test_phrase.py).
 
-    ``groups``: pp-index lists sorted by offset. Returns (doc_rows,
-    freqs) for rows with freq > 0 (rows index the bounds rows).
+    Inputs: per pp t, ``plists[t]`` = concatenated ascending positions for
+    every doc, ``bounds[t]`` = row offsets (len docs+1); every doc must
+    have >= 1 position per pp (the conjunction phase guarantees it).
+    Raises ValueError when the keys would not fit int64. Returns
+    (doc_rows, freqs) for rows with freq > 0 (rows index the bounds rows).
     """
     n = len(plists)
     ndocs0 = len(bounds[0]) - 1
@@ -625,14 +486,6 @@ def sloppy_rpt_doc_freqs(
     if ndocs0 == 0 or n < 2:
         return z, np.empty(0, dtype)
     offs = np.asarray(offsets, dtype=np.int64)
-    group_of = np.full(n, -1, dtype=np.int64)
-    init_occ = np.zeros(n, dtype=np.int64)
-    for gi, g in enumerate(groups):
-        for j, i in enumerate(g):
-            group_of[i] = gi
-            init_occ[i] = j
-    in_group = group_of >= 0
-
     starts0 = np.stack([np.asarray(b[:-1], np.int64) for b in bounds], axis=1)
     lens0 = np.stack(
         [np.asarray(b[1:], np.int64) - np.asarray(b[:-1], np.int64) for b in bounds],
@@ -640,159 +493,161 @@ def sloppy_rpt_doc_freqs(
     )
     if (lens0 <= 0).any():
         raise ValueError("every doc needs >= 1 position per term")
+    tie = offs - offs.min()
+    shift = max(8, int(tie.max()).bit_length())
+    reach = max(max(int(p.max()) for p in plists) - int(offs.min()),
+                int(offs.max()) - min(int(p.min()) for p in plists)) + 1
+    if reach << shift > 1 << 62:
+        raise ValueError("phrase positions and offsets exceed the (position, "
+                         "offset) key space")
+
+    groups = [sorted(g, key=lambda i: offs[i]) for g in groups if len(g) > 1]
+    group_of = np.full(n, -1, dtype=np.int64)
+    init_occ = np.zeros(n, dtype=np.int64)
+    for gi, g in enumerate(groups):
+        for j, i in enumerate(g):
+            group_of[i] = gi
+            init_occ[i] = j
+    in_group = group_of >= 0
+    glists = [np.asarray(g, dtype=np.int64) for g in groups]
     # a doc whose shared list is shorter than a group's stagger can never
     # position (the scalar init returns [])
-    viable = (lens0 > init_occ[None, :]).all(axis=1)
-    docmap = np.flatnonzero(viable)
+    docmap = np.flatnonzero((lens0 > init_occ[None, :]).all(axis=1))
     ndocs = len(docmap)
     if ndocs == 0:
         return z, np.empty(0, dtype)
-    starts = starts0[docmap]
-    lens = lens0[docmap]
 
-    rows = np.arange(ndocs, dtype=np.int64)
-    cur = np.tile(init_occ, (ndocs, 1))
-    curpos = np.empty((ndocs, n), dtype=np.int64)
+    def pop_least(cp):
+        """The pq pop on each row of adjusted positions: the mover (least
+        key), its position and the next least position."""
+        keys = cp * np.int64(1 << shift) + tie[None, :]
+        mv = np.argmin(keys, axis=1)
+        r = np.arange(len(cp))
+        pm = cp[r, mv]
+        keys[r, mv] = np.iinfo(np.int64).max
+        return mv, pm, keys.min(axis=1) >> np.int64(shift)
+
+    act = np.arange(ndocs, dtype=np.int64)
+    starts_a, lens_a = starts0[docmap], lens0[docmap]
+    cur_a = np.tile(init_occ, (ndocs, 1))
+    curpos_a = np.empty((ndocs, n), dtype=np.int64)  # adjusted positions
     for t in range(n):
-        curpos[:, t] = plists[t][starts[:, t] + cur[:, t]] - offs[t]
-
-    key = curpos * 256 + offs[None, :]
-    mover = np.argmin(key, axis=1)
-    end = curpos.max(axis=1)
-    pos_m = np.take_along_axis(curpos, mover[:, None], 1)[:, 0]
-    ml = end - pos_m
-    km = key.copy()
-    km[rows, mover] = np.iinfo(np.int64).max
-    next_pos = km.min(axis=1) >> np.int64(8)
+        curpos_a[:, t] = plists[t][starts_a[:, t] + cur_a[:, t]] - offs[t]
+    mover_a, pm, next_a = pop_least(curpos_a)
+    end_a = curpos_a.max(axis=1)
+    ml_a = end_a - pm
+    dead_a = np.zeros(ndocs, dtype=bool)
 
     freqs = np.zeros(ndocs, dtype=dtype)
     one = dtype(1)
 
-    act = rows
-    cur_a, curpos_a = cur, curpos
-    starts_a, lens_a = starts, lens
-    mover_a, end_a, ml_a, next_a = mover, end, ml, next_pos
+    def emit(mask):
+        """Fold the current match length of the ``mask`` rows within slop."""
+        hit = mask & (ml_a <= slop)
+        if hit.any():
+            idx = act[hit]
+            freqs[idx] = freqs[idx] + one / (one + ml_a[hit].astype(dtype))
 
+    def gather(mask, pp):
+        """Adjusted position of pp ``pp[r]`` at its current index, for the
+        ``mask`` rows (0 elsewhere)."""
+        p = np.zeros(len(act), dtype=np.int64)
+        for t in range(n):
+            g = mask & (pp == t)
+            if g.any():
+                p[g] = plists[t][starts_a[g, t] + cur_a[g, t]] - offs[t]
+        return p
+
+    # Convoy cutoff: when few docs stay active (the longest lists), the
+    # per-iteration numpy dispatch overhead exceeds the scalar walk's cost.
+    # Finish those docs with the scalar matcher FROM SCRATCH, overwriting
+    # their accumulator — the scalar walk is the definition, so the result
+    # stays bit-identical.
     SCALAR_TAIL = 96
-    dead_a = np.zeros(ndocs, dtype=bool)
-    glists = [np.asarray(g, dtype=np.int64) for g in groups]
-
-    while len(act):
-        if int((~dead_a).sum()) <= SCALAR_TAIL and ndocs > SCALAR_TAIL:
-            # convoy cutoff: finish the few longest docs with the scalar
-            # rpt matcher FROM SCRATCH (the definition), overwriting their
-            # accumulator — bit-identical by construction
+    while True:
+        m = len(act)
+        n_live = m - int(dead_a.sum())
+        if n_live == 0:
+            break
+        if n_live <= SCALAR_TAIL < ndocs:
             for r in act[~dead_a].tolist():
                 d0 = int(docmap[r])
-                pls = [
-                    plists[t][starts0[d0, t] : starts0[d0, t] + lens0[d0, t]]
-                    for t in range(n)
-                ]
+                pls = [plists[t][starts0[d0, t] : starts0[d0, t] + lens0[d0, t]]
+                       for t in range(n)]
                 f = dtype(0)
-                for mlen in sloppy_match_lengths(pls, offsets, slop,
-                                                 groups=groups):
+                for mlen in sloppy_match_lengths(pls, offsets, slop, groups=groups):
                     f = f + one / (one + dtype(mlen))
                 freqs[r] = f
             break
-        m = len(act)
+        # physical compaction is DEFERRED until a quarter of the block is
+        # dead (per-iteration copies dominated the decay phase)
+        if m - n_live >= max(32, m // 4):
+            keep = ~dead_a
+            act, cur_a, curpos_a, starts_a, lens_a = (
+                a[keep] for a in (act, cur_a, curpos_a, starts_a, lens_a))
+            mover_a, end_a, ml_a, next_a = (
+                a[keep] for a in (mover_a, end_a, ml_a, next_a))
+            dead_a = np.zeros(n_live, dtype=bool)
+            m = n_live
         rix = np.arange(m)
-        # 1. advance each doc's mover
+        # 1. advance each doc's mover (dead rows advance a stale counter —
+        # harmless, their gathers and emissions are masked out below)
         cur_a[rix, mover_a] += 1
-        cm = cur_a[rix, mover_a]
-        exhausted = ~dead_a & (cm >= lens_a[rix, mover_a])
+        exhausted = ~dead_a & (cur_a[rix, mover_a] >= lens_a[rix, mover_a])
         if exhausted.any():
-            er = act[exhausted]
-            eml = ml_a[exhausted]
-            hit = eml <= slop
-            if hit.any():
-                idx = er[hit]
-                freqs[idx] = freqs[idx] + one / (one + eml[hit].astype(dtype))
+            emit(exhausted)
             dead_a = dead_a | exhausted
-            if int(dead_a.sum()) == m:
-                break
-        # 2. gather the mover's new adjusted position
-        p = np.zeros(m, dtype=np.int64)
         live = ~dead_a
-        for t in range(n):
-            g = (mover_a == t) & live
-            if g.any():
-                p[g] = plists[t][starts_a[g, t] + cur_a[g, t]] - offs[t]
+        # 2. gather the mover's new adjusted position
+        p = gather(live, mover_a)
         curpos_a[rix[live], mover_a[live]] = p[live]
         end_a = np.where(live, np.maximum(end_a, p), end_a)
 
-        # 2b. collision chains (advanceRpts): chain head starts at the
-        # mover; each round resolves one collision step for every doc
-        head = mover_a.copy()
-        chain = live & in_group[np.minimum(head, n - 1)]
-        while chain.any():
-            raw = (
-                np.take_along_axis(curpos_a, head[:, None], 1)[:, 0]
-                + offs[np.minimum(head, n - 1)]
-            )
-            partner = np.full(m, -1, dtype=np.int64)
-            for gi, g in enumerate(glists):
-                gm = chain & (group_of[np.minimum(head, n - 1)] == gi)
-                if not gm.any():
-                    continue
-                for mem in g.tolist():  # group order == collide_at scan order
-                    cand = gm & (partner < 0) & (head != mem) & (
-                        curpos_a[:, mem] + offs[mem] == raw
-                    )
-                    partner[cand] = mem
-            chain = chain & (partner >= 0)
-            if not chain.any():
-                break
-            pk = np.minimum(partner.clip(min=0), n - 1)
-            # lesser of the colliding pair by (adjusted pos, offset): same
-            # raw position, so the LARGER offset is the lesser pp
-            q = np.where(offs[np.minimum(head, n - 1)] > offs[pk], head, partner)
-            q = np.where(chain, q, 0)
-            cur_a[rix[chain], q[chain]] += 1
-            cq = np.take_along_axis(cur_a, q[:, None], 1)[:, 0]
-            lq = np.take_along_axis(lens_a, q[:, None], 1)[:, 0]
-            exh = chain & (cq >= lq)
-            if exh.any():
-                er = act[exh]
-                eml = ml_a[exh]
-                hit = eml <= slop
-                if hit.any():
-                    idx = er[hit]
-                    freqs[idx] = freqs[idx] + one / (one + eml[hit].astype(dtype))
-                dead_a = dead_a | exh
-                chain = chain & ~exh
-                live = ~dead_a
+        if glists:
+            # 2b. collision chains (advanceRpts): the chain head starts at
+            # the mover; each round resolves one collision step for every doc
+            head = mover_a.copy()
+            chain = live & in_group[head]
+            while chain.any():
+                raw = curpos_a[rix, head] + offs[head]
+                partner = np.full(m, -1, dtype=np.int64)
+                for gi, g in enumerate(glists):
+                    gm = chain & (group_of[head] == gi)
+                    if not gm.any():
+                        continue
+                    for mem in g.tolist():  # group order == collide_at scan order
+                        cand = gm & (partner < 0) & (head != mem) & (
+                            curpos_a[:, mem] + offs[mem] == raw
+                        )
+                        partner[cand] = mem
+                chain = chain & (partner >= 0)
                 if not chain.any():
                     break
-            np_ = np.zeros(m, dtype=np.int64)
-            for t in range(n):
-                g = chain & (q == t)
-                if g.any():
-                    np_[g] = plists[t][starts_a[g, t] + cur_a[g, t]] - offs[t]
-            curpos_a[rix[chain], q[chain]] = np_[chain]
-            end_a = np.where(chain, np.maximum(end_a, np_), end_a)
-            head = np.where(chain, q, head)
+                # lesser of the colliding pair by (adjusted pos, offset): same
+                # raw position, so the LARGER offset is the lesser pp
+                q = np.where(offs[head] > offs[partner.clip(min=0)], head, partner)
+                q = np.where(chain, q, 0)
+                cur_a[rix[chain], q[chain]] += 1
+                exh = chain & (cur_a[rix, q] >= lens_a[rix, q])
+                if exh.any():
+                    emit(exh)
+                    dead_a = dead_a | exh
+                    chain = chain & ~exh
+                pq = gather(chain, q)
+                curpos_a[rix[chain], q[chain]] = pq[chain]
+                end_a = np.where(chain, np.maximum(end_a, pq), end_a)
+                head = np.where(chain, q, head)
+            live = ~dead_a
+            # the mover may have advanced again inside its chain: re-read
+            p = curpos_a[rix, mover_a]
 
-        live = ~dead_a
-        if not live.any():
-            break
-        # the mover may have advanced again inside its chain: re-read
-        p = np.take_along_axis(curpos_a, mover_a[:, None], 1)[:, 0]
-
-        # 3. p > next_pos -> (maybe emit) + re-pop; else shrink
+        # 3. p > next_pos -> (maybe emit) + re-pop; else shrink match length
         done = live & (p > next_a)
         if done.any():
-            hit = done & (ml_a <= slop)
-            if hit.any():
-                idx = act[hit]
-                freqs[idx] = freqs[idx] + one / (one + ml_a[hit].astype(dtype))
+            emit(done)
             sub = np.flatnonzero(done)
-            keys = curpos_a[sub] * 256 + offs[None, :]
-            mv = np.argmin(keys, axis=1)
-            mover_a[sub] = mv
-            pm = np.take_along_axis(curpos_a[sub], mv[:, None], 1)[:, 0]
+            mover_a[sub], pm, next_a[sub] = pop_least(curpos_a[sub])
             ml_a[sub] = end_a[sub] - pm
-            keys[np.arange(len(sub)), mv] = np.iinfo(np.int64).max
-            next_a[sub] = keys.min(axis=1) >> np.int64(8)
         shrink = live & ~done
         if shrink.any():
             ml_a = np.where(shrink, np.minimum(ml_a, end_a - p), ml_a)

@@ -1699,21 +1699,16 @@ def _intersect_rarest(rows: Dict[str, dict], sets: Iterable[Tuple[str, ...]],
 
 
 def _phrase_offsets(phrase, stop_words) -> List[Tuple[str, int]]:
-    """Normalize a phrase spec to [(term, offset)] with offset[0] == 0
-    (PhraseQuery.rewrite rebases; stopword holes preserved like the
-    QueryParser's position increments)."""
+    """Normalize a phrase spec to [(term, offset)] (stopword holes preserved
+    like the QueryParser's position increments; _slots_source orders and
+    rebases the offsets)."""
     from ..analysis import ENGLISH_STOP_WORDS, analyze_with_positions
 
     if isinstance(phrase, str):
-        pairs = analyze_with_positions(phrase, stop_words or ENGLISH_STOP_WORDS)
-    elif phrase and isinstance(phrase[0], (tuple, list)):
-        pairs = [(t, int(o)) for t, o in phrase]
-    else:
-        pairs = [(t, i) for i, t in enumerate(phrase)]
-    if not pairs:
-        return []
-    base = pairs[0][1]
-    return [(t, o - base) for t, o in pairs]
+        return analyze_with_positions(phrase, stop_words or ENGLISH_STOP_WORDS)
+    if phrase and isinstance(phrase[0], (tuple, list)):
+        return [(t, int(o)) for t, o in phrase]
+    return [(t, i) for i, t in enumerate(phrase)]
 
 
 def make_phrase_fn(
@@ -1738,19 +1733,15 @@ def make_phrase_fn(
     - slop 0: one intersection of fused (doc, position - offset) keys;
     - two one-alternative slots on distinct terms: the batched 2-term
       chain (sloppy_2term_doc_freqs);
-    - no term shared across slots: the batched n-term walk over the slots'
-      position unions (sloppy_nterm_doc_freqs);
-    - repeating terms, one alternative per slot: the batched rptGroups walk
-      (sloppy_rpt_doc_freqs);
-    - otherwise, or when an offset is >= 256 (the batched walks order pps
-      by ``position * 256 + offset``), the per-doc greedy walk
-      (sloppy_phrase_freq) with union-find repeat groups over slots sharing
-      a term (gatherRptGroups, SloppyPhraseMatcher.java:556-609) and the
-      multi-term init when a repeating slot has several alternatives."""
-    from ..functions.phrase import (
-        sloppy_2term_doc_freqs, sloppy_nterm_doc_freqs, sloppy_phrase_freq,
-        sloppy_rpt_doc_freqs,
-    )
+    - a repeat group whose slots have alternatives: the per-doc greedy
+      walk (sloppy_phrase_freq) with the multi-term init;
+    - anything else, at any offset: the batched walk over the slots'
+      position unions (sloppy_doc_freqs).
+
+    Repeat groups are union-find sets of slots sharing a term
+    (gatherRptGroups, SloppyPhraseMatcher.java:556-609). ``slots`` come
+    sorted by offset (_slots_source)."""
+    from ..functions.phrase import sloppy_2term_doc_freqs, sloppy_doc_freqs, sloppy_phrase_freq
 
     offs = [int(o) for o, _ in slots]
     POS_BASE = np.int64(1) << np.int64(22)  # fused (doc, adjusted-pos) key space
@@ -1827,13 +1818,9 @@ def make_phrase_fn(
             bounds.append(np.concatenate(([0], np.cumsum(cnts))))
         return plists, bounds
 
-    def nterm(cand, slot_alts, per_term):
-        return sloppy_nterm_doc_freqs(*slot_lists(cand, slot_alts, per_term), offs, slop,
-                                      dtype=dtype)
-
-    def rpt(cand, slot_alts, per_term):
-        plists, bounds = slot_lists(cand, slot_alts, per_term)
-        return sloppy_rpt_doc_freqs(plists, bounds, offs, slop, groups, dtype=dtype)
+    def batched(cand, slot_alts, per_term):
+        return sloppy_doc_freqs(*slot_lists(cand, slot_alts, per_term), offs, slop, groups,
+                                dtype=dtype)
 
     def walk(cand, slot_alts, per_term):
         plists, bounds = slot_lists(cand, slot_alts, per_term)
@@ -1841,7 +1828,7 @@ def make_phrase_fn(
         for i in range(len(cand)):
             f = sloppy_phrase_freq(
                 [p[b[i] : b[i + 1]] for p, b in zip(plists, bounds)], offs, slop,
-                dtype=dtype, groups=groups, multi_term=multi_term,
+                dtype=dtype, groups=groups, multi_term=True,
             )
             if f > 0:
                 rows_l.append(i)
@@ -1852,12 +1839,10 @@ def make_phrase_fn(
         match = exact
     elif single and len(slots) == 2 and not groups:
         match = two_term
-    elif max(offs) >= 256:
+    elif multi_term:
         match = walk
-    elif not groups:
-        match = nterm
     else:
-        match = rpt if single else walk
+        match = batched
 
     def run(rows: Dict[str, dict], deleted: Optional[np.ndarray]):
         counters = [0, 0]
@@ -1978,9 +1963,11 @@ def _phrase_source(index, phrase, slop=0, k=10, boost=1.0, quantize=True,
 def _slots_source(index, slots, slop, k, boost, quantize, dtype,
                   similarity) -> Optional[_TopkSource]:
     """The phrase kernel (make_phrase_fn) over ``index`` as a gather source.
-    ``slots`` = [(offset, (alternatives...))]; an alternative absent from
-    the index is ignored, and None is returned when a slot has none left
-    (it can never match). weight = boost * Σ idf over every existing
+    ``slots`` = [(offset, (alternatives...))] in any order: they are sorted
+    by offset (stable) and rebased on the least (PhraseQuery.rewrite), the
+    order the matchers assume. An alternative absent from the index is
+    ignored, and None is returned when a slot has none left (it can never
+    match). weight = boost * Σ idf over every existing
     alternative in slot order: one TermStatistics per term occurrence, so
     a repeated phrase term counts once per position (PhraseQuery's
     termStats, MultiPhraseQuery's allTermStats, MultiPhraseQuery.java:
@@ -1993,7 +1980,9 @@ def _slots_source(index, slots, slop, k, boost, quantize, dtype,
     from .similarities import bind_similarity
 
     stats = index.term_stats_for(sorted({t for _, alts in slots for t in alts}))
-    live = [(off, tuple(t for t in alts if t in stats)) for off, alts in slots]
+    slots = sorted(slots, key=lambda s: int(s[0]))
+    live = [(int(off) - int(slots[0][0]), tuple(t for t in alts if t in stats))
+            for off, alts in slots]
     if not all(alts for _, alts in live):
         return None
     occ = [t for _, alts in live for t in alts]
@@ -2094,8 +2083,7 @@ def search_multi_phrase(
     require_positions(index, "MultiPhraseQuery")
     if not slots:
         return _hits_frame(index.spark)
-    base_off = int(slots[0][0])
-    norm_slots = [(int(o) - base_off, tuple(sorted(set(a)))) for o, a in slots]
+    norm_slots = [(o, tuple(sorted(set(a)))) for o, a in slots]
     return _topk_frame(index, _slots_source(index, norm_slots, slop, k, boost, quantize,
                                             dtype, similarity), k)
 

@@ -420,11 +420,13 @@ def test_multi_phrase_single_term_repeats_equal_phrase(phrase_table):
 
 def test_multi_phrase_edge_shapes_match_reference(phrase_table):
     """Multi-phrase vs the reference where the kernel must pick its path
-    from the slot shape and the segment: sloppy slots at offsets >= 256 run
-    the per-doc walk (the batched n-term walk orders pps by position * 256
-    + offset and scores the long layout doc 0.0131 instead of 0.0101 phrase
-    freq), and an alternative that only some segments hold is skipped in
-    the others."""
+    from the slot shape and the segment: sloppy slots at offsets >= 256
+    (a fixed ``position * 256 + offset`` key scores the long layout doc
+    0.0131 instead of 0.0101 phrase freq), an alternative that only some
+    segments hold is skipped in the others, and a repeat group of
+    one-alternative slots beside a slot with alternatives runs the batched
+    walk (only a group whose own slots have alternatives needs the per-doc
+    multi-term init)."""
     from lucene_spark.pyref import search_multi_phrase as ref_mp
     from lucene_spark.search.executor import search_multi_phrase
 
@@ -433,6 +435,8 @@ def test_multi_phrase_edge_shapes_match_reference(phrase_table):
         ([(0, ["alpha"]), (279, ["beta"]), (540, ["gamma"])], 455, [200]),
         ([(0, ["alpha", "zeta"]), (1, ["beta"])], 0, None),
         ([(0, ["alpha", "zeta"]), (1, ["beta"]), (2, ["gamma"])], 1, None),
+        ([(0, ["alpha"]), (1, ["beta", "zeta"]), (2, ["alpha"])], 2, None),
+        ([(0, ["beta"]), (1, ["gamma", "delta"]), (3, ["beta"])], 3, None),
     ]
     for slots, slop, docs in cases:
         got = [(r["docid"], r["score"])
@@ -440,6 +444,28 @@ def test_multi_phrase_edge_shapes_match_reference(phrase_table):
         want = ref_mp(ref, slots, slop=slop, k=15)
         assert got == want and want, (slots, slop)
         assert docs is None or [d for d, _ in want] == docs
+
+
+def test_phrase_slots_out_of_offset_order_equal_sorted(phrase_table):
+    """Slots given out of offset order score exactly as the sorted query:
+    the kernel sorts slots by offset and rebases on the least, so the
+    batched walk's (position, offset) keys and the repeat-group init see
+    ascending offsets. Checked for the multi-phrase and the [(term,
+    offset)] pairs form against the sorted query and the reference."""
+    from lucene_spark.pyref import search_multi_phrase as ref_mp, search_phrase as ref_ph
+    from lucene_spark.search.executor import search_multi_phrase, search_phrase
+
+    idx, ref = phrase_table
+    hits = lambda df: [(r["docid"], r["score"]) for r in df.collect()]
+    for shuffled in ([(1, "beta"), (0, "alpha"), (2, "gamma")],
+                     [(2, "alpha"), (1, "beta"), (0, "alpha")]):
+        slots = [(o, [t]) for o, t in shuffled]
+        pairs = [(t, o) for o, t in shuffled]
+        want = hits(search_multi_phrase(idx, sorted(slots), slop=2, k=15))
+        mp = hits(search_multi_phrase(idx, slots, slop=2, k=15))
+        ph = hits(search_phrase(idx, pairs, slop=2, k=15))
+        assert want and mp == ph == want, shuffled
+        assert want == ref_mp(ref, slots, slop=2, k=15) == ref_ph(ref, pairs, slop=2, k=15)
 
 
 def test_multi_phrase_multiterm_repeats_matches_pyref(spark, tmp_path):
@@ -543,16 +569,14 @@ def test_ngram_phrase_same_matches_fewer_terms(spark, tmp_path):
 
 
 def test_batched_nterm_sloppy_matches_scalar_randomized():
-    """sloppy_nterm_doc_freqs (synchronized micro-step walk) is
-    BIT-IDENTICAL to the per-doc greedy pq matcher across random docs,
+    """sloppy_doc_freqs without repeat groups (synchronized micro-step
+    walk) is BIT-IDENTICAL to the per-doc greedy pq matcher across random docs,
     term counts, offsets, and slops (VERDICT r3 #6 done-criterion).
     Per-doc positions are split from one distinct draw — distinct terms
     never share a position, as in a real index."""
     import numpy as np
 
-    from lucene_spark.functions.phrase import (
-        sloppy_nterm_doc_freqs, sloppy_phrase_freq,
-    )
+    from lucene_spark.functions.phrase import sloppy_doc_freqs, sloppy_phrase_freq
 
     rng = np.random.default_rng(17)
     for trial in range(300):
@@ -572,7 +596,7 @@ def test_batched_nterm_sloppy_matches_scalar_randomized():
             for t in range(n)
         ]
         slop = int(rng.integers(0, 12))
-        rows, freqs = sloppy_nterm_doc_freqs(plists, bounds, offsets, slop)
+        rows, freqs = sloppy_doc_freqs(plists, bounds, offsets, slop, groups=())
         got = dict(zip(rows.tolist(), freqs.tolist()))
         want = {}
         for d in range(ndocs):
@@ -633,13 +657,10 @@ def test_phrase_refuses_positions_free_index(spark, tmp_path):
 
 def test_multiphrase_sloppy_batched_equals_scalar_randomized():
     """The batched no-repeats multiphrase path (slots as virtual distinct
-    terms through sloppy_nterm_doc_freqs) must produce bit-identical
+    terms through sloppy_doc_freqs, no repeat groups) must produce bit-identical
     float32 freqs to the per-doc sloppy_phrase_freq walk over the same
     merged slot lists."""
-    from lucene_spark.functions.phrase import (
-        sloppy_nterm_doc_freqs,
-        sloppy_phrase_freq,
-    )
+    from lucene_spark.functions.phrase import sloppy_doc_freqs, sloppy_phrase_freq
 
     rng = np.random.default_rng(77)
     for trial in range(25):
@@ -659,8 +680,8 @@ def test_multiphrase_sloppy_batched_equals_scalar_randomized():
                 per_doc[d].append(ps)
             plists.append(np.concatenate(parts))
             bounds.append(np.concatenate(([0], np.cumsum(cnt))))
-        doc_rows, freqs = sloppy_nterm_doc_freqs(
-            plists, bounds, offs, slop, dtype=np.float32
+        doc_rows, freqs = sloppy_doc_freqs(
+            plists, bounds, offs, slop, groups=(), dtype=np.float32
         )
         got = dict(zip(doc_rows.tolist(), freqs.tolist()))
         for d in range(ndocs):
@@ -672,7 +693,7 @@ def test_multiphrase_sloppy_batched_equals_scalar_randomized():
 
 
 def test_sloppy_rpt_batched_bit_identical_randomized():
-    """sloppy_rpt_doc_freqs (batched rptGroups walk incl. vectorized
+    """sloppy_doc_freqs (batched rptGroups walk incl. vectorized
     collision chains) is BIT-IDENTICAL to the scalar
     _sloppy_match_lengths_rpt accumulation on randomized repeating-term
     phrase shapes (VERDICT r4 ask #10)."""
@@ -681,10 +702,7 @@ def test_sloppy_rpt_batched_bit_identical_randomized():
 
     import numpy as np
 
-    from lucene_spark.functions.phrase import (
-        sloppy_match_lengths,
-        sloppy_rpt_doc_freqs,
-    )
+    from lucene_spark.functions.phrase import sloppy_doc_freqs, sloppy_match_lengths
 
     rng = random.Random(427)
     shapes_by_n = {
@@ -716,7 +734,7 @@ def test_sloppy_rpt_batched_bit_identical_randomized():
             plists.append(np.concatenate(doc_lists[t]))
             bounds.append(np.concatenate(
                 ([0], np.cumsum([len(x) for x in doc_lists[t]]))))
-        rows, freqs = sloppy_rpt_doc_freqs(plists, bounds, offs, slop, groups)
+        rows, freqs = sloppy_doc_freqs(plists, bounds, offs, slop, groups)
         got = dict(zip(rows.tolist(), freqs.tolist()))
         for d in range(ndocs):
             f = np.float32(0.0)
@@ -750,7 +768,7 @@ def test_sloppy_rpt_batched_scalar_tail_consistent():
     ba = np.concatenate(([0], np.cumsum([len(x) for x in doc_a])))
     pb = np.concatenate(doc_b)
     bb = np.concatenate(([0], np.cumsum([len(x) for x in doc_b])))
-    rows, freqs = ph.sloppy_rpt_doc_freqs(
+    rows, freqs = ph.sloppy_doc_freqs(
         [pa, pb, pa], [ba, bb, ba], [0, 1, 2], 3, [[0, 2]]
     )
     got = dict(zip(rows.tolist(), [float(f) for f in freqs]))
@@ -762,6 +780,90 @@ def test_sloppy_rpt_batched_scalar_tail_consistent():
             assert np.float32(got[d]) == np.float32(f), d
         else:
             assert d not in got, d
+
+
+def test_sloppy_batched_large_offsets_bit_identical_randomized():
+    """The batched walk keys pps by (position, offset) at any offset: with
+    offsets >= 256, with and without a repeat group, its freqs are
+    BIT-IDENTICAL to the scalar greedy walk (a fixed ``position * 256 +
+    offset`` key misorders such pps)."""
+    import random
+
+    from lucene_spark.functions.phrase import sloppy_doc_freqs, sloppy_match_lengths
+
+    rng = random.Random(913)
+    one = np.float32(1)
+    for trial in range(400):
+        terms = rng.choice([["a", "b"], ["a", "b", "c"], ["a", "b", "c", "d"],
+                            ["a", "a"], ["a", "b", "a"], ["a", "a", "b"],
+                            ["a", "b", "a", "b"]])
+        offs = sorted(rng.sample(range(1, 2000), len(terms) - 1))
+        offs = [0] + offs if offs[-1] >= 256 else [0] + offs[:-1] + [256 + offs[-1]]
+        groups = [g for g in ([i for i, x in enumerate(terms) if x == t]
+                              for t in sorted(set(terms))) if len(g) > 1]
+        slop = rng.randint(0, 2500)
+        ndocs = rng.randint(1, 12)
+        doc_lists = {t: [] for t in set(terms)}
+        for _ in range(ndocs):
+            ks = {t: rng.randint(1, 8) for t in doc_lists}
+            draw = rng.sample(range(3000), sum(ks.values()))
+            for t in sorted(doc_lists):
+                doc_lists[t].append(np.array(sorted(draw[:ks[t]]), dtype=np.int64))
+                draw = draw[ks[t]:]
+        plists = [np.concatenate(doc_lists[t]) for t in terms]
+        bounds = [np.concatenate(([0], np.cumsum([len(x) for x in doc_lists[t]])))
+                  for t in terms]
+        rows, freqs = sloppy_doc_freqs(plists, bounds, offs, slop, groups)
+        got = dict(zip(rows.tolist(), freqs.tolist()))
+        want = {}
+        for d in range(ndocs):
+            f = np.float32(0.0)
+            for ml in sloppy_match_lengths([doc_lists[t][d] for t in terms], offs, slop,
+                                           groups=groups):
+                f = f + one / (one + np.float32(ml))
+            if f > 0:
+                want[d] = float(f)
+        assert got == want, (trial, terms, offs, slop)
+
+
+def test_sloppy_batched_scalar_tail_no_groups():
+    """The convoy-cutoff scalar tail of the walk without repeat groups
+    (more than 96 docs, one long doc outliving the rest) equals the
+    per-doc walk."""
+    from lucene_spark.functions.phrase import sloppy_doc_freqs, sloppy_phrase_freq
+
+    rng = np.random.default_rng(12)
+    ndocs = 150
+    per_doc = [[], [], []]
+    for d in range(ndocs):
+        lens = [400, 300, 350] if d == 0 else rng.integers(2, 6, size=3).tolist()
+        pool = rng.permutation(2000)
+        for t in range(3):
+            per_doc[t].append(np.sort(pool[:lens[t]]).astype(np.int64))
+            pool = pool[lens[t]:]
+    plists = [np.concatenate(p) for p in per_doc]
+    bounds = [np.concatenate(([0], np.cumsum([len(x) for x in p]))) for p in per_doc]
+    rows, freqs = sloppy_doc_freqs(plists, bounds, [0, 1, 3], 4)
+    got = dict(zip(rows.tolist(), freqs.tolist()))
+    want = {}
+    for d in range(ndocs):
+        f = sloppy_phrase_freq([p[d] for p in per_doc], [0, 1, 3], 4)
+        if f > 0:
+            want[d] = float(f)
+    assert 0 in want and got == want
+
+
+def test_sloppy_batched_refuses_keys_past_int64():
+    """Offsets come from the caller: positions and offsets whose
+    (position, offset) keys would pass 2^62 raise instead of wrapping."""
+    from lucene_spark.functions.phrase import sloppy_doc_freqs
+
+    plists = [np.array([5], dtype=np.int64), np.array([9], dtype=np.int64)]
+    bounds = [np.array([0, 1]), np.array([0, 1])]
+    with pytest.raises(ValueError, match="key space"):
+        sloppy_doc_freqs(plists, bounds, [0, 1 << 40], 3)
+    rows, _ = sloppy_doc_freqs(plists, bounds, [0, 1 << 20], 1 << 21)
+    assert rows.tolist() == [0]
 
 
 def test_phrase_wildcard_lowers_to_multiphrase(spark, built_index):
