@@ -311,7 +311,8 @@ def sloppy_2term_doc_freqs(
     Per-doc sloppyWeights 1/(1+d) are folded LEFT-TO-RIGHT in ``dtype``
     (one vectorized add per chain step — each step emits at most one match
     per doc), matching PhraseScorer's sequential float32 accumulation
-    bit-exactly. Returns (doc_ids, freqs) for docs with freq > 0.
+    bit-exactly. Returns (doc_ids, freqs) for docs with freq > 0. Keys
+    must be non-negative (ValueError otherwise).
     """
     z = np.empty(0, np.int64)
     ka = np.asarray(keys_a, np.int64)
@@ -320,7 +321,12 @@ def sloppy_2term_doc_freqs(
         return z, np.empty(0, dtype)
     keys = np.concatenate([ka, kb])
     lab = np.concatenate([np.zeros(len(ka), np.int8), np.ones(len(kb), np.int8)])
-    if len(keys) and int(keys.max()) < (1 << 62):
+    if int(keys.min()) < 0:
+        # the doc decode below floors, so a negative key (a position
+        # shifted below 0) would land in the previous doc
+        raise ValueError("sloppy_2term_doc_freqs needs non-negative keys: shift "
+                         "positions by the largest offset")
+    if int(keys.max()) < (1 << 62):
         # fused (key, label) sort key: one int64 argsort instead of a
         # two-pass lexsort — same ordering (label A before B on key ties)
         order = np.argsort((keys << 1) | lab, kind="stable")

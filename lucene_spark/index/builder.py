@@ -659,8 +659,9 @@ def _invert_group(
     # FS seam: works on local paths, file:// and object stores alike
     for d in (paths.postings, paths.norms, paths.docs, paths.segments):
         fsio.mkdirs(fs, paths.fs_path(d))
-    # small row groups + term-sorted rows -> parquet min/max stats give the
-    # scan row-group pruning on term filters (the .tip term-index analog)
+    # term-sorted rows in 4096-term row groups: each row group's min/max
+    # term stats let a term filter skip it (the .tip term-index analog);
+    # a segment under 4096 terms is one row group, so nothing is skipped
     pq.write_table(
         postings_tbl,
         paths.fs_path(os.path.join(paths.postings, f"segment-{segment_id:05d}.parquet")),

@@ -22,17 +22,22 @@ global top-k, so the merge is exact. Tie-break: score desc, docid asc
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import re
+import sys
+from collections import Counter, OrderedDict
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import IntegerType, StructField, StructType, _create_row
 
 from ..functions.codec import decode_block, decode_block_offsets, decode_block_positions
 from ..index.builder import IndexPaths, segment_tombstones
@@ -55,9 +60,11 @@ from .scorer import FieldStats, score_arrays, term_weights
 
 DECODED_SCHEMA = "term string, docid long, tf int, doclen int"
 TOMBSTONE_SCHEMA = "docid long, segment_id int"
-# every top-k answer is a local frame of this schema, built in Python (a
-# DDL string would cost a py4j parse on every query)
+# every top-k answer is a driver-local frame (LocalHits) of this schema,
+# built in Python (a DDL string would cost a py4j parse on every query)
 HITS_SCHEMA = StructType().add("docid", "long").add("score", "double")
+# a multireader's with_shard answer: each hit's shard ordinal leads its row
+SHARD_HITS_SCHEMA = StructType([StructField("shard", IntegerType(), False), *HITS_SCHEMA.fields])
 
 # MAXSCORE theta-refresh window (blocks decoded between threshold refreshes,
 # MaxScoreBulkScorer.java:26 window analog); module-level so tests can shrink
@@ -564,39 +571,159 @@ def _segment_deletes(fs, tomb_dir: str, files: Sequence[str], sid: int) -> np.nd
     return hit[1]
 
 
+# Per-worker budget of resident segment data (_Resident): decoded columns,
+# term lookups and footers of the segment files this worker has read.
+RESIDENT_BYTES = 256 << 20
+
+
+class _Resident:
+    """Decoded parts of segment files kept across tasks in each reused
+    Python worker (an opened SegmentReader serving every later search):
+    one footer per file, and per row group one entry per column. Keys
+    start with the file's (path, size, mtime_ns) stamp, as daemon.py keys
+    its zip re-reads, so a file rewritten in place (purge_deletes, a
+    rebuild into the same root) is never served from its old parts; they
+    are dropped when the new file's footer is read. Entries are evicted
+    least recently used first to stay within ``RESIDENT_BYTES``; an entry
+    larger than the whole budget, or of a file whose store reports no
+    mtime, is used by its read and not kept."""
+
+    def __init__(self):
+        self.parts = OrderedDict()  # key -> (value, nbytes), LRU first
+        self.nbytes = 0
+
+    def get(self, key):
+        hit = self.parts.get(key)
+        if hit is None:
+            return None
+        self.parts.move_to_end(key)
+        return hit[0]
+
+    def put(self, key, value, nbytes: int):
+        if key[2] is None or nbytes > RESIDENT_BYTES:
+            return value
+        while self.parts and self.nbytes + nbytes > RESIDENT_BYTES:
+            self.nbytes -= self.parts.popitem(last=False)[1][1]
+        self.parts[key] = (value, nbytes)
+        self.nbytes += nbytes
+        return value
+
+    def drop(self, path: str) -> None:
+        for key in [k for k in self.parts if k[0] == path]:
+            self.nbytes -= self.parts.pop(key)[1]
+
+
+# cloudpickle ships the module-level readers by reference, so in a worker
+# this is the worker's own (see _TOMBSTONES)
+_RESIDENT = _Resident()
+
+
+def _footer(md):
+    """(column names, per-row-group (min, max) term or None) of a segment
+    file's parquet footer: the term-sorted row groups' statistics."""
+    names = tuple(md.schema.to_arrow_schema().names)
+    j = names.index("term")
+    bounds = []
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(j).statistics
+        bounds.append((st.min, st.max) if st is not None and st.has_min_max else None)
+    return names, bounds
+
+
+def _term_lookup(col):
+    """(term -> row, terms on more than one row) of one row group."""
+    terms = col.to_numpy(zero_copy_only=False).tolist()
+    lookup = dict(zip(terms, range(len(terms))))
+    if len(lookup) == len(terms):
+        return lookup, set()
+    return lookup, {t for t, n in Counter(terms).items() if n > 1}
+
+
+def _resident_rows(fs, path: str, cols: Sequence[str], terms: Sequence[str]) -> dict:
+    """term -> record of the postings rows for ``terms`` in one segment
+    file, from the worker's resident parts (_RESIDENT). A row group whose
+    term statistics cannot hold a query term is skipped, as the parquet
+    ``term in`` filter skips it; the columns of every other one are
+    decoded once, kept, and each later query takes its rows from them.
+    A term on more than one row raises (check_index:
+    postings.duplicate_term_rows)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    info = fs.get_file_info(path)
+    stamp = (path, info.size, info.mtime_ns)
+    footer, pf = _RESIDENT.get(stamp + ("footer",)), None
+    if footer is None:
+        _RESIDENT.drop(path)  # parts of an earlier file at this path
+        pf = pq.ParquetFile(fs.open_input_file(path))
+        md = pf.metadata
+        footer = _RESIDENT.put(stamp + ("footer",), (md, *_footer(md)), md.serialized_size)
+    md, names, bounds = footer
+    want = [c for c in cols if c in names]
+    qterms = sorted(set(terms))
+    found, picks = set(), []
+    for rg, bound in enumerate(bounds):
+        if bound is not None:
+            i = bisect.bisect_left(qterms, bound[0])
+            if i == len(qterms) or qterms[i] > bound[1]:
+                continue
+        parts = {c: _RESIDENT.get(stamp + (rg, c)) for c in want}
+        missing = [c for c, v in parts.items() if v is None]
+        if missing:
+            if pf is None:
+                pf = pq.ParquetFile(fs.open_input_file(path), metadata=md)
+            tbl = pf.read_row_group(rg, columns=missing)
+            for c in missing:
+                col = tbl.column(c).combine_chunks()
+                value, nbytes = col, col.nbytes
+                if c == "term":
+                    lookup, dups = _term_lookup(col)
+                    value = (col, lookup, dups)
+                    nbytes += sys.getsizeof(lookup) + sum(map(sys.getsizeof, lookup))
+                parts[c] = _RESIDENT.put(stamp + (rg, c), value, nbytes)
+        _, lookup, dups = parts["term"]
+        rows = []
+        for t in qterms:
+            r = lookup.get(t)
+            if r is None:
+                continue
+            if t in dups or t in found:
+                raise ValueError(f"{path} holds more than one postings row for a term "
+                                 "(check_index: postings.duplicate_term_rows)")
+            found.add(t)
+            rows.append(r)
+        if rows:
+            take = pa.array(sorted(rows), pa.int64())
+            picks.append([(parts[c][0] if c == "term" else parts[c]).take(take) for c in want])
+    if not picks:
+        return {}
+    # per column, the values Table.to_pandas().to_dict("records") gives
+    values = [pa.chunked_array(taken).to_pandas().tolist() for taken in zip(*picks)]
+    return {r["term"]: r for r in (dict(zip(want, v)) for v in zip(*values))}
+
+
 def _segment_reader(index: Index, terms: Sequence[str],
                     streams: Sequence[str] = ("block_data",)):
     """``read(segs)`` for a slice task: yields ``(segment_id, rows,
     deleted_or_None)`` for each of the slice's segments holding postings
     for ``terms``. A segment file holds ONE postings row per term (one
     seek per term per leaf, TermStates.java:96-121), so ``rows`` maps each
-    term to its one record: a dict of the skip metadata plus ``streams``.
-    A file that repeats a term raises (check_index counts such rows as
-    ``postings.duplicate_term_rows``). Each segment is read with pyarrow —
-    the ``terms`` filter prunes row groups — along with its OWN tombstones
-    (per-segment liveDocs, PendingDeletes.java:31; nothing is materialized
-    on the driver or captured in closures), read once per worker
-    (``_segment_deletes``). This is the only code that knows a segment
-    file's row layout."""
+    term to its one record: a dict of the skip metadata plus ``streams``,
+    in file order. A file that repeats a term raises (check_index counts
+    such rows as ``postings.duplicate_term_rows``). Each segment's rows
+    come from the worker's resident copy of the file (_resident_rows),
+    along with its OWN tombstones (per-segment liveDocs,
+    PendingDeletes.java:31; nothing is materialized on the driver or
+    captured in closures), read once per worker (``_segment_deletes``).
+    This is the only code that knows a segment file's row layout."""
     paths, tombs, terms = index.paths, index.tombstone_files, list(terms)
     cols = list(_SCORE_COLS) + [s for s in streams if s not in _SCORE_COLS]
 
     def read(segs):
-        import pyarrow.dataset as ds
-
         for sid, path in segs:
-            seg = ds.dataset(path, filesystem=paths.fs, format="parquet")
-            tbl = seg.to_table(
-                columns=[c for c in cols if c in seg.schema.names],
-                filter=ds.field("term").isin(terms),
-            )
-            if tbl.num_rows == 0:
+            rows = _resident_rows(paths.fs, path, cols, terms)
+            if not rows:
                 continue
-            recs = tbl.to_pandas().to_dict("records")  # dicts, not iterrows Series
-            rows = {r["term"]: r for r in recs}
-            if len(rows) < len(recs):
-                raise ValueError(f"{path} holds more than one postings row for a term "
-                                 "(check_index: postings.duplicate_term_rows)")
             deleted = _segment_deletes(paths.fs, paths.tombstones, tombs, sid) if tombs else None
             yield sid, rows, deleted
 
@@ -681,14 +808,53 @@ def _gather_topk(sources: Sequence[Optional[_TopkSource]], k: int):
     return ords, ids, scores, sum(p[3] for p in parts), sum(p[4] for p in parts)
 
 
-def _hits_frame(spark: SparkSession, ids=None, scores=None) -> DataFrame:
-    """A merged top-k as a local DataFrame (a LocalTableScan: collecting
-    it runs no job); empty without ``ids``."""
-    import pyarrow as pa
+class LocalHits(ClassicDataFrame):
+    """A merged top-k held on the driver, as IndexSearcher.search returns
+    TopDocs in process. ``collect()``, ``toPandas()`` and ``count()``
+    answer from the merged arrays with no JVM call. Every other DataFrame
+    method (hydrate's join, orderBy, show, explain) runs on a JVM frame
+    built from the arrays once, the first time one needs it: a
+    LocalTableScan, so it runs no job either. Like ``createDataFrame``'s
+    frames it sets the classic DataFrame's instance attributes (_session,
+    _sc, is_cached, _support_repr_html, _schema) and fills its cached
+    ``schema``; ``_jdf`` is the lazily built frame's."""
 
-    cols = {"docid": _EMPTY_IDS if ids is None else ids,
-            "score": _EMPTY_SCORES if scores is None else scores}
-    return spark.createDataFrame(pa.table(cols), HITS_SCHEMA)
+    def __new__(cls, spark: SparkSession, cols: Dict[str, np.ndarray], schema: StructType):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, cols: Dict[str, np.ndarray], schema: StructType):
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._schema = self.schema = schema
+        self._hits = cols
+
+    @cached_property
+    def _jdf(self):
+        import pyarrow as pa
+
+        return self._session.createDataFrame(pa.table(self._hits), self.schema)._jdf
+
+    def collect(self) -> List[Row]:
+        names = list(self._hits)
+        return [_create_row(names, v) for v in zip(*(a.tolist() for a in self._hits.values()))]
+
+    def toPandas(self) -> pd.DataFrame:
+        return pd.DataFrame(self._hits)
+
+    def count(self) -> int:
+        return len(self._hits["docid"])
+
+
+def _hits_frame(spark: SparkSession, ids=None, scores=None, ords=None) -> DataFrame:
+    """A merged top-k as a driver-local frame (LocalHits); empty without
+    ``ids``; with ``ords``, each hit's shard ordinal leads its row."""
+    cols = {"docid": np.asarray(_EMPTY_IDS if ids is None else ids, np.int64),
+            "score": np.asarray(_EMPTY_SCORES if scores is None else scores, np.float64)}
+    if ords is None:
+        return LocalHits(spark, cols, HITS_SCHEMA)
+    return LocalHits(spark, {"shard": np.asarray(ords, np.int32), **cols}, SHARD_HITS_SCHEMA)
 
 
 def _topk_frame(index: Index, source: Optional[_TopkSource], k: int) -> DataFrame:
@@ -1974,8 +2140,6 @@ def _slots_source(index, slots, slop, k, boost, quantize, dtype,
     228-236). A non-BM25 ``similarity`` scores the phrase freq with one
     SimScorer per occurrence, summed (the occurrence counts ride the qtf
     slot of bind_similarity)."""
-    from collections import Counter
-
     from .scorer import idf as _idf
     from .similarities import bind_similarity
 

@@ -33,13 +33,12 @@ from __future__ import annotations
 from typing import Dict, List, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .executor import (
-    HITS_SCHEMA,
     Index,
     _flat_source,
     _gather_topk,
+    _hits_frame,
     _phrase_offsets,
     _phrase_source,
     require_positions,
@@ -120,17 +119,10 @@ class _StatsView:
 
 def _union_topk(indexes: Sequence[Index], sources, k: int, with_shard: bool) -> DataFrame:
     """Gather one source per shard in one job and return the global
-    (score desc, docid asc, shard asc) top-k as a local frame; the shard
-    ordinal is each source's position."""
-    import pyarrow as pa
-
+    (score desc, docid asc, shard asc) top-k as a driver-local frame
+    (executor.LocalHits); the shard ordinal is each source's position."""
     ords, ids, scores, _, _ = _gather_topk(sources, k)
-    cols = {"docid": ids, "score": scores}
-    schema = HITS_SCHEMA
-    if with_shard:
-        cols = {"shard": ords, **cols}
-        schema = StructType([StructField("shard", IntegerType(), False), *HITS_SCHEMA.fields])
-    return indexes[0].spark.createDataFrame(pa.table(cols), schema)
+    return _hits_frame(indexes[0].spark, ids, scores, ords if with_shard else None)
 
 
 def multi_search_topk(

@@ -866,6 +866,22 @@ def test_sloppy_batched_refuses_keys_past_int64():
     assert rows.tolist() == [0]
 
 
+def test_sloppy_2term_refuses_negative_keys():
+    """The 2-term chain decodes a key's doc with a floor, so a key below 0
+    (a position minus its offset, unshifted) would count in the previous
+    doc: it raises instead. Shifted by the largest offset, the same
+    positions match in their own doc."""
+    from lucene_spark.functions.phrase import sloppy_2term_doc_freqs
+
+    pos_base = 1 << 22
+    # doc 0 "b a", phrase "a b": a's adjusted position 1 - 0, b's 0 - 1
+    ka, kb = np.array([1]), np.array([-1])
+    with pytest.raises(ValueError, match="non-negative"):
+        sloppy_2term_doc_freqs(ka, kb, pos_base, 2)
+    docs, freqs = sloppy_2term_doc_freqs(ka + 1, kb + 1, pos_base, 2)
+    assert docs.tolist() == [0] and freqs.tolist() == [np.float32(1 / 3)]
+
+
 def test_phrase_wildcard_lowers_to_multiphrase(spark, built_index):
     """PhraseWildcardQuery analog: pattern slots expand and the result
     equals the hand-expanded MultiPhraseQuery."""
